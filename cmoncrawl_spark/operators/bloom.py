@@ -9,22 +9,36 @@ shard-locally via Arrow UDFs.
 
 Zero per-row Python: the two independent 64-bit hashes every bloom op
 needs are computed JVM-side with ``xxhash64(id)`` and
-``xxhash64(id, seed=PRIME)`` inside whole-stage codegen; the pandas
-UDFs receive plain int64 columns and do pure numpy bit math
-(double-hashing h1 + i*h2 — Kirsch-Mitzenmacher).
+``xxhash64(id, seed=PRIME)`` inside whole-stage codegen. The UDFs
+(``applyInArrow``) receive pyarrow tables, view the int64 hash columns
+as numpy arrays without a copy and do pure numpy bit math
+(double-hashing h1 + i*h2 — Kirsch-Mitzenmacher); no pandas frame or
+object-dtype column is ever built.
+
+Shard choice (``shard_of``): shard = pmod(h1 >>> 32, n), the HIGH half
+of h1. Bit positions are (h1 + i*h2) mod m with 64 dividing m, so they
+depend on h1's low bits; a shard taken from those low bits (pmod(h1,
+n)) fixes them inside a shard, puts every id's first position in 1/32
+of the array at 32 shards and reads a false-positive rate ~7× the
+design (PLANS.md §17). Every blob row records the scheme in
+``shard_scheme``: probing a blob that was sharded another way gives
+false NEGATIVES (duplicate fetches), so the probe refuses any other
+scheme.
 
 Probe protocol (keeps results EXACT, not approximate):
   bloom-negative  -> definitely unseen, pass through (no join) — at
                      scale this is ~99% of candidates, so the expensive
                      exact join only sees bloom-positives;
-  bloom-positive  -> exact left_anti join against the seen table to
-                     eliminate false positives.
-The net result equals an exact anti-join (the DuckDB oracle), with the
-join input shrunk by orders of magnitude.
+  bloom-positive  -> exact left_semi against the seen table confirms
+                     the real hits, and the candidates anti-join them.
+The net result equals an exact anti-join (the DuckDB oracle). What
+moves per round is the slim probe input (id, h1, h2), the ~1% positive
+ids and the hits exchange — never full candidate rows or bloom bits
+beyond one shard per task.
 
-Checkpointing: shards serialize to rows (shard_id, bloom, n_items, m_bits,
-k_hashes) — written/loaded as a parquet/Iceberg table per round
-(north_rule resumability).
+Checkpointing: shards serialize to rows (shard_id, bloom, n_items,
+m_bits, k_hashes, shard_scheme) — written/loaded as a parquet/Iceberg
+table per round (north_rule resumability).
 """
 
 from __future__ import annotations
@@ -32,12 +46,11 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
     IntegerType,
     LongType,
     StructField,
@@ -46,6 +59,9 @@ from pyspark.sql.types import (
 
 _SEED2 = 0x9E3779B1  # second-hash seed (golden-ratio prime)
 
+#: the shard choice every blob row records: 1 = pmod(h1 >>> 32, n).
+SHARD_SCHEME = 1
+
 BLOOM_SHARD_SCHEMA = StructType(
     [
         StructField("shard_id", IntegerType()),
@@ -53,6 +69,7 @@ BLOOM_SHARD_SCHEMA = StructType(
         StructField("n_items", LongType()),
         StructField("m_bits", LongType()),
         StructField("k_hashes", IntegerType()),
+        StructField("shard_scheme", IntegerType()),
     ]
 )
 
@@ -84,6 +101,11 @@ def _test_bits(bits: np.ndarray, pos: np.ndarray) -> np.ndarray:
     return ((byte & mask) != 0).all(axis=1)
 
 
+def _hashes(tbl: pa.Table) -> tuple[np.ndarray, np.ndarray]:
+    """h1/h2 of an Arrow table as uint64 views of its int64 columns."""
+    return tuple(tbl.column(c).to_numpy().view(np.uint64) for c in ("h1", "h2"))
+
+
 def with_bloom_hashes(df: DataFrame, id_col: str = "url_id") -> DataFrame:
     """Attach JVM-computed h1/h2 (int64) — the only hashing anywhere."""
     return df.withColumn("h1", F.xxhash64(F.col(id_col))).withColumn(
@@ -92,7 +114,27 @@ def with_bloom_hashes(df: DataFrame, id_col: str = "url_id") -> DataFrame:
 
 
 def shard_of(h1_col, num_shards: int):
-    return F.pmod(h1_col, F.lit(num_shards)).cast("int")
+    """Shard of an id from the high half of h1 (``SHARD_SCHEME``)."""
+    return F.pmod(F.shiftrightunsigned(h1_col, 32), F.lit(num_shards)).cast("int")
+
+
+def require_shard_scheme(shards: DataFrame) -> None:
+    """Refuse a shard table written before blobs recorded their scheme."""
+    if "shard_scheme" not in shards.columns:
+        raise ValueError(
+            "shard table has no shard_scheme column: it was sharded by "
+            "pmod(h1, n) and would give false negatives; rebuild it"
+        )
+
+
+def check_shard_scheme(schemes) -> None:
+    """Raise unless every blob row was sharded by ``SHARD_SCHEME``."""
+    bad = {s for s in schemes if s != SHARD_SCHEME}
+    if bad:
+        raise ValueError(
+            f"blob shard_scheme {sorted(bad, key=str)} != {SHARD_SCHEME}: "
+            "probing it would give false negatives; rebuild the shards"
+        )
 
 
 def build_shards(
@@ -104,25 +146,25 @@ def build_shards(
 ) -> DataFrame:
     """Build bloom shards from a DataFrame of seen canonical ids.
 
-    One shuffle (groupBy shard), then an Arrow UDF turns each shard's
-    hash columns into one bloom blob row. Shard sizing is static from
-    ``expected_per_shard`` — at scale you'd size from the seen-table
-    row count (a cheap count on Iceberg metadata, no scan).
+    One shuffle (groupBy shard) of (shard, h1, h2) only, then an Arrow
+    UDF turns each shard's hash columns into one bloom blob row. Shard
+    sizing is static from ``expected_per_shard`` — at scale you'd size
+    from the seen-table row count (a cheap count on Iceberg metadata,
+    no scan).
     """
     m, k = optimal_params(expected_per_shard, fpp)
 
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _build(tbl: pa.Table) -> pa.Table:
         bits = np.zeros(m // 8, dtype=np.uint8)
-        h1 = pdf["h1"].to_numpy().astype(np.uint64)
-        h2 = pdf["h2"].to_numpy().astype(np.uint64)
-        _set_bits(bits, _positions(h1, h2, k, m))
-        return pd.DataFrame(
+        _set_bits(bits, _positions(*_hashes(tbl), k, m))
+        return pa.table(
             {
-                "shard_id": [int(pdf["shard"].iloc[0])],
-                "bloom": [bits.tobytes()],
-                "n_items": [len(pdf)],
-                "m_bits": [m],
-                "k_hashes": [k],
+                "shard_id": pa.array([tbl.column("shard")[0].as_py()], pa.int32()),
+                "bloom": pa.array([bits.tobytes()], pa.binary()),
+                "n_items": pa.array([tbl.num_rows], pa.int64()),
+                "m_bits": pa.array([m], pa.int64()),
+                "k_hashes": pa.array([k], pa.int32()),
+                "shard_scheme": pa.array([SHARD_SCHEME], pa.int32()),
             }
         )
 
@@ -130,61 +172,9 @@ def build_shards(
     # would only add a shuffle.
     hashed = with_bloom_hashes(seen_ids.select(id_col), id_col)
     return (
-        hashed.withColumn("shard", shard_of(F.col("h1"), num_shards))
+        hashed.select(shard_of(F.col("h1"), num_shards).alias("shard"), "h1", "h2")
         .groupBy("shard")
-        .applyInPandas(_build, BLOOM_SHARD_SCHEMA)
-    )
-
-
-def probe(
-    candidates: DataFrame,
-    shards: DataFrame,
-    num_shards: int = 32,
-    id_col: str = "url_id",
-) -> DataFrame:
-    """Mark candidates with ``maybe_seen`` (bloom positive) per shard.
-
-    Cogrouped Arrow UDF: each task gets one shard's candidates + that
-    shard's blob row(s) — the full filter is never broadcast and
-    never collected (R5). Output = candidates + maybe_seen:boolean.
-
-    A shard may legitimately carry MULTIPLE blob rows:
-    merge_bloom_shards groups by (shard_id, m_bits, k_hashes), so
-    mixed-parameter histories keep one blob per parameterization.
-    Membership is the OR over every blob row — probing only the first
-    would produce silent false negatives (duplicate fetches).
-    """
-    out_schema = StructType(
-        candidates.schema.fields + [StructField("maybe_seen", BooleanType())]
-    )
-    cand_cols = [f.name for f in candidates.schema.fields]
-
-    def _probe(cand: pd.DataFrame, blob: pd.DataFrame) -> pd.DataFrame:
-        if cand.empty:
-            return pd.DataFrame(columns=cand_cols + ["maybe_seen"])
-        if blob.empty:
-            res = cand[cand_cols].copy()
-            res["maybe_seen"] = False
-            return res
-        h1 = cand["h1"].to_numpy().astype(np.uint64)
-        h2 = cand["h2"].to_numpy().astype(np.uint64)
-        seen = np.zeros(len(cand), dtype=bool)
-        for _, row in blob.iterrows():
-            bits = np.frombuffer(row["bloom"], dtype=np.uint8)
-            m = int(row["m_bits"])
-            k = int(row["k_hashes"])
-            seen |= _test_bits(bits, _positions(h1, h2, k, m))
-        res = cand[cand_cols].copy()
-        res["maybe_seen"] = seen
-        return res
-
-    hashed = with_bloom_hashes(candidates, id_col).withColumn(
-        "shard", shard_of(F.col("h1"), num_shards)
-    )
-    return (
-        hashed.groupBy("shard")
-        .cogroup(shards.groupBy(F.col("shard_id").alias("shard")))
-        .applyInPandas(_probe, out_schema)
+        .applyInArrow(_build, BLOOM_SHARD_SCHEMA)
     )
 
 
@@ -194,32 +184,36 @@ def probe_positive_ids(
     num_shards: int = 32,
     id_col: str = "url_id",
 ) -> DataFrame:
-    """Bloom-positive ids only — the SLIM probe the dedup path uses.
+    """Bloom-positive ids of ``candidates`` — the shard-local probe.
 
-    Only ``(id, h1, h2)`` enters the cogroup (three fixed-width
-    columns; h1/h2 are numpy int64 end-to-end, no pandas object
-    columns), and only the ~1%-at-scale positive ids come back out.
-    Full candidate rows never cross the Arrow boundary — measured on
-    this sandbox the full-width variant went superlinear at ~10^7 rows
-    per level (object-dtype URL columns ballooning each cogroup group);
-    the slim probe stays linear. Same shard-local protocol as
-    :func:`probe` (full filter never broadcast / collected).
+    Cogrouped Arrow UDF: each task gets one shard's (id, h1, h2) rows
+    plus that shard's blob row(s); the full filter is never broadcast
+    or collected (R5). Only ids whose bloom test passes come back out
+    (~1% at scale plus the true hits); the id column is filtered as an
+    Arrow array, never converted.
+
+    A shard may legitimately carry MULTIPLE blob rows: append-only
+    crawl rounds add one blob per round, and merge_bloom_shards keeps
+    one blob per (m_bits, k_hashes). Membership is the OR over every
+    blob row — probing only the first would produce silent false
+    negatives (duplicate fetches).
     """
-    id_type = candidates.schema[id_col].dataType
-    out_schema = StructType([StructField(id_col, id_type)])
+    require_shard_scheme(shards)
+    out_schema = StructType([StructField(id_col, candidates.schema[id_col].dataType)])
 
-    def _probe_pos(cand: pd.DataFrame, blob: pd.DataFrame) -> pd.DataFrame:
-        if cand.empty or blob.empty:
-            return pd.DataFrame({id_col: cand[id_col].iloc[0:0]})
-        h1 = cand["h1"].to_numpy().astype(np.uint64)
-        h2 = cand["h2"].to_numpy().astype(np.uint64)
-        seen = np.zeros(len(cand), dtype=bool)
-        for _, row in blob.iterrows():
-            bits = np.frombuffer(row["bloom"], dtype=np.uint8)
-            m = int(row["m_bits"])
-            k = int(row["k_hashes"])
+    def _probe_pos(cand: pa.Table, blob: pa.Table) -> pa.Table:
+        ids = cand.column(id_col)
+        if cand.num_rows == 0 or blob.num_rows == 0:
+            return pa.table({id_col: ids.slice(0, 0)})
+        check_shard_scheme(blob.column("shard_scheme").to_pylist())
+        h1, h2 = _hashes(cand)
+        seen = np.zeros(cand.num_rows, dtype=bool)
+        for i in range(blob.num_rows):
+            bits = np.frombuffer(blob.column("bloom")[i].as_buffer(), dtype=np.uint8)
+            m = blob.column("m_bits")[i].as_py()
+            k = blob.column("k_hashes")[i].as_py()
             seen |= _test_bits(bits, _positions(h1, h2, k, m))
-        return pd.DataFrame({id_col: cand[id_col].to_numpy()[seen]})
+        return pa.table({id_col: ids.filter(pa.array(seen))})
 
     slim = with_bloom_hashes(candidates.select(id_col), id_col).withColumn(
         "shard", shard_of(F.col("h1"), num_shards)
@@ -227,7 +221,7 @@ def probe_positive_ids(
     return (
         slim.groupBy("shard")
         .cogroup(shards.groupBy(F.col("shard_id").alias("shard")))
-        .applyInPandas(_probe_pos, out_schema)
+        .applyInArrow(_probe_pos, out_schema)
     )
 
 
@@ -267,13 +261,16 @@ def dedupe_against_seen(
             (F.col(id_col) == F.col("_seen_id")) & F.col("maybe_seen"),
             "left_anti",
         ).drop("maybe_seen")
-    # Bloom path (round 3): slim probe -> exact confirm -> one anti
-    # join. positives ∩ seen is exactly candidates ∩ seen (the bloom
-    # has no false negatives), so anti-joining candidates against the
+    # Bloom path: slim probe -> exact confirm -> one anti join.
+    # positives ∩ seen is exactly candidates ∩ seen (the bloom has no
+    # false negatives), so anti-joining candidates against the
     # CONFIRMED hits equals the exact anti-join — while the shuffled /
     # Arrow-transferred intermediates shrink from full rows to single
     # id columns. The confirm join and the final anti-join both
-    # broadcast whenever their small side allows (AQE decides).
+    # broadcast whenever their small side allows (AQE decides). The
+    # probe reads ``candidates`` through the same exchange as the
+    # anti-join when the caller leaves the two plans identical below
+    # it (scheduling_round does), so AQE reuses it.
     pos = probe_positive_ids(
         candidates, shards, num_shards=num_shards, id_col=id_col
     )

@@ -17,7 +17,10 @@ Layout per shard: ``table`` = uint16 little-endian array of
 mapped into [1, 65535]. Bucket choice is partial-key cuckoo hashing:
 i1 = h1 mod n_buckets, i2 = i1 XOR spread(fp) (n_buckets is a power of
 two so XOR stays in range and is an involution — delete/probe can
-derive i2 from either side).
+derive i2 from either side). The shard comes from the HIGH half of h1
+(``bloom.shard_of``), so the low bits that pick i1 still vary inside a
+shard; every table row records that scheme (``shard_scheme``) and the
+probe and delete refuse any other.
 
 Hashes are the SAME JVM-side xxhash64 pair the bloom shards use
 (bloom.with_bloom_hashes) — zero per-row Python; the pandas UDFs do
@@ -42,7 +45,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from cmoncrawl_spark.operators.bloom import shard_of, with_bloom_hashes
+from cmoncrawl_spark.operators.bloom import (
+    SHARD_SCHEME,
+    check_shard_scheme,
+    require_shard_scheme,
+    shard_of,
+    with_bloom_hashes,
+)
 
 SLOTS = 4  # slots per bucket (standard (2,4)-cuckoo: ~95% load)
 _SPREAD = np.uint64(0x5BD1E995)  # MurmurHash2 multiplier for fp spread
@@ -55,6 +64,7 @@ CUCKOO_SHARD_SCHEMA = StructType(
         StructField("n_items", LongType()),
         StructField("n_buckets", LongType()),
         StructField("fp_bits", IntegerType()),
+        StructField("shard_scheme", IntegerType()),
     ]
 )
 
@@ -140,6 +150,7 @@ def build_cuckoo_shards(
                 "n_items": [len(pdf)],
                 "n_buckets": [n_buckets],
                 "fp_bits": [16],
+                "shard_scheme": [SHARD_SCHEME],
             }
         )
 
@@ -169,7 +180,9 @@ def probe_cuckoo(
     id_col: str = "url_id",
 ) -> DataFrame:
     """candidates + maybe_seen:boolean — cogrouped shard-local probe,
-    exactly the bloom probe contract (bloom.probe)."""
+    the bloom probe contract. Shards are chosen by ``bloom.shard_of``
+    and every table row records that scheme, which the probe checks."""
+    require_shard_scheme(shards)
     out_schema = StructType(
         candidates.schema.fields + [StructField("maybe_seen", BooleanType())]
     )
@@ -182,6 +195,7 @@ def probe_cuckoo(
         if blob.empty:
             res["maybe_seen"] = False
             return res
+        check_shard_scheme(blob["shard_scheme"])
         h1 = cand["h1"].to_numpy().astype(np.uint64)
         h2 = cand["h2"].to_numpy().astype(np.uint64)
         # a shard may carry multiple table rows (e.g. differently-sized
@@ -219,11 +233,13 @@ def delete_from_cuckoo_shards(
     bucket pair (standard cuckoo semantics: delete only items that were
     inserted, once per insertion). Returns the updated shard table.
     """
+    require_shard_scheme(shards)
 
     def _delete(key, dfs: tuple[pd.DataFrame, pd.DataFrame]) -> pd.DataFrame:
         blob, todel = dfs
         if blob.empty:
             return pd.DataFrame(columns=[f.name for f in CUCKOO_SHARD_SCHEMA])
+        check_shard_scheme(blob["shard_scheme"])
         n_buckets = int(blob["n_buckets"].iloc[0])
         table = (
             np.frombuffer(blob["table"].iloc[0], dtype=np.uint16)
@@ -251,6 +267,7 @@ def delete_from_cuckoo_shards(
                 "n_items": [int(blob["n_items"].iloc[0]) - removed],
                 "n_buckets": [n_buckets],
                 "fp_bits": [int(blob["fp_bits"].iloc[0])],
+                "shard_scheme": [int(blob["shard_scheme"].iloc[0])],
             }
         )
 

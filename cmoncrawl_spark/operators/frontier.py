@@ -2,9 +2,9 @@
 
 One round is a pure DataFrame job:
 
-    canonicalize -> intra-batch dedup -> dedupe-against-seen (bloom +
-    exact backstop) -> robots filter -> politeness budget ->
-    per-host top-k (salted two-phase) -> deterministic fetch order
+    url_id -> intra-batch dedup -> dedupe-against-seen (bloom +
+    exact backstop) -> host key -> robots filter -> politeness
+    budget -> per-host top-k -> deterministic fetch order
 
 The reference's analog is the per-record loop in
 /root/reference/cmoncrawl/middleware/synchronized.py:14-50 (URL-seen
@@ -20,14 +20,18 @@ single-threaded simulator oracle.
 
 Scale design:
 - canonicalization + ordering keys are native expressions (codegen);
-- per-host top-k is TWO-PHASE: phase 1 ranks within (host, salt) so a
-  hot host's candidates spread over ``salt_buckets`` reducers and are
-  cut to <= budget rows EACH before phase 2's exact per-host rank —
-  identical output to a single global window (phase-1 survivors are a
-  superset of the true top-k), but the unsalted shuffle only carries
-  O(hosts * salt_buckets * budget) rows instead of the raw skew (R4);
-- the seen-set never moves: bloom shards are probed shard-local
-  (bloom.py) and only bloom-positives reach the exact anti-join.
+- the frontier is scanned and canonicalized ONCE per round: the host
+  key is attached only after the seen-set stage, so the bloom probe
+  and the final anti-join read the same url_id exchange and AQE
+  reuses it (one ``ReusedExchange``, not a second scan + regex pass);
+- per-host top-k is ONE window over ``partitionBy(host)`` with a
+  constant cap: ``rn <= cap`` lets Spark run a Partial
+  WindowGroupLimit before the exchange, so a hot host ships at most
+  ``cap`` rows per map partition (R4); a salted first phase would add
+  an exchange, a sort and a window and remove no skew (PLANS.md §6);
+- the seen set is probed shard-local (bloom.py): what moves is the
+  slim (id, h1, h2) probe input, the bloom-positive ids and the hits
+  exchange, never full candidate rows.
 """
 
 from __future__ import annotations
@@ -43,13 +47,13 @@ def _order_keys() -> list[Column]:
     return [F.col("depth").asc(), F.col("priority").desc(), F.col("url_id").asc()]
 
 
-def canonicalize(
-    frontier: DataFrame,
+def with_host(
+    df: DataFrame,
     url_col: str = "url",
     domain_politeness: bool = False,
     domain_key_mode: str = "inline",
 ) -> DataFrame:
-    """Attach url_id (D1 canonical id) + host — all codegen expressions.
+    """Attach the politeness key ``host`` — all codegen expressions.
 
     host (politeness key) = parse_url HOST (the hostname); url_id keys
     on the full netloc per the reference (urls._netloc_col) — the two
@@ -88,9 +92,7 @@ def canonicalize(
       choice when a frontier has ~no host repetition (|hosts| ~
       |URLs|, e.g. 10^8+ distinct hosts), where "distinct"'s map
       would outgrow a broadcast."""
-    out = frontier.withColumn("host", host_of(F.col(url_col))).withColumn(
-        "url_id", unify_url_id_col(F.col(url_col))
-    )
+    out = df.withColumn("host", host_of(F.col(url_col)))
     if domain_politeness:
         from cmoncrawl_spark.functions.psl import with_registered_domain
 
@@ -113,6 +115,21 @@ def canonicalize(
     return out
 
 
+def canonicalize(
+    frontier: DataFrame,
+    url_col: str = "url",
+    domain_politeness: bool = False,
+    domain_key_mode: str = "inline",
+) -> DataFrame:
+    """Attach url_id (D1 canonical id) + host (see :func:`with_host`)."""
+    return with_host(
+        frontier.withColumn("url_id", unify_url_id_col(F.col(url_col))),
+        url_col,
+        domain_politeness,
+        domain_key_mode,
+    )
+
+
 def dedupe_intra_batch(candidates: DataFrame) -> DataFrame:
     """One row per url_id: keep the best (depth, priority desc, url) —
     the reference processes first-arrival only (synchronized.py:36)."""
@@ -128,38 +145,25 @@ def dedupe_intra_batch(candidates: DataFrame) -> DataFrame:
 
 def per_host_topk(
     df: DataFrame,
+    budget_cap: int,
     budget_col: str = "budget",
-    salt_buckets: int = 16,
-    budget_cap: int | None = None,
 ) -> DataFrame:
-    """Salted two-phase per-host top-k under the total order.
+    """Per-host top-k under the total order: one window, one exchange.
 
     Output = rows with rank <= budget per host, plus their exact
-    ``fetch_rank``. Equivalent to one Window.partitionBy(host) rank;
-    survives hot-host skew (SURVEY §4 shuffle strategy, §7 R4).
-
-    ``budget_cap`` (a CONSTANT upper bound on any host's budget, e.g.
-    max over the policies table) additionally enables Spark's
-    WindowGroupLimit: the rank filter becomes ``rn <= cap AND rn <=
-    budget``, and the constant half is applied in Partial mode BEFORE
-    the phase-1 exchange — a hot host ships at most cap rows per input
-    partition per salt instead of its whole candidate set.
+    ``fetch_rank``. ``budget_cap`` is a CONSTANT upper bound on every
+    host's budget (max over the policies table). The rank filter is
+    ``rn <= cap AND rn <= budget``; its constant half lets Spark run
+    WindowGroupLimit in Partial mode BEFORE the host exchange, so a hot
+    host ships at most ``cap`` rows per input partition instead of its
+    whole candidate set (SURVEY §4 shuffle strategy, §7 R4). A salted
+    first phase would add an exchange, a sort and a window on top of
+    that cut without removing any skew (PLANS.md §6).
     """
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col("url_id")), F.lit(salt_buckets))
-    )
-    w1 = Window.partitionBy("host", "_salt").orderBy(*_order_keys())
-    cond1 = F.col("_rn1") <= F.col(budget_col)
-    if budget_cap is not None:
-        cond1 = (F.col("_rn1") <= F.lit(budget_cap)) & cond1
-    phase1 = (
-        salted.withColumn("_rn1", F.row_number().over(w1))
-        .where(cond1)
-        .drop("_rn1", "_salt")
-    )
-    w2 = Window.partitionBy("host").orderBy(*_order_keys())
-    return phase1.withColumn("fetch_rank", F.row_number().over(w2)).where(
-        F.col("fetch_rank") <= F.col(budget_col)
+    w = Window.partitionBy("host").orderBy(*_order_keys())
+    return df.withColumn("fetch_rank", F.row_number().over(w)).where(
+        (F.col("fetch_rank") <= F.lit(budget_cap))
+        & (F.col("fetch_rank") <= F.col(budget_col))
     )
 
 
@@ -169,7 +173,6 @@ def scheduling_round(
     host_policies: DataFrame,
     bloom_shards: DataFrame | None = None,
     num_shards: int = 32,
-    salt_buckets: int = 16,
     global_limit: int | None = None,
     budget_cap: int | None = None,
     domain_politeness: bool = False,
@@ -191,31 +194,36 @@ def scheduling_round(
     Returns the fetch list: url, url_id, host, depth, priority,
     budget, fetch_rank — deterministically ordered per host.
     """
-    cand = canonicalize(
-        frontier,
-        domain_politeness=domain_politeness,
-        domain_key_mode=domain_key_mode,
+    # host is attached AFTER the seen-set stage: the bloom probe prunes
+    # every column but url_id, so an exchange that also carried host
+    # would differ from the probe's and the frontier would be scanned
+    # and canonicalized twice. Without host both read one exchange.
+    cand = dedupe_intra_batch(
+        frontier.withColumn("url_id", unify_url_id_col(F.col("url")))
     )
-    cand = dedupe_intra_batch(cand)
     if seen_ids is not None:
         cand = bloom_ops.dedupe_against_seen(
             cand, seen_ids, shards=bloom_shards, num_shards=num_shards
         )
+    cand = with_host(
+        cand,
+        domain_politeness=domain_politeness,
+        domain_key_mode=domain_key_mode,
+    )
     pol = host_policies.select("host", "budget", "robots_disallow_all")
     cand = cand.join(F.broadcast(pol), on="host", how="inner").where(
         ~F.col("robots_disallow_all")
     )
     # constant cap over all budgets -> enables pre-shuffle group limits.
     # Callers running many rounds against static policies pass it in;
-    # otherwise one tiny driver-side agg (O(hosts)) derives it.
+    # otherwise one tiny driver-side agg (O(hosts)) derives it. No
+    # non-null budget means nothing is schedulable, and cap 0 says so.
     if budget_cap is None:
         cap_row = host_policies.agg(F.max("budget")).first()
         budget_cap = (
-            int(cap_row[0]) if cap_row and cap_row[0] is not None else None
+            int(cap_row[0]) if cap_row and cap_row[0] is not None else 0
         )
-    out = per_host_topk(
-        cand, salt_buckets=salt_buckets, budget_cap=budget_cap
-    ).select(
+    out = per_host_topk(cand, budget_cap=budget_cap).select(
         "url", "url_id", "host", "depth", "priority", "budget", "fetch_rank"
     )
     if global_limit is not None:
@@ -286,7 +294,7 @@ def round_metrics(
 ) -> DataFrame:
     """Per-host lineage metrics for the round (north_rule): candidates
     in, scheduled out, dropped counts."""
-    cand = canonicalize(frontier).groupBy("host").agg(
+    cand = with_host(frontier).groupBy("host").agg(
         F.count("*").alias("candidates")
     )
     sched = scheduled.groupBy("host").agg(

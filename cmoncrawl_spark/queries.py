@@ -309,8 +309,11 @@ def prepare_frontier_state(spark: SparkSession, sf_dir: str) -> str:
         mtime = os.stat(os.path.join(sf_dir, "documents.parquet")).st_mtime_ns
     except OSError:
         mtime = 0
+    # the shard choice is part of the key: this cache outlives code
+    # changes, and blobs sharded another way give false negatives.
     key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{mtime}|{_FRONTIER_SHARDS}".encode()
+        f"{os.path.abspath(sf_dir)}|{mtime}|{_FRONTIER_SHARDS}"
+        f"|{bloom_ops.SHARD_SCHEME}".encode()
     ).hexdigest()[:16]
     path = os.path.join(tempfile.gettempdir(), "cmoncrawl_spark_shards", key)
     marker = os.path.join(path, "_committed_marker")

@@ -19,10 +19,10 @@ same crash-consistency the Iceberg snapshot would.
 
 Bloom shards are APPEND-ONLY deltas, not merged-and-rewritten: a
 round builds blobs over ITS new ids only and the probe ORs every blob
-row of a shard (bloom.probe's multi-row contract), so a round's state
-write is O(round) — hashing AND bytes. (The previous protocol merged
-old+new blobs each round: new ids were O(round) but the merged blob
-REWRITE was O(history) bytes per round.) The seen set is likewise
+row of a shard (bloom.probe_positive_ids' multi-row contract), so a
+round's state write is O(round) — hashing AND bytes. (The previous
+protocol merged old+new blobs each round: new ids were O(round) but the
+merged blob REWRITE was O(history) bytes per round.) The seen set is likewise
 APPEND-ONLY (per-round delta dirs, read as a union): no state write
 grows with history. At round counts where many small delta files /
 blob rows hurt, merge_bloom_shards is the compaction primitive
@@ -32,17 +32,16 @@ blob rows hurt, merge_bloom_shards is the compaction primitive
 from __future__ import annotations
 
 import json
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cmoncrawl_spark.operators import bloom as bloom_ops
-from cmoncrawl_spark.operators.frontier import (
-    canonicalize,
-    round_metrics,
-    scheduling_round,
-)
+from cmoncrawl_spark.operators.frontier import round_metrics, scheduling_round
+
+_log = logging.getLogger(__name__)
 
 
 class StateStore:
@@ -94,7 +93,8 @@ class StateStore:
 
 
 def merge_bloom_shards(old: DataFrame, new: DataFrame) -> DataFrame:
-    """OR together shard blobs with identical (m_bits, k_hashes)."""
+    """OR together shard blobs with identical (m_bits, k_hashes,
+    shard_scheme)."""
     import numpy as np
     import pandas as pd
 
@@ -110,14 +110,18 @@ def merge_bloom_shards(old: DataFrame, new: DataFrame) -> DataFrame:
                 "n_items": [int(pdf["n_items"].sum())],
                 "m_bits": [int(key[1])],
                 "k_hashes": [int(key[2])],
+                "shard_scheme": [int(key[3])],
             }
         )
 
     # Group by the full filter parameterization, not just shard_id: ORing
-    # blobs built with different (m, k) would silently produce false
-    # NEGATIVES, breaking dedupe_against_seen's exactness contract.
+    # blobs built with different (m, k) or shard choices would silently
+    # produce false NEGATIVES, breaking dedupe_against_seen's exactness
+    # contract.
     both = old.unionByName(new)
-    merged = both.groupBy("shard_id", "m_bits", "k_hashes").applyInPandas(
+    merged = both.groupBy(
+        "shard_id", "m_bits", "k_hashes", "shard_scheme"
+    ).applyInPandas(
         lambda key, pdf: _merge(key, pdf), bloom_ops.BLOOM_SHARD_SCHEMA
     )
     return merged
@@ -168,7 +172,7 @@ def run_round(
         seen = store.read_all("seen_delta", round_id - 1)
         # bloom shards are APPEND-ONLY too (r6): each round wrote only
         # ITS shard blobs; the union of all rounds' blobs is the seen
-        # filter — probe() ORs every blob row of a shard, so membership
+        # filter — the probe ORs every blob row of a shard, so membership
         # equals the merged filter's. The r5 protocol merged old+new
         # and REWROTE every bit each round: O(history) bytes written
         # and a two-Python-stage merge job per round (the very bug the
@@ -208,14 +212,19 @@ def run_round(
     # concurrently with the count job; the three delta writes need
     # n_files (from the count) and follow. ALL writes must SUCCEED
     # before the commit marker below — the commit point is unchanged,
-    # so crash consistency is too: any write failure raises out of
-    # result() and the round is simply uncommitted, same as the
-    # sequential code. Measured (same-JVM interleaved A/B, sf0.1,
-    # 4 reps): crawl_3_rounds 5.9-6.5 s sequential -> 4.4-5.2 s.
+    # so crash consistency is too: any write failure leaves the round
+    # uncommitted, same as the sequential code. Measured (same-JVM
+    # interleaved A/B, sf0.1, 4 reps): crawl_3_rounds 5.9-6.5 s
+    # sequential -> 4.4-5.2 s. The pool threads run through
+    # inheritable_thread_target so the writes' jobs keep the caller's
+    # job group, description and tags.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    write = inheritable_thread_target(spark)(store.write)
     with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = [pool.submit(store.write, "metrics", round_id, metrics)]
+        futs = {"metrics": pool.submit(write, "metrics", round_id, metrics)}
         scheduled_count = fetch_list.count()
         # all-succeed default: the seen delta IS the fetch list — skip
         # the second count job (one action per round adds up at 3+
@@ -230,22 +239,18 @@ def run_round(
         # rounds big enough to exceed that keep proportional
         # parallelism.
         n_files = max(1, scheduled_count // 100_000)
-        futs += [
-            pool.submit(
-                store.write, "fetch_list", round_id,
-                fetch_list.coalesce(n_files),
-            ),
-            pool.submit(
-                store.write, "seen_delta", round_id,
-                new_ids.coalesce(n_files),
-            ),
-            pool.submit(
-                store.write, "bloom_shards", round_id,
-                new_shard_df.coalesce(n_files),
-            ),
-        ]
-        for f in futs:
-            f.result()
+        for name, df in (
+            ("fetch_list", fetch_list),
+            ("seen_delta", new_ids),
+            ("bloom_shards", new_shard_df),
+        ):
+            futs[name] = pool.submit(write, name, round_id, df.coalesce(n_files))
+    # every write has finished here: report each failure, raise the first
+    failed = [(n, e) for n, f in futs.items() if (e := f.exception())]
+    for name, exc in failed[1:]:
+        _log.error("round %d: state write %r also failed: %r", round_id, name, exc)
+    if failed:
+        raise failed[0][1]
     prev_total = store.round_info(round_id - 1).get("seen_total", 0)
     store.commit_round(
         round_id,

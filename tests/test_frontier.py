@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -33,33 +35,77 @@ def test_bloom_no_false_negatives(spark, sf_dir):
     register_crawl_views(spark, sf_dir)
     seen = _seen(spark)
     shards = bloom_ops.build_shards(seen, num_shards=8, expected_per_shard=1000)
-    probed = bloom_ops.probe(seen, shards, num_shards=8)
-    n = probed.count()
-    pos = probed.where("maybe_seen").count()
+    n = seen.count()
+    pos = bloom_ops.probe_positive_ids(seen, shards, num_shards=8).count()
     assert n > 0 and pos == n  # every inserted id must probe positive
 
 
 def test_slim_probe_positive_ids_supersets_seen(spark, sf_dir):
     """probe_positive_ids == {ids whose bloom test passes}: contains
-    every truly-seen candidate (no false negatives) and agrees with
-    the full-width probe's maybe_seen flags exactly."""
+    every truly-seen candidate (no false negatives) and agrees exactly
+    with the bit test redone on the driver from the collected blobs."""
     register_crawl_views(spark, sf_dir)
     cand = canonicalize(_frontier(spark, sf_dir))
     seen = _seen(spark)
     shards = bloom_ops.build_shards(seen, num_shards=8, expected_per_shard=1000)
-    pos = set(
+    pos = [
         r["url_id"]
         for r in bloom_ops.probe_positive_ids(
             cand, shards, num_shards=8
         ).collect()
+    ]
+    blobs = {r["shard_id"]: r for r in shards.collect()}
+    hashed = bloom_ops.with_bloom_hashes(cand.select("url_id")).withColumn(
+        "shard", bloom_ops.shard_of(F.col("h1"), 8)
     )
-    flags = {
-        r["url_id"]: r["maybe_seen"]
-        for r in bloom_ops.probe(cand, shards, num_shards=8).collect()
+    want = []
+    for r in hashed.collect():
+        blob = blobs.get(r["shard"])
+        h1, h2 = (np.array([r[c]], dtype=np.int64).view(np.uint64) for c in ("h1", "h2"))
+        if blob is not None and bloom_ops._test_bits(
+            np.frombuffer(blob["bloom"], dtype=np.uint8),
+            bloom_ops._positions(h1, h2, blob["k_hashes"], blob["m_bits"]),
+        )[0]:
+            want.append(r["url_id"])
+    assert sorted(pos) == sorted(want)
+    truly_seen = {r["url_id"] for r in seen.collect()} & {
+        r["url_id"] for r in cand.select("url_id").collect()
     }
-    assert pos == {u for u, m in flags.items() if m}
-    truly_seen = {r["url_id"] for r in seen.collect()} & set(flags)
-    assert truly_seen <= pos
+    assert truly_seen and truly_seen <= set(pos)
+
+
+def test_bloom_realized_fpr_within_twice_design(spark):
+    """At 32 shards the realized false-positive rate stays within 2x
+    the designed fpp. Choosing the shard from the low bits of h1, which
+    also drive the bit positions, read ~7% here against a 1% design."""
+    n_shards, per_shard, fpp = 32, 2000, 0.01
+    n = n_shards * per_shard
+    ids = spark.range(2 * n).select(
+        "id",
+        F.concat(F.lit("fpr.example/p"), F.col("id").cast("string"), F.lit("x"))
+        .alias("url_id"),
+    )
+    seen = ids.where(F.col("id") % 2 == 0).select("url_id")
+    unseen = ids.where(F.col("id") % 2 == 1).select("url_id")
+    shards = bloom_ops.build_shards(
+        seen, num_shards=n_shards, expected_per_shard=per_shard, fpp=fpp
+    ).localCheckpoint()
+    assert bloom_ops.probe_positive_ids(seen, shards, num_shards=n_shards).count() == n
+    false_pos = bloom_ops.probe_positive_ids(unseen, shards, num_shards=n_shards).count()
+    assert false_pos / n <= 2 * fpp, f"realized FPR {false_pos / n:.4f}"
+
+
+def test_probe_refuses_other_shard_scheme(spark):
+    """Blobs sharded another way would give false negatives, so the
+    probe raises: on a table without the scheme column at plan time,
+    on a blob row with another scheme when the task runs."""
+    ids = spark.createDataFrame([("a.com/x",), ("b.org/y",)], "url_id string")
+    shards = bloom_ops.build_shards(ids, num_shards=4, expected_per_shard=100)
+    with pytest.raises(ValueError, match="shard_scheme"):
+        bloom_ops.probe_positive_ids(ids, shards.drop("shard_scheme"), num_shards=4)
+    wrong = shards.withColumn("shard_scheme", F.lit(bloom_ops.SHARD_SCHEME + 1))
+    with pytest.raises(Exception, match="shard_scheme"):
+        bloom_ops.probe_positive_ids(ids, wrong, num_shards=4).collect()
 
 
 def test_bloom_dedupe_equals_exact_antijoin(spark, sf_dir):
@@ -118,9 +164,8 @@ def test_bloom_probe_multi_blob_shards(spark, sf_dir):
     ).unionByName(
         bloom_ops.build_shards(b, num_shards=4, expected_per_shard=2000)
     )
-    probed = bloom_ops.probe(seen, shards, num_shards=4)
-    n = probed.count()
-    pos = probed.where("maybe_seen").count()
+    n = seen.count()
+    pos = bloom_ops.probe_positive_ids(seen, shards, num_shards=4).count()
     assert n > 20 and pos == n  # ids from BOTH blobs probe positive
 
     # exactness contract survives the mixed-parameter shard table
@@ -138,10 +183,14 @@ def test_bloom_probe_multi_blob_shards(spark, sf_dir):
     assert got == exact
 
 
-def test_salted_topk_equals_plain_window(spark, sf_dir):
+def test_capped_topk_equals_plain_window(spark, sf_dir):
+    """The single capped window (rn <= cap AND rn <= budget) equals a
+    plain per-host window cut at each host's own budget."""
     cand = dedupe_intra_batch(canonicalize(_frontier(spark, sf_dir)))
-    cand = cand.withColumn("budget", F.lit(5))
-    salted = per_host_topk(cand, salt_buckets=7)
+    cand = cand.withColumn(
+        "budget", (F.pmod(F.xxhash64("host"), F.lit(4)) + 2).cast("int")
+    )
+    capped = per_host_topk(cand, budget_cap=5)
     w = Window.partitionBy("host").orderBy(
         F.col("depth").asc(), F.col("priority").desc(), F.col("url_id").asc()
     )
@@ -151,7 +200,7 @@ def test_salted_topk_equals_plain_window(spark, sf_dir):
     )
     a = sorted(
         (r["host"], r["url_id"], r["fetch_rank"])
-        for r in salted.select("host", "url_id", "fetch_rank").collect()
+        for r in capped.select("host", "url_id", "fetch_rank").collect()
     )
     b = sorted(
         (r["host"], r["url_id"], r["fetch_rank"])
@@ -167,13 +216,8 @@ def test_round_deterministic_across_parallelism(spark, sf_dir):
         "robots_disallow_all", "robots_disallow_all"
     )
     outs = []
-    for salt in (4, 16):
-        out = scheduling_round(
-            frontier.repartition(3 if salt == 4 else 11),
-            seen,
-            pol,
-            salt_buckets=salt,
-        )
+    for parts in (3, 11):
+        out = scheduling_round(frontier.repartition(parts), seen, pol)
         outs.append(
             sorted(
                 (r["host"], r["fetch_rank"], r["url_id"])
@@ -194,6 +238,16 @@ def test_round_respects_budget_and_robots(spark, sf_dir):
     assert per_host.where(F.col("n") > F.col("budget")).count() == 0
     banned = pol.where("robots_disallow_all").select("host")
     assert out.join(banned, "host", "inner").count() == 0
+
+
+def test_round_without_budgets_schedules_nothing(spark, sf_dir):
+    """A policies table with no non-null budget derives cap 0: the
+    round schedules nothing, as a null budget never admits a rank."""
+    frontier = _frontier(spark, sf_dir)
+    pol = spark.table("host_policies").withColumn(
+        "budget", F.lit(None).cast("int")
+    )
+    assert scheduling_round(frontier, _seen(spark), pol).count() == 0
 
 
 def test_domain_key_modes_identical_output(spark, sf_dir):
@@ -245,3 +299,21 @@ def test_domain_round_distinct_mode_equals_inline(spark, sf_dir):
         )
         outs.append(sorted(map(tuple, out.collect())))
     assert outs[0] == outs[1] and len(outs[0]) > 0
+
+
+def test_merged_shards_keep_scheme_and_members(spark):
+    """merge_bloom_shards ORs same-parameter blobs and carries each
+    blob's shard_scheme, so the merged table still probes."""
+    from cmoncrawl_spark.streaming.rounds import merge_bloom_shards
+
+    a = spark.createDataFrame([(f"a.com/p{i}x",) for i in range(200)], "url_id string")
+    b = spark.createDataFrame([(f"b.org/q{i}y",) for i in range(200)], "url_id string")
+    merged = merge_bloom_shards(
+        bloom_ops.build_shards(a, num_shards=4, expected_per_shard=500),
+        bloom_ops.build_shards(b, num_shards=4, expected_per_shard=500),
+    )
+    rows = merged.collect()
+    assert len(rows) == 4
+    assert {r["shard_scheme"] for r in rows} == {bloom_ops.SHARD_SCHEME}
+    both = a.unionByName(b)
+    assert bloom_ops.probe_positive_ids(both, merged, num_shards=4).count() == 400

@@ -8,6 +8,7 @@ string the same way `.explain("formatted")` renders it.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cmoncrawl_spark.datagen import register_crawl_views
@@ -84,6 +85,55 @@ def test_frontier_round_uses_broadcast_policies(spark, sf_dir):
         )
     )
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+
+
+@pytest.fixture(scope="module")
+def bloom_round_final_plan(spark, sf_dir, tmp_path_factory) -> str:
+    """Final AQE plan of the bloom-path round over persisted shards."""
+    from cmoncrawl_spark.operators import bloom as bloom_ops
+    from cmoncrawl_spark.operators.frontier import scheduling_round
+
+    register_crawl_views(spark, sf_dir)
+    path = str(tmp_path_factory.mktemp("plan_shards") / "shards")
+    bloom_ops.build_shards(
+        spark.table("seen"), num_shards=8, expected_per_shard=1000
+    ).write.parquet(path)
+    df = scheduling_round(
+        spark.table("pages").select("url", "depth", "priority"),
+        spark.table("seen"),
+        spark.table("host_policies"),
+        bloom_shards=spark.read.parquet(path),
+        num_shards=8,
+    )
+    df.collect()
+    plan = _plan(df)
+    assert "isFinalPlan=true" in plan
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_bloom_round_canonicalizes_frontier_once(bloom_round_final_plan):
+    """The probe branch and the anti-join read ONE url_id exchange:
+    the frontier is scanned and canonicalized once, and the second
+    consumer shows up as a ReusedExchange of the canonicalized rows."""
+    reused = [
+        l for l in bloom_round_final_plan.splitlines() if "ReusedExchange" in l
+    ]
+    assert any("url_id" in l and "url#" in l for l in reused), bloom_round_final_plan
+
+
+def test_bloom_round_topk_has_one_host_exchange(bloom_round_final_plan):
+    """Per-host top-k is one capped window: one host-keyed exchange."""
+    host_exchanges = [
+        l for l in bloom_round_final_plan.splitlines()
+        if "Exchange hashpartitioning(host" in l
+    ]
+    assert len(host_exchanges) == 1, bloom_round_final_plan
+
+
+def test_bloom_round_probes_through_arrow(bloom_round_final_plan):
+    """The shard probe crosses the Python boundary as Arrow tables."""
+    assert "FlatMapCoGroupsInArrow" in bloom_round_final_plan
+    assert "FlatMapCoGroupsInPandas" not in bloom_round_final_plan
 
 
 def test_extraction_prefilter_applied_before_udf(spark):

@@ -3,6 +3,8 @@ and kill-and-resume from checkpoint."""
 
 from __future__ import annotations
 
+import logging
+import os
 import shutil
 
 import pytest
@@ -118,3 +120,53 @@ def test_failed_state_write_leaves_round_uncommitted(spark, setup):
     # the crawl is resumable after the fault clears: round 0 re-runs
     run_crawl(store, seeds_df, pol_df, rounds=1, num_shards=8)
     assert store.last_committed_round() == 0
+
+
+def test_every_failed_state_write_is_reported(spark, setup, caplog):
+    """Two overlapped writes fail: the first failure is raised, the
+    other is logged, and the round stays uncommitted (no marker)."""
+    seeds_df, pol_df, _s, _b, _d, state_dir = setup
+    store = StateStore(spark, state_dir + "_fail2")
+
+    real_write = StateStore.write
+
+    def failing_write(self, name, round_id, df):
+        if name in ("seen_delta", "bloom_shards"):
+            raise RuntimeError(f"injected {name} failure")
+        return real_write(self, name, round_id, df)
+
+    StateStore.write = failing_write
+    try:
+        with caplog.at_level(logging.ERROR, logger="cmoncrawl_spark.streaming.rounds"):
+            with pytest.raises(RuntimeError, match="injected") as err:
+                run_crawl(store, seeds_df, pol_df, rounds=1, num_shards=8)
+    finally:
+        StateStore.write = real_write
+    reported = str(err.value) + caplog.text
+    assert "injected seen_delta failure" in reported
+    assert "injected bloom_shards failure" in reported
+    assert store.last_committed_round() == -1
+    assert not os.path.exists(os.path.join(store.dir, "_round_0.json"))
+
+
+def test_state_writes_keep_callers_job_properties(spark, setup):
+    """The overlapped writes run in pool threads; their Spark jobs must
+    still carry the caller's local properties (job description/group),
+    or per-round jobs cannot be attributed in the UI or event log."""
+    seeds_df, pol_df, _s, _b, _d, state_dir = setup
+    seen = {}
+
+    class RecordingStore(StateStore):
+        def write(self, name, round_id, df):
+            sc = self.spark.sparkContext
+            seen[name] = sc.getLocalProperty("spark.job.description")
+            super().write(name, round_id, df)
+
+    store = RecordingStore(spark, state_dir + "_props")
+    spark.sparkContext.setJobDescription("crawl/round0")
+    try:
+        run_crawl(store, seeds_df, pol_df, rounds=1, num_shards=8)
+    finally:
+        spark.sparkContext.setJobDescription(None)
+    names = ("metrics", "fetch_list", "seen_delta", "bloom_shards")
+    assert seen == {n: "crawl/round0" for n in names}
