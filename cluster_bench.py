@@ -87,14 +87,16 @@ def stop_cluster(procs) -> None:
 
 def build_pyfiles_zip(path: str = "/tmp/cmoncrawl_spark.zip") -> str:
     """Package the engine for executor shipment (the north_rule's
-    ``spark-submit --py-files`` distribution path)."""
+    ``spark-submit --py-files`` distribution path): the .py sources
+    plus the bundled public suffix list, which the package reads
+    from the zip."""
     import zipfile
 
     root = "/root/repo/cmoncrawl_spark"
     with zipfile.ZipFile(path, "w") as z:
         for dirpath, _dirs, files in os.walk(root):
             for f in files:
-                if f.endswith(".py"):
+                if f.endswith((".py", ".dat")):
                     full = os.path.join(dirpath, f)
                     rel = os.path.relpath(full, "/root/repo")
                     z.write(full, rel)

@@ -215,18 +215,11 @@ def run_crawl(args: argparse.Namespace) -> None:
         # policies table on it — so the policies must be keyed the
         # same way, or every subdomain URL silently vanishes at the
         # join (raw hosts like 'www.example.com' never match the
-        # rewritten key 'example.com'). Same coalesce(_rd, host)
-        # fallback as operators/frontier.canonicalize: hosts that ARE
-        # a public suffix keep their raw key.
-        from cmoncrawl_spark.functions.psl import with_registered_domain
+        # rewritten key 'example.com'). Both sides are keyed by
+        # psl.with_domain_key, the one definition of the key.
+        from cmoncrawl_spark.functions.psl import with_domain_key
 
-        hosts = (
-            with_registered_domain(hosts, host_col="host", out_col="_rd")
-            .select(
-                F.coalesce(F.col("_rd"), F.col("host")).alias("host")
-            )
-            .distinct()
-        )
+        hosts = with_domain_key(hosts).distinct()
     policies = hosts.select(
         "host",
         F.lit(args.budget).cast("int").alias("budget"),

@@ -1,469 +1,102 @@
 """Public-Suffix-List registered domains (eTLD+1).
 
-Why the frontier needs this: politeness grouping, hot-domain salting
-and DOMAIN-match index queries (reference F1 semantics,
+Why the frontier needs this: politeness grouping and DOMAIN-match
+index queries (reference F1 semantics,
 /root/reference/cmoncrawl/aggregator/utils/athena_query_maker.py:10-33,
 which matches on the index's url_host_registered_domain column) must
 treat ``a.foo.co.uk`` and ``b.foo.co.uk`` as ONE domain (foo.co.uk) —
 a last-two-labels heuristic wrongly groups every ``*.co.uk`` site
 under ``co.uk``, merging thousands of distinct owners into one
-politeness bucket / one salting key.
+politeness bucket.
 
-The snapshot below is a CURATED SUBSET of the public-knowledge rule
-set published at publicsuffix.org (same format: one rule per line,
-``*.`` wildcards, ``!`` exceptions, ``//`` comments). It covers the
-multi-label ccTLD registrations that dominate web-crawl traffic plus
-common private-section suffixes; the implicit PSL default rule ``*``
-(any unlisted TLD is a public suffix) handles everything else. A
-deployment swaps in the full publicsuffix.org snapshot — same format,
-same loader, zero code change.
+The rules come from ONE source: ``$CMONCRAWL_PSL_FILE`` when set,
+otherwise the full publicsuffix.org list bundled as package data
+(``data/public_suffix_list.dat``, ~9.5k rules, MPL-2.0 public data),
+read through ``importlib.resources`` so it also loads when the
+package is imported from a zip (``spark-submit --py-files``). A
+missing rule file raises; there is no smaller fallback list. Format:
+one rule per line, ``*.`` wildcards, ``!`` exceptions, ``//``
+comments; the implicit PSL default rule ``*`` (any unlisted TLD is a
+public suffix) handles everything else.
 
-Scale design: the rule table is tiny (hundreds of rows; the full list
-is ~10k), so registered-domain derivation is K left BROADCAST hash
-joins (one per candidate suffix length) — all JVM-side, no shuffle,
-no UDF, whole-stage codegen. ``registered_domain_py`` is the plain-
-Python twin used for golden vectors and differential tests.
+Scale design: the rule table is tiny (~10k rows), so
+registered-domain derivation is K left BROADCAST hash joins (one per
+candidate suffix length) — all JVM-side, no shuffle, no UDF,
+whole-stage codegen. ``registered_domain_py`` is the plain-Python
+twin used for golden vectors and differential tests.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import pathlib
+from importlib import resources
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-# Curated subset of the publicsuffix.org rules (public knowledge; see
-# module docstring). Format identical to the published list.
-PSL_SNAPSHOT = """
-// ---- ICANN section (curated) ----
-// uk
-co.uk
-org.uk
-me.uk
-ltd.uk
-plc.uk
-net.uk
-sch.uk
-ac.uk
-gov.uk
-nhs.uk
-police.uk
-// au
-com.au
-net.au
-org.au
-edu.au
-gov.au
-asn.au
-id.au
-act.au
-nsw.au
-nt.au
-qld.au
-sa.au
-tas.au
-vic.au
-wa.au
-// nz
-ac.nz
-co.nz
-geek.nz
-gen.nz
-govt.nz
-health.nz
-iwi.nz
-kiwi.nz
-maori.nz
-mil.nz
-net.nz
-org.nz
-school.nz
-// jp
-ac.jp
-ad.jp
-co.jp
-ed.jp
-go.jp
-gr.jp
-lg.jp
-ne.jp
-or.jp
-*.kawasaki.jp
-*.kitakyushu.jp
-*.kobe.jp
-*.nagoya.jp
-*.sapporo.jp
-*.sendai.jp
-*.yokohama.jp
-!city.kawasaki.jp
-!city.kitakyushu.jp
-!city.kobe.jp
-!city.nagoya.jp
-!city.sapporo.jp
-!city.sendai.jp
-!city.yokohama.jp
-// br
-com.br
-net.br
-org.br
-gov.br
-edu.br
-art.br
-blog.br
-eco.br
-emp.br
-ind.br
-inf.br
-jus.br
-leg.br
-mil.br
-tv.br
-wiki.br
-// cn
-com.cn
-net.cn
-org.cn
-gov.cn
-edu.cn
-mil.cn
-ac.cn
-bj.cn
-sh.cn
-gd.cn
-zj.cn
-// in
-co.in
-net.in
-org.in
-firm.in
-gen.in
-ind.in
-nic.in
-ac.in
-edu.in
-res.in
-gov.in
-mil.in
-// za
-ac.za
-co.za
-edu.za
-gov.za
-law.za
-mil.za
-net.za
-nom.za
-org.za
-school.za
-web.za
-// mx
-com.mx
-net.mx
-org.mx
-edu.mx
-gob.mx
-// ar
-com.ar
-edu.ar
-gob.ar
-gov.ar
-int.ar
-mil.ar
-net.ar
-org.ar
-tur.ar
-// tr
-com.tr
-net.tr
-org.tr
-info.tr
-biz.tr
-av.tr
-bel.tr
-dr.tr
-edu.tr
-gen.tr
-gov.tr
-k12.tr
-name.tr
-pol.tr
-tel.tr
-tv.tr
-web.tr
-// sg
-com.sg
-net.sg
-org.sg
-gov.sg
-edu.sg
-per.sg
-// hk
-com.hk
-edu.hk
-gov.hk
-idv.hk
-net.hk
-org.hk
-// tw
-edu.tw
-gov.tw
-mil.tw
-com.tw
-net.tw
-org.tw
-idv.tw
-club.tw
-// kr
-co.kr
-ne.kr
-or.kr
-re.kr
-pe.kr
-go.kr
-mil.kr
-ac.kr
-hs.kr
-ms.kr
-es.kr
-sc.kr
-kg.kr
-seoul.kr
-busan.kr
-// il
-ac.il
-co.il
-gov.il
-idf.il
-k12.il
-muni.il
-net.il
-org.il
-// id
-ac.id
-biz.id
-co.id
-desa.id
-go.id
-mil.id
-my.id
-net.id
-or.id
-sch.id
-web.id
-// th
-ac.th
-co.th
-go.th
-in.th
-mi.th
-net.th
-or.th
-// my
-biz.my
-com.my
-edu.my
-gov.my
-mil.my
-name.my
-net.my
-org.my
-// ph
-com.ph
-net.ph
-org.ph
-gov.ph
-edu.ph
-ngo.ph
-mil.ph
-i.ph
-// vn
-com.vn
-net.vn
-org.vn
-edu.vn
-gov.vn
-int.vn
-ac.vn
-biz.vn
-info.vn
-name.vn
-pro.vn
-health.vn
-// ua
-com.ua
-edu.ua
-gov.ua
-in.ua
-net.ua
-org.ua
-kiev.ua
-lviv.ua
-// ru (second-level conventions)
-com.ru
-net.ru
-org.ru
-msk.ru
-spb.ru
-// pl
-com.pl
-net.pl
-org.pl
-biz.pl
-edu.pl
-gov.pl
-info.pl
-mail.pl
-mil.pl
-waw.pl
-warszawa.pl
-wroc.pl
-krakow.pl
-// eg
-com.eg
-edu.eg
-eun.eg
-gov.eg
-mil.eg
-name.eg
-net.eg
-org.eg
-sci.eg
-// sa
-com.sa
-net.sa
-org.sa
-gov.sa
-med.sa
-pub.sa
-edu.sa
-sch.sa
-// ke
-ac.ke
-co.ke
-go.ke
-info.ke
-me.ke
-mobi.ke
-ne.ke
-or.ke
-sc.ke
-// ng
-com.ng
-edu.ng
-gov.ng
-i.ng
-mil.ng
-mobi.ng
-name.ng
-net.ng
-org.ng
-sch.ng
-// wildcard-only ccTLDs
-*.bd
-*.ck
-!www.ck
-*.er
-*.fk
-*.jm
-*.kh
-*.mm
-*.np
-*.pg
-// ---- PRIVATE section (curated): platform suffixes whose subdomains
-// ---- are DIFFERENT owners — exactly what politeness must separate
-github.io
-gitlab.io
-blogspot.com
-appspot.com
-herokuapp.com
-netlify.app
-vercel.app
-web.app
-firebaseapp.com
-cloudfront.net
-s3.amazonaws.com
-azurewebsites.net
-pages.dev
-workers.dev
-repl.co
-"""
-
-#: longest rule length we resolve (labels). The curated snapshot's max
-#: is 3 (city.kawasaki.jp / s3.amazonaws.com); the full PSL has a few
-#: 4-label rules, which this covers too.
-MAX_RULE_LABELS = 4
 
 _KIND_NORMAL = "normal"
 _KIND_WILDCARD = "wildcard"  # stored WITHOUT the '*.' (the base)
 _KIND_EXCEPTION = "exception"  # stored WITHOUT the '!'
 
 
-#: Bundled FULL publicsuffix.org snapshot (MPL-2.0 public data,
-#: ~9.5k rules) — the engine's default rule source. The curated
-#: PSL_SNAPSHOT above remains the fallback when the data file is
-#: absent (e.g. a --py-files zip that shipped only .py sources).
-FULL_PSL_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)),
-    "..", "data", "public_suffix_list.dat",
-)
-
-
-def _resolve_psl_path() -> str | None:
-    """THE single resolution of which rule file is in force, priority:
-    ``$CMONCRAWL_PSL_FILE`` (deployment override) > the bundled full
-    publicsuffix.org list > ``None`` (curated in-module snapshot).
-    Every path-sensitive consumer (source text, parsed-rule cache,
-    cache fingerprints) MUST call this — a second inline copy of the
-    priority chain would silently drift if a layer is ever added."""
-    return os.environ.get("CMONCRAWL_PSL_FILE") or (
-        FULL_PSL_PATH if os.path.exists(FULL_PSL_PATH) else None
-    )
-
-
 def default_psl_source() -> tuple[str | None, str]:
-    """(path, text) of the default rule source (see
-    :func:`_resolve_psl_path` for the priority order). Every
-    default-rules consumer — the broadcast ladder, the Python twin,
-    the DuckDB oracles — resolves through here, so they can never
-    disagree about which rule set is in force."""
-    path = _resolve_psl_path()
-    if path:
+    """(path, text) of the rule source in force: ``$CMONCRAWL_PSL_FILE``
+    when set, else the bundled ``data/public_suffix_list.dat``.
+    ``path`` is the absolute path of the file when the rules are a
+    real file and None when they were read from a zip. Raises when the
+    rule file is missing. Every default-rules consumer — the broadcast
+    ladder, the Python twin, the DuckDB oracles — resolves through
+    here, so they can never disagree about which rule set is in
+    force."""
+    override = os.environ.get("CMONCRAWL_PSL_FILE")
+    if override:
+        path = os.path.abspath(override)
         with open(path, encoding="utf-8") as f:
-            return os.path.abspath(path), f.read()
-    return None, PSL_SNAPSHOT
+            return path, f.read()
+    res = resources.files("cmoncrawl_spark") / "data" / "public_suffix_list.dat"
+    try:
+        text = res.read_text(encoding="utf-8")
+    except (OSError, KeyError) as e:
+        raise FileNotFoundError(
+            f"bundled public suffix list {res} is missing: ship "
+            "cmoncrawl_spark/data/public_suffix_list.dat with the package "
+            "or set CMONCRAWL_PSL_FILE"
+        ) from e
+    return (os.fspath(res) if isinstance(res, pathlib.Path) else None), text
+
+
+_DEFAULT_RULES: tuple[str, list] | None = None
+
+
+def _load_default_psl() -> tuple[str | None, str, list[tuple[str, str]]]:
+    """(path, fingerprint, parsed rules) from ONE read of the source.
+
+    The parse is cached per process under the hash of the text it was
+    parsed from, so the fingerprint a caller keys a cache on always
+    names the rules it got — an in-place rewrite of the file changes
+    both, whatever its mtime."""
+    global _DEFAULT_RULES
+    path, text = default_psl_source()
+    fp = hashlib.sha256(text.encode("utf-8")).hexdigest()
+    if _DEFAULT_RULES is None or _DEFAULT_RULES[0] != fp:
+        _DEFAULT_RULES = (fp, parse_psl(text))
+    return path, fp, _DEFAULT_RULES[1]
 
 
 def psl_source_fingerprint() -> str:
-    """Stable identity of the rule source in force — ``path|mtime_ns``
-    for a file source, a constant for the in-module snapshot. Any
-    on-disk cache derived from PSL-dependent computation (e.g.
-    domain-keyed politeness tables) must fold this into its key, or a
-    rule-set swap silently serves entries computed under the old
-    rules."""
-    path = _resolve_psl_path()
-    if path is None:
-        return "snapshot"
-    return f"{os.path.abspath(path)}|{os.stat(path).st_mtime_ns}"
-
-
-_DEFAULT_RULES: tuple[str | None, list] | None = None
+    """SHA-256 of the rule text in force. Any cache derived from
+    PSL-dependent computation (e.g. domain-keyed politeness tables)
+    must fold this into its key, or a rule-set swap silently serves
+    entries computed under the old rules."""
+    return _load_default_psl()[1]
 
 
 def default_psl_rules() -> list[tuple[str, str]]:
-    """Parsed default rules, cached per process.
-
-    Keyed on :func:`psl_source_fingerprint` (path|mtime), NOT on the
-    path alone: an in-place rewrite of the rule file (same path, new
-    mtime) must invalidate this cache too, or the oracle's CTE —
-    which re-reads the file — and the engine's broadcast ladder —
-    which reads this cache — would judge against different rule sets
-    (ADVICE r5)."""
-    global _DEFAULT_RULES
-    fp = psl_source_fingerprint()
-    if _DEFAULT_RULES is None or _DEFAULT_RULES[0] != fp:
-        _, text = default_psl_source()
-        _DEFAULT_RULES = (fp, parse_psl(text))
-    return _DEFAULT_RULES[1]
+    """Parsed default rules, cached per process (see
+    :func:`_load_default_psl`)."""
+    return _load_default_psl()[2]
 
 
 def _local_rule_frame(spark: SparkSession, rows: list) -> DataFrame:
@@ -475,7 +108,7 @@ def _local_rule_frame(spark: SparkSession, rows: list) -> DataFrame:
     return spark.createDataFrame(pdf, schema="rule string, fl int")
 
 
-def parse_psl(text: str = PSL_SNAPSHOT) -> list[tuple[str, str]]:
+def parse_psl(text: str) -> list[tuple[str, str]]:
     """(rule, kind) tuples from publicsuffix.org-format text."""
     rules: list[tuple[str, str]] = []
     for line in text.splitlines():
@@ -497,34 +130,6 @@ def rule_max_labels(rules) -> int:
     suffix does not widen the JOIN depth — only the base must match)."""
     items = rules.keys() if isinstance(rules, dict) else [r for r, _ in rules]
     return max((r.count(".") + 1 for r in items), default=1)
-
-
-def psl_table(
-    spark: SparkSession,
-    text: str | None = None,
-    path: str | None = None,
-) -> DataFrame:
-    """The broadcastable rule table: (rule string, kind string).
-
-    With no arguments this loads the DEFAULT source — the bundled
-    full publicsuffix.org snapshot (~9.5k rules), or
-    ``$CMONCRAWL_PSL_FILE`` when set (:func:`default_psl_source`).
-    Any publicsuffix.org-format ``text`` or file ``path`` also loads;
-    arbitrarily deep rules are handled because
-    :func:`with_registered_domain` sizes its join ladder from the
-    rule table itself.
-    """
-    if path is not None:
-        with open(path, encoding="utf-8") as f:
-            text = f.read()
-    elif text is None:
-        _, text = default_psl_source()
-    import pandas as pd
-
-    pdf = pd.DataFrame(parse_psl(text), columns=["rule", "kind"])
-    # pandas/Arrow -> JVM LocalRelation: no pickled-RDD scan, no
-    # Python-worker stage when this table feeds a broadcast build
-    return spark.createDataFrame(pdf, schema="rule string, kind string")
 
 
 def _kind_map(rules) -> dict[str, set]:
@@ -571,7 +176,8 @@ def _suffix_len_py(labels: list[str], rules, max_labels: int | None = None) -> i
 def registered_domain_py(host: str | None, rules=None) -> str | None:
     """Plain-Python twin of :func:`with_registered_domain` (tests /
     golden vectors). None when the host IS a public suffix (or empty).
-    ``rules`` as in :func:`_suffix_len_py`; default = bundled snapshot.
+    ``rules`` as in :func:`_suffix_len_py`; default = the rule source
+    in force (:func:`default_psl_rules`).
     """
     if not host:
         return None
@@ -588,8 +194,6 @@ def with_registered_domain(
     df: DataFrame,
     host_col: str = "host",
     out_col: str = "registered_domain",
-    psl: DataFrame | None = None,
-    max_rule_labels: int | None = None,
 ) -> DataFrame:
     """Attach the PSL registered domain (eTLD+1) of ``host_col``.
 
@@ -600,25 +204,12 @@ def with_registered_domain(
     when the host is itself a public suffix. Hosts are lowercased and
     trailing dots stripped before matching (PSL canonical form).
 
-    K sizes itself from the rules: the bundled snapshot plans K=3;
-    a full public-suffix-list file with 5-label rules plans K=5. For
-    a custom ``psl`` DataFrame, K comes from one tiny driver-side agg
-    over the rule table (O(rules), runs once at plan construction) —
-    pass ``max_rule_labels`` to skip it.
+    K sizes itself from the rules in force (:func:`default_psl_rules`):
+    the bundled full list plans K=5, a ``$CMONCRAWL_PSL_FILE`` with
+    deeper rules plans deeper.
     """
-    if psl is None:
-        rules_list = default_psl_rules()
-    else:
-        # the rule table is tiny broadcast state (~10k rows for the
-        # full list); pulling it to the driver once at plan
-        # construction keeps the flag prep shuffle-free
-        rules_list = [(r["rule"], r["kind"]) for r in psl.collect()]
-    kinds = _kind_map(rules_list)
-    ml = (
-        max_rule_labels
-        if max_rule_labels is not None
-        else rule_max_labels(kinds)
-    )
+    kinds = _kind_map(default_psl_rules())
+    ml = rule_max_labels(kinds)
     # Normalize WITHOUT an array: lowercase, strip leading/trailing
     # dots, collapse runs of dots — exactly equivalent to the Python
     # twin's "filter empty labels" (registered_domain_py), but the
@@ -734,3 +325,18 @@ def with_registered_domain(
         for c in (f"_psl_sfx{k}", f"_psl_fl{k}")
     ]
     return tmp.withColumn(out_col, reg).drop(*drop)
+
+
+def with_domain_key(df: DataFrame, host_col: str = "host") -> DataFrame:
+    """Rewrite ``host_col`` to the domain politeness key:
+    ``coalesce(registered_domain(host), host)``. Subdomains of one
+    eTLD+1 share its key; a host that IS a public suffix (no
+    registered domain) keeps its raw hostname. The ONE definition of
+    the key — the scheduling round's candidates and every
+    domain-keyed policies table are rewritten through here, so the
+    round's inner policy join can never see two different keys."""
+    return (
+        with_registered_domain(df, host_col=host_col, out_col="_rd")
+        .withColumn(host_col, F.coalesce(F.col("_rd"), F.col(host_col)))
+        .drop("_rd")
+    )

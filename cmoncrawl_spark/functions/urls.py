@@ -167,7 +167,7 @@ def registered_domain_col(host: Column) -> Column:
     """Quick two-label heuristic — WRONG for ccTLD registrations
     (``foo.co.uk`` -> ``co.uk``). Use
     :func:`cmoncrawl_spark.functions.psl.with_registered_domain`
-    (broadcast PSL snapshot, exact eTLD+1) anywhere the answer
+    (broadcast public suffix list, exact eTLD+1) anywhere the answer
     matters: politeness grouping, hot-domain salting, DOMAIN-match
     index queries. Kept only as a dependency-free scalar for ad-hoc
     exploration.

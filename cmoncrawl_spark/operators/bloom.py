@@ -247,20 +247,6 @@ def dedupe_against_seen(
     seen = seen_ids.select(id_col)
     if shards is None:
         return candidates.join(seen, on=id_col, how="left_anti")
-    if "fp_bits" in shards.columns:
-        # cuckoo shards (operators/cuckoo.py) — same probe protocol,
-        # deletable filter (north_rule "bloom/cuckoo" fallback).
-        from cmoncrawl_spark.operators.cuckoo import probe_cuckoo
-
-        probed = probe_cuckoo(
-            candidates, shards, num_shards=num_shards, id_col=id_col
-        )
-        s = seen.withColumnRenamed(id_col, "_seen_id")
-        return probed.join(
-            s,
-            (F.col(id_col) == F.col("_seen_id")) & F.col("maybe_seen"),
-            "left_anti",
-        ).drop("maybe_seen")
     # Bloom path: slim probe -> exact confirm -> one anti join.
     # positives ∩ seen is exactly candidates ∩ seen (the bloom has no
     # false negatives), so anti-joining candidates against the

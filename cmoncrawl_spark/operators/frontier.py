@@ -51,7 +51,6 @@ def with_host(
     df: DataFrame,
     url_col: str = "url",
     domain_politeness: bool = False,
-    domain_key_mode: str = "inline",
 ) -> DataFrame:
     """Attach the politeness key ``host`` — all codegen expressions.
 
@@ -61,57 +60,21 @@ def with_host(
     group by hostname while the seen-id must match the reference.
 
     ``domain_politeness=True`` upgrades the politeness key to the PSL
-    registered domain (eTLD+1): ``a.foo.co.uk`` and ``b.foo.co.uk``
-    share foo.co.uk's budget while ``bar.co.uk`` stays separate —
-    exact semantics of the index's url_host_registered_domain column
-    (reference F1 DOMAIN match, athena_query_maker.py:10-33). Costs
-    only broadcast joins against the tiny PSL table (functions/psl.py);
-    hosts that ARE a public suffix keep the raw hostname key.
-
-    ``domain_key_mode`` picks WHERE the PSL ladder runs (measured
-    EQUAL within noise at 4.8M URLs/5k hosts on local[32] — both
-    ~0.6 µs/URL over the host-keyed round; "inline" is the default
-    for being stateless and cardinality-safe):
-
-    - ``"distinct"``: ladder over ``SELECT DISTINCT host``,
-      then BROADCAST the host -> domain map back onto the frontier.
-      A scheduling round's frontier is host-clustered (politeness
-      budgets only matter when hosts repeat), so the ladder touches
-      |hosts| rows instead of |URLs| — at 19.2M amplified URLs / ~5k
-      hosts that is a ~4000× cut in ladder work, and the frontier
-      side sees ONE broadcast hash probe per row and no exchange.
-      The broadcast hint is deliberate: without it Catalyst
-      estimates the aggregate at input size, plans a sort-merge
-      join, and the frontier pays a full shuffle+sort (measured 4×
-      slower than inline at 50k rows). The distinct itself is cheap
-      — partial (map-side) aggregation means its exchange carries
-      per-partition-distinct hosts only.
-    - ``"inline"``: ladder as row expressions on every URL — ZERO
-      extra exchange AND zero driver-side state at any cardinality
-      (measured ~0.2-0.3 µs/URL, domain_profile r5). The scale-safe
-      choice when a frontier has ~no host repetition (|hosts| ~
-      |URLs|, e.g. 10^8+ distinct hosts), where "distinct"'s map
-      would outgrow a broadcast."""
+    registered domain (eTLD+1) through
+    :func:`~cmoncrawl_spark.functions.psl.with_domain_key`:
+    ``a.foo.co.uk`` and ``b.foo.co.uk`` share foo.co.uk's budget while
+    ``bar.co.uk`` stays separate — exact semantics of the index's
+    url_host_registered_domain column (reference F1 DOMAIN match,
+    athena_query_maker.py:10-33); hosts that ARE a public suffix keep
+    the raw hostname key. The PSL ladder runs as row expressions on
+    every URL against small broadcast rule tables: no exchange and no
+    driver-side state at any host cardinality (~0.6 µs/URL over the
+    host-keyed round at 4.8M URLs, PLANS.md §15)."""
     out = df.withColumn("host", host_of(F.col(url_col)))
     if domain_politeness:
-        from cmoncrawl_spark.functions.psl import with_registered_domain
+        from cmoncrawl_spark.functions.psl import with_domain_key
 
-        if domain_key_mode == "distinct":
-            hosts = out.select("host").distinct()
-            rd_map = with_registered_domain(
-                hosts, host_col="host", out_col="_rd"
-            )
-            out = out.join(F.broadcast(rd_map), on="host", how="left")
-        elif domain_key_mode == "inline":
-            out = with_registered_domain(out, host_col="host", out_col="_rd")
-        else:
-            raise ValueError(
-                f"domain_key_mode must be 'distinct' or 'inline', "
-                f"got {domain_key_mode!r}"
-            )
-        out = out.withColumn(
-            "host", F.coalesce(F.col("_rd"), F.col("host"))
-        ).drop("_rd")
+        out = with_domain_key(out)
     return out
 
 
@@ -119,14 +82,12 @@ def canonicalize(
     frontier: DataFrame,
     url_col: str = "url",
     domain_politeness: bool = False,
-    domain_key_mode: str = "inline",
 ) -> DataFrame:
     """Attach url_id (D1 canonical id) + host (see :func:`with_host`)."""
     return with_host(
         frontier.withColumn("url_id", unify_url_id_col(F.col(url_col))),
         url_col,
         domain_politeness,
-        domain_key_mode,
     )
 
 
@@ -176,7 +137,6 @@ def scheduling_round(
     global_limit: int | None = None,
     budget_cap: int | None = None,
     domain_politeness: bool = False,
-    domain_key_mode: str = "inline",
 ) -> DataFrame:
     """One full scheduling round.
 
@@ -205,11 +165,7 @@ def scheduling_round(
         cand = bloom_ops.dedupe_against_seen(
             cand, seen_ids, shards=bloom_shards, num_shards=num_shards
         )
-    cand = with_host(
-        cand,
-        domain_politeness=domain_politeness,
-        domain_key_mode=domain_key_mode,
-    )
+    cand = with_host(cand, domain_politeness=domain_politeness)
     pol = host_policies.select("host", "budget", "robots_disallow_all")
     cand = cand.join(F.broadcast(pol), on="host", how="inner").where(
         ~F.col("robots_disallow_all")

@@ -12,8 +12,6 @@ regexp_replace needs the 'g' flag for replace-all.
 
 from __future__ import annotations
 
-import os
-
 from cmoncrawl_spark.datagen import with_crawl_ctes
 from cmoncrawl_spark.queries import (
     DOMAIN_URL,
@@ -47,37 +45,31 @@ _PSL_CTE_CACHE: dict[str, tuple[str, int]] = {}
 
 def _psl_rules_cte() -> tuple[str, int]:
     """(body of a ``psl_rules(rule, kind)`` CTE, probe depth bound)
-    from the engine's DEFAULT rule source (functions/psl.py
+    from the engine's rule source (functions/psl.py
     ``default_psl_source``): the oracle must always judge against the
-    same rule set the engine broadcasts. When the source is a FILE
-    (the bundled full publicsuffix.org list, or $CMONCRAWL_PSL_FILE),
-    DuckDB re-parses it independently with ``read_text`` + SQL string
-    ops — same public input data, independent derivation; the
-    in-module snapshot fallback inlines VALUES. The probe bound
-    self-sizes from the deepest rule (exclusive-top for range()).
+    same rule set the engine broadcasts. When the source is a real
+    FILE (the bundled full publicsuffix.org list, or
+    $CMONCRAWL_PSL_FILE), DuckDB re-parses it independently with
+    ``read_text`` + SQL string ops — same public input data,
+    independent derivation; a source read from a zip (or a hostile
+    path, below) inlines VALUES. The probe bound self-sizes from the
+    deepest rule (exclusive-top for range()).
 
-    Memoized on the PSL source fingerprint — ``oracles()`` calls this
-    twice and harnesses rebuild the oracle dict per trial; re-reading
-    and re-parsing the ~14k-line list each time is pure waste."""
+    Memoized on (path, content fingerprint) — ``oracles()`` calls this
+    twice and harnesses rebuild the oracle dict per trial; re-parsing
+    the ~14k-line list each time is pure waste. Path, fingerprint and
+    rules come from ONE read of the source, so the memo never pairs
+    one rule set's key with another's body."""
     from cmoncrawl_spark.functions.psl import (
         _kind_map,
-        _resolve_psl_path,
-        default_psl_rules,
-        psl_source_fingerprint,
+        _load_default_psl,
         rule_max_labels,
     )
 
-    fp = psl_source_fingerprint()
-    if fp in _PSL_CTE_CACHE:
-        return _PSL_CTE_CACHE[fp]
-
-    # path only — default_psl_source() would read the whole ~14k-line
-    # file just to discard the text here (ADVICE r5); the file is read
-    # by DuckDB's read_text (file route) or by default_psl_rules'
-    # fingerprint-keyed parse (VALUES route), not by this function.
-    raw_path = _resolve_psl_path()
-    path = os.path.abspath(raw_path) if raw_path else None
-    rules = default_psl_rules()  # parsed once per process, cached
+    path, fp, rules = _load_default_psl()
+    memo_key = f"{path}|{fp}"
+    if memo_key in _PSL_CTE_CACHE:
+        return _PSL_CTE_CACHE[memo_key]
     probe_hi = rule_max_labels(_kind_map(rules)) + 1
     # read_text('{path}') splices the user-controlled
     # $CMONCRAWL_PSL_FILE path into SQL, AND DuckDB treats the string
@@ -91,7 +83,7 @@ def _psl_rules_cte() -> tuple[str, int]:
             f"""('{r.replace("'", "''")}', '{k}')""" for r, k in rules
         )
         out = (f"VALUES {vals}", probe_hi)
-        _PSL_CTE_CACHE[fp] = out
+        _PSL_CTE_CACHE[memo_key] = out
         return out
     body = f"""
       SELECT CASE WHEN line LIKE '!%' THEN substr(line, 2)
@@ -106,7 +98,7 @@ def _psl_rules_cte() -> tuple[str, int]:
               FROM read_text('{path}'))
       ) WHERE line <> '' AND NOT line LIKE '//%'
     """
-    _PSL_CTE_CACHE[fp] = (body, probe_hi)
+    _PSL_CTE_CACHE[memo_key] = (body, probe_hi)
     return body, probe_hi
 
 
@@ -526,7 +518,7 @@ def oracles() -> dict[str, str]:
     # longest normal/wildcard rule, then the implicit '*') — not from
     # the host-synthesis pattern, so a with_registered_domain bug that
     # tracked the synthesis would still be caught. Rules are the same
-    # publicsuffix.org-format snapshot the engine broadcasts (shared
+    # publicsuffix.org-format rule list the engine broadcasts (shared
     # INPUT data; the derivation is the independent part).
     from cmoncrawl_spark.queries import PSL_HOST_SQL
 

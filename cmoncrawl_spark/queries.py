@@ -358,7 +358,7 @@ def prepare_domain_policies(spark: SparkSession, sf_dir: str) -> str:
 
     from cmoncrawl_spark.functions.psl import (
         psl_source_fingerprint,
-        with_registered_domain,
+        with_domain_key,
     )
 
     try:
@@ -381,9 +381,7 @@ def prepare_domain_policies(spark: SparkSession, sf_dir: str) -> str:
             "host", "budget", "robots_disallow_all"
         )
         dpol = (
-            with_registered_domain(pol, host_col="host", out_col="_rd")
-            .withColumn("host", F.coalesce(F.col("_rd"), F.col("host")))
-            .drop("_rd")
+            with_domain_key(pol)
             .groupBy("host")
             .agg(
                 F.max("budget").alias("budget"),

@@ -27,6 +27,10 @@ APPEND-ONLY (per-round delta dirs, read as a union): no state write
 grows with history. At round counts where many small delta files /
 blob rows hurt, merge_bloom_shards is the compaction primitive
 (Iceberg rewrite_data_files analog) without changing this protocol.
+The bloom filter is the seen set's only approximate stage: ids are
+never deleted from it, and a crawl that must forget ids (re-crawl
+after a TTL) would need a deletable filter, which the engine does not
+have.
 """
 
 from __future__ import annotations

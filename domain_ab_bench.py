@@ -65,10 +65,6 @@ else:
 cap = int(pol.agg({"budget": "max"}).first()[0])
 kw = dict(bloom_shards=shards, num_shards=32, budget_cap=cap,
           domain_politeness=mode.startswith("domain"))
-if mode == "domain-inline":
-    kw["domain_key_mode"] = "inline"
-elif mode == "domain-distinct":
-    kw["domain_key_mode"] = "distinct"
 # untimed warm round: python-worker spawn + JIT + plan compile — the
 # same protocol bench.py uses for the flagship and the domain variant
 scheduling_round(frontier, seen, pol, **kw).write.format("noop").mode(
@@ -111,7 +107,7 @@ def main() -> None:
         for a in os.environ.get("DOMAIN_AB_AMPLIFY", "30,120,240").split(",")
     ]
     modes = os.environ.get(
-        "DOMAIN_AB_MODES", "host,domain-distinct,domain-inline"
+        "DOMAIN_AB_MODES", "host,domain-inline"
     ).split(",")
     points = []
     for amp in amplifies:

@@ -250,12 +250,11 @@ def test_round_without_budgets_schedules_nothing(spark, sf_dir):
     assert scheduling_round(frontier, _seen(spark), pol).count() == 0
 
 
-def test_domain_key_modes_identical_output(spark, sf_dir):
-    """canonicalize(domain_politeness=True) must produce IDENTICAL
-    rows whether the PSL ladder runs inline on every URL or on
-    distinct hosts with a map-back join (the r5 'distinct' default) —
-    including NULL hosts (malformed URLs survive via the LEFT join)
-    and hosts that ARE a public suffix (keep the raw host key)."""
+def test_domain_politeness_canonicalize_edge_hosts(spark, sf_dir):
+    """canonicalize(domain_politeness=True) keys every row by its
+    registered domain (eTLD+1) and keeps the edge rows: a host that
+    IS a public suffix keeps its raw host key, and a malformed URL
+    survives with a NULL host."""
     frontier = _frontier(spark, sf_dir).unionByName(
         spark.createDataFrame(
             [
@@ -266,39 +265,13 @@ def test_domain_key_modes_identical_output(spark, sf_dir):
             "url string, depth int, priority double",
         )
     )
-    outs = []
-    for mode in ("distinct", "inline"):
-        out = canonicalize(
-            frontier, domain_politeness=True, domain_key_mode=mode
-        )
-        outs.append(
-            sorted(
-                (r["url"], r["url_id"], r["host"]) for r in out.collect()
-            )
-        )
-    assert outs[0] == outs[1] and len(outs[0]) > 0
-    hosts = dict((u, h) for u, _, h in outs[0])
+    out = canonicalize(frontier, domain_politeness=True).collect()
+    assert len(out) == frontier.count()
+    hosts = {r["url"]: r["host"] for r in out}
     assert hosts["https://co.uk/path"] == "co.uk"       # suffix keeps host
     assert hosts["https://a.b.x.co.za/p"] == "x.co.za"  # eTLD+1
-
-
-def test_domain_round_distinct_mode_equals_inline(spark, sf_dir):
-    """Full scheduling_round parity across domain_key_mode — the two
-    plans differ (map-back join vs row expressions) but the fetch list
-    must be bit-identical."""
-    frontier = _frontier(spark, sf_dir)
-    seen = _seen(spark)
-    from cmoncrawl_spark.queries import prepare_domain_policies
-
-    pol = spark.read.parquet(prepare_domain_policies(spark, sf_dir))
-    outs = []
-    for mode in ("distinct", "inline"):
-        out = scheduling_round(
-            frontier, seen, pol,
-            domain_politeness=True, domain_key_mode=mode,
-        )
-        outs.append(sorted(map(tuple, out.collect())))
-    assert outs[0] == outs[1] and len(outs[0]) > 0
+    assert "not a url at all" in hosts
+    assert hosts["not a url at all"] is None
 
 
 def test_merged_shards_keep_scheme_and_members(spark):

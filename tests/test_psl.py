@@ -8,8 +8,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cmoncrawl_spark.functions.psl import (
+    default_psl_source,
     parse_psl,
-    psl_table,
     registered_domain_py,
     with_registered_domain,
 )
@@ -124,17 +124,12 @@ def test_frontier_round_groups_cctld_subdomains_by_registered_domain(spark):
 
 
 def test_parse_psl_shapes():
-    rules = dict(parse_psl())
+    _, text = default_psl_source()
+    rules = dict(parse_psl(text))
     assert rules["co.uk"] == "normal"
     assert rules["kawasaki.jp"] == "wildcard"
     assert rules["city.kawasaki.jp"] == "exception"
-    assert len(rules) > 200
-
-
-def test_psl_table_broadcastable(spark):
-    t = psl_table(spark)
-    assert t.columns == ["rule", "kind"]
-    assert t.count() > 200
+    assert len(rules) > 9000
 
 
 def test_registered_domain_malformed_hosts_twin_parity(spark):
@@ -162,17 +157,17 @@ def test_registered_domain_malformed_hosts_twin_parity(spark):
         assert got[h] == registered_domain_py(h), h
 
 
-def test_psl_table_file_loader_full_list_depths(spark):
-    """VERDICT r3 #5: the one-line deployment swap to the FULL
-    publicsuffix.org list. Loads a bundled representative slice with
-    4- and 5-label rules + the private section from a FILE, and the
-    join ladder sizes itself to the deeper rules; every resolution is
-    cross-checked against the Python twin on the same rules."""
+def test_psl_file_loader_full_list_depths(spark, monkeypatch):
+    """VERDICT r3 #5: the one-line deployment swap to another
+    publicsuffix.org-format list. $CMONCRAWL_PSL_FILE points at a
+    representative slice with 4-, 5- and 6-label rules + the private
+    section, and the join ladder sizes itself to the deeper rules;
+    every resolution is cross-checked against the Python twin on the
+    same rules."""
     import os
 
     from cmoncrawl_spark.functions.psl import (
         parse_psl,
-        psl_table,
         registered_domain_py,
         rule_max_labels,
         with_registered_domain,
@@ -182,12 +177,11 @@ def test_psl_table_file_loader_full_list_depths(spark):
         os.path.dirname(__file__), "fixtures", "psl_full_slice.dat"
     )
     rules = dict(parse_psl(open(path).read()))
-    assert rule_max_labels(rules) == 6  # deeper than the snapshot's 3
-    table = psl_table(spark, path=path)
+    assert rule_max_labels(rules) == 6  # deeper than the bundled list's 5
+    monkeypatch.setenv("CMONCRAWL_PSL_FILE", path)
 
     hosts = [
-        # full-list ccTLD families the curated snapshot lacks coverage
-        # depth for would mis-group; here they resolve per the slice
+        # ccTLD families resolve per the slice
         "shop.co.za",
         "a.b.shop.co.za",
         "tienda.com.mx",
@@ -209,8 +203,7 @@ def test_psl_table_file_loader_full_list_depths(spark):
         "cust.prod.thingdust.io",
     ]
     df = with_registered_domain(
-        spark.createDataFrame([(h,) for h in hosts], "host string"),
-        psl=table,
+        spark.createDataFrame([(h,) for h in hosts], "host string")
     )
     got = {r["host"]: r["registered_domain"] for r in df.collect()}
     for h in hosts:
@@ -277,9 +270,8 @@ def test_with_registered_domain_depth_filtered_broadcasts(spark):
 
 
 def test_default_source_is_bundled_full_list():
-    """The engine now defaults to the bundled full publicsuffix.org
-    snapshot (~9.5k rules, 5-label max depth), not the curated
-    fallback; $CMONCRAWL_PSL_FILE still overrides."""
+    """The engine defaults to the bundled full publicsuffix.org list
+    (~9.5k rules, 5-label max depth); $CMONCRAWL_PSL_FILE overrides."""
     from cmoncrawl_spark.functions.psl import (
         _kind_map,
         default_psl_rules,
@@ -328,6 +320,8 @@ def test_psl_source_fingerprint_tracks_source(monkeypatch, tmp_path):
     does (round-5 review: prepare_domain_policies' on-disk cache was
     keyed only on the input dir, so a rule-set swap silently served
     domain policies computed under the OLD rules)."""
+    import hashlib
+
     from cmoncrawl_spark.functions.psl import psl_source_fingerprint
 
     fp_bundled = psl_source_fingerprint()
@@ -336,13 +330,99 @@ def test_psl_source_fingerprint_tracks_source(monkeypatch, tmp_path):
     monkeypatch.setenv("CMONCRAWL_PSL_FILE", str(f))
     fp_file = psl_source_fingerprint()
     assert fp_file != fp_bundled
-    assert str(f) in fp_file
+    assert fp_file == hashlib.sha256(b"com\nco.uk\n").hexdigest()
     # and the domain-policy cache key is derived from it
-    import hashlib
-
     k1 = hashlib.md5(f"dpol|/x|0|{fp_bundled}".encode()).hexdigest()
     k2 = hashlib.md5(f"dpol|/x|0|{fp_file}".encode()).hexdigest()
     assert k1 != k2
+
+
+def test_psl_in_place_rewrite_changes_fingerprint_and_rules(
+    monkeypatch, tmp_path
+):
+    """The fingerprint hashes the rule text that is parsed, not the
+    file's path and mtime: a rewrite in place that keeps the mtime
+    must still change both the fingerprint and the parsed rules."""
+    import os
+
+    from cmoncrawl_spark.functions.psl import (
+        default_psl_rules,
+        psl_source_fingerprint,
+    )
+
+    f = tmp_path / "psl.dat"
+    f.write_text("com\nco.uk\n")
+    monkeypatch.setenv("CMONCRAWL_PSL_FILE", str(f))
+    fp1 = psl_source_fingerprint()
+    assert default_psl_rules() == [("com", "normal"), ("co.uk", "normal")]
+    st = os.stat(f)
+    f.write_text("com\nco.za\n")
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(f).st_mtime_ns == st.st_mtime_ns
+    assert psl_source_fingerprint() != fp1
+    assert default_psl_rules() == [("com", "normal"), ("co.za", "normal")]
+
+
+def test_package_imported_from_zip_uses_bundled_list(monkeypatch, tmp_path):
+    """A ``spark-submit --py-files`` zip of the package (.py files plus
+    data/*.dat) loads the bundled full list, not some smaller set:
+    same rules, same fingerprint, same registered domains as the
+    on-disk package, and the oracle inlines the rules as VALUES."""
+    import json
+    import os
+    import subprocess
+    import sys
+    import zipfile
+
+    import cmoncrawl_spark
+    from cmoncrawl_spark.functions.psl import psl_source_fingerprint
+
+    monkeypatch.delenv("CMONCRAWL_PSL_FILE", raising=False)
+    pkg = os.path.dirname(os.path.abspath(cmoncrawl_spark.__file__))
+    zpath = tmp_path / "cmoncrawl_spark.zip"
+    with zipfile.ZipFile(zpath, "w") as z:
+        for dirpath, _dirs, files in os.walk(pkg):
+            for name in files:
+                if name.endswith((".py", ".dat")):
+                    full = os.path.join(dirpath, name)
+                    z.write(full, os.path.relpath(full, os.path.dirname(pkg)))
+    script = f"""
+import json, sys
+sys.path.insert(0, {str(zpath)!r})
+import cmoncrawl_spark
+assert cmoncrawl_spark.__file__.startswith({str(zpath)!r}), cmoncrawl_spark.__file__
+from cmoncrawl_spark.functions.psl import (
+    default_psl_rules, psl_source_fingerprint, registered_domain_py)
+from cmoncrawl_spark.oracles import _psl_rules_cte
+print(json.dumps({{
+    "n_rules": len(default_psl_rules()),
+    "fingerprint": psl_source_fingerprint(),
+    "shop": registered_domain_py("a.shop.myshopify.com"),
+    "oracle_values": _psl_rules_cte()[0].lstrip().startswith("VALUES"),
+}}))
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, cwd=tmp_path, check=True,
+    )
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["n_rules"] > 9000
+    assert got["fingerprint"] == psl_source_fingerprint()
+    assert got["shop"] == "shop.myshopify.com"
+    assert got["oracle_values"]
+
+
+def test_missing_bundled_list_raises(monkeypatch, tmp_path):
+    """No rule file means no registered domains: the loader raises
+    instead of falling back to a smaller rule set."""
+    import pytest
+
+    from cmoncrawl_spark.functions import psl
+
+    monkeypatch.delenv("CMONCRAWL_PSL_FILE", raising=False)
+    monkeypatch.setattr(psl.resources, "files", lambda _pkg: tmp_path)
+    with pytest.raises(FileNotFoundError, match="public suffix list"):
+        psl.default_psl_rules()
 
 
 def test_oracle_psl_cte_hostile_path_falls_back_to_values(
