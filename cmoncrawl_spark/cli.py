@@ -32,7 +32,6 @@ import argparse
 import importlib.util
 import json
 import os
-import sys
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession

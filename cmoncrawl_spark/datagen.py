@@ -177,9 +177,9 @@ def with_crawl_ctes(query: str, frontier: bool = False) -> str:
 def register_crawl_views(spark: SparkSession, sf_dir: str) -> None:
     """Register documents + derived pages/ccindex/seen/host_policies views.
 
-    At production scale these are Iceberg tables partitioned by
-    (crawl, subset) — see catalog.py; here they are derived views over
-    the driver's parquet so the DuckDB oracle can mirror them exactly.
+    At production scale these would be tables partitioned by
+    (crawl, subset); here they are derived views over the driver's
+    parquet so the DuckDB oracle can mirror them exactly.
     """
     load_tables(spark, sf_dir, ("documents",))
     spark.sql(with_crawl_ctes("SELECT * FROM pages")).createOrReplaceTempView(
@@ -270,13 +270,3 @@ def pages_with_html(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("html", _html("doc_id", "text", "lang"))
         .withColumn("record_encoding", charset[F.col("lang")])
     )
-
-
-def pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_crawl_views(spark, sf_dir)
-    return spark.table("pages")
-
-
-def ccindex_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_crawl_views(spark, sf_dir)
-    return spark.table("ccindex")

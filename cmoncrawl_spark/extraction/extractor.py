@@ -33,7 +33,6 @@ from pyspark.sql.types import StructType
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, MapType, StringType
 
 from cmoncrawl_spark.extraction import html as H
 from cmoncrawl_spark.extraction.encoding import decode_cascade
@@ -64,31 +63,6 @@ def check_required(
         return True
 
     return inner
-
-
-def required_filter_col(
-    df: DataFrame, required_fields: dict[str, bool], non_empty: bool = False
-) -> Column:
-    """F11 as a native expression over an ALREADY-extracted DataFrame —
-    the Catalyst twin of :func:`check_required` (missing columns fail
-    at analysis time, which is the schema-first analog of 'key not in
-    dict'). Use after apply_extractor when the validator wasn't fused
-    into the UDF stage."""
-    pred = F.lit(True)
-    for key, must_have_value in required_fields.items():
-        if key not in df.columns:
-            return F.lit(False)
-        if not must_have_value:
-            continue
-        c = F.col(key)
-        pred = pred & c.isNotNull()
-        if non_empty:
-            dt = df.schema[key].dataType
-            if isinstance(dt, StringType):
-                pred = pred & (F.length(c) > 0)
-            elif isinstance(dt, (ArrayType, MapType)):
-                pred = pred & (F.size(c) > 0)
-    return pred
 
 
 def domain_prefix_allowed(url_col: Column, prefixes: list[str]) -> Column:

@@ -1,4 +1,4 @@
-"""Scalar function library (SURVEY §2.7 X2-X9, X13-X14) — all native
+"""Scalar function library (SURVEY §2.7 X2-X9) — all native
 Column expressions, one place, reference-cited.
 
 | fn | reference |
@@ -10,7 +10,6 @@ Column expressions, one place, reference-cited.
 | cache_key              | common/caching.py:10-18 |
 | http_charset_col       | processor/pipeline/extractor.py:100-103 |
 | name_mangle            | extractor.py:148-152 |
-| coalesce_fields (X13)  | processor/extraction/utils.py:201-220 |
 """
 
 from __future__ import annotations
@@ -67,12 +66,6 @@ def http_charset_col(content_type: Column) -> Column:
 def name_mangle(url: Column, max_len: int = 100) -> Column:
     """X9 — url -> file name: '/'->'_', truncated."""
     return F.substring(F.translate(url, "/", "_"), 1, max_len)
-
-
-def coalesce_fields(*cols: Column) -> Column:
-    """X13 — first non-null wins (the reference's combine_dicts merge
-    order head > page > custom becomes argument order here)."""
-    return F.coalesce(*cols)
 
 
 def parse_timestamp_col(s: Column) -> Column:

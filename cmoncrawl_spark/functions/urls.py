@@ -11,11 +11,11 @@ Two canonicalizers:
      100 TB scale.
    - :func:`unify_url_id_py` — plain-Python twin used by tests (golden
      vectors + hypothesis differential vs the column version) and by
-     the single-threaded frontier simulator oracle.
+     the single-threaded frontier simulator oracle (``tests/simulator.py``).
 
 2. ``surt`` — RFC-3986-normalized SURT form (north_rule addition; no
-   reference equivalent). Native expression fast path; the full
-   query-param-sorting variant is an Arrow-batched pandas UDF.
+   reference equivalent), as the plain-Python :func:`surt_py`. No
+   engine path keys on SURT today.
 
 Reference semantics notes (pinned by the golden vectors):
 - extension strip removes EVERY occurrence of .html/.jpg/.png/.zip;
@@ -29,12 +29,10 @@ Reference semantics notes (pinned by the golden vectors):
 
 from __future__ import annotations
 
-from urllib.parse import urlsplit, urlunsplit, parse_qsl, urlencode, quote, unquote
+from urllib.parse import urlsplit, parse_qsl, urlencode, quote, unquote
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 _EXT_RE = r"\.html|\.jpg|\.png|\.zip"
 _PATH_CORE_RE = r"(/[a-zA-Z0-9_\-]*)*(/[a-zA-Z0-9\-]*)"
@@ -122,59 +120,6 @@ def surt_py(url: str) -> str:
     return f"{rev_host}{portstr}){path}" + (f"?{query}" if query else "")
 
 
-def surt_udf():
-    """Arrow-batched SURT canonicalizer (full query-sorting variant).
-
-    Returned lazily: pandas_udf registration requires an active
-    SparkSession, so modules must stay importable without one.
-    """
-
-    @pandas_udf("string")
-    def _surt(urls: pd.Series) -> pd.Series:
-        return urls.map(lambda u: surt_py(u) if isinstance(u, str) else None)
-
-    return _surt
-
-
-def surt_key_col(url: Column) -> Column:
-    """Native-expression SURT fast path (no query-param sorting).
-
-    Good enough as a partitioning / sort key at scale; exact SURT
-    (sorted query) is :func:`surt_udf`. Kept JVM-side so the frontier's
-    sort/partition keys never leave codegen.
-    """
-    host = F.lower(_host_col(url))
-    host = F.when(host.startswith("www."), F.substring(host, 5, 2048)).otherwise(host)
-    rev = F.concat_ws(",", F.reverse(F.split(host, r"\.")))
-    path = F.coalesce(F.try_parse_url(url, F.lit("PATH")), F.lit("/"))
-    query = F.try_parse_url(url, F.lit("QUERY"))
-    return F.concat(
-        rev,
-        F.lit(")"),
-        F.when(path == "", "/").otherwise(path),
-        F.when(query.isNotNull() & (query != ""), F.concat(F.lit("?"), query)).otherwise(
-            F.lit("")
-        ),
-    )
-
-
 def host_of(url: Column) -> Column:
     """url_host_name (netloc incl. any www.) as native expression."""
     return _host_col(url)
-
-
-def registered_domain_col(host: Column) -> Column:
-    """Quick two-label heuristic — WRONG for ccTLD registrations
-    (``foo.co.uk`` -> ``co.uk``). Use
-    :func:`cmoncrawl_spark.functions.psl.with_registered_domain`
-    (broadcast public suffix list, exact eTLD+1) anywhere the answer
-    matters: politeness grouping, hot-domain salting, DOMAIN-match
-    index queries. Kept only as a dependency-free scalar for ad-hoc
-    exploration.
-    """
-    labels = F.split(host, r"\.")
-    n = F.size(labels)
-    return F.when(
-        n >= 2,
-        F.concat_ws(".", F.element_at(labels, -2), F.element_at(labels, -1)),
-    ).otherwise(host)

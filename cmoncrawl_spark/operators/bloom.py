@@ -37,8 +37,8 @@ ids and the hits exchange — never full candidate rows or bloom bits
 beyond one shard per task.
 
 Checkpointing: shards serialize to rows (shard_id, bloom, n_items,
-m_bits, k_hashes, shard_scheme) — written/loaded as a parquet/Iceberg
-table per round (north_rule resumability).
+m_bits, k_hashes, shard_scheme) — written/loaded as a parquet table
+per round (north_rule resumability).
 """
 
 from __future__ import annotations
@@ -149,8 +149,7 @@ def build_shards(
     One shuffle (groupBy shard) of (shard, h1, h2) only, then an Arrow
     UDF turns each shard's hash columns into one bloom blob row. Shard
     sizing is static from ``expected_per_shard`` — at scale you'd size
-    from the seen-table row count (a cheap count on Iceberg metadata,
-    no scan).
+    from the seen-table row count (a metadata count, no scan).
     """
     m, k = optimal_params(expected_per_shard, fpp)
 
@@ -192,11 +191,11 @@ def probe_positive_ids(
     (~1% at scale plus the true hits); the id column is filtered as an
     Arrow array, never converted.
 
-    A shard may legitimately carry MULTIPLE blob rows: append-only
-    crawl rounds add one blob per round, and merge_bloom_shards keeps
-    one blob per (m_bits, k_hashes). Membership is the OR over every
-    blob row — probing only the first would produce silent false
-    negatives (duplicate fetches).
+    A shard may legitimately carry MULTIPLE blob rows, possibly with
+    different (m_bits, k_hashes): append-only crawl rounds add up to
+    one blob per shard per round, and nothing compacts them. Membership
+    is the OR over every blob row — probing only the first would
+    produce silent false negatives (duplicate fetches).
     """
     require_shard_scheme(shards)
     out_schema = StructType([StructField(id_col, candidates.schema[id_col].dataType)])

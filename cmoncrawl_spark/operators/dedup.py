@@ -4,9 +4,9 @@ Four flavors, each a `queries()` entry:
 
 - exact: content-hash groupBy (queries.q_exact_dedup_docs);
 - MinHash + LSH banding: shingle -> minhash signature -> band buckets
-  -> candidate pairs -> EXACT Jaccard verify. Everything up to the
-  verify is native Catalyst expressions (xxhash64 + higher-order
-  functions) — no Python anywhere, fully codegen'd;
+  -> candidate pairs -> EXACT Jaccard verify. Shingling, banding and
+  the verify are native Catalyst expressions (xxhash64 + higher-order
+  functions); the signature is one Arrow-batched numpy UDF;
 - SimHash: JVM-side token hashing, numpy bit-vote in one Arrow UDF;
 - n-gram Jaccard: exact pair similarity via array_intersect/union.
 
@@ -58,31 +58,11 @@ def shingle_hashes(text_col: Column, k: int = 3) -> Column:
     return F.transform(shingles(text_col, k), lambda s: F.xxhash64(s))
 
 
-def minhash_signature(
-    hashes_col: Column, num_perm: int = 32, seed: int = 7
-) -> Column:
-    """array<bigint> signature: min((a * (h mod P) + b) mod P) per
-    permutation — overflow-free under ANSI mode (pure expressions).
-
-    num_perm passes over the shingle array; prefer
-    :func:`minhash_signature_udf` on wide corpora (one numpy pass)."""
-    sig = [
-        F.array_min(
-            F.transform(
-                hashes_col,
-                lambda h: F.pmod(F.lit(a) * F.pmod(h, F.lit(_P)) + F.lit(b), F.lit(_P)),
-            )
-        )
-        for a, b in _perm_params(num_perm, seed)
-    ]
-    return F.array(*sig)
-
-
 def minhash_signature_udf(num_perm: int = 32, seed: int = 7):
-    """Arrow-batched numpy twin of :func:`minhash_signature` — bit-
-    identical output (same params, same mod-P arithmetic on int64),
-    ~50x faster: the (perm x shingle) matrix min is one numpy op per
-    row instead of num_perm Catalyst array traversals."""
+    """array<bigint> signature: min((a * (h mod P) + b) mod P) per
+    permutation, as one Arrow-batched numpy pass per row: the
+    (perm x shingle) matrix min is one numpy op, ~50x faster than
+    num_perm Catalyst array traversals."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf

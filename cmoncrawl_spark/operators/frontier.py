@@ -16,7 +16,8 @@ crawl_delay)) while keeping the reference's dedup semantics (D1).
 Determinism (SURVEY §7 R1): every ordering is TOTAL — priority desc,
 depth asc, then canonical url_id as the unique tiebreaker — so output
 is bit-for-bit reproducible at any parallelism and matches the
-single-threaded simulator oracle.
+single-threaded simulator oracle (``tests/simulator.py``, checked by
+``tests/test_rounds.py``).
 
 Scale design:
 - canonicalization + ordering keys are native expressions (codegen);

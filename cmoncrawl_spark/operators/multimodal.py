@@ -11,7 +11,6 @@ container has no image/audio libraries — a deployment sets
 from __future__ import annotations
 
 import hashlib
-import struct
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -148,12 +147,6 @@ def _fake_waveform(payload: bytes, n: int = 512) -> tuple[np.ndarray, int]:
         dtype=np.float64,
     )
     return ((m - 1024.0) / 1024.0).astype(np.float32), 16_000
-
-
-def decode_audio(payload: bytes) -> tuple[np.ndarray, int]:
-    if _AUDIO_DECODER is not None:
-        return _AUDIO_DECODER(payload)
-    return _fake_waveform(payload)
 
 
 AUDIO_FEATURE_SCHEMA = StructType(

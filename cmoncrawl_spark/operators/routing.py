@@ -8,8 +8,7 @@ contains the timestamp wins; no match raises
 Spark-first: the route table is tiny and static, so the whole dispatch
 compiles to a single CASE WHEN expression chain (pure Catalyst,
 whole-stage codegen, no UDF, no join, no shuffle). First-match-wins
-order is preserved by CASE WHEN evaluation order. A broadcast-join
-variant is provided for very large route sets.
+order is preserved by CASE WHEN evaluation order.
 """
 
 from __future__ import annotations
@@ -17,7 +16,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -76,39 +75,4 @@ def route_records(
 ) -> DataFrame:
     return records.withColumn(
         out_col, route_expr(routes, F.col(url_col), F.col(ts_col), no_match)
-    )
-
-
-def route_records_join(
-    records: DataFrame,
-    routes_df: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-) -> DataFrame:
-    """Broadcast nested-loop variant for large route tables.
-
-    routes_df: (route_idx int, name string, regex string,
-    since timestamp?, to timestamp?). First match by route_idx wins via
-    a per-record row_number — same contract, join-shaped.
-    """
-    r = F.broadcast(routes_df)
-    # A synthetic per-row id (not all record columns) keys the first-match
-    # window: duplicate input rows keep their multiplicity, and the window
-    # partitions on one long instead of the whole row.
-    recs = records.withColumn("_rec_id", F.monotonically_increasing_id())
-    joined = recs.join(
-        r,
-        F.col(url_col).rlike(F.col("regex"))
-        & (F.col("since").isNull() | (F.col(ts_col) >= F.col("since")))
-        & (F.col("to").isNull() | (F.col(ts_col) < F.col("to"))),
-        "left",
-    )
-    w = Window.partitionBy(F.col("_rec_id")).orderBy(
-        F.col("route_idx").asc_nulls_last()
-    )
-    return (
-        joined.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_rec_id", "regex", "since", "to", "route_idx")
-        .withColumnRenamed("name", "route")
     )

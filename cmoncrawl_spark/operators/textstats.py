@@ -29,10 +29,6 @@ def tokens(text_col: Column) -> Column:
     return F.split(text_col, r"\s+")
 
 
-def token_count(text_col: Column) -> Column:
-    return F.size(tokens(text_col))
-
-
 def bpe_ish_token_count(text_col: Column) -> Column:
     """Sub-word-ish counting: words + punctuation clusters + digits —
     a regex approximation of BPE token counts for budget estimates."""

@@ -1,4 +1,4 @@
-"""Sinks (SURVEY §2 K1-K3).
+"""Sinks (SURVEY §2 K1-K2).
 
 K1 — JSONL with rotation: the reference streams one sorted-keys JSON
 object per line, rotating files every ``max_file_size`` records
@@ -14,7 +14,6 @@ order, which we pin by sorting column names — matching
 ``sort_keys=True`` for flat records.
 
 K2 — per-record HTML files: partitioned text write.
-K3 — memory sink: collect/toPandas (debug only, documented as such).
 """
 
 from __future__ import annotations
@@ -103,15 +102,6 @@ def write_html_files(df: DataFrame, path: str, url_col: str = "url") -> None:
                 f.write(row["value"] or "")
 
     named.foreachPartition(_write)
-
-
-def to_memory(df: DataFrame) -> list[dict]:
-    """K3 — debug sink (driver-side; never use in a pipeline)."""
-    return [row.asDict() for row in df.collect()]
-
-
-def read_jsonl_output(spark, path: str):
-    return spark.read.text(path)
 
 
 def count_output_files(path: str) -> int:

@@ -1,4 +1,4 @@
-"""JSONL / local-file sources (SURVEY §2 S7/S8/S9) and domain-record
+"""JSONL / local-file sources (SURVEY §2 S7/S8) and domain-record
 schema.
 
 S8 — domain-record JSONL: the reference reads lines of
@@ -12,8 +12,6 @@ nulls, mirroring pydantic validation).
 S7 — local HTML files: ``wholetext`` scan + metadata-inference
 expressions (og:url etc., downloader.py:303-329) as native
 regexp_extract — no UDF.
-
-S9 — dummy source: a projection.
 """
 
 from __future__ import annotations
@@ -107,8 +105,3 @@ def read_html_files(spark: SparkSession, path: str) -> DataFrame:
         url.alias("url"),
         year.alias("inferred_year"),
     )
-
-
-def dummy_records(records: DataFrame) -> DataFrame:
-    """S9 — record-only mode: pass through with empty content."""
-    return records.withColumn("html", F.lit(b""))

@@ -10,12 +10,10 @@ north_rule requirements implemented here:
   reference's add-after-success gate
   (/root/reference/cmoncrawl/middleware/synchronized.py:36-41).
 
-Storage: every table is a directory of parquet under ``state_dir``
-behind the tiny :class:`StateStore` facade. On a production cluster
-the same facade writes Iceberg tables (``writeTo(...).append()`` /
-snapshot commit); parquet keeps this sandbox hermetic — the commit
-protocol (write new round dir, then write _round marker) gives the
-same crash-consistency the Iceberg snapshot would.
+Storage: crawl state is parquet behind the tiny :class:`StateStore`
+facade: every table is a directory of per-round parquet dirs under
+``state_dir``. The commit protocol (write the new round dirs, then
+write the ``_round_N.json`` marker last) gives crash consistency.
 
 Bloom shards are APPEND-ONLY deltas, not merged-and-rewritten: a
 round builds blobs over ITS new ids only and the probe ORs every blob
@@ -24,9 +22,10 @@ round's state write is O(round) — hashing AND bytes. (The previous
 protocol merged old+new blobs each round: new ids were O(round) but the
 merged blob REWRITE was O(history) bytes per round.) The seen set is likewise
 APPEND-ONLY (per-round delta dirs, read as a union): no state write
-grows with history. At round counts where many small delta files /
-blob rows hurt, merge_bloom_shards is the compaction primitive
-(Iceberg rewrite_data_files analog) without changing this protocol.
+grows with history. The cost moves to the reads: bloom blob rows grow
+by up to one per shard per round and delta dirs by one per table per
+round, and no compaction runs yet.
+
 The bloom filter is the seen set's only approximate stage: ids are
 never deleted from it, and a crawl that must forget ids (re-crawl
 after a TTL) would need a deletable filter, which the engine does not
@@ -49,7 +48,7 @@ _log = logging.getLogger(__name__)
 
 
 class StateStore:
-    """Parquet-dir state with an atomic round marker (Iceberg-shaped)."""
+    """Parquet-dir state with an atomic round marker."""
 
     def __init__(self, spark: SparkSession, state_dir: str) -> None:
         self.spark = spark
@@ -96,41 +95,6 @@ class StateStore:
         return max(rounds, default=-1)
 
 
-def merge_bloom_shards(old: DataFrame, new: DataFrame) -> DataFrame:
-    """OR together shard blobs with identical (m_bits, k_hashes,
-    shard_scheme)."""
-    import numpy as np
-    import pandas as pd
-
-    def _merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        blobs = [np.frombuffer(b, dtype=np.uint8) for b in pdf["bloom"]]
-        out = blobs[0].copy()
-        for b in blobs[1:]:
-            out |= b
-        return pd.DataFrame(
-            {
-                "shard_id": [int(key[0])],
-                "bloom": [out.tobytes()],
-                "n_items": [int(pdf["n_items"].sum())],
-                "m_bits": [int(key[1])],
-                "k_hashes": [int(key[2])],
-                "shard_scheme": [int(key[3])],
-            }
-        )
-
-    # Group by the full filter parameterization, not just shard_id: ORing
-    # blobs built with different (m, k) or shard choices would silently
-    # produce false NEGATIVES, breaking dedupe_against_seen's exactness
-    # contract.
-    both = old.unionByName(new)
-    merged = both.groupBy(
-        "shard_id", "m_bits", "k_hashes", "shard_scheme"
-    ).applyInPandas(
-        lambda key, pdf: _merge(key, pdf), bloom_ops.BLOOM_SHARD_SCHEMA
-    )
-    return merged
-
-
 def run_round(
     store: StateStore,
     round_id: int,
@@ -151,9 +115,9 @@ def run_round(
     pre-shuffle cut (see scheduling_round); multi-round drivers derive
     it ONCE from the round-invariant policies table instead of paying
     one aggregation job per round.
-    expected_per_shard: bloom sizing (bits scale with it). MUST be held
-    constant across a crawl's rounds so blobs merge (identical (m, k));
-    run_crawl derives it once from the seed count. The r5 fixed 1M
+    expected_per_shard: bloom sizing (bits scale with it). run_crawl
+    derives it once from the seed count and holds it across the
+    crawl's rounds, so every blob row shares one (m, k). The r5 fixed 1M
     default meant 1.2 MB of filter bits per shard — ~38 MB written and
     ~77 MB shuffled through the merge EVERY round regardless of crawl
     size (measured 1.3 s/round at a 50k-URL frontier, the largest
@@ -180,9 +144,8 @@ def run_round(
         # equals the merged filter's. The r5 protocol merged old+new
         # and REWROTE every bit each round: O(history) bytes written
         # and a two-Python-stage merge job per round (the very bug the
-        # note above calls out for the seen set). merge_bloom_shards
-        # remains the compaction primitive (Iceberg rewrite_data_files
-        # analog) for when round counts make many blob rows hurt.
+        # note above calls out for the seen set). Blob rows therefore
+        # grow by up to one per shard per round; nothing compacts them.
         shards = store.read_all("bloom_shards", round_id - 1)
 
     fetch_list = scheduling_round(
@@ -322,8 +285,8 @@ def run_crawl(
         )
         # Bloom sizing from THIS crawl's upper-bound candidate count
         # (seeds fan out by `fanout` each round), split over the
-        # shards; constant across rounds so every round's blobs merge
-        # (identical (m, k)). Deterministic on resume: same seeds +
+        # shards; constant across rounds so every round's blobs share
+        # one (m, k). Deterministic on resume: same seeds +
         # same arguments -> same sizing. The old fixed 1M/shard wrote
         # megabytes of filter bits per round for kilobyte-scale crawls.
         n_seeds = seeds.count()

@@ -173,37 +173,6 @@ def test_check_required_semantics():
     assert ve({"a": [1]}) is True
 
 
-def test_required_filter_col_matches_check_required(spark):
-    """The Catalyst twin keeps exactly the rows the validator keeps."""
-    from cmoncrawl_spark.extraction.extractor import (
-        check_required,
-        required_filter_col,
-    )
-
-    rows = [
-        (0, "x", ["t"]),
-        (1, None, ["t"]),
-        (2, "", ["t"]),
-        (3, "x", []),
-        (4, "x", None),
-    ]
-    df = spark.createDataFrame(rows, "id int, a string, b array<string>")
-    req = {"a": True, "b": True}
-    v = check_required(req, non_empty=True)
-    expected = {
-        r[0] for r in rows if v({"a": r[1], "b": r[2]})
-    }
-    got = {
-        r["id"]
-        for r in df.where(required_filter_col(df, req, non_empty=True)).collect()
-    }
-    assert got == expected == {0}
-    # missing column -> analysis-time False (schema-first analog)
-    assert df.where(
-        required_filter_col(df, {"nope": True})
-    ).count() == 0
-
-
 def test_allowed_domain_prefixes_both_paths(spark):
     """F10: native prefilter and the extract_one parity path agree
     (reference extractor.py:313-318 splits the raw netloc)."""

@@ -149,16 +149,16 @@ def test_fetch_schedule_keeps_unlisted_hosts(spark):
 
 
 def test_bloom_probe_multi_blob_shards(spark, sf_dir):
-    """A shard may carry several blob rows (merge_bloom_shards keeps one
-    blob per (shard_id, m_bits, k_hashes) parameterization): membership
-    must be the OR over ALL blobs, not just the first row — a
-    first-row-only probe silently loses half the seen set."""
+    """A shard may carry several blob rows (append-only crawl rounds
+    add up to one per shard per round, and nothing compacts them):
+    membership must be the OR over ALL blobs, not just the first row —
+    a first-row-only probe silently loses half the seen set."""
     register_crawl_views(spark, sf_dir)
     seen = _seen(spark).orderBy("url_id")
     a = seen.limit(20)
     b = seen.subtract(a)
     # different expected_per_shard -> different (m_bits, k_hashes):
-    # merged shards legitimately hold two blob rows per shard_id
+    # a shard table legitimately holds two blob rows per shard_id
     shards = bloom_ops.build_shards(
         a, num_shards=4, expected_per_shard=500
     ).unionByName(
@@ -272,21 +272,3 @@ def test_domain_politeness_canonicalize_edge_hosts(spark, sf_dir):
     assert hosts["https://a.b.x.co.za/p"] == "x.co.za"  # eTLD+1
     assert "not a url at all" in hosts
     assert hosts["not a url at all"] is None
-
-
-def test_merged_shards_keep_scheme_and_members(spark):
-    """merge_bloom_shards ORs same-parameter blobs and carries each
-    blob's shard_scheme, so the merged table still probes."""
-    from cmoncrawl_spark.streaming.rounds import merge_bloom_shards
-
-    a = spark.createDataFrame([(f"a.com/p{i}x",) for i in range(200)], "url_id string")
-    b = spark.createDataFrame([(f"b.org/q{i}y",) for i in range(200)], "url_id string")
-    merged = merge_bloom_shards(
-        bloom_ops.build_shards(a, num_shards=4, expected_per_shard=500),
-        bloom_ops.build_shards(b, num_shards=4, expected_per_shard=500),
-    )
-    rows = merged.collect()
-    assert len(rows) == 4
-    assert {r["shard_scheme"] for r in rows} == {bloom_ops.SHARD_SCHEME}
-    both = a.unionByName(b)
-    assert bloom_ops.probe_positive_ids(both, merged, num_shards=4).count() == 400

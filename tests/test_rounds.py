@@ -11,8 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from cmoncrawl_spark.datagen import register_crawl_views
-from cmoncrawl_spark.plans import simulator as sim
 from cmoncrawl_spark.streaming.rounds import StateStore, run_crawl
+
+import simulator as sim
 
 
 @pytest.fixture

@@ -54,40 +54,6 @@ def test_filter_non_200(spark):
     assert kept == {1, 3}  # missing header passes (reference semantics)
 
 
-def test_transform_combinators():
-    from cmoncrawl_spark.extraction import html as H
-    from cmoncrawl_spark.extraction.transforms import (
-        chain,
-        combine_dicts,
-        extract_transform,
-        get_attribute,
-        get_tag,
-        get_tags,
-        get_text,
-        get_text_list,
-    )
-
-    dom = H.parse(
-        '<div><a href="/x">one</a><a href="/y">two</a>'
-        '<span class="t">hello</span></div>'
-    )
-    assert chain(get_tag("a"), get_attribute("href"))(dom) == "/x"
-    assert chain(get_tag("span.t"), get_text())(dom) == "hello"
-    assert chain(get_tags("a"), get_text_list(","))(dom) == "one,two"
-    # once None always None
-    assert chain(get_tag("nope"), get_attribute("href"))(dom) is None
-    out = extract_transform(
-        dom,
-        {"link": "a", "label": "span.t"},
-        {"link": get_attribute("href"), "label": get_text()},
-    )
-    assert out == {"link": "/x", "label": "hello"}
-    assert combine_dicts({"a": None, "b": 1}, {"a": 2, "b": 9}) == {
-        "a": 2,
-        "b": 1,
-    }
-
-
 def test_local_dao_range_and_cache(tmp_path):
     from cmoncrawl_spark.sources.dao import LocalFileDAO, RangeCache, cache_key
 
