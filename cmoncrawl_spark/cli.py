@@ -36,6 +36,7 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 # ----------------------------------------------------------------- helpers
@@ -51,6 +52,17 @@ def _write_jsonl(df: DataFrame, path: str, max_per_file: int) -> None:
     from cmoncrawl_spark.sinks.jsonl import write_jsonl
 
     write_jsonl(df, path, max_file_size=max_per_file)
+
+
+def _dao_factory(base: str):
+    """Per-partition DAO constructor for ``--dao_base``: an http(s) base
+    gets range GETs retried on 5xx (reference downloader.py:104-119),
+    anything else is a local archive directory."""
+    from cmoncrawl_spark.sources.dao import HTTPRangeDAO, LocalFileDAO, RetryingDAO
+
+    if "://" in base:
+        return lambda: RetryingDAO(HTTPRangeDAO(base))
+    return lambda: LocalFileDAO(base)
 
 
 def load_config(path: str) -> dict:
@@ -84,22 +96,20 @@ def import_extractor(extractors_path: str, name: str):
 
 def run_download(args: argparse.Namespace) -> None:
     spark = _spark("cmon-download")
+    since = datetime.fromisoformat(args.since) if args.since else None
+    to = datetime.fromisoformat(args.to) if args.to else None
     if args.cdx_server:
         # live gateway path: the crawl need not exist as a table
         # (reference gateway_query.py:142-241)
-        from cmoncrawl_spark.sources.gateway import cdx_records
+        from cmoncrawl_spark.sources.gateway import cdx_records, cdx_timestamp
 
         live = cdx_records(
             spark,
             args.cdx_server,
             args.urls,
             match_type=args.match_type,
-            since=args.since.replace("-", "").replace(":", "").replace(
-                "T", ""
-            ).replace(" ", "") if args.since else None,
-            to=args.to.replace("-", "").replace(":", "").replace(
-                "T", ""
-            ).replace(" ", "") if args.to else None,
+            since=cdx_timestamp(since) if since else None,
+            to=cdx_timestamp(to) if to else None,
         )
         recs = live.select(
             "url",
@@ -119,35 +129,28 @@ def run_download(args: argparse.Namespace) -> None:
             spark.table("ccindex"),
             args.urls,
             MatchType(args.match_type),
-            since=datetime.fromisoformat(args.since) if args.since else None,
-            to=datetime.fromisoformat(args.to) if args.to else None,
+            since=since,
+            to=to,
             limit=args.limit,
         )
     if args.mode == "record":
         # the reference's record output shape: one sorted-keys
         # {"domain_record": {...}} object per line.
+        from cmoncrawl_spark.functions.scalars import to_sql_date
+
         dr = F.struct(
             F.lit(None).cast("string").alias("digest"),
             F.lit(None).cast("string").alias("encoding"),
             F.col("warc_filename").alias("filename"),
             F.col("warc_record_length").alias("length"),
             F.col("warc_record_offset").alias("offset"),
-            F.date_format("fetch_time", "yyyy-MM-dd HH:mm:ss").alias(
-                "timestamp"
-            ),
+            to_sql_date(F.col("fetch_time")).alias("timestamp"),
             F.col("url").alias("url"),
         )
         out = recs.select(dr.alias("domain_record"))
         _write_jsonl(out, args.output, args.max_crawls_per_file)
     else:  # html: range-fetch payloads through the DAO
         from cmoncrawl_spark.sinks.jsonl import write_html_files
-        from cmoncrawl_spark.sources.dao import HTTPRangeDAO, LocalFileDAO
-
-        base = args.dao_base or "https://data.commoncrawl.org"
-        if "://" in base:
-            factory = lambda: HTTPRangeDAO(base)  # noqa: E731
-        else:
-            factory = lambda: LocalFileDAO(base)  # noqa: E731
         from cmoncrawl_spark.sources.dao import fetch_ranges
 
         fetched = fetch_ranges(
@@ -157,7 +160,7 @@ def run_download(args: argparse.Namespace) -> None:
                 F.col("warc_record_offset").alias("offset"),
                 F.col("warc_record_length").alias("length"),
             ),
-            factory,
+            _dao_factory(args.dao_base or "https://data.commoncrawl.org"),
         )
         write_html_files(
             fetched.select("url", F.col("content").alias("html")), args.output
@@ -246,7 +249,7 @@ def run_crawl(args: argparse.Namespace) -> None:
 
 def run_extract(args: argparse.Namespace) -> None:
     from cmoncrawl_spark.extraction.extractor import apply_extractor
-    from cmoncrawl_spark.sources.jsonl import read_html_files
+    from cmoncrawl_spark.sources.jsonl import JSONL_SCHEMA, read_html_files
 
     cfg = load_config(args.config)
     spark = _spark("cmon-extract")
@@ -266,25 +269,13 @@ def run_extract(args: argparse.Namespace) -> None:
             df, extractor, passthrough=["source_path"], url_col="url"
         )
     else:  # record mode: jsonl with embedded html (or DAO fetch)
-        schema = (
-            "domain_record struct<filename:string, url:string, offset:bigint,"
-            " length:bigint, digest:string, encoding:string,"
-            " timestamp:string>, html string"
+        schema = StructType(
+            JSONL_SCHEMA.fields + [StructField("html", StringType())]
         )
         raw = spark.read.schema(schema).json(args.files)
         if args.dao_base:
-            from cmoncrawl_spark.sources.dao import (
-                HTTPRangeDAO,
-                LocalFileDAO,
-                fetch_ranges,
-            )
+            from cmoncrawl_spark.sources.dao import fetch_ranges
 
-            base = args.dao_base
-            factory = (
-                (lambda: HTTPRangeDAO(base))
-                if "://" in base
-                else (lambda: LocalFileDAO(base))
-            )
             flat = raw.select(
                 F.col("domain_record.url").alias("url"),
                 F.col("domain_record.filename").alias("filename"),
@@ -292,9 +283,9 @@ def run_extract(args: argparse.Namespace) -> None:
                 F.col("domain_record.length").alias("length"),
                 F.col("domain_record.encoding").alias("record_encoding"),
             )
-            df = fetch_ranges(flat, factory).withColumnRenamed(
-                "content", "html"
-            )
+            df = fetch_ranges(
+                flat, _dao_factory(args.dao_base)
+            ).withColumnRenamed("content", "html")
         else:
             df = raw.where(
                 F.col("html").isNotNull() & (F.col("html") != "")

@@ -128,19 +128,9 @@ class SparkExtractor:
         return self.extract_dom(dom, meta)
 
 
-class TitleExtractor(SparkExtractor):
-    """The reference test-fixture extractor: {'title': soup.title}
-    (/root/reference/tests/test_extract/extractors/test_extract.py)."""
-
-    schema = "title string"
-
-    def extract_dom(self, dom: H.Node, meta: PageMeta) -> dict | None:
-        return {"title": H.title_of(dom)}
-
-
 class TitleTagExtractor(SparkExtractor):
-    """Fixture-faithful variant: the RAW title tag (outer HTML), which
-    is what the reference pipeline emits — its fixture extractor
+    """The reference test-fixture extractor: the RAW title tag (outer
+    HTML), which is what the reference pipeline emits — its extractor
     returns the bs4 Tag ({'title': soup.title}) and StreamerFileJSON
     serializes it via str(), producing
     '<title ...>...</title>' (end_to_end_test.py:65-72,93-99)."""
@@ -277,7 +267,6 @@ def apply_extractor(
     html_col: str = "html",
     passthrough: list[str] | None = None,
     record_encoding_col: str | None = None,
-    content_type_col: str | None = None,
     url_col: str | None = "url",
 ) -> DataFrame:
     """Compile an extractor into one mapInPandas stage.
@@ -298,7 +287,7 @@ def apply_extractor(
     # without it every input column, including the full document text,
     # crosses JVM->Python per row).
     needed: list[str] = list(passthrough)
-    for c in (html_col, record_encoding_col, content_type_col, url_col):
+    for c in (html_col, record_encoding_col, url_col):
         if c and c in df.columns and c not in needed:
             needed.append(c)
     df = df.select(*needed)
@@ -330,22 +319,13 @@ def apply_extractor(
                 if record_encoding_col and record_encoding_col in pdf
                 else [None] * n
             )
-            ctypes = (
-                pdf[content_type_col].tolist()
-                if content_type_col and content_type_col in pdf
-                else [None] * n
-            )
             pt_cols = [pdf[c].tolist() for c in passthrough]
             rows: list[list] = []
             for i in range(n):
                 raw = htmls[i]
                 if raw is None:
                     continue
-                meta = PageMeta(
-                    url=urls[i],
-                    record_encoding=encs[i],
-                    content_type=ctypes[i],
-                )
+                meta = PageMeta(url=urls[i], record_encoding=encs[i])
                 res = extractor.extract_one(bytes(raw), meta)
                 if res is None:
                     continue

@@ -14,21 +14,13 @@ must_exist / must_not_exist filters — SURVEY §2 F9, X10):
 
 This is NOT a byte-for-bit bs4 clone (bs4 is unavailable here); the
 contract it honors is the engine's own golden fixtures, which datagen
-synthesizes. Swap in bs4 behind the same functions when available —
-``BS4_AVAILABLE`` gates that upgrade path.
+synthesizes. Swap in bs4 behind the same functions when available.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 from html.parser import HTMLParser
-
-try:  # pragma: no cover - not present in this container
-    import bs4  # noqa: F401
-
-    BS4_AVAILABLE = True
-except ImportError:
-    BS4_AVAILABLE = False
 
 _VOID = {
     "area", "base", "br", "col", "embed", "hr", "img", "input",

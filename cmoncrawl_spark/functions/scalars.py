@@ -1,15 +1,19 @@
 """Scalar function library (SURVEY §2.7 X2-X9) — all native
-Column expressions, one place, reference-cited.
+Column expressions, one place, reference-cited, each with an engine
+caller.
 
-| fn | reference |
-|----|-----------|
-| crawl_to_year          | aggregator/utils/helpers.py:187-192 |
-| crawl_url_to_name      | aggregator/utils/athena_query_maker.py:53-56 |
-| to_compact_timestamp / from_compact_timestamp | helpers.py:195-200 |
-| to_sql_date            | athena_query_maker.py:36-37 |
-| cache_key              | common/caching.py:10-18 |
-| http_charset_col       | processor/pipeline/extractor.py:100-103 |
-| name_mangle            | extractor.py:148-152 |
+| fn | reference | engine caller |
+|----|-----------|---------------|
+| crawl_to_year          | aggregator/utils/helpers.py:187-192 | ccindex.index_query |
+| from_compact_timestamp | helpers.py:195-200 | gateway.cdx_records |
+| to_sql_date            | athena_query_maker.py:36-37 | cli download record |
+| cache_key              | common/caching.py:10-18 | queries.q_cache_key |
+| name_mangle            | extractor.py:148-152 | sinks.write_html_files |
+| portable_hash64        | (DuckDB md5_number_lower twin) | simhash, rolling-fingerprint queries |
+
+The CDX ``from``/``to`` encode (helpers.py:195-200) formats a Python
+datetime, so it is ``sources.gateway.cdx_timestamp``; the HTTP charset
+rule (X8) is ``extraction.encoding.http_charset``.
 """
 
 from __future__ import annotations
@@ -23,18 +27,8 @@ def crawl_to_year(crawl: Column) -> Column:
     return F.regexp_extract(crawl, r"MAIN-(\d{4})", 1).cast("int")
 
 
-def crawl_url_to_name(crawl_url: Column) -> Column:
-    """X3 — last path segment, '-index' suffix stripped."""
-    last = F.element_at(F.split(crawl_url, "/"), -1)
-    return F.element_at(F.split(last, "-index"), 1)
-
-
-def to_compact_timestamp(ts: Column) -> Column:
-    """X4 — CDX compact %Y%m%d%H%M%S encode."""
-    return F.date_format(ts, "yyyyMMddHHmmss")
-
-
 def from_compact_timestamp(s: Column) -> Column:
+    """X4 — CDX compact %Y%m%d%H%M%S decode."""
     return F.to_timestamp(s, "yyyyMMddHHmmss")
 
 
@@ -56,34 +50,9 @@ def cache_key(filename: Column, offset: Column, length: Column) -> Column:
     )
 
 
-def http_charset_col(content_type: Column) -> Column:
-    """X8 — charset from a Content-Type header value."""
-    return F.nullif(
-        F.regexp_extract(content_type, r"charset=([^;]*)$", 1), F.lit("")
-    )
-
-
-def name_mangle(url: Column, max_len: int = 100) -> Column:
-    """X9 — url -> file name: '/'->'_', truncated."""
-    return F.substring(F.translate(url, "/", "_"), 1, max_len)
-
-
-def parse_timestamp_col(s: Column) -> Column:
-    """X6 — ISO-union timestamp parse (reference common/types.py:11-21
-    accepts any datetime.fromisoformat input): space or 'T' separator,
-    optional fractional seconds / offset, date-only. NULL in -> NULL
-    out; unparseable -> NULL (try_ semantics — the DataFrame analog of
-    pydantic's validation error surfacing as a null row to filter)."""
-    pats = [
-        "yyyy-MM-dd HH:mm:ss",
-        "yyyy-MM-dd'T'HH:mm:ss",
-        "yyyy-MM-dd HH:mm:ss.SSSSSS",
-        "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-        "yyyy-MM-dd HH:mm:ssXXX",
-        "yyyy-MM-dd'T'HH:mm:ssXXX",
-        "yyyy-MM-dd",
-    ]
-    return F.coalesce(*[F.try_to_timestamp(s, F.lit(p)) for p in pats])
+def name_mangle(url: Column) -> Column:
+    """X9 — url -> file name: '/'->'_', truncated to 100 chars."""
+    return F.substring(F.translate(url, "/", "_"), 1, 100)
 
 
 def portable_hash64(s: Column) -> Column:
@@ -104,10 +73,3 @@ def portable_hash64(s: Column) -> Column:
     two63 = F.lit("9223372036854775808").cast("decimal(20,0)")
     two64 = F.lit("18446744073709551616").cast("decimal(21,0)")
     return F.when(u >= two63, u - two64).otherwise(u).cast("long")
-
-
-def filter_non_200(http_header: Column) -> Column:
-    """F6 — keep when http_response_code is absent or '200'
-    (extractor.py:157-167: missing header does NOT drop)."""
-    code = http_header.getItem("http_response_code")
-    return code.isNull() | (code == "200")

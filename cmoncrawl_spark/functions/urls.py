@@ -1,21 +1,15 @@
 """URL canonicalization — the engine's hottest scalar path.
 
-Two canonicalizers:
-
-1. ``unify_url_id`` — the reference's URL-seen id (semantics from
-   /root/reference/cmoncrawl/aggregator/utils/helpers.py:39-59, golden
-   vectors tests/gateway_test.py:111-151). Implemented TWICE:
-   - :func:`unify_url_id_col` — pure Catalyst column expressions
-     (``parse_url`` + ``regexp_*``). JVM-side, whole-stage codegen,
-     zero Python in the hot path — this is what frontier rounds use at
-     100 TB scale.
-   - :func:`unify_url_id_py` — plain-Python twin used by tests (golden
-     vectors + hypothesis differential vs the column version) and by
-     the single-threaded frontier simulator oracle (``tests/simulator.py``).
-
-2. ``surt`` — RFC-3986-normalized SURT form (north_rule addition; no
-   reference equivalent), as the plain-Python :func:`surt_py`. No
-   engine path keys on SURT today.
+The canonicalizer is ``unify_url_id``, the reference's URL-seen id
+(semantics from the reference's aggregator/utils/helpers.py:39-59,
+golden vectors tests/gateway_test.py:111-151). Implemented TWICE:
+- :func:`unify_url_id_col` — pure Catalyst column expressions
+  (``parse_url`` + ``regexp_*``). JVM-side, whole-stage codegen,
+  zero Python in the hot path — this is what frontier rounds use at
+  100 TB scale.
+- :func:`unify_url_id_py` — plain-Python twin used by tests (golden
+  vectors + hypothesis differential vs the column version) and by
+  the single-threaded frontier simulator oracle (``tests/simulator.py``).
 
 Reference semantics notes (pinned by the golden vectors):
 - extension strip removes EVERY occurrence of .html/.jpg/.png/.zip;
@@ -29,7 +23,7 @@ Reference semantics notes (pinned by the golden vectors):
 
 from __future__ import annotations
 
-from urllib.parse import urlsplit, parse_qsl, urlencode, quote, unquote
+from urllib.parse import urlsplit
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -82,42 +76,6 @@ def unify_url_id_py(url: str) -> str:
     if netloc.startswith("www."):
         netloc = netloc[4:]
     return f"{netloc}{path}"
-
-
-# ---------------------------------------------------------------------------
-# SURT (Sort-friendly URI Reordering Transform) + RFC-3986 normalization
-# ---------------------------------------------------------------------------
-
-_DEFAULT_PORTS = {"http": "80", "https": "443"}
-
-
-def surt_py(url: str) -> str:
-    """RFC-3986-normalized SURT key: ``tld,domain,sub)/path?q=a&q=b``.
-
-    Normalization: lowercase scheme+host, drop fragment, drop default
-    port, percent-decode unreserved chars, sort query params, strip
-    leading ``www.``; host labels reversed and comma-joined.
-    """
-    try:
-        parts = urlsplit(url if "://" in url else "http://" + url)
-        # parts.port parses lazily and raises on non-numeric/out-of-range
-        # ports ('http://h:80x/') — one bad crawl URL must not kill a task.
-        port = parts.port
-    except ValueError:
-        return url
-    host = (parts.hostname or "").lower().rstrip(".")
-    if host.startswith("www."):
-        host = host[4:]
-    scheme = (parts.scheme or "http").lower()
-    portstr = (
-        f":{port}" if port is not None and str(port) != _DEFAULT_PORTS.get(scheme)
-        else ""
-    )
-    path = quote(unquote(parts.path or "/"), safe="/:@!$&'()*+,;=~-._") or "/"
-    qs = parse_qsl(parts.query, keep_blank_values=True)
-    query = urlencode(sorted(qs)) if qs else ""
-    rev_host = ",".join(reversed(host.split("."))) if host else ""
-    return f"{rev_host}{portstr}){path}" + (f"?{query}" if query else "")
 
 
 def host_of(url: Column) -> Column:

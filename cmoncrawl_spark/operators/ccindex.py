@@ -30,6 +30,8 @@ from urllib.parse import urlparse
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cmoncrawl_spark.functions.scalars import crawl_to_year
+
 
 class MatchType(str, Enum):
     """Reference: cmoncrawl/common/types.py:140-161."""
@@ -67,11 +69,6 @@ def match_predicate(match_type: MatchType, url: str) -> Column:
     raise ValueError(f"invalid match type {match_type}")
 
 
-def crawl_year(crawl: Column) -> Column:
-    """X2 — year embedded in the crawl name (helpers.py:187-192)."""
-    return F.regexp_extract(crawl, r"MAIN-(\d{4})", 1).cast("int")
-
-
 def index_query(
     ccindex: DataFrame,
     urls: list[str],
@@ -96,10 +93,10 @@ def index_query(
         pred = pred & url_pred
     if since is not None:
         pred = pred & (F.col("fetch_time") >= F.lit(since))
-        pred = pred & (crawl_year(F.col("crawl")) >= since.year)
+        pred = pred & (crawl_to_year(F.col("crawl")) >= since.year)
     if to is not None:
         pred = pred & (F.col("fetch_time") <= F.lit(to))
-        pred = pred & (crawl_year(F.col("crawl")) <= to.year)
+        pred = pred & (crawl_to_year(F.col("crawl")) <= to.year)
 
     out = ccindex.where(pred)
     if extra_where:

@@ -505,19 +505,6 @@ def connected_components(
     return labels
 
 
-def dedupe_keep_min(
-    docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Survivors after clustering: the min-id doc of every near-dup
-    component plus all unpaired docs (the canonical keep-one policy of
-    training-data dedup pipelines)."""
-    comp = connected_components(pairs)
-    losers = comp.where(F.col("id") != F.col("component")).select(
-        F.col("id").alias(id_col)
-    )
-    return docs.join(losers, on=id_col, how="left_anti")
-
-
 def simhash(
     docs: DataFrame,
     id_col: str = "doc_id",

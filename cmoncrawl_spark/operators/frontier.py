@@ -129,13 +129,20 @@ def per_host_topk(
     )
 
 
+def policy_budget_cap(host_policies: DataFrame) -> int:
+    """The constant per-host top-k cap: the largest budget in the
+    policies table, from one tiny driver-side agg (O(hosts)). No
+    non-null budget means nothing is schedulable, and cap 0 says so."""
+    cap = host_policies.agg(F.max("budget")).first()[0]
+    return 0 if cap is None else int(cap)
+
+
 def scheduling_round(
     frontier: DataFrame,
     seen_ids: DataFrame | None,
     host_policies: DataFrame,
     bloom_shards: DataFrame | None = None,
     num_shards: int = 32,
-    global_limit: int | None = None,
     budget_cap: int | None = None,
     domain_politeness: bool = False,
 ) -> DataFrame:
@@ -172,20 +179,12 @@ def scheduling_round(
         ~F.col("robots_disallow_all")
     )
     # constant cap over all budgets -> enables pre-shuffle group limits.
-    # Callers running many rounds against static policies pass it in;
-    # otherwise one tiny driver-side agg (O(hosts)) derives it. No
-    # non-null budget means nothing is schedulable, and cap 0 says so.
+    # Callers running many rounds against static policies pass it in.
     if budget_cap is None:
-        cap_row = host_policies.agg(F.max("budget")).first()
-        budget_cap = (
-            int(cap_row[0]) if cap_row and cap_row[0] is not None else 0
-        )
-    out = per_host_topk(cand, budget_cap=budget_cap).select(
+        budget_cap = policy_budget_cap(host_policies)
+    return per_host_topk(cand, budget_cap=budget_cap).select(
         "url", "url_id", "host", "depth", "priority", "budget", "fetch_rank"
     )
-    if global_limit is not None:
-        out = out.orderBy(*_order_keys()).limit(global_limit)
-    return out
 
 
 def fetch_schedule(

@@ -72,12 +72,6 @@ def _fake_pixels(payload: bytes, h: int = 8, w: int = 8) -> np.ndarray:
     return np.array(vals, dtype=np.uint8).reshape(h, w, 3)
 
 
-def decode_image(payload: bytes) -> np.ndarray:
-    if _IMAGE_DECODER is not None:
-        return _IMAGE_DECODER(payload)
-    return _fake_pixels(payload)
-
-
 FEATURE_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -193,66 +187,6 @@ def audio_features(media: DataFrame) -> DataFrame:
     return media.where(F.col("kind") == "audio").select(
         "media_id", "payload"
     ).mapInPandas(run, AUDIO_FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("pixels", BinaryType()),  # raw RGB bytes, row-major
-        StructField("out_w", IntegerType()),
-        StructField("out_h", IntegerType()),
-    ]
-)
-
-
-def image_resize(media: DataFrame, out_w: int = 4, out_h: int = 4) -> DataFrame:
-    """decode -> nearest-neighbor resize -> raw RGB bytes.
-
-    The resize math (index-grid sampling) is REAL numpy; only the codec
-    boundary is stubbed. Output is raw bytes + dims — the shape a
-    training-data writer (e.g. webdataset-style) consumes."""
-
-    # plan-time capture — see image_features for why.
-    decoder = _IMAGE_DECODER or _fake_pixels
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                px = decoder(bytes(payload))
-                h, w = px.shape[:2]
-                yi = (np.arange(out_h) * h // out_h).astype(np.int64)
-                xi = (np.arange(out_w) * w // out_w).astype(np.int64)
-                small = px[yi][:, xi]
-                rows.append(
-                    (int(mid), small.astype(np.uint8).tobytes(), out_w, out_h)
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "pixels", "out_w", "out_h"]
-            )
-
-    return media.where(F.col("kind") == "image").select(
-        "media_id", "payload"
-    ).mapInPandas(run, RESIZED_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling PLAN: (media_id, frame_ts_ms) rows — the
-    shuffle-friendly shape real frame extraction consumes. Decode
-    itself is a stub (no codecs here)."""
-    return (
-        media.where(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.col("duration_ms") - 1, F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
-    )
 
 
 def synth_media(spark, n: int = 64) -> DataFrame:

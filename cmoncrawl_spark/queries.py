@@ -15,6 +15,7 @@ Numeric-stability rules for hash-parity:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -291,6 +292,29 @@ def q_embed_dup_pairs(spark, sf_dir):
 _FRONTIER_SHARDS = 32
 
 
+def _documents_mtime(sf_dir: str) -> int:
+    try:
+        return os.stat(os.path.join(sf_dir, "documents.parquet")).st_mtime_ns
+    except OSError:
+        return 0
+
+
+def _parquet_cache(
+    subdir: str, key: str, build: Callable[[], DataFrame]
+) -> str:
+    """Write ``build()`` once per ``key`` to a parquet dir under the
+    temp dir and return its path. Spark's ``_SUCCESS`` file, written
+    after every part file, marks a complete dir."""
+    import hashlib
+    import tempfile
+
+    digest = hashlib.md5(key.encode()).hexdigest()[:16]
+    path = os.path.join(tempfile.gettempdir(), subdir, digest)
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        build().write.mode("overwrite").parquet(path)
+    return path
+
+
 def prepare_frontier_state(spark: SparkSession, sf_dir: str) -> str:
     """Build + persist the URL-seen bloom shards for sf_dir ONCE.
 
@@ -302,32 +326,22 @@ def prepare_frontier_state(spark: SparkSession, sf_dir: str) -> str:
     persist them keyed by the input dir, so every later q_frontier_round
     call (and the bench) loads the blobs like round N would.
     """
-    import hashlib
-    import tempfile
-
-    try:
-        mtime = os.stat(os.path.join(sf_dir, "documents.parquet")).st_mtime_ns
-    except OSError:
-        mtime = 0
     # the shard choice is part of the key: this cache outlives code
     # changes, and blobs sharded another way give false negatives.
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{mtime}|{_FRONTIER_SHARDS}"
-        f"|{bloom_ops.SHARD_SCHEME}".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), "cmoncrawl_spark_shards", key)
-    marker = os.path.join(path, "_committed_marker")
-    if not os.path.exists(marker):
+    key = (
+        f"{os.path.abspath(sf_dir)}|{_documents_mtime(sf_dir)}"
+        f"|{_FRONTIER_SHARDS}|{bloom_ops.SHARD_SCHEME}"
+    )
+
+    def build() -> DataFrame:
         register_crawl_views(spark, sf_dir)
-        shards = bloom_ops.build_shards(
+        return bloom_ops.build_shards(
             spark.table("seen"),
             num_shards=_FRONTIER_SHARDS,
             expected_per_shard=200_000,
         )
-        shards.write.mode("overwrite").parquet(path)
-        with open(marker, "w") as f:
-            f.write("ok")
-    return path
+
+    return _parquet_cache("cmoncrawl_spark_shards", key, build)
 
 
 def q_frontier_round(spark, sf_dir):
@@ -353,34 +367,27 @@ def prepare_domain_policies(spark: SparkSession, sf_dir: str) -> str:
     change, not inside every scheduling round). Key = eTLD+1 via the
     PSL broadcast ladder; budget = max over member hosts; a domain is
     excluded if ANY member host is robots-disallow-all."""
-    import hashlib
-    import tempfile
-
     from cmoncrawl_spark.functions.psl import (
         psl_source_fingerprint,
         with_domain_key,
     )
 
-    try:
-        mtime = os.stat(os.path.join(sf_dir, "documents.parquet")).st_mtime_ns
-    except OSError:
-        mtime = 0
     # the key MUST include the PSL source identity: the cached table's
     # domain keys were derived under a specific rule set, and a swap
     # (bundled list upgrade, $CMONCRAWL_PSL_FILE) must invalidate it —
     # otherwise scheduling_round's inner policy join silently drops or
     # mis-budgets domains whose eTLD+1 changed under the new rules.
-    key = hashlib.md5(
-        f"dpol|{os.path.abspath(sf_dir)}|{mtime}|{psl_source_fingerprint()}".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), "cmoncrawl_spark_dpol", key)
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+    key = (
+        f"dpol|{os.path.abspath(sf_dir)}|{_documents_mtime(sf_dir)}"
+        f"|{psl_source_fingerprint()}"
+    )
+
+    def build() -> DataFrame:
         register_crawl_views(spark, sf_dir)
         pol = spark.table("host_policies").select(
             "host", "budget", "robots_disallow_all"
         )
-        dpol = (
+        return (
             with_domain_key(pol)
             .groupBy("host")
             .agg(
@@ -389,9 +396,10 @@ def prepare_domain_policies(spark: SparkSession, sf_dir: str) -> str:
                     F.max(F.col("robots_disallow_all").cast("int")) == 1
                 ).alias("robots_disallow_all"),
             )
+            .coalesce(1)
         )
-        dpol.coalesce(1).write.mode("overwrite").parquet(path)
-    return path
+
+    return _parquet_cache("cmoncrawl_spark_dpol", key, build)
 
 
 def q_frontier_round_domain(spark, sf_dir):

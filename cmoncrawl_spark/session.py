@@ -41,11 +41,6 @@ def get_spark(
             cores if cores and cores > 0 else DEFAULT_SHUFFLE_PARTITIONS
         )
 
-    # Optional GC override for single-JVM local mode (all executor
-    # threads share one heap). Benchmarking on this sandbox showed
-    # run-to-run noise larger than any GC effect, so no default is
-    # imposed; set SPARK_GRAFT_GC="-XX:+UseParallelGC" etc. to pin one.
-    gc_opts = os.environ.get("SPARK_GRAFT_GC", "")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -60,8 +55,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    if gc_opts:
-        builder = builder.config("spark.driver.extraJavaOptions", gc_opts)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
@@ -118,11 +111,7 @@ def scan_parallel_floor(spark: SparkSession, df, src_path: str, key_col: str):
     extra exchange, while compute-dense pipelines (shingling + minhash
     ~6x, Arrow HTML extraction ~2x, hyperplane-LSH ~2x) dominate it.
     Callers opt in at the operator that is known compute-bound.
-    Disable globally with SPARK_GRAFT_SCAN_FLOOR=0 (A/B runs, sources
-    known to be pre-partitioned).
     """
-    if os.environ.get("SPARK_GRAFT_SCAN_FLOOR", "1") == "0":
-        return df
     try:
         size = sum(
             os.path.getsize(os.path.join(dirpath, f))

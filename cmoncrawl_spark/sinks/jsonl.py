@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cmoncrawl_spark.functions.scalars import name_mangle
+
 
 def jsonl_lines(df: DataFrame) -> DataFrame:
     """One sorted-keys JSON string per row (column ``value``)."""
@@ -36,23 +38,20 @@ def write_jsonl(
     df: DataFrame,
     path: str,
     max_file_size: int = 500_000,
-    partitions: int | None = None,
 ) -> None:
     """K1 — rotated JSONL. max_file_size mirrors the reference default
     of 500k records/file (integrations/download.py:52-57)."""
-    out = jsonl_lines(df)
-    if partitions:
-        out = out.repartition(partitions)
     (
-        out.write.mode("overwrite")
+        jsonl_lines(df)
+        .write.mode("overwrite")
         .option("maxRecordsPerFile", max_file_size)
         .text(path)
     )
 
 
 def write_html_files(df: DataFrame, path: str, url_col: str = "url") -> None:
-    """K2 — one html FILE per record; name = url with '/'->'_',
-    truncated to 100 chars (reference streamer.py:215-229 writes
+    """K2 — one html FILE per record; name = :func:`name_mangle` of the
+    url (reference streamer.py:215-229 writes
     ``directory / f"{name}.html"`` per record).
 
     Spark analog: a ``foreachPartition`` writer — each task streams its
@@ -89,9 +88,7 @@ def write_html_files(df: DataFrame, path: str, url_col: str = "url") -> None:
     with open(marker, "w", encoding="utf-8") as f:
         f.write("")
     named = df.select(
-        F.substring(F.translate(F.col(url_col), "/", "_"), 1, 100).alias(
-            "name"
-        ),
+        name_mangle(F.col(url_col)).alias("name"),
         F.col("html").cast("string").alias("value"),
     )
 

@@ -1,29 +1,25 @@
-"""Byte-range DAO layer (SURVEY §2 S3/S4 + T2 retry + D3/X7 cache).
+"""Byte-range DAO layer (SURVEY §2 S3/S4 + T2 retry).
 
-The reference fetches WARC byte ranges over HTTP/S3 with retry and a
-sha256-keyed filesystem cache (/root/reference/cmoncrawl/processor/
-dao/api.py:54-85, dao/s3.py:65-101, common/caching.py:10-59). In this
+The reference fetches WARC byte ranges over HTTP/S3 with retry
+(reference processor/dao/api.py:54-85, dao/s3.py:65-101). In this
 engine the canonical input already carries html as a column, so the
 DAO exists for ingest jobs; its semantics are preserved:
 
 - range reads: bytes [offset, offset+length) of the named archive;
 - retry with exponential backoff on retryable errors (HTTP
-  500/502/503/504 — helpers.py:27), implemented inline (tenacity is
-  not in this container);
-- optional cache keyed sha256('filename|offset|length').bin.
+  500/502/503/504 — helpers.py:27) in :func:`call_with_retry`, which
+  the CDX gateway shares (tenacity is not in this container).
 
 Spark-side: :func:`fetch_ranges` is a mapInPandas stage — each Arrow
 batch of (filename, offset, length) resolves through a DAO instance
 created per-partition (connection reuse), never on the driver.
 
-``LocalFileDAO`` gives REAL tested range-read behavior over local
-archives; ``HTTPRangeDAO`` carries the production semantics but needs
-a network client injected (none in this sandbox — clearly stubbed).
+``LocalFileDAO`` reads local archives; ``HTTPRangeDAO`` issues range
+GETs through stdlib urllib or an injected client.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import time
 from collections.abc import Callable, Iterator
@@ -35,95 +31,64 @@ from pyspark.sql.types import BinaryType, StructField, StructType
 RETRYABLE_HTTP = {500, 502, 503, 504}
 
 
-def cache_key(filename: str, offset: int, length: int) -> str:
-    digest = hashlib.sha256(
-        f"{filename}|{offset}|{length}".encode()
-    ).hexdigest()
-    return f"{digest}.bin"
-
-
-class RangeCache:
-    """Filesystem byte cache (common/caching.py:31-59)."""
-
-    def __init__(self, root: str) -> None:
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-
-    def get(self, key: str) -> bytes | None:
-        p = os.path.join(self.root, key)
-        if os.path.exists(p):
-            with open(p, "rb") as f:
-                return f.read()
-        return None
-
-    def put(self, key: str, data: bytes) -> None:
-        with open(os.path.join(self.root, key), "wb") as f:
-            f.write(data)
-
-
 class LocalFileDAO:
     """Range reads from local archive files (the testable DAO)."""
 
-    def __init__(self, base_dir: str = "", cache: RangeCache | None = None):
+    def __init__(self, base_dir: str = "") -> None:
         self.base_dir = base_dir
-        self.cache = cache
 
     def fetch(self, filename: str, offset: int, length: int) -> bytes:
-        if self.cache is not None:
-            key = cache_key(filename, offset, length)
-            hit = self.cache.get(key)
-            if hit is not None:
-                return hit
-        path = os.path.join(self.base_dir, filename)
-        with open(path, "rb") as f:
+        with open(os.path.join(self.base_dir, filename), "rb") as f:
             f.seek(offset)
-            data = f.read(length)
-        if self.cache is not None:
-            self.cache.put(key, data)
-        return data
+            return f.read(length)
+
+
+def call_with_retry(
+    call: Callable[[], bytes],
+    retryable: Callable[[Exception], bool],
+    max_retry: int = 3,
+    sleep: Callable[[float], object] = time.sleep,
+) -> bytes:
+    """T2 — run ``call`` up to ``max_retry + 1`` times, sleeping after
+    each retryable error as the reference's wait_random_exponential(
+    multiplier=5, exp_base=1.3, max=120) does (helpers.py:109-184),
+    without the jitter. The last error is re-raised."""
+    sleep_base, max_sleep = 1.3, 120.0
+    for attempt in range(max_retry + 1):
+        try:
+            return call()
+        except Exception as e:  # noqa: BLE001 - gate below
+            if attempt == max_retry or not retryable(e):
+                raise
+            sleep(min(5 * sleep_base**attempt, max_sleep))
+    raise AssertionError("unreachable")
 
 
 class RetryingDAO:
-    """T2 — exponential backoff on retryable errors (helpers.py:109-184:
-    wait_random_exponential(mult=5, base, max=120), stop after
-    max_retry+1 attempts). Deterministic backoff here (no RNG)."""
+    """T2 — a DAO whose fetches go through :func:`call_with_retry`,
+    retrying every ``OSError`` (``HTTPRangeDAO`` raises one for HTTP
+    500/502/503/504; connection errors are ``OSError`` too)."""
 
-    def __init__(
-        self,
-        inner,
-        max_retry: int = 3,
-        sleep_base: float = 1.3,
-        max_sleep: float = 120.0,
-        retryable: Callable[[Exception], bool] | None = None,
-        _sleep=time.sleep,
-    ) -> None:
+    def __init__(self, inner, max_retry: int = 3, _sleep=time.sleep) -> None:
         self.inner = inner
         self.max_retry = max_retry
-        self.sleep_base = sleep_base
-        self.max_sleep = max_sleep
-        self.retryable = retryable or (lambda e: isinstance(e, OSError))
         self._sleep = _sleep
         self.attempts = 0
 
     def fetch(self, filename: str, offset: int, length: int) -> bytes:
-        last: Exception | None = None
-        for attempt in range(self.max_retry + 1):
+        def attempt() -> bytes:
             self.attempts += 1
-            try:
-                return self.inner.fetch(filename, offset, length)
-            except Exception as e:  # noqa: BLE001 - gate below
-                if not self.retryable(e):
-                    raise
-                last = e
-                if attempt < self.max_retry:
-                    self._sleep(
-                        min(5 * (self.sleep_base**attempt), self.max_sleep)
-                    )
-        assert last is not None
-        raise last
+            return self.inner.fetch(filename, offset, length)
+
+        return call_with_retry(
+            attempt,
+            lambda e: isinstance(e, OSError),
+            self.max_retry,
+            self._sleep,
+        )
 
 
-def _stdlib_http_client(timeout: float = 60.0):
+def stdlib_http_client(timeout: float = 60.0):
     """Default HTTP client on stdlib urllib (no third-party deps).
 
     Returns callable (url, headers) -> (status, bytes). HTTPError
@@ -158,7 +123,7 @@ class HTTPRangeDAO:
 
     def __init__(self, base_url: str, client=None) -> None:
         self.base_url = base_url
-        self.client = client if client is not None else _stdlib_http_client()
+        self.client = client if client is not None else stdlib_http_client()
 
     def fetch(self, filename: str, offset: int, length: int) -> bytes:
         url = f"{self.base_url.rstrip('/')}/{filename}"

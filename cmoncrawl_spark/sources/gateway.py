@@ -39,13 +39,18 @@ from __future__ import annotations
 import json
 import time
 from collections.abc import Callable, Iterator
+from datetime import datetime, timezone
 from urllib.parse import urlencode
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cmoncrawl_spark.sources.dao import RETRYABLE_HTTP
+from cmoncrawl_spark.sources.dao import (
+    RETRYABLE_HTTP,
+    call_with_retry,
+    stdlib_http_client,
+)
 
 CDX_RECORD_SCHEMA = (
     "url string, filename string, offset bigint, length bigint, "
@@ -62,20 +67,17 @@ class GatewayHTTPError(OSError):
         self.status = status
 
 
-def _stdlib_param_client(timeout: float = 60.0):
-    """(url, params) -> (status, body) on stdlib urllib."""
-    import urllib.error
-    import urllib.request
+def cdx_timestamp(ts: datetime) -> str:
+    """A CDX ``from``/``to`` value, ``%Y%m%d%H%M%S`` (reference
+    helpers.py:195-200). CDX timestamps are UTC, so an offset-aware
+    time is converted to UTC first."""
+    if ts.tzinfo is not None:
+        ts = ts.astimezone(timezone.utc)
+    return ts.strftime("%Y%m%d%H%M%S")
 
-    def client(url: str, params: dict) -> tuple[int, bytes]:
-        req = urllib.request.Request(f"{url}?{urlencode(params)}")
-        try:
-            with urllib.request.urlopen(req, timeout=timeout) as resp:
-                return resp.status, resp.read()
-        except urllib.error.HTTPError as e:
-            return e.code, b""
 
-    return client
+def _retryable(e: Exception) -> bool:
+    return isinstance(e, GatewayHTTPError) and e.status in RETRYABLE_HTTP
 
 
 class CDXGateway:
@@ -87,43 +89,52 @@ class CDXGateway:
         client: Callable[[str, dict], tuple[int, bytes]] | None = None,
         max_requests_per_second: float = 20.0,
         max_retry: int = 3,
-        sleep_base: float = 1.3,
         _sleep=time.sleep,
         _clock=time.monotonic,
     ) -> None:
         self.cdx_server = cdx_server
-        self.client = client if client is not None else _stdlib_param_client()
+        if client is None:
+            http = stdlib_http_client()
+
+            def client(url: str, params: dict) -> tuple[int, bytes]:
+                return http(f"{url}?{urlencode(params)}", {})
+
+        self.client = client
         self.min_interval = (
             1.0 / max_requests_per_second if max_requests_per_second else 0.0
         )
         self.max_retry = max_retry
-        self.sleep_base = sleep_base
         self._sleep = _sleep
         self._clock = _clock
         self._last = 0.0
 
     def _throttled_get(self, params: dict) -> bytes:
-        for attempt in range(self.max_retry + 1):
+        """One throttled request per attempt; HTTP 500/502/503/504
+        are retried through the DAO layer's ``call_with_retry``."""
+
+        def attempt() -> bytes:
             wait = self.min_interval - (self._clock() - self._last)
             if wait > 0:
                 self._sleep(wait)
             self._last = self._clock()
             status, body = self.client(self.cdx_server, params)
-            if status == 200:
-                return body
-            if status in RETRYABLE_HTTP:
-                if attempt < self.max_retry:
-                    self._sleep(min(5 * (self.sleep_base**attempt), 120.0))
-                    continue
+            if status != 200:
                 raise GatewayHTTPError(
-                    status,
-                    f"HTTP {status} from {self.cdx_server}: "
-                    f"retries exhausted after {attempt + 1} attempts",
+                    status, f"HTTP {status} from {self.cdx_server}"
                 )
-            raise GatewayHTTPError(
-                status, f"HTTP {status} from {self.cdx_server}"
+            return body
+
+        try:
+            return call_with_retry(
+                attempt, _retryable, self.max_retry, self._sleep
             )
-        raise AssertionError("unreachable")
+        except GatewayHTTPError as e:
+            if not _retryable(e):
+                raise
+            raise GatewayHTTPError(
+                e.status,
+                f"{e}: retries exhausted after {self.max_retry + 1} attempts",
+            ) from e
 
     def num_pages(
         self,

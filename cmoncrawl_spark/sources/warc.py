@@ -1,5 +1,4 @@
-"""WARC sources (SURVEY §2 S5/S6) — pure-Python WARC parsing inside
-Arrow batches over ``binaryFile``.
+"""WARC sources (SURVEY §2 S5/S6) — pure-Python WARC parsing.
 
 The reference uses warcio's ArchiveIterator
 (/root/reference/cmoncrawl/processor/pipeline/downloader.py:124-240).
@@ -13,40 +12,15 @@ deterministic WARC/1.0-1.1 reader supporting:
   ``application/http``.
 
 ``BASELINE.json``'s input already carries html as a column, so this
-path exists for fixture ingestion and reference parity — the Spark
-plumbing (binaryFile scan -> mapInPandas -> typed rows) is the part
-that matters at scale: one task per WARC file, no driver-side I/O.
+reader exists for reference parity: ``q_warc_roundtrip`` serializes
+pages with :func:`write_warc_bytes` and parses them back with
+:func:`parse_warc_bytes` inside one Arrow stage.
 """
 
 from __future__ import annotations
 
 import gzip
 import io
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    BinaryType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-WARC_RECORD_SCHEMA = StructType(
-    [
-        StructField("source_file", StringType()),
-        StructField("record_idx", LongType()),
-        StructField("rec_type", StringType()),
-        StructField("url", StringType()),
-        StructField("warc_date", StringType()),
-        StructField("warc_header", MapType(StringType(), StringType())),
-        StructField("http_header", MapType(StringType(), StringType())),
-        StructField("content", BinaryType()),
-    ]
-)
 
 
 def _maybe_decompress(data: bytes) -> bytes:
@@ -118,22 +92,6 @@ def parse_warc_bytes(data: bytes, source: str = "") -> list[dict]:
         idx += 1
         pos = head_end + 4 + length
     return records
-
-
-def read_warc(spark: SparkSession, path: str) -> DataFrame:
-    """binaryFile scan -> Arrow-batched WARC parse (one task/file)."""
-    files = spark.read.format("binaryFile").load(path)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in WARC_RECORD_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                for rec in parse_warc_bytes(bytes(row["content"]), row["path"]):
-                    rows.append([rec[c] for c in cols])
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.select("path", "content").mapInPandas(run, WARC_RECORD_SCHEMA)
 
 
 def write_warc_bytes(records: list[dict]) -> bytes:

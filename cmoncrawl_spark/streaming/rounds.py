@@ -42,7 +42,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cmoncrawl_spark.operators import bloom as bloom_ops
-from cmoncrawl_spark.operators.frontier import round_metrics, scheduling_round
+from cmoncrawl_spark.operators.frontier import (
+    policy_budget_cap,
+    round_metrics,
+    scheduling_round,
+)
 
 _log = logging.getLogger(__name__)
 
@@ -225,6 +229,7 @@ def run_round(
             "round_id": round_id,
             "scheduled": scheduled_count,
             "seen_total": prev_total + delta_count,
+            "num_shards": num_shards,
         },
     )
     return fetch_list
@@ -258,8 +263,19 @@ def run_crawl(
     resume: bool = True,
 ) -> int:
     """Drive `rounds` scheduling rounds with link expansion; resumes
-    after the last committed round when `resume`."""
+    after the last committed round when `resume`.
+
+    A resume must use the crawl's shard count: the probe shards
+    candidates by ``num_shards``, so blobs persisted under another
+    count would miss ids and re-schedule seen URLs."""
     start = store.last_committed_round() + 1 if resume else 0
+    committed = store.round_info(start - 1).get("num_shards", num_shards)
+    if committed != num_shards:
+        raise ValueError(
+            f"crawl state in {store.dir} was sharded with num_shards="
+            f"{committed}; resuming with num_shards={num_shards} would "
+            "re-fetch seen URLs"
+        )
     if start == 0:
         frontier = seeds
     else:
@@ -279,10 +295,7 @@ def run_crawl(
         host_policies = host_policies.persist()
         persisted = True
     try:
-        cap_row = host_policies.agg(F.max("budget")).first()
-        budget_cap = (
-            int(cap_row[0]) if cap_row and cap_row[0] is not None else None
-        )
+        budget_cap = policy_budget_cap(host_policies)
         # Bloom sizing from THIS crawl's upper-bound candidate count
         # (seeds fan out by `fanout` each round), split over the
         # shards; constant across rounds so every round's blobs share

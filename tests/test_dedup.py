@@ -214,10 +214,8 @@ def test_embedding_degenerate_bucket_cap(spark):
 
 
 def test_connected_components_chain_and_keep_min(spark):
-    from cmoncrawl_spark.operators.dedup import (
-        connected_components,
-        dedupe_keep_min,
-    )
+    """Every component is labeled by its minimum id."""
+    from cmoncrawl_spark.operators.dedup import connected_components
 
     # components: {1,2,3,4 chain}, {10,11}, isolated pairs via edges only
     pairs = spark.createDataFrame(
@@ -229,14 +227,6 @@ def test_connected_components_chain_and_keep_min(spark):
     }
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10,
                     20: 20, 21: 20, 22: 20}
-
-    docs = spark.createDataFrame(
-        [(i, f"text{i}") for i in [1, 2, 3, 4, 5, 10, 11, 20, 21, 22]],
-        "doc_id long, text string",
-    )
-    kept = {r["doc_id"] for r in dedupe_keep_min(docs, pairs).collect()}
-    # one survivor per component + the unpaired doc 5
-    assert kept == {1, 5, 10, 20}
 
 
 def test_asof_join_edge_cases(spark):

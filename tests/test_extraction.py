@@ -111,13 +111,13 @@ def test_apply_extractor_spark(spark, sf_dir):
 
     from cmoncrawl_spark.datagen import pages_with_html
     from cmoncrawl_spark.extraction.extractor import (
-        TitleExtractor,
+        PageTextExtractor,
         apply_extractor,
     )
 
     df = pages_with_html(spark, sf_dir).limit(50)
     out = apply_extractor(
-        df, TitleExtractor(), passthrough=["doc_id"],
+        df, PageTextExtractor(), passthrough=["doc_id"],
         record_encoding_col="record_encoding",
     )
     rows = out.collect()

@@ -215,6 +215,30 @@ def test_cli_download_record_via_gateway(spark, tmp_path):
         srv.shutdown()
 
 
+def test_cli_download_since_with_utc_offset(spark, tmp_path):
+    """`--since`/`--to` are parsed as ISO times and sent as the CDX
+    %Y%m%d%H%M%S form in UTC; a UTC offset must not leak into the
+    value."""
+    from cmoncrawl_spark import cli
+
+    srv, state, base = _serve_cdx()
+    try:
+        cli.main(
+            [
+                "download", str(tmp_path / "dl"), "example.com", "record",
+                "--cdx_server", base,
+                "--since", "2021-06-01T10:00:00+00:00",
+                "--to", "2021-06-02T10:30:00+02:00",
+            ]
+        )
+    finally:
+        srv.shutdown()
+    pages = [q for q in state["requests"] if "page" in q]
+    assert pages
+    assert all(q["from"] == ["20210601100000"] for q in pages)
+    assert all(q["to"] == ["20210602083000"] for q in pages)
+
+
 # ---- distributed probe stage (round-4: probes must NOT serialize on
 # the driver — a 10^5-URL seed list at 20 rps would be ~83 min of
 # driver HTTP before any executor works) ----

@@ -101,7 +101,6 @@ def test_real_ppm_codec_through_hook(spark):
     mm.set_image_decoder(ppm_decoder)
     try:
         feats = {r["media_id"]: r for r in mm.image_features(media).collect()}
-        resized = {r["media_id"]: r for r in mm.image_resize(media, 2, 2).collect()}
     finally:
         mm.set_image_decoder(None)
     # analytically known channel means for the solid-red image
@@ -109,9 +108,8 @@ def test_real_ppm_codec_through_hook(spark):
     assert feats[2]["feat_mean"] == [
         pytest.approx(float(grad[:, :, c].mean())) for c in range(3)
     ]
-    # resize samples the true pixels of the REAL decode
-    got = np.frombuffer(bytes(resized[1]["pixels"]), dtype=np.uint8)
-    assert (got.reshape(2, 2, 3) == red[[0, 4]][:, [0, 4]]).all()
+    # every pixel of the REAL decode has luminance 200/3: bin 2 of 8
+    assert feats[1]["feat_hist"] == [0.0, 0.0, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0]
 
 
 def test_pil_decoder_conditional(spark):

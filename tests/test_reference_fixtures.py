@@ -175,11 +175,11 @@ MINI_WARC = "/root/reference/tests/files/mini.warc.gz"
 @pytest.mark.skipif(
     not os.path.exists(MINI_WARC), reason="reference mini.warc.gz absent"
 )
-def test_mini_warc_matches_reference_goldens(spark):
+def test_mini_warc_matches_reference_goldens():
     """The reference's own WARC fixture (processor_test.py:104-112
-    asserts 3 records, [0] warcinfo, [2] response) through BOTH our
-    pure parser and the Spark binaryFile->mapInPandas path."""
-    from cmoncrawl_spark.sources.warc import parse_warc_bytes, read_warc
+    asserts 3 records, [0] warcinfo, [2] response) through the
+    engine's WARC parser."""
+    from cmoncrawl_spark.sources.warc import parse_warc_bytes
 
     recs = parse_warc_bytes(open(MINI_WARC, "rb").read(), "mini")
     assert len(recs) == 3
@@ -190,8 +190,4 @@ def test_mini_warc_matches_reference_goldens(spark):
     assert recs[2]["http_header"]["http_response_code"] == "200"
     assert recs[2]["url"] == "http://018hs.com/demo87/alzs.html"
     assert len(recs[2]["content"]) == 17978
-
-    rows = read_warc(spark, MINI_WARC).orderBy("record_idx").collect()
-    assert [r["rec_type"] for r in rows] == ["warcinfo", "request", "response"]
-    assert rows[2]["http_header"]["http_response_code"] == "200"
-    assert bytes(rows[2]["content"]) == bytes(recs[2]["content"])
+    assert [r["rec_type"] for r in recs] == ["warcinfo", "request", "response"]

@@ -87,6 +87,18 @@ def test_kill_and_resume(spark, setup):
     assert a == b
 
 
+def test_resume_with_other_num_shards_raises(spark, setup):
+    """Blobs persisted under 8 shards cannot be probed as 32: the ids
+    that land in a shard with no blob would pass as unseen."""
+    seeds_df, pol_df, _s, _b, _d, state_dir = setup
+    store = StateStore(spark, state_dir + "_shards")
+    run_crawl(store, seeds_df, pol_df, rounds=1, num_shards=8)
+    with pytest.raises(ValueError, match="num_shards=8.*num_shards=32"):
+        run_crawl(store, seeds_df, pol_df, rounds=2, num_shards=32)
+    assert store.last_committed_round() == 0
+    assert store.round_info(0)["num_shards"] == 8
+
+
 def test_metrics_lineage(spark, setup):
     seeds_df, pol_df, _s, _b, _d, state_dir = setup
     store = StateStore(spark, state_dir + "_m")

@@ -1,6 +1,8 @@
-"""Scalar function library, transform combinators, DAO range reads."""
+"""Scalar function library, DAO range reads and retries."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,62 +12,33 @@ def test_scalar_functions(spark):
     from cmoncrawl_spark.functions import scalars as S
 
     df = spark.createDataFrame(
-        [
-            (
-                "CC-MAIN-2022-05",
-                "https://index.commoncrawl.org/CC-MAIN-2022-05-index",
-                "2022-01-02 03:04:05",
-                "text/html; charset=UTF-8",
-                "https://a.cz/x/y",
-            )
-        ],
-        ["crawl", "crawl_url", "ts", "ctype", "url"],
+        [("CC-MAIN-2022-05", "2022-01-02 03:04:05", "https://a.cz/x/y")],
+        ["crawl", "ts", "url"],
     ).withColumn("ts", F.to_timestamp("ts"))
     r = df.select(
         S.crawl_to_year(F.col("crawl")).alias("year"),
-        S.crawl_url_to_name(F.col("crawl_url")).alias("name"),
-        S.to_compact_timestamp(F.col("ts")).alias("compact"),
         S.from_compact_timestamp(F.lit("20220102030405")).alias("rt"),
         S.to_sql_date(F.col("ts")).alias("sqldate"),
         S.cache_key(F.lit("f.warc.gz"), F.lit(100), F.lit(200)).alias("ck"),
-        S.http_charset_col(F.col("ctype")).alias("charset"),
         S.name_mangle(F.col("url")).alias("mangled"),
     ).first()
     assert r["year"] == 2022
-    assert r["name"] == "CC-MAIN-2022-05"
-    assert r["compact"] == "20220102030405"
     assert str(r["rt"]) == "2022-01-02 03:04:05"
     assert r["sqldate"] == "2022-01-02 03:04:05"
     import hashlib
 
     assert r["ck"] == hashlib.sha256(b"f.warc.gz|100|200").hexdigest() + ".bin"
-    assert r["charset"] == "UTF-8"
     assert r["mangled"] == "https:__a.cz_x_y"
 
 
-def test_filter_non_200(spark):
-    from cmoncrawl_spark.functions.scalars import filter_non_200
-
-    df = spark.createDataFrame(
-        [(1, {"http_response_code": "200"}), (2, {"http_response_code": "404"}), (3, {})],
-        "id int, http_header map<string,string>",
-    )
-    kept = {r["id"] for r in df.where(filter_non_200(F.col("http_header"))).collect()}
-    assert kept == {1, 3}  # missing header passes (reference semantics)
-
-
 def test_local_dao_range_and_cache(tmp_path):
-    from cmoncrawl_spark.sources.dao import LocalFileDAO, RangeCache, cache_key
+    from cmoncrawl_spark.sources.dao import LocalFileDAO
 
     f = tmp_path / "arc.bin"
     f.write_bytes(bytes(range(256)))
-    cache = RangeCache(str(tmp_path / "cache"))
-    dao = LocalFileDAO(str(tmp_path), cache)
+    dao = LocalFileDAO(str(tmp_path))
     assert dao.fetch("arc.bin", 10, 5) == bytes([10, 11, 12, 13, 14])
-    # cache hit path: mutate the file; cached range still served
-    f.write_bytes(bytes(256))
-    assert dao.fetch("arc.bin", 10, 5) == bytes([10, 11, 12, 13, 14])
-    assert cache.get(cache_key("arc.bin", 10, 5)) is not None
+    assert dao.fetch("arc.bin", 250, 10) == bytes([250, 251, 252, 253, 254, 255])
 
 
 def test_retrying_dao_backoff():
@@ -185,6 +158,38 @@ def test_http_range_dao_retries_503_then_succeeds():
         srv.shutdown()
 
 
+def test_cli_download_html_http_dao_retries_503(spark, tmp_path, sf_dir):
+    """`cmon download ... html --dao_base http://...` retries 5xx range
+    GETs like the reference downloader (downloader.py:104-119): the
+    server answers 503 twice, then 206, and the page is written. The
+    two retries sleep 5 s and 6.5 s (the reference backoff)."""
+    from cmoncrawl_spark.cli import main
+    from cmoncrawl_spark.datagen import register_crawl_views
+    from cmoncrawl_spark.operators.ccindex import MatchType, index_query
+
+    register_crawl_views(spark, sf_dir)
+    r = index_query(
+        spark.table("ccindex"), ["blog.hot-domain.com"], MatchType.HOST, limit=1
+    ).first()
+    end = r["warc_record_offset"] + r["warc_record_length"]
+    blob = (b"0123456789abcdef" * (end // 16 + 1))[:end]
+    srv, base = _serve(blob, fail_first=2)
+    out = str(tmp_path / "html")
+    try:
+        main(
+            [
+                "download", out, "blog.hot-domain.com", "html",
+                "--match_type", "host", "--limit", "1",
+                "--table_dir", sf_dir, "--dao_base", base,
+            ]
+        )
+    finally:
+        srv.shutdown()
+    (name,) = [e for e in os.listdir(out) if not e.startswith(".")]
+    with open(os.path.join(out, name), encoding="utf-8") as f:
+        assert f.read() == blob[r["warc_record_offset"] :].decode()
+
+
 def test_fetch_ranges_over_http(spark):
     """Full Spark path: mapInPandas range-fetch against a live local
     server — the offline stand-in for the commoncrawl S3/HTTP gateway."""
@@ -205,32 +210,3 @@ def test_fetch_ranges_over_http(spark):
         assert got[("seg/b.warc.gz", 4000)] == blob[4000:4096]
     finally:
         srv.shutdown()
-
-
-def test_parse_timestamp_col_iso_union(spark):
-    """X6 differential vs the reference's datetime.fromisoformat union
-    (common/types.py:11-21)."""
-    from datetime import datetime
-
-    from pyspark.sql import functions as F
-
-    from cmoncrawl_spark.functions.scalars import parse_timestamp_col
-
-    cases = [
-        "2023-03-21 21:19:02",
-        "2023-03-21T21:19:02",
-        "2021-01-01",
-        "2023-03-21 21:19:02.123456",
-        "2023-03-21T21:19:02.123456",
-        None,
-        "not a time",
-    ]
-    df = spark.createDataFrame([(c,) for c in cases], "s string")
-    got = {r["s"]: r["ts"] for r in df.select(
-        "s", parse_timestamp_col(F.col("s")).alias("ts")).collect()}
-    for c in cases:
-        if c is None or c == "not a time":
-            assert got.get(c) is None
-            continue
-        want = datetime.fromisoformat(c)
-        assert got[c] == want, f"{c}: {got[c]} != {want}"

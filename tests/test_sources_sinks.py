@@ -38,11 +38,13 @@ def _fixture_warc(tmp_path, gz: bool) -> str:
     return str(p)
 
 
-def test_warc_roundtrip_plain(spark, tmp_path):
-    from cmoncrawl_spark.sources.warc import read_warc
+def test_warc_roundtrip_plain(tmp_path):
+    from cmoncrawl_spark.sources.warc import parse_warc_bytes
 
     path = _fixture_warc(tmp_path, gz=False)
-    rows = read_warc(spark, path).orderBy("record_idx").collect()
+    with open(path, "rb") as f:
+        rows = parse_warc_bytes(f.read(), path)
+    assert [r["record_idx"] for r in rows] == [0, 1, 2]
     assert [r["rec_type"] for r in rows] == ["warcinfo", "request", "response"]
     resp = rows[2]
     assert resp["url"] == "https://example.com/a"
@@ -50,12 +52,14 @@ def test_warc_roundtrip_plain(spark, tmp_path):
     assert bytes(resp["content"]) == b"<html><title>W</title></html>"
 
 
-def test_warc_roundtrip_gzip(spark, tmp_path):
-    from cmoncrawl_spark.sources.warc import read_warc
+def test_warc_roundtrip_gzip(tmp_path):
+    from cmoncrawl_spark.sources.warc import parse_warc_bytes
 
     path = _fixture_warc(tmp_path, gz=True)
-    rows = read_warc(spark, path).collect()
-    assert len(rows) == 3
+    with open(path, "rb") as f:
+        rows = parse_warc_bytes(f.read(), path)
+    assert [r["rec_type"] for r in rows] == ["warcinfo", "request", "response"]
+    assert rows[2]["content"] == b"<html><title>W</title></html>"
 
 
 def test_domain_record_jsonl(spark, tmp_path):
@@ -84,14 +88,34 @@ def test_domain_record_jsonl(spark, tmp_path):
             "additional_info": {},
         },
     ]
+    # the reference accepts any datetime.fromisoformat input
+    # (common/types.py:11-21); the declared TimestampType parses these
+    # forms and gives null for garbage (session time zone UTC)
+    iso = {
+        10: ("2021-06-01 10:00:00", "2021-06-01 10:00:00.000000"),
+        11: ("2021-06-01T10:00:00Z", "2021-06-01 10:00:00.000000"),
+        12: ("2021-06-01T10:00:00.123456+02:00", "2021-06-01 08:00:00.123456"),
+        13: ("2021-06-01", "2021-06-01 00:00:00.000000"),
+        14: ("not a time", None),
+    }
+    lines += [
+        {"domain_record": {"filename": "f", "offset": o, "length": 1, "timestamp": ts}}
+        for o, (ts, _want) in iso.items()
+    ]
     p.write_text("\n".join(json.dumps(x) for x in lines))
-    df = read_domain_records(spark, str(p))
+    df = read_domain_records(spark, str(p)).withColumn(
+        "ts", F.date_format("timestamp", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+    )
     rows = df.orderBy("offset").collect()
-    assert len(rows) == 2
-    assert rows[1]["url"] == "https://www.seznam.cz/"
-    assert rows[1]["offset"] == 1115229508
-    assert rows[1]["additional_info"]["k"] == "v"
+    assert len(rows) == 7
+    assert rows[6]["url"] == "https://www.seznam.cz/"
+    assert rows[6]["offset"] == 1115229508
+    assert rows[6]["additional_info"]["k"] == "v"
+    assert rows[6]["ts"] == "2023-03-21 21:19:03.000000"
     assert rows[0]["url"] is None
+    assert {r["offset"]: r["ts"] for r in rows[1:6]} == {
+        o: want for o, (_ts, want) in iso.items()
+    }
 
 
 def test_html_files_url_inference(spark, tmp_path):
@@ -141,9 +165,9 @@ def test_jsonl_sink_rotation_and_sorted_keys(spark, tmp_path):
         F.col("id").alias("zeta"), (F.col("id") * 2).alias("alpha")
     )
     out = str(tmp_path / "out")
-    write_jsonl(df, out, max_file_size=10, partitions=2)
+    write_jsonl(df, out, max_file_size=10)
     n_files = count_output_files(out)
-    assert n_files >= 10  # 100 rows / 10 per file across 2 partitions
+    assert n_files >= 10  # 100 rows at most 10 per file
     line = spark.read.text(out).first()["value"]
     obj = json.loads(line)
     assert list(obj.keys()) == sorted(obj.keys())
@@ -178,11 +202,7 @@ def test_lang_id_and_quality(spark):
 
 
 def test_multimodal_features_deterministic(spark):
-    from cmoncrawl_spark.operators.multimodal import (
-        frame_sample_plan,
-        image_features,
-        synth_media,
-    )
+    from cmoncrawl_spark.operators.multimodal import image_features, synth_media
 
     media = synth_media(spark, 30)
     f1 = {r["media_id"]: r["feat_mean"] for r in image_features(media).collect()}
@@ -191,9 +211,6 @@ def test_multimodal_features_deterministic(spark):
         for r in image_features(media.repartition(5)).collect()
     }
     assert f1 == f2 and len(f1) == 10  # ids % 3 == 0
-    plan = frame_sample_plan(media, every_ms=1000)
-    rows = plan.groupBy("media_id").count().collect()
-    assert rows and all(r["count"] >= 1 for r in rows)
 
 
 def test_audio_features_deterministic_and_shaped(spark):
@@ -221,31 +238,6 @@ def test_audio_decoder_pluggable(spark):
         assert row["n_samples"] == 4 and row["sample_rate"] == 8000
     finally:
         mm.set_audio_decoder(None)
-
-
-def test_image_resize_bytes_and_dims(spark):
-    import numpy as np
-
-    from cmoncrawl_spark.operators.multimodal import (
-        decode_image,
-        image_resize,
-        synth_media,
-    )
-
-    media = synth_media(spark, 12)
-    rows = image_resize(media, out_w=4, out_h=2).collect()
-    assert len(rows) == 4  # ids % 3 == 0
-    for r in rows:
-        assert r["out_w"] == 4 and r["out_h"] == 2
-        assert len(bytes(r["pixels"])) == 4 * 2 * 3
-    # resize of the fake decode is reproducible pixel math
-    payload = b"payload-0"
-    px = decode_image(payload)
-    want = px[(np.arange(2) * px.shape[0] // 2)][:, (np.arange(4) * px.shape[1] // 4)]
-    got = np.frombuffer(bytes(
-        {r["media_id"]: r for r in rows}[0]["pixels"]), dtype=np.uint8
-    ).reshape(2, 4, 3)
-    assert (got == want).all()
 
 
 def test_write_html_files_clears_stale_output(spark, tmp_path):

@@ -10,11 +10,7 @@ from __future__ import annotations
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from cmoncrawl_spark.functions.urls import (
-    surt_py,
-    unify_url_id_col,
-    unify_url_id_py,
-)
+from cmoncrawl_spark.functions.urls import unify_url_id_col, unify_url_id_py
 
 GOLDEN = [
     (
@@ -137,13 +133,6 @@ def test_unify_col_matches_py_on_synthetic(spark, sf_dir):
     for r in rows:
         assert r["id_col"] == r["canonical_expected"], r["url"]
         assert unify_url_id_py(r["url"]) == r["canonical_expected"], r["url"]
-
-
-def test_surt_basic():
-    assert surt_py("https://www.Example.COM/a/b?b=2&a=1") == "com,example)/a/b?a=1&b=2"
-    assert surt_py("http://example.com:80/x") == "com,example)/x"
-    assert surt_py("http://example.com:8080/x") == "com,example:8080)/x"
-    assert surt_py("https://sub.example.org/") == "org,example,sub)/"
 
 
 def test_unify_col_matches_py_at_netloc_boundary(spark):
