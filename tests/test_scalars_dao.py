@@ -31,6 +31,37 @@ def test_scalar_functions(spark):
     assert r["mangled"] == "https:__a.cz_x_y"
 
 
+def test_parse_timestamp_col_iso_union(spark):
+    """X6 differential vs the reference's datetime.fromisoformat union
+    (common/types.py:11-21): the declared TimestampType of
+    `JSONL_SCHEMA.domain_record.timestamp` is the one parsing rule."""
+    import json
+    from datetime import datetime
+
+    from cmoncrawl_spark.sources.jsonl import JSONL_SCHEMA
+
+    cases = [
+        "2023-03-21 21:19:02",
+        "2023-03-21T21:19:02",
+        "2021-01-01",
+        "2023-03-21 21:19:02.123456",
+        "2023-03-21T21:19:02.123456",
+        None,
+        "not a time",
+    ]
+    lines = [json.dumps({"domain_record": {"timestamp": c}}) for c in cases]
+    df = spark.createDataFrame([(c, j) for c, j in zip(cases, lines)], "s string, j string")
+    got = {r["s"]: r["ts"] for r in df.select(
+        "s", F.from_json("j", JSONL_SCHEMA)["domain_record"]["timestamp"].alias("ts")
+    ).collect()}
+    for c in cases:
+        if c is None or c == "not a time":
+            assert got.get(c) is None
+            continue
+        want = datetime.fromisoformat(c)
+        assert got[c] == want, f"{c}: {got[c]} != {want}"
+
+
 def test_local_dao_range_and_cache(tmp_path):
     from cmoncrawl_spark.sources.dao import LocalFileDAO
 
