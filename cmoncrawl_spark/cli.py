@@ -57,12 +57,18 @@ def _write_jsonl(df: DataFrame, path: str, max_per_file: int) -> None:
 def _dao_factory(base: str):
     """Per-partition DAO constructor for ``--dao_base``: an http(s) base
     gets range GETs retried on 5xx (reference downloader.py:104-119),
-    anything else is a local archive directory."""
-    from cmoncrawl_spark.sources.dao import HTTPRangeDAO, LocalFileDAO, RetryingDAO
+    anything else is a local archive directory. Either way each range
+    is a WARC record, and the DAO hands on its response payload."""
+    from cmoncrawl_spark.sources.dao import (
+        HTTPRangeDAO,
+        LocalFileDAO,
+        RetryingDAO,
+        WarcPayloadDAO,
+    )
 
     if "://" in base:
-        return lambda: RetryingDAO(HTTPRangeDAO(base))
-    return lambda: LocalFileDAO(base)
+        return lambda: WarcPayloadDAO(RetryingDAO(HTTPRangeDAO(base)))
+    return lambda: WarcPayloadDAO(LocalFileDAO(base))
 
 
 def load_config(path: str) -> dict:
@@ -308,6 +314,8 @@ def run_extract(args: argparse.Namespace) -> None:
 
 
 def build_parser() -> argparse.ArgumentParser:
+    from cmoncrawl_spark.operators.robots import DEFAULT_CRAWL_DELAY_S
+
     p = argparse.ArgumentParser(prog="cmoncrawl_spark")
     p.add_argument("--verbosity", "-v", type=int, choices=[0, 1, 2], default=1)
     sub = p.add_subparsers(dest="command", required=True)
@@ -352,7 +360,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     c.add_argument("--budget", type=int, default=5,
                    help="per-host fetches per round")
-    c.add_argument("--crawl_delay", type=float, default=1.0,
+    c.add_argument("--crawl_delay", type=float, default=DEFAULT_CRAWL_DELAY_S,
                    help="seconds between fetches of one host")
     c.add_argument("--domain_politeness", action="store_true",
                    help="politeness key = PSL registered domain")

@@ -21,10 +21,6 @@ batches of the extraction UDF (extractor.py).
 
 from __future__ import annotations
 
-import re
-
-_CHARSET_RE = re.compile(r"charset=([^;]+)\s*$", re.IGNORECASE)
-
 
 def http_charset(content_type: str | None) -> str | None:
     """Charset from a Content-Type header value.

@@ -181,24 +181,19 @@ class ConfigExtractor(SparkExtractor):
         fields: dict[str, CssField],
         must_exist: list[str] | None = None,
         must_not_exist: list[str] | None = None,
-        schema: str | None = None,
         required: dict[str, bool] | None = None,
         non_empty: bool = False,
         allowed_domain_prefixes: list[str] | None = None,
-        is_valid_extraction: Callable[[dict], bool] | None = None,
     ) -> None:
         self.fields = fields
         self.must_exist = must_exist or []
         self.must_not_exist = must_not_exist or []
-        self.schema = schema or ", ".join(f"{k} string" for k in fields)
+        self.schema = ", ".join(f"{k} string" for k in fields)
         self.allowed_domain_prefixes = allowed_domain_prefixes
-        # F11: explicit hook wins; else compile one from `required`.
-        if is_valid_extraction is not None:
-            self.is_valid_extraction = is_valid_extraction
-        elif required:
-            self.is_valid_extraction = check_required(required, non_empty)
-        else:
-            self.is_valid_extraction = None
+        # F11: the validity hook is compiled from `required`.
+        self.is_valid_extraction = (
+            check_required(required, non_empty) if required else None
+        )
 
     def native_prefilter(self, url_col: Column) -> Column | None:
         """F10 pushed OUT of the UDF: the reference checks the domain

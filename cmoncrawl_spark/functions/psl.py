@@ -148,14 +148,14 @@ def _kind_map(rules) -> dict[str, set]:
     return out
 
 
-def _suffix_len_py(labels: list[str], rules, max_labels: int | None = None) -> int:
+def _suffix_len_py(labels: list[str], rules) -> int:
     """Public-suffix length in labels per the PSL algorithm.
 
     ``rules``: dict rule->kind, dict rule->set-of-kinds, or the
     (rule, kind) list from :func:`parse_psl`.
     """
     kinds = _kind_map(rules)
-    ml = max_labels if max_labels is not None else rule_max_labels(kinds)
+    ml = rule_max_labels(kinds)
     n = len(labels)
     # exceptions win outright: ps = rule minus its leftmost label
     for k in range(min(n, ml), 0, -1):
@@ -327,8 +327,8 @@ def with_registered_domain(
     return tmp.withColumn(out_col, reg).drop(*drop)
 
 
-def with_domain_key(df: DataFrame, host_col: str = "host") -> DataFrame:
-    """Rewrite ``host_col`` to the domain politeness key:
+def with_domain_key(df: DataFrame) -> DataFrame:
+    """Rewrite ``host`` to the domain politeness key:
     ``coalesce(registered_domain(host), host)``. Subdomains of one
     eTLD+1 share its key; a host that IS a public suffix (no
     registered domain) keeps its raw hostname. The ONE definition of
@@ -336,7 +336,7 @@ def with_domain_key(df: DataFrame, host_col: str = "host") -> DataFrame:
     domain-keyed policies table are rewritten through here, so the
     round's inner policy join can never see two different keys."""
     return (
-        with_registered_domain(df, host_col=host_col, out_col="_rd")
-        .withColumn(host_col, F.coalesce(F.col("_rd"), F.col(host_col)))
+        with_registered_domain(df, out_col="_rd")
+        .withColumn("host", F.coalesce(F.col("_rd"), F.col("host")))
         .drop("_rd")
     )

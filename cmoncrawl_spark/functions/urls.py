@@ -45,14 +45,13 @@ def _netloc_col(url: Column) -> Column:
     return F.regexp_extract(url, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1)
 
 
-def unify_url_id_col(url: Column, netloc: Column | None = None) -> Column:
+def unify_url_id_col(url: Column) -> Column:
     """Canonical URL-seen id as a native expression chain (no UDF).
 
-    Pass ``netloc`` (an already-computed ``_netloc_col(url)``) to avoid
-    re-parsing the URL on the frontier hot path. NOTE: the id keys on
-    the full netloc (reference helpers.py:54-57), not the bare host.
+    NOTE: the id keys on the full netloc (reference helpers.py:54-57),
+    not the bare host.
     """
-    host = _netloc_col(url) if netloc is None else netloc
+    host = _netloc_col(url)
     host = F.when(host.startswith("www."), F.substring(host, 5, 2048)).otherwise(
         host
     )

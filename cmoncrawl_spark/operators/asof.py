@@ -30,9 +30,8 @@ def asof_join(
     ts: str,
     value_cols: list[str],
     right_seq: str | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
-    """left + {value_col + suffix} columns from the as-of right row.
+    """left + {value_col}_asof columns from the as-of right row.
 
     left:  key, ts, ... (all columns preserved)
     right: key, ts, value_cols (+ optional right_seq tie-breaker —
@@ -54,13 +53,13 @@ def asof_join(
         F.col(ts),
         F.lit(0).alias("_side"),  # right sorts first at equal ts (<=)
         seq.cast("long").alias("_seq"),
-        *[F.col(c).alias(f"{c}{suffix}") for c in value_cols],
+        *[F.col(c).alias(f"{c}_asof") for c in value_cols],
     )
     l = left.select(
         "*",
         F.lit(1).alias("_side"),
         F.lit(0).cast("long").alias("_seq"),
-        *[F.lit(None).cast(r.schema[f"{c}{suffix}"].dataType).alias(f"{c}{suffix}")
+        *[F.lit(None).cast(r.schema[f"{c}_asof"].dataType).alias(f"{c}_asof")
           for c in value_cols],
     )
     both = l.unionByName(r, allowMissingColumns=True)
@@ -72,7 +71,7 @@ def asof_join(
     carried = both.select(
         "*",
         *[
-            F.last(f"{c}{suffix}", ignorenulls=True)
+            F.last(f"{c}_asof", ignorenulls=True)
             .over(w)
             .alias(f"_carry_{c}")
             for c in value_cols
@@ -80,6 +79,6 @@ def asof_join(
     )
     out = carried.where(F.col("_side") == 1).select(
         *lcols,
-        *[F.col(f"_carry_{c}").alias(f"{c}{suffix}") for c in value_cols],
+        *[F.col(f"_carry_{c}").alias(f"{c}_asof") for c in value_cols],
     )
     return out

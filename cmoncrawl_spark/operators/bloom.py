@@ -106,10 +106,11 @@ def _hashes(tbl: pa.Table) -> tuple[np.ndarray, np.ndarray]:
     return tuple(tbl.column(c).to_numpy().view(np.uint64) for c in ("h1", "h2"))
 
 
-def with_bloom_hashes(df: DataFrame, id_col: str = "url_id") -> DataFrame:
-    """Attach JVM-computed h1/h2 (int64) — the only hashing anywhere."""
-    return df.withColumn("h1", F.xxhash64(F.col(id_col))).withColumn(
-        "h2", F.xxhash64(F.col(id_col), F.lit(_SEED2))
+def with_bloom_hashes(df: DataFrame) -> DataFrame:
+    """Attach JVM-computed h1/h2 (int64) of ``url_id`` — the only
+    hashing anywhere."""
+    return df.withColumn("h1", F.xxhash64("url_id")).withColumn(
+        "h2", F.xxhash64(F.col("url_id"), F.lit(_SEED2))
     )
 
 
@@ -139,17 +140,17 @@ def check_shard_scheme(schemes) -> None:
 
 def build_shards(
     seen_ids: DataFrame,
+    expected_per_shard: int,
     num_shards: int = 32,
-    expected_per_shard: int = 1_000_000,
     fpp: float = 0.01,
-    id_col: str = "url_id",
 ) -> DataFrame:
-    """Build bloom shards from a DataFrame of seen canonical ids.
+    """Build bloom shards from a DataFrame of seen canonical ids
+    (``url_id``).
 
     One shuffle (groupBy shard) of (shard, h1, h2) only, then an Arrow
-    UDF turns each shard's hash columns into one bloom blob row. Shard
-    sizing is static from ``expected_per_shard`` — at scale you'd size
-    from the seen-table row count (a metadata count, no scan).
+    UDF turns each shard's hash columns into one bloom blob row. Every
+    blob is sized for ``expected_per_shard`` ids at ``fpp``; the crawl
+    passes its round's own count, so each round's blobs fit that round.
     """
     m, k = optimal_params(expected_per_shard, fpp)
 
@@ -169,7 +170,7 @@ def build_shards(
 
     # No .distinct(): bloom insertion is idempotent, so deduping first
     # would only add a shuffle.
-    hashed = with_bloom_hashes(seen_ids.select(id_col), id_col)
+    hashed = with_bloom_hashes(seen_ids.select("url_id"))
     return (
         hashed.select(shard_of(F.col("h1"), num_shards).alias("shard"), "h1", "h2")
         .groupBy("shard")
@@ -181,7 +182,6 @@ def probe_positive_ids(
     candidates: DataFrame,
     shards: DataFrame,
     num_shards: int = 32,
-    id_col: str = "url_id",
 ) -> DataFrame:
     """Bloom-positive ids of ``candidates`` — the shard-local probe.
 
@@ -198,12 +198,12 @@ def probe_positive_ids(
     produce silent false negatives (duplicate fetches).
     """
     require_shard_scheme(shards)
-    out_schema = StructType([StructField(id_col, candidates.schema[id_col].dataType)])
+    out_schema = StructType([StructField("url_id", candidates.schema["url_id"].dataType)])
 
     def _probe_pos(cand: pa.Table, blob: pa.Table) -> pa.Table:
-        ids = cand.column(id_col)
+        ids = cand.column("url_id")
         if cand.num_rows == 0 or blob.num_rows == 0:
-            return pa.table({id_col: ids.slice(0, 0)})
+            return pa.table({"url_id": ids.slice(0, 0)})
         check_shard_scheme(blob.column("shard_scheme").to_pylist())
         h1, h2 = _hashes(cand)
         seen = np.zeros(cand.num_rows, dtype=bool)
@@ -212,9 +212,9 @@ def probe_positive_ids(
             m = blob.column("m_bits")[i].as_py()
             k = blob.column("k_hashes")[i].as_py()
             seen |= _test_bits(bits, _positions(h1, h2, k, m))
-        return pa.table({id_col: ids.filter(pa.array(seen))})
+        return pa.table({"url_id": ids.filter(pa.array(seen))})
 
-    slim = with_bloom_hashes(candidates.select(id_col), id_col).withColumn(
+    slim = with_bloom_hashes(candidates.select("url_id")).withColumn(
         "shard", shard_of(F.col("h1"), num_shards)
     )
     return (
@@ -229,7 +229,6 @@ def dedupe_against_seen(
     seen_ids: DataFrame,
     shards: DataFrame | None = None,
     num_shards: int = 32,
-    id_col: str = "url_id",
 ) -> DataFrame:
     """Exact unseen-set via bloom pre-filter + anti-join backstop.
 
@@ -243,9 +242,9 @@ def dedupe_against_seen(
     seen set per round for nothing (optimization guide §2.4, 'a
     distinct on data that is already unique').
     """
-    seen = seen_ids.select(id_col)
+    seen = seen_ids.select("url_id")
     if shards is None:
-        return candidates.join(seen, on=id_col, how="left_anti")
+        return candidates.join(seen, on="url_id", how="left_anti")
     # Bloom path: slim probe -> exact confirm -> one anti join.
     # positives ∩ seen is exactly candidates ∩ seen (the bloom has no
     # false negatives), so anti-joining candidates against the
@@ -256,8 +255,6 @@ def dedupe_against_seen(
     # probe reads ``candidates`` through the same exchange as the
     # anti-join when the caller leaves the two plans identical below
     # it (scheduling_round does), so AQE reuses it.
-    pos = probe_positive_ids(
-        candidates, shards, num_shards=num_shards, id_col=id_col
-    )
-    hits = pos.join(seen, on=id_col, how="left_semi")
-    return candidates.join(hits, on=id_col, how="left_anti")
+    pos = probe_positive_ids(candidates, shards, num_shards=num_shards)
+    hits = pos.join(seen, on="url_id", how="left_semi")
+    return candidates.join(hits, on="url_id", how="left_anti")

@@ -30,12 +30,20 @@ from pyspark.sql import functions as F
 # ANSI mode (Spark 4 default): a,b,h' < 2^31 => a*h' < 2^62.
 _P = (1 << 31) - 1
 
+#: documents are ``(doc_id, text)``; text is shingled into word
+#: k-grams, signed by NUM_PERM minhash permutations and banded into
+#: BANDS bands of NUM_PERM // BANDS rows.
+SHINGLE_K = 3
+NUM_PERM = 32
+BANDS = 16
 
-def _perm_params(num_perm: int, seed: int = 7) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs via a seeded LCG (no RNG state)."""
+
+def _perm_params() -> list[tuple[int, int]]:
+    """Deterministic (a, b) pairs via an LCG seeded with 7 (no RNG
+    state)."""
     params = []
-    x = seed
-    for _ in range(num_perm):
+    x = 7
+    for _ in range(NUM_PERM):
         x = (6364136223846793005 * x + 1442695040888963407) % (1 << 63)
         a = (x % (_P - 1)) + 1
         x = (6364136223846793005 * x + 1442695040888963407) % (1 << 63)
@@ -44,8 +52,10 @@ def _perm_params(num_perm: int, seed: int = 7) -> list[tuple[int, int]]:
     return params
 
 
-def shingles(text_col: Column, k: int = 3) -> Column:
-    """Distinct word k-shingles as an array<string> — native exprs."""
+def shingles(text_col: Column) -> Column:
+    """Distinct word SHINGLE_K-shingles as an array<string> — native
+    exprs."""
+    k = SHINGLE_K
     words = F.split(text_col, " ")
     n = F.size(words)
     idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
@@ -53,21 +63,21 @@ def shingles(text_col: Column, k: int = 3) -> Column:
     return F.array_distinct(sh)
 
 
-def shingle_hashes(text_col: Column, k: int = 3) -> Column:
+def shingle_hashes(text_col: Column) -> Column:
     """xxhash64 of each distinct shingle (array<bigint>), JVM-side."""
-    return F.transform(shingles(text_col, k), lambda s: F.xxhash64(s))
+    return F.transform(shingles(text_col), lambda s: F.xxhash64(s))
 
 
-def minhash_signature_udf(num_perm: int = 32, seed: int = 7):
+def minhash_signature_udf():
     """array<bigint> signature: min((a * (h mod P) + b) mod P) per
     permutation, as one Arrow-batched numpy pass per row: the
     (perm x shingle) matrix min is one numpy op, ~50x faster than
-    num_perm Catalyst array traversals."""
+    NUM_PERM Catalyst array traversals."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    params = _perm_params(num_perm, seed)
+    params = _perm_params()
     a = np.array([p[0] for p in params], dtype=np.int64)[:, None]
     b = np.array([p[1] for p in params], dtype=np.int64)[:, None]
 
@@ -172,11 +182,6 @@ def _bounded_bucket_pairs(
 
 def lsh_candidate_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    num_perm: int = 32,
-    bands: int = 16,
     max_bucket_size: int = 100,
     hashed: DataFrame | None = None,
 ) -> DataFrame:
@@ -191,19 +196,16 @@ def lsh_candidate_pairs(
     downstream (the exact-Jaccard verify) pass it in, persisted, so the
     shingling pass runs once instead of once per consumer.
     """
-    rows = num_perm // bands
-    sig_udf = minhash_signature_udf(num_perm)
+    rows = NUM_PERM // BANDS
+    sig_udf = minhash_signature_udf()
     if hashed is None:
-        hashed = docs.select(
-            F.col(id_col).alias("id"),
-            shingle_hashes(F.col(text_col), k).alias("hashes"),
-        )
+        hashed = _hashed(docs)
     sig = hashed.select("id", sig_udf(F.col("hashes")).alias("sig"))
     banded = sig.select(
         "id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(BANDS - 1)),
                 lambda b: F.struct(
                     b.alias("band"),
                     F.xxhash64(
@@ -222,30 +224,29 @@ def lsh_candidate_pairs(
     return _bounded_bucket_pairs(banded, ["band", "bucket"], max_bucket_size)
 
 
+def _hashed(docs: DataFrame) -> DataFrame:
+    """(id, hashes): each document's shingle hashes."""
+    return docs.select(
+        F.col("doc_id").alias("id"), shingle_hashes(F.col("text")).alias("hashes")
+    )
+
+
 def jaccard(a_hashes: Column, b_hashes: Column) -> Column:
     inter = F.size(F.array_intersect(a_hashes, b_hashes))
     union = F.size(F.array_union(a_hashes, b_hashes))
     return inter / union
 
 
-def minhash_dedup_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
-    k: int = 3,
-    num_perm: int = 32,
-    bands: int = 16,
-    max_bucket_size: int = 100,
-) -> DataFrame:
+def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
     """LSH candidates verified with EXACT Jaccard >= threshold.
 
     Output (a, b, jac) — with bands/rows generous for the threshold,
     recall is deterministic-complete on well-separated corpora, and
     the exact verify removes every false candidate, so the result
     equals the O(n^2) oracle — PROVIDED every LSH bucket stays within
-    ``max_bucket_size``. When a degenerate bucket exceeds the cap,
-    its pair enumeration is truncated to the star+chain expansion
+    the 100-member cap of :func:`lsh_candidate_pairs`. When a
+    degenerate bucket exceeds the cap, its pair enumeration is
+    truncated to the star+chain expansion
     (see :func:`_bounded_bucket_pairs`): cluster-level results
     (connected components, keep-min dedup) are preserved for
     mutually-similar members, but the full within-bucket pair LIST is
@@ -262,14 +263,8 @@ def minhash_dedup_pairs(
     # only (id, array<int64>) — a few hundred MB at 10^6 docs; at larger
     # corpora MEMORY_AND_DISK (the default) degrades to disk-backed
     # blocks, never OOM.
-    hashed = docs.select(
-        F.col(id_col).alias("id"),
-        shingle_hashes(F.col(text_col), k).alias("hashes"),
-    ).persist()
-    cand = lsh_candidate_pairs(
-        docs, id_col, text_col, k, num_perm, bands, max_bucket_size,
-        hashed=hashed,
-    )
+    hashed = _hashed(docs).persist()
+    cand = lsh_candidate_pairs(docs, hashed=hashed)
     return (
         cand.join(hashed.withColumnRenamed("id", "a").withColumnRenamed("hashes", "ha"), "a")
         .join(hashed.withColumnRenamed("id", "b").withColumnRenamed("hashes", "hb"), "b")
@@ -279,18 +274,10 @@ def minhash_dedup_pairs(
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact n-gram Jaccard for given (a, b) pairs — the non-LSH
     primitive (useful for verification / small candidate sets)."""
-    sh = docs.select(
-        F.col(id_col).alias("id"), shingles(F.col(text_col), k).alias("sh")
-    )
+    sh = docs.select(F.col("doc_id").alias("id"), shingles(F.col("text")).alias("sh"))
     return (
         pairs.join(sh.withColumnRenamed("id", "a").withColumnRenamed("sh", "sa"), "a")
         .join(sh.withColumnRenamed("id", "b").withColumnRenamed("sh", "sb"), "b")
@@ -304,10 +291,13 @@ def ngram_jaccard_pairs(
     )
 
 
+#: label-propagation iterations between two convergence checks.
+CHECK_EVERY = 3
+
+
 def connected_components(
     pairs: DataFrame,
     max_iters: int = 50,
-    check_every: int = 3,
     stats: dict | None = None,
     driver_max_edges: int = 200_000,
 ) -> DataFrame:
@@ -320,21 +310,21 @@ def connected_components(
     Each iteration (a) every node adopts the smallest label among
     itself and its neighbors (one join + one groupBy on the edge key)
     — plain hooking; (b) once the first convergence check fails (the
-    graph is deeper than ``check_every``), every subsequent iteration
+    graph is deeper than ``CHECK_EVERY``), every subsequent iteration
     ALSO makes every node adopt its LABEL's label (one self-join on
     the label key — Shiloach-Vishkin shortcutting), after which label
     distance roughly doubles per round and convergence is O(log
     diameter) joins: a 10^2-long chain (the star+chain expansion of a
     degenerate LSH bucket produces exactly these) settles in ~10
     rounds instead of ~100. The adaptivity matters because the
-    TYPICAL LSH pair graph is shallow (diameter <= check_every): there
+    TYPICAL LSH pair graph is shallow (diameter <= CHECK_EVERY): there
     the shortcut join is pure overhead — round 3 measured a ×1.5
     regression paying it unconditionally — so the common case runs
     hooking-only and never pays the second join. Labels only decrease
     and only within a component, so the fixpoint is the component-min
     labeling either way — same answer as plain propagation,
     deterministic at any partitioning. The convergence check (a
-    changed-count job) runs only every ``check_every`` iterations, so
+    changed-count job) runs only every ``CHECK_EVERY`` iterations, so
     the steady state is ~1 action per join round instead of 2.
 
     Small-graph fast path: the verified near-dup pair graph is SPARSE
@@ -450,7 +440,7 @@ def connected_components(
     jump = False  # engaged after the first failed convergence check
     while iters < max_iters and not converged:
         prev = labels
-        for _ in range(min(check_every, max_iters - iters)):
+        for _ in range(min(CHECK_EVERY, max_iters - iters)):
             neighbor_min = (
                 edges.join(
                     labels.withColumnRenamed("id", "v"), on="v"
@@ -479,7 +469,7 @@ def connected_components(
             labels = hooked
             iters += 1
         # materialize once per BLOCK, not per iteration: lineage within
-        # a block is bounded (check_every joins), and each eager
+        # a block is bounded (CHECK_EVERY joins), and each eager
         # localCheckpoint is a full job — per-iteration checkpointing
         # tripled the scheduling overhead of the common shallow case.
         labels = labels.localCheckpoint(eager=True)
@@ -505,13 +495,9 @@ def connected_components(
     return labels
 
 
-def simhash(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    token_hash_fn=None,
-) -> DataFrame:
-    """64-bit SimHash: JVM-side token hashing, numpy bit-vote UDF.
+def simhash(docs: DataFrame, token_hash_fn=None) -> DataFrame:
+    """64-bit SimHash of each (doc_id, text): JVM-side token hashing,
+    numpy bit-vote UDF.
 
     The only Python is one vectorized Arrow batch op (unpack bits of
     the token-hash matrix, sign of the column sums).
@@ -548,18 +534,14 @@ def simhash(
         token_hash_fn = F.xxhash64
     _simhash = pandas_udf(_simhash_fn, "long")
     tokens_hashed = F.transform(
-        F.array_distinct(F.split(F.col(text_col), " ")),
+        F.array_distinct(F.split(F.col("text"), " ")),
         lambda w: token_hash_fn(w),
     )
-    return docs.select(
-        F.col(id_col), _simhash(tokens_hashed).alias("simhash64")
-    )
+    return docs.select("doc_id", _simhash(tokens_hashed).alias("simhash64"))
 
 
 def simhash_near_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 3,
     blocks: int = 4,
     token_hash_fn=None,
@@ -573,7 +555,7 @@ def simhash_near_pairs(
     (recall 1 by pigeonhole) — which makes it oracle-able.
     """
     width = 64 // blocks
-    sh = simhash(docs, id_col, text_col, token_hash_fn=token_hash_fn)
+    sh = simhash(docs, token_hash_fn=token_hash_fn)
     mask = (1 << width) - 1
     block_structs = [
         F.struct(
@@ -585,7 +567,7 @@ def simhash_near_pairs(
         for i in range(blocks)
     ]
     chunks = sh.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.col("simhash64"),
         F.explode(F.array(*block_structs)).alias("c"),
     ).select(

@@ -42,18 +42,16 @@ from pyspark.sql import functions as F
 
 from cmoncrawl_spark.functions.urls import host_of, unify_url_id_col
 from cmoncrawl_spark.operators import bloom as bloom_ops
+from cmoncrawl_spark.operators.robots import DEFAULT_CRAWL_DELAY_S
 
 #: total-order sort keys for scheduling (best first).
 def _order_keys() -> list[Column]:
     return [F.col("depth").asc(), F.col("priority").desc(), F.col("url_id").asc()]
 
 
-def with_host(
-    df: DataFrame,
-    url_col: str = "url",
-    domain_politeness: bool = False,
-) -> DataFrame:
-    """Attach the politeness key ``host`` — all codegen expressions.
+def with_host(df: DataFrame, domain_politeness: bool = False) -> DataFrame:
+    """Attach the politeness key ``host`` of ``url`` — all codegen
+    expressions.
 
     host (politeness key) = parse_url HOST (the hostname); url_id keys
     on the full netloc per the reference (urls._netloc_col) — the two
@@ -71,7 +69,7 @@ def with_host(
     every URL against small broadcast rule tables: no exchange and no
     driver-side state at any host cardinality (~0.6 µs/URL over the
     host-keyed round at 4.8M URLs, PLANS.md §15)."""
-    out = df.withColumn("host", host_of(F.col(url_col)))
+    out = df.withColumn("host", host_of(F.col("url")))
     if domain_politeness:
         from cmoncrawl_spark.functions.psl import with_domain_key
 
@@ -79,15 +77,10 @@ def with_host(
     return out
 
 
-def canonicalize(
-    frontier: DataFrame,
-    url_col: str = "url",
-    domain_politeness: bool = False,
-) -> DataFrame:
+def canonicalize(frontier: DataFrame, domain_politeness: bool = False) -> DataFrame:
     """Attach url_id (D1 canonical id) + host (see :func:`with_host`)."""
     return with_host(
-        frontier.withColumn("url_id", unify_url_id_col(F.col(url_col))),
-        url_col,
+        frontier.withColumn("url_id", unify_url_id_col(F.col("url"))),
         domain_politeness,
     )
 
@@ -105,11 +98,7 @@ def dedupe_intra_batch(candidates: DataFrame) -> DataFrame:
     )
 
 
-def per_host_topk(
-    df: DataFrame,
-    budget_cap: int,
-    budget_col: str = "budget",
-) -> DataFrame:
+def per_host_topk(df: DataFrame, budget_cap: int) -> DataFrame:
     """Per-host top-k under the total order: one window, one exchange.
 
     Output = rows with rank <= budget per host, plus their exact
@@ -125,7 +114,7 @@ def per_host_topk(
     w = Window.partitionBy("host").orderBy(*_order_keys())
     return df.withColumn("fetch_rank", F.row_number().over(w)).where(
         (F.col("fetch_rank") <= F.lit(budget_cap))
-        & (F.col("fetch_rank") <= F.col(budget_col))
+        & (F.col("fetch_rank") <= F.col("budget"))
     )
 
 
@@ -190,7 +179,7 @@ def scheduling_round(
 def fetch_schedule(
     fetch_list: DataFrame,
     host_policies: DataFrame,
-    default_delay: float = 1.0,
+    default_delay: float = DEFAULT_CRAWL_DELAY_S,
 ) -> DataFrame:
     """Turn per-host fetch ranks into concrete crawl-delay-spaced fetch
     offsets: the k-th fetch of a host starts (k-1) * crawl_delay_s
@@ -200,9 +189,10 @@ def fetch_schedule(
 
     LEFT join: a scheduled host with no policy row (e.g. no robots.txt
     parsed — host_policies_from_robots only emits hosts it saw rules
-    for) is still fetched, at ``default_delay`` (the same default that
-    function uses); an inner join would silently DROP those URLs from
-    the schedule."""
+    for) is still fetched, at ``default_delay``, which defaults to the
+    ``robots.DEFAULT_CRAWL_DELAY_S`` that function gives a host without
+    a crawl-delay rule; an inner join would silently DROP those URLs
+    from the schedule."""
     pol = F.broadcast(host_policies.select("host", "crawl_delay_s"))
     delay = F.coalesce(F.col("crawl_delay_s"), F.lit(default_delay))
     return fetch_list.join(pol, on="host", how="left").withColumn(

@@ -58,18 +58,17 @@ def _md5_lower64(data: bytes) -> int:
     return int.from_bytes(hashlib.md5(data).digest()[8:16], "little")
 
 
-def _fake_pixels(payload: bytes, h: int = 8, w: int = 8) -> np.ndarray:
-    """Deterministic stand-in decode: md5-derived pixel grid
+def _fake_pixels(payload: bytes) -> np.ndarray:
+    """Deterministic stand-in decode: md5-derived 8x8 RGB pixel grid
     (byte j = md5_number_lower(payload || ':' || j) mod 256 — DuckDB
     reproduces it, so the feature oracle closes). Keeps the full
     pipeline testable without codecs; REPLACE via set_image_decoder
     in production."""
-    n = h * w * 3
     vals = [
         _md5_lower64(payload + b":" + str(j).encode()) % 256
-        for j in range(n)
+        for j in range(8 * 8 * 3)
     ]
-    return np.array(vals, dtype=np.uint8).reshape(h, w, 3)
+    return np.array(vals, dtype=np.uint8).reshape(8, 8, 3)
 
 
 FEATURE_SCHEMA = StructType(
@@ -128,15 +127,15 @@ def set_audio_decoder(
     _AUDIO_DECODER = fn
 
 
-def _fake_waveform(payload: bytes, n: int = 512) -> tuple[np.ndarray, int]:
+def _fake_waveform(payload: bytes) -> tuple[np.ndarray, int]:
     """Deterministic stand-in decode (same doctrine as _fake_pixels):
-    sample i = (md5_number_lower(payload || ':' || i) mod 2049 - 1024)
+    512 samples at 16 kHz, sample i = (md5_number_lower(payload || ':' || i) mod 2049 - 1024)
     / 1024 — every value is k/1024, EXACT in float32, so the RMS
     oracle in DuckDB double arithmetic matches bit-for-bit."""
     m = np.array(
         [
             _md5_lower64(payload + b":" + str(i).encode()) % 2049
-            for i in range(n)
+            for i in range(512)
         ],
         dtype=np.float64,
     )

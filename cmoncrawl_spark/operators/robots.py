@@ -29,19 +29,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: crawl delay of a host whose robots.txt sets none, and of a host
+#: with no policy row in ``frontier.fetch_schedule``.
+DEFAULT_CRAWL_DELAY_S = 1.0
+
 
 def _lines(robots_col: Column) -> Column:
     # normalize CRLF, split; comments stripped per-line later.
     return F.split(F.regexp_replace(robots_col, "\r\n", "\n"), "\n")
 
 
-def parse_robots(
-    df: DataFrame,
-    host_col: str = "host",
-    robots_col: str = "robots_txt",
-    agent: str = "*",
-) -> DataFrame:
-    """robots.txt -> (host, rule, path, line_no), rules of the group
+def parse_robots(df: DataFrame, agent: str = "*") -> DataFrame:
+    """(host, robots_txt) -> (host, rule, path, line_no), rules of the group
     that applies to ``agent`` (exact-match group if present, else the
     ``*`` group — RFC 9309 §2.2.1 'most specific user-agent').
 
@@ -49,8 +48,7 @@ def parse_robots(
     ``path`` holds the numeric value as a string.
     """
     lined = df.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(_lines(F.col(robots_col))).alias("line_no", "raw"),
+        "host", F.posexplode(_lines(F.col("robots_txt"))).alias("line_no", "raw")
     )
     # strip comments + whitespace; parse field/value.
     stripped = F.trim(F.regexp_replace(F.col("raw"), "#.*$", ""))
@@ -99,10 +97,9 @@ def parse_robots(
     ).where(F.col("rule").isin("allow", "disallow", "crawl-delay"))
 
 
-def host_policies_from_robots(
-    rules: DataFrame, default_delay: float = 1.0
-) -> DataFrame:
-    """(host, crawl_delay_s, robots_disallow_all) from parsed rules."""
+def host_policies_from_robots(rules: DataFrame) -> DataFrame:
+    """(host, crawl_delay_s, robots_disallow_all) from parsed rules; a
+    host without a crawl-delay rule gets ``DEFAULT_CRAWL_DELAY_S``."""
     delay = (
         rules.where(F.col("rule") == "crawl-delay")
         .groupBy("host")
@@ -123,7 +120,7 @@ def host_policies_from_robots(
         .join(delay, "host", "left")
         .select(
             "host",
-            F.coalesce(F.col("crawl_delay_s"), F.lit(default_delay)).alias(
+            F.coalesce(F.col("crawl_delay_s"), F.lit(DEFAULT_CRAWL_DELAY_S)).alias(
                 "crawl_delay_s"
             ),
             (
@@ -134,13 +131,9 @@ def host_policies_from_robots(
     )
 
 
-def urls_allowed(
-    urls: DataFrame,
-    rules: DataFrame,
-    url_col: str = "url",
-    host_col: str = "host",
-) -> DataFrame:
-    """urls + allowed:boolean — RFC 9309 longest-match semantics.
+def urls_allowed(urls: DataFrame, rules: DataFrame) -> DataFrame:
+    """urls (url, host, ...) + allowed:boolean — RFC 9309
+    longest-match semantics.
 
     For each URL: among allow/disallow rules of its host whose path is
     a prefix of the URL path, the LONGEST path wins; on a tie, allow
@@ -155,7 +148,7 @@ def urls_allowed(
     — expand the join then groupBy every url column — shuffled the
     whole frontier on a wide key; this one is shuffle-free.)
     """
-    path = F.coalesce(F.parse_url(F.col(url_col), F.lit("PATH")), F.lit("/"))
+    path = F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit("/"))
     u = urls.withColumn("_path", F.when(path == "", "/").otherwise(path))
     per_host = (
         rules.where(F.col("rule").isin("allow", "disallow"))
@@ -168,7 +161,7 @@ def urls_allowed(
         )
     )
     joined = u.join(
-        F.broadcast(per_host), F.col(host_col) == F.col("_rhost"), "left"
+        F.broadcast(per_host), F.col("host") == F.col("_rhost"), "left"
     )
     matching = F.filter(
         F.col("_rules"), lambda x: F.col("_path").startswith(x["p"])

@@ -68,11 +68,10 @@ def route_expr(
 def route_records(
     records: DataFrame,
     routes: list[Route],
-    url_col: str = "url",
     ts_col: str = "warc_ts",
-    out_col: str = "route",
     no_match: str | None = None,
 ) -> DataFrame:
+    """``records`` plus a ``route`` column dispatched on ``url``."""
     return records.withColumn(
-        out_col, route_expr(routes, F.col(url_col), F.col(ts_col), no_match)
+        "route", route_expr(routes, F.col("url"), F.col(ts_col), no_match)
     )

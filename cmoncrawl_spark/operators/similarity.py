@@ -79,8 +79,8 @@ def _sign_bucket_py(vec: list[float], planes: list[list[float]]) -> str:
     return "".join(out)
 
 
-def _topk_ranked(sims: DataFrame, id_col: str, k: int) -> DataFrame:
-    """Scale-safe top-k + rank over a (id, sim) DataFrame.
+def _topk_ranked(sims: DataFrame, k: int) -> DataFrame:
+    """Scale-safe top-k + rank over a (vec_id, sim) DataFrame.
 
     ``orderBy(...).limit(k)`` compiles to TakeOrderedAndProject —
     per-partition k-row heaps merged on the driver, NO single-reducer
@@ -89,38 +89,32 @@ def _topk_ranked(sims: DataFrame, id_col: str, k: int) -> DataFrame:
     survivors; the two-key (sim desc, id asc) order preserves the
     deterministic tie-break, so output rows and ranks are identical.
     """
-    top = sims.orderBy(F.col("sim").desc(), F.col(id_col).asc()).limit(k)
+    top = sims.orderBy(F.col("sim").desc(), F.col("vec_id").asc()).limit(k)
     return top.withColumn(
         "rank",
-        F.row_number().over(Window.orderBy(F.col("sim").desc(), F.col(id_col))),
+        F.row_number().over(Window.orderBy(F.col("sim").desc(), F.col("vec_id"))),
     )
 
 
 def cosine_topk(
     vecs: DataFrame,
     query_vec: Column,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     e = vecs.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("_v")
     ).withColumn("_q", query_vec)
     sim = cosine(F.col("_v"), F.col("_q"))
-    return _topk_ranked(e.select(F.col(id_col), sim.alias("sim")), id_col, k)
+    return _topk_ranked(e.select("vec_id", sim.alias("sim")), k)
 
 
 def cosine_dup_pairs(
     vecs: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.99,
-    bits: int = 12,
-    seed: int = 11,
     max_bucket_size: int = 200,
 ) -> DataFrame:
     """Near-dup pairs (a < b) with exact cosine >= threshold, found via
-    sign-LSH buckets. For thresholds near 1 the sign signature of the
+    12-bit sign-LSH buckets. For thresholds near 1 the sign signature of the
     two vectors is (near-)identical, so bucket-equality recall is ~1;
     the exact verify inside buckets removes all false candidates.
 
@@ -131,12 +125,12 @@ def cosine_dup_pairs(
     truncation is logged at INFO."""
     from cmoncrawl_spark.operators.dedup import _bounded_bucket_pairs
 
-    sample = vecs.select(vec_col).first()
+    sample = vecs.select("embedding").first()
     dim = len(sample[0])
-    planes = hyperplanes(dim, bits, seed)
+    planes = hyperplanes(dim, 12)
     keyed = vecs.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("v"),
     ).withColumn("bucket", sign_bucket(F.col("v"), planes))
     cand = _bounded_bucket_pairs(
         keyed.select("id", "bucket"), ["bucket"], max_bucket_size
@@ -154,8 +148,6 @@ def cosine_dup_pairs(
 
 def ivf_build(
     vecs: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_lists: int = 16,
     iters: int = 5,
     seed: int = 11,
@@ -167,10 +159,10 @@ def ivf_build(
     n_lists x dim floats, trivially broadcastable at any corpus size).
     Returns (assignments DataFrame [id, list_id], centroids).
     """
-    dim = len(vecs.select(vec_col).first()[0])
+    dim = len(vecs.select("embedding").first()[0])
     cents = hyperplanes(dim, n_lists, seed)  # reuse the seeded generator
     e = vecs.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+        F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v")
     ).localCheckpoint(eager=True)
     for _ in range(iters):
         assigned = _assign(e, cents)
@@ -219,8 +211,6 @@ def ivf_topk(
     query_vec_values: list[float],
     centroids: list[list[float]],
     assignments: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     n_probe: int = 2,
 ) -> DataFrame:
@@ -234,20 +224,18 @@ def ivf_topk(
     )[:n_probe]
     qcol = F.array(*[F.lit(float(v)) for v in q])
     e = vecs.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("v")
     ).join(
-        assignments.withColumnRenamed("id", id_col), on=id_col, how="inner"
+        assignments.withColumnRenamed("id", "vec_id"), on="vec_id", how="inner"
     )
     cand = e.where(F.col("list_id").isin(order))
     sim = cosine(F.col("v"), qcol)
-    return _topk_ranked(cand.select(F.col(id_col), sim.alias("sim")), id_col, k)
+    return _topk_ranked(cand.select("vec_id", sim.alias("sim")), k)
 
 
 def ann_topk(
     vecs: DataFrame,
     query_vec_values: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     bits: int = 8,
     seed: int = 11,
@@ -259,7 +247,7 @@ def ann_topk(
     planes = hyperplanes(dim, bits, seed)
     qcol = F.array(*[F.lit(float(v)) for v in query_vec_values])
     keyed = vecs.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("v")
     ).withColumn("bucket", sign_bucket(F.col("v"), planes))
     # query bucket driver-side in pure Python: planes are literals and
     # the in-order fold is the same IEEE sequence Spark's F.aggregate
@@ -267,4 +255,4 @@ def ann_topk(
     qbucket = _sign_bucket_py([float(v) for v in query_vec_values], planes)
     cand = keyed.where(F.col("bucket") == qbucket)
     sim = cosine(F.col("v"), qcol)
-    return _topk_ranked(cand.select(F.col(id_col), sim.alias("sim")), id_col, k)
+    return _topk_ranked(cand.select("vec_id", sim.alias("sim")), k)

@@ -60,9 +60,10 @@ def lang_id(text_col: Column) -> Column:
     return best["k"]
 
 
-def quality_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Standard webtext quality columns (Gopher/C4-style heuristics)."""
-    t = F.col(text_col)
+def quality_signals(df: DataFrame) -> DataFrame:
+    """Standard webtext quality columns of ``text`` (Gopher/C4-style
+    heuristics)."""
+    t = F.col("text")
     toks = tokens(t)
     n_tok = F.size(toks)
     word_lens = F.transform(toks, F.length)
@@ -90,17 +91,16 @@ def quality_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def rolling_fingerprint(
-    text_col: Column, window: int = 8, hash_fn=None
-) -> Column:
-    """Document fingerprint: min of rolling-window hashes (winnowing
-    lite) — robust to local edits, native exprs only.
+def rolling_fingerprint(text_col: Column, hash_fn=None) -> Column:
+    """Document fingerprint: min of the hashes of every 8-token window
+    (winnowing lite) — robust to local edits, native exprs only.
 
     ``hash_fn`` defaults to xxhash64 (JVM intrinsic — production);
     pass ``functions.scalars.portable_hash64`` for the oracle-able
     variant DuckDB reproduces bit-for-bit (md5_number_lower)."""
     if hash_fn is None:
         hash_fn = F.xxhash64
+    window = 8
     toks = tokens(text_col)
     n = F.size(toks)
     idx = F.sequence(F.lit(1), F.greatest(n - F.lit(window - 1), F.lit(1)))

@@ -49,9 +49,9 @@ def write_jsonl(
     )
 
 
-def write_html_files(df: DataFrame, path: str, url_col: str = "url") -> None:
-    """K2 — one html FILE per record; name = :func:`name_mangle` of the
-    url (reference streamer.py:215-229 writes
+def write_html_files(df: DataFrame, path: str) -> None:
+    """K2 — one html FILE per (url, html) record; name =
+    :func:`name_mangle` of the url (reference streamer.py:215-229 writes
     ``directory / f"{name}.html"`` per record).
 
     Spark analog: a ``foreachPartition`` writer — each task streams its
@@ -88,7 +88,7 @@ def write_html_files(df: DataFrame, path: str, url_col: str = "url") -> None:
     with open(marker, "w", encoding="utf-8") as f:
         f.write("")
     named = df.select(
-        name_mangle(F.col(url_col)).alias("name"),
+        name_mangle(F.col("url")).alias("name"),
         F.col("html").cast("string").alias("value"),
     )
 

@@ -15,18 +15,22 @@ batch of (filename, offset, length) resolves through a DAO instance
 created per-partition (connection reuse), never on the driver.
 
 ``LocalFileDAO`` reads local archives; ``HTTPRangeDAO`` issues range
-GETs through stdlib urllib or an injected client.
+GETs through stdlib urllib. ``WarcPayloadDAO`` wraps either and hands
+on the page inside the fetched WARC record instead of the record.
 """
 
 from __future__ import annotations
 
 import os
 import time
+import zlib
 from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import BinaryType, StructField, StructType
+
+from cmoncrawl_spark.sources.warc import parse_warc_bytes
 
 RETRYABLE_HTTP = {500, 502, 503, 504}
 
@@ -88,8 +92,9 @@ class RetryingDAO:
         )
 
 
-def stdlib_http_client(timeout: float = 60.0):
-    """Default HTTP client on stdlib urllib (no third-party deps).
+def stdlib_http_client():
+    """HTTP client on stdlib urllib (no third-party deps), with a 60 s
+    timeout.
 
     Returns callable (url, headers) -> (status, bytes). HTTPError
     statuses are returned, not raised — the DAO decides retryability.
@@ -100,7 +105,7 @@ def stdlib_http_client(timeout: float = 60.0):
     def client(url: str, headers: dict[str, str]) -> tuple[int, bytes]:
         req = urllib.request.Request(url, headers=headers)
         try:
-            with urllib.request.urlopen(req, timeout=timeout) as resp:
+            with urllib.request.urlopen(req, timeout=60.0) as resp:
                 return resp.status, resp.read()
         except urllib.error.HTTPError as e:
             return e.code, b""
@@ -110,20 +115,19 @@ def stdlib_http_client(timeout: float = 60.0):
 
 class HTTPRangeDAO:
     """S3 — production range GET ('bytes=o..o+l-1', reference
-    dao/api.py:55-61). Default client is stdlib urllib; inject
-    ``client`` (callable url, headers -> (status, bytes)) to swap in a
-    pooled/async transport. Tested offline against a local Range-aware
-    http.server (tests/test_scalars_dao.py).
+    dao/api.py:55-61) through :func:`stdlib_http_client`. Tested
+    offline against a local Range-aware http.server
+    (tests/test_scalars_dao.py).
 
     The reference's S3 path (dao/s3.py:65-101) reads the PUBLIC
     commoncrawl bucket unsigned — over HTTPS that is exactly this DAO
     pointed at the bucket endpoint (base_url=
     'https://data.commoncrawl.org' or the S3 REST endpoint); signed
-    private-bucket access would inject a signing client here."""
+    private-bucket access would need a signing client here."""
 
-    def __init__(self, base_url: str, client=None) -> None:
+    def __init__(self, base_url: str) -> None:
         self.base_url = base_url
-        self.client = client if client is not None else stdlib_http_client()
+        self.client = stdlib_http_client()
 
     def fetch(self, filename: str, offset: int, length: int) -> bytes:
         url = f"{self.base_url.rstrip('/')}/{filename}"
@@ -137,16 +141,37 @@ class HTTPRangeDAO:
         return data
 
 
+class WarcPayloadDAO:
+    """A DAO that hands on the payload of the WARC ``response`` record
+    in each fetched range (plain or gzipped), not the raw record: an
+    index row's (filename, offset, length) points at one such record,
+    as the reference's downloader reads it with warcio
+    (downloader.py:124-240). A range that holds no response record
+    raises ``ValueError`` naming the file and the offset."""
+
+    def __init__(self, inner) -> None:
+        self.inner = inner
+
+    def fetch(self, filename: str, offset: int, length: int) -> bytes:
+        data = self.inner.fetch(filename, offset, length)
+        where = f"{filename} at offset {offset}"
+        try:
+            records = parse_warc_bytes(data)
+        except (OSError, EOFError, zlib.error) as e:  # a corrupt gzip member
+            raise ValueError(f"no WARC record in {where}: {e}") from e
+        for rec in records:
+            if rec["rec_type"] == "response":
+                return rec["content"]
+        raise ValueError(f"no WARC response record in {where}")
+
+
 def fetch_ranges(
-    records: DataFrame,
-    dao_factory: Callable[[], object],
-    filename_col: str = "filename",
-    offset_col: str = "offset",
-    length_col: str = "length",
+    records: DataFrame, dao_factory: Callable[[], object]
 ) -> DataFrame:
-    """mapInPandas range-fetch: one DAO per partition, bytes column
-    appended. The reference's per-record async fetch loop becomes
-    executor-side batched I/O."""
+    """mapInPandas range-fetch of each (filename, offset, length) row:
+    one DAO per partition, bytes column ``content`` appended. The
+    reference's per-record async fetch loop becomes executor-side
+    batched I/O."""
     out_schema = StructType(
         records.schema.fields + [StructField("content", BinaryType())]
     )
@@ -157,9 +182,7 @@ def fetch_ranges(
         for pdf in batches:
             content = [
                 dao.fetch(f, int(o), int(n))
-                for f, o, n in zip(
-                    pdf[filename_col], pdf[offset_col], pdf[length_col]
-                )
+                for f, o, n in zip(pdf["filename"], pdf["offset"], pdf["length"])
             ]
             res = pdf[names].copy()
             res["content"] = content

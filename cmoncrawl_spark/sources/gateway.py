@@ -90,7 +90,6 @@ class CDXGateway:
         max_requests_per_second: float = 20.0,
         max_retry: int = 3,
         _sleep=time.sleep,
-        _clock=time.monotonic,
     ) -> None:
         self.cdx_server = cdx_server
         if client is None:
@@ -105,7 +104,6 @@ class CDXGateway:
         )
         self.max_retry = max_retry
         self._sleep = _sleep
-        self._clock = _clock
         self._last = 0.0
 
     def _throttled_get(self, params: dict) -> bytes:
@@ -113,10 +111,10 @@ class CDXGateway:
         are retried through the DAO layer's ``call_with_retry``."""
 
         def attempt() -> bytes:
-            wait = self.min_interval - (self._clock() - self._last)
+            wait = self.min_interval - (time.monotonic() - self._last)
             if wait > 0:
                 self._sleep(wait)
-            self._last = self._clock()
+            self._last = time.monotonic()
             status, body = self.client(self.cdx_server, params)
             if status != 200:
                 raise GatewayHTTPError(
@@ -136,12 +134,7 @@ class CDXGateway:
                 f"{e}: retries exhausted after {self.max_retry + 1} attempts",
             ) from e
 
-    def num_pages(
-        self,
-        url: str,
-        match_type: str | None = None,
-        page_size: int | None = None,
-    ) -> int:
+    def num_pages(self, url: str, match_type: str | None = None) -> int:
         """showNumPages probe (gateway_query.py:142-180).
 
         A 404 means the gateway found no captures for this URL in this
@@ -152,8 +145,6 @@ class CDXGateway:
         params: dict = {"showNumPages": "true", "output": "json", "url": url}
         if match_type is not None:
             params["matchType"] = match_type
-        if page_size is not None:
-            params["page_size"] = page_size
         try:
             body = self._throttled_get(params)
         except GatewayHTTPError as e:

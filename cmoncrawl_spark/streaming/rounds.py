@@ -6,9 +6,9 @@ north_rule requirements implemented here:
   checkpointed after every round with lineage columns (round_id);
 - a killed driver resumes from the last committed round (resume test
   in tests/test_rounds.py);
-- the URL-seen set grows only from SUCCESSFUL fetches — the
-  reference's add-after-success gate
-  (/root/reference/cmoncrawl/middleware/synchronized.py:36-41).
+- every scheduled url enters the URL-seen set: the engine simulates
+  no fetch outcome, so a round's seen delta is its fetch list's
+  ``url_id`` column (tests/simulator.py assumes the same).
 
 Storage: crawl state is parquet behind the tiny :class:`StateStore`
 facade: every table is a directory of per-round parquet dirs under
@@ -20,7 +20,10 @@ round builds blobs over ITS new ids only and the probe ORs every blob
 row of a shard (bloom.probe_positive_ids' multi-row contract), so a
 round's state write is O(round) — hashing AND bytes. (The previous
 protocol merged old+new blobs each round: new ids were O(round) but the
-merged blob REWRITE was O(history) bytes per round.) The seen set is likewise
+merged blob REWRITE was O(history) bytes per round.) Each round sizes
+its own blobs from the row count it already takes, so blob rows of
+different rounds carry different (m, k); the probe reads (m, k) per
+row. The seen set is likewise
 APPEND-ONLY (per-round delta dirs, read as a union): no state write
 grows with history. The cost moves to the reads: bloom blob rows grow
 by up to one per shard per round and delta dirs by one per table per
@@ -105,27 +108,22 @@ def run_round(
     frontier: DataFrame,
     host_policies: DataFrame,
     num_shards: int = 32,
-    fetch_success: F.Column | None = None,
     budget_cap: int | None = None,
-    expected_per_shard: int = 1_000_000,
 ) -> DataFrame:
     """Run + commit one scheduling round; returns the fetch list.
 
     frontier: candidates for THIS round (url, depth, priority).
-    fetch_success: predicate simulating fetch outcome (default: all
-    succeed). Only successful urls' canonical ids enter the seen set —
-    failed ones stay eligible for the next round (reference gate).
+    Every scheduled url's canonical id enters the seen set.
     budget_cap: constant max-budget bound for the WindowGroupLimit
     pre-shuffle cut (see scheduling_round); multi-round drivers derive
     it ONCE from the round-invariant policies table instead of paying
     one aggregation job per round.
-    expected_per_shard: bloom sizing (bits scale with it). run_crawl
-    derives it once from the seed count and holds it across the
-    crawl's rounds, so every blob row shares one (m, k). The r5 fixed 1M
-    default meant 1.2 MB of filter bits per shard — ~38 MB written and
-    ~77 MB shuffled through the merge EVERY round regardless of crawl
-    size (measured 1.3 s/round at a 50k-URL frontier, the largest
-    single cost of the loop after scheduling itself).
+
+    Bloom sizing: the round's blobs hold only its own new ids, so they
+    are sized from the round's scheduled count, ``max(1024, scheduled
+    // num_shards)`` ids per shard — the count the delta-file sizing
+    takes anyway. No crawl-wide estimate is needed, and the filter
+    bits written per round follow what the round adds.
     """
     spark = store.spark
     if round_id == 0:
@@ -161,14 +159,7 @@ def run_round(
         budget_cap=budget_cap,
     ).localCheckpoint(eager=True)
 
-    ok = fetch_list.where(fetch_success if fetch_success is not None else F.lit(True))
-    new_ids = ok.select("url_id")
-    new_shard_df = bloom_ops.build_shards(
-        new_ids,
-        num_shards=num_shards,
-        expected_per_shard=expected_per_shard,
-    )
-
+    new_ids = fetch_list.select("url_id")
     metrics = round_metrics(frontier, fetch_list).withColumn(
         "round_id", F.lit(round_id)
     )
@@ -181,10 +172,11 @@ def run_round(
     # jobs"; FIFO scheduling gives exactly the back-fill behavior).
     # The metrics write needs no row count, so it goes first and runs
     # concurrently with the count job; the three delta writes need
-    # n_files (from the count) and follow. ALL writes must SUCCEED
-    # before the commit marker below — the commit point is unchanged,
-    # so crash consistency is too: any write failure leaves the round
-    # uncommitted, same as the sequential code. Measured (same-JVM
+    # the count (n_files, and the bloom's sizing) and follow. ALL
+    # writes must SUCCEED before the commit marker below — the commit
+    # point is unchanged, so crash consistency is too: any write
+    # failure leaves the round uncommitted, same as the sequential
+    # code. Measured (same-JVM
     # interleaved A/B, sf0.1, 4 reps): crawl_3_rounds 5.9-6.5 s
     # sequential -> 4.4-5.2 s. The pool threads run through
     # inheritable_thread_target so the writes' jobs keep the caller's
@@ -197,11 +189,10 @@ def run_round(
     with ThreadPoolExecutor(max_workers=4) as pool:
         futs = {"metrics": pool.submit(write, "metrics", round_id, metrics)}
         scheduled_count = fetch_list.count()
-        # all-succeed default: the seen delta IS the fetch list — skip
-        # the second count job (one action per round adds up at 3+
-        # rounds).
-        delta_count = (
-            scheduled_count if fetch_success is None else new_ids.count()
+        new_shard_df = bloom_ops.build_shards(
+            new_ids,
+            max(1024, scheduled_count // num_shards),
+            num_shards=num_shards,
         )
         # Size the delta files from the round's actual row count
         # instead of inheriting the checkpoint's partition count
@@ -228,7 +219,7 @@ def run_round(
         {
             "round_id": round_id,
             "scheduled": scheduled_count,
-            "seen_total": prev_total + delta_count,
+            "seen_total": prev_total + scheduled_count,
             "num_shards": num_shards,
         },
     )
@@ -260,15 +251,14 @@ def run_crawl(
     rounds: int,
     num_shards: int = 32,
     fanout: int = 2,
-    resume: bool = True,
 ) -> int:
-    """Drive `rounds` scheduling rounds with link expansion; resumes
-    after the last committed round when `resume`.
+    """Drive `rounds` scheduling rounds with link expansion, resuming
+    after the last committed round in ``store``.
 
     A resume must use the crawl's shard count: the probe shards
     candidates by ``num_shards``, so blobs persisted under another
     count would miss ids and re-schedule seen URLs."""
-    start = store.last_committed_round() + 1 if resume else 0
+    start = store.last_committed_round() + 1
     committed = store.round_info(start - 1).get("num_shards", num_shards)
     if committed != num_shards:
         raise ValueError(
@@ -296,22 +286,10 @@ def run_crawl(
         persisted = True
     try:
         budget_cap = policy_budget_cap(host_policies)
-        # Bloom sizing from THIS crawl's upper-bound candidate count
-        # (seeds fan out by `fanout` each round), split over the
-        # shards; constant across rounds so every round's blobs share
-        # one (m, k). Deterministic on resume: same seeds +
-        # same arguments -> same sizing. The old fixed 1M/shard wrote
-        # megabytes of filter bits per round for kilobyte-scale crawls.
-        n_seeds = seeds.count()
-        total_candidates = sum(n_seeds * fanout**r for r in range(rounds))
-        expected_per_shard = max(
-            1024, total_candidates // max(num_shards, 1)
-        )
         for r in range(start, rounds):
             fetch = run_round(
                 store, r, frontier, host_policies, num_shards,
                 budget_cap=budget_cap,
-                expected_per_shard=expected_per_shard,
             )
             frontier = expand_links(fetch, fanout=fanout)
     finally:

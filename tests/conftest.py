@@ -22,3 +22,42 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def warc_record():
+    """Factory ``(url, length) -> (record, page)``: one gzipped WARC
+    ``response`` record of exactly ``length`` bytes, as an index row's
+    (offset, length) range in a Common Crawl archive holds, and the
+    HTML page it carries. The page is padded with a comment of hex
+    noise until the compressed record has the length, so the page's
+    bytes never appear in the record as they are."""
+    import gzip
+    import hashlib
+
+    from cmoncrawl_spark.sources.warc import write_warc_bytes
+
+    http = {"http_response_code": "200", "Content-Type": "text/html"}
+
+    def make(url: str, length: int) -> tuple[bytes, bytes]:
+        for salt in range(8):
+            noise = "".join(
+                hashlib.sha256(f"{url}:{salt}:{i}".encode()).hexdigest()
+                for i in range(length // 16 + 1)
+            )
+            for pad in range(len(noise)):
+                page = (
+                    f"<html><head><title>{url}</title></head>"
+                    f"<body><!--{noise[:pad]}--></body></html>"
+                ).encode()
+                warc = write_warc_bytes(
+                    [{"url": url, "http_header": http, "content": page}]
+                )
+                record = gzip.compress(warc, mtime=0)
+                if len(record) == length:
+                    return record, page
+                if len(record) > length:
+                    break
+        raise ValueError(f"no {length}-byte WARC record holds a page for {url}")
+
+    return make

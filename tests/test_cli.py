@@ -112,28 +112,39 @@ def test_cli_download_record_mode(spark, tmp_path, sf_dir):
         assert "hot-domain.com" in dr["url"]
 
 
-def test_cli_download_html_mode_local_dao(spark, tmp_path, sf_dir):
-    """html download through the LocalFileDAO: stage a fake archive at
-    the recorded (filename, offset, length) and check payload bytes."""
+def _stage_archives(base, rows, warc_record) -> dict[str, bytes]:
+    """Write a gzipped WARC record at every row's (warc_filename,
+    warc_record_offset, warc_record_length) under ``base``; returns
+    url -> the page each record carries."""
+    pages = {}
+    by_file: dict[str, list] = {}
+    for r in rows:
+        by_file.setdefault(r["warc_filename"], []).append(r)
+    for name, recs in by_file.items():
+        p = base / name
+        p.parent.mkdir(parents=True, exist_ok=True)
+        size = max(r["warc_record_offset"] + r["warc_record_length"] for r in recs)
+        blob = bytearray(size)
+        for r in recs:
+            record, pages[r["url"]] = warc_record(r["url"], r["warc_record_length"])
+            blob[r["warc_record_offset"] : r["warc_record_offset"] + len(record)] = record
+        p.write_bytes(bytes(blob))
+    return pages
+
+
+def test_cli_download_html_mode_local_dao(spark, tmp_path, sf_dir, warc_record):
+    """html download through the LocalFileDAO: each index row's range
+    holds a gzipped WARC record, and the page inside it is what gets
+    written, not the record."""
     from cmoncrawl_spark.datagen import register_crawl_views
+    from cmoncrawl_spark.operators.ccindex import MatchType, index_query
 
     register_crawl_views(spark, sf_dir)
-    recs = (
-        spark.table("ccindex")
-        .where("url_host_name = 'blog.hot-domain.com'")
-        .groupBy("warc_filename")
-        .agg({"warc_record_offset": "max", "warc_record_length": "max"})
-        .collect()
-    )
+    rows = index_query(
+        spark.table("ccindex"), ["blog.hot-domain.com"], MatchType.HOST
+    ).collect()
     base = tmp_path / "archives"
-    for r in recs:
-        p = base / r["warc_filename"]
-        p.parent.mkdir(parents=True, exist_ok=True)
-        size = (
-            r["max(warc_record_offset)"] + r["max(warc_record_length)"]
-        )
-        with open(p, "wb") as f:
-            f.write(bytes(i % 251 for i in range(size)))
+    pages = _stage_archives(base, rows, warc_record)
     out = str(tmp_path / "out_html_dl")
     main(
         [
@@ -151,6 +162,46 @@ def test_cli_download_html_mode_local_dao(spark, tmp_path, sf_dir):
     assert not any(os.path.isdir(os.path.join(out, e)) for e in entries)
     # host match includes www. variants (reference HOST semantics)
     assert all("blog.hot-domain.com" in e for e in entries)
+    written = set()
+    for e in entries:
+        with open(os.path.join(out, e), encoding="utf-8") as f:
+            written.add(f.read())
+    assert written <= {p.decode() for p in pages.values()}
+
+
+def test_cli_extract_record_mode_dao_base(spark, plugin_cfg, tmp_path, warc_record):
+    """record extract with --dao_base range-reads each domain record's
+    gzipped WARC record and extracts from the page inside it."""
+    url = "https://news.example.com/a"
+    record, _page = warc_record(url, 900)
+    base = tmp_path / "archives"
+    (base / "seg").mkdir(parents=True)
+    (base / "seg" / "a.warc.gz").write_bytes(b"\0" * 100 + record + b"\0" * 50)
+    records = tmp_path / "records.jsonl"
+    records.write_text(
+        json.dumps(
+            {
+                "domain_record": {
+                    "url": url,
+                    "filename": "seg/a.warc.gz",
+                    "offset": 100,
+                    "length": len(record),
+                    "timestamp": "2023-01-01T00:00:00",
+                }
+            }
+        )
+        + "\n"
+    )
+    out = str(tmp_path / "out_rec_dao")
+    main(
+        [
+            "extract", plugin_cfg, out, str(records), "record",
+            "--dao_base", str(base),
+        ]
+    )
+    rows = _read_jsonl_dir(out)
+    assert [r["title"] for r in rows] == [f"<title>{url}</title>"]
+    assert rows[0]["url"] == url
 
 
 def test_cli_crawl_composed_pipeline_end_to_end(spark, tmp_path):

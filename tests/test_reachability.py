@@ -9,6 +9,11 @@ including imports inside functions, so a module only a test imports
 shows up as unreached. Per function, name references are followed
 from the entry modules' code (annotations do not count), so a helper
 only a test calls shows up too; ``EXEMPT`` lists the few kept anyway.
+
+Per parameter, every defaulted parameter of a package function or
+method must be set by some call in the package, its tests, perfbench
+or the root-level scripts; one that no call sets is the constant it
+defaults to and should be written as one.
 """
 
 from __future__ import annotations
@@ -248,3 +253,111 @@ def test_every_exemption_is_needed():
     bare = set(unreached_functions(exempt=()))
     stale = sorted(f"{m}.{n}" for m, n in EXEMPT if f"{m}.{n}" not in bare)
     assert not stale, f"exempt but reached from an entry point: {stale}"
+
+
+# ------------------------------------------------------ per parameter
+
+#: every file whose calls count as setting an option: the package,
+#: its tests, perfbench and the root-level scripts.
+CALLER_DIRS = (PKG, "tests", "perfbench")
+
+#: defaulted parameters kept although no call sets them, as
+#: (module, function or Class.method, parameter).
+OPTION_EXEMPT: set[tuple[str, str, str]] = set()
+
+
+def _caller_files() -> list[str]:
+    files = [
+        os.path.join(REPO, f)
+        for f in os.listdir(REPO)
+        if f.endswith(".py")
+    ]
+    for d in CALLER_DIRS:
+        for dirpath, _, names in os.walk(os.path.join(REPO, d)):
+            files += [os.path.join(dirpath, f) for f in names if f.endswith(".py")]
+    return files
+
+
+def _defaulted_params():
+    """(module, qualname, callee, parameter, position) for every
+    defaulted parameter of a package function or method.
+
+    ``callee`` is the name a call uses (the class for ``__init__``);
+    ``position`` counts positional arguments after ``self``/``cls`` and
+    is None for keyword-only parameters."""
+    out = []
+    for mod, path in _package_modules().items():
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        defs = [(None, n) for n in tree.body]
+        for c in tree.body:
+            if isinstance(c, ast.ClassDef):
+                defs += [(c.name, n) for n in c.body]
+        for cls, fn in defs:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            static = any(
+                isinstance(d, ast.Name) and d.id == "staticmethod"
+                for d in fn.decorator_list
+            )
+            bound = 1 if cls is not None and not static else 0
+            qual = f"{cls}.{fn.name}" if cls else fn.name
+            callee = cls if fn.name == "__init__" else fn.name
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            for i in range(len(pos) - len(a.defaults), len(pos)):
+                out.append((mod, qual, callee, pos[i].arg, i - bound))
+            for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+                if d is not None:
+                    out.append((mod, qual, callee, arg.arg, None))
+    return out
+
+
+def unset_options(exempt=OPTION_EXEMPT) -> list[str]:
+    """Defaulted parameters that no call in the caller files sets.
+
+    Calls match by the callee's bare name, whatever its module or
+    receiver, so a same-named function elsewhere counts as a caller:
+    the check can miss an unset option but never flags a set one. A
+    call sets the parameters it names and its first positional slots;
+    ``*args`` or ``**kwargs`` count as setting everything."""
+    calls: dict[str, list[tuple[int, set[str], bool]]] = {}
+    for path in _caller_files():
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            splat = any(isinstance(a, ast.Starred) for a in n.args) or any(
+                k.arg is None for k in n.keywords
+            )
+            calls.setdefault(name, []).append(
+                (len(n.args), {k.arg for k in n.keywords}, splat)
+            )
+    return sorted(
+        f"{mod}.{qual}({arg}=)"
+        for mod, qual, callee, arg, i in _defaulted_params()
+        if (mod, qual, arg) not in exempt
+        and not any(
+            splat or arg in kws or (i is not None and npos > i)
+            for npos, kws, splat in calls.get(callee, ())
+        )
+    )
+
+
+def test_every_option_is_set_by_a_caller():
+    unset = unset_options()
+    assert not unset, (
+        "defaulted parameters no call sets (make them the constant "
+        f"they default to): {unset}"
+    )
+
+
+def test_every_option_exemption_is_needed():
+    bare = set(unset_options(exempt=()))
+    stale = sorted(
+        f"{m}.{q}({a}=)" for m, q, a in OPTION_EXEMPT if f"{m}.{q}({a}=)" not in bare
+    )
+    assert not stale, f"option exempt but set by a caller: {stale}"

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cmoncrawl_spark.datagen import register_crawl_views
+from cmoncrawl_spark.operators.bloom import optimal_params
 from cmoncrawl_spark.streaming.rounds import StateStore, run_crawl
 
 import simulator as sim
@@ -97,6 +98,21 @@ def test_resume_with_other_num_shards_raises(spark, setup):
         run_crawl(store, seeds_df, pol_df, rounds=2, num_shards=32)
     assert store.last_committed_round() == 0
     assert store.round_info(0)["num_shards"] == 8
+
+
+def test_round_blobs_are_sized_from_the_round_count(spark, setup):
+    """Each round's bloom blobs are sized for its own scheduled count,
+    ``max(1024, scheduled // num_shards)`` ids per shard, whatever the
+    fanout: a crawl-wide ``seeds * fanout^r`` estimate grows past any
+    memory at depth before round 0 runs."""
+    seeds_df, pol_df, _s, _b, _d, state_dir = setup
+    store = StateStore(spark, state_dir + "_sizing")
+    run_crawl(store, seeds_df, pol_df, rounds=2, num_shards=8, fanout=40)
+    for r in range(2):
+        scheduled = store.round_info(r)["scheduled"]
+        want = optimal_params(max(1024, scheduled // 8), 0.01)[0]
+        m_bits = {row["m_bits"] for row in store.read("bloom_shards", r).collect()}
+        assert m_bits == {want}, f"round {r}: {scheduled} scheduled"
 
 
 def test_metrics_lineage(spark, setup):

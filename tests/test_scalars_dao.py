@@ -189,11 +189,12 @@ def test_http_range_dao_retries_503_then_succeeds():
         srv.shutdown()
 
 
-def test_cli_download_html_http_dao_retries_503(spark, tmp_path, sf_dir):
+def test_cli_download_html_http_dao_retries_503(spark, tmp_path, sf_dir, warc_record):
     """`cmon download ... html --dao_base http://...` retries 5xx range
     GETs like the reference downloader (downloader.py:104-119): the
-    server answers 503 twice, then 206, and the page is written. The
-    two retries sleep 5 s and 6.5 s (the reference backoff)."""
+    server answers 503 twice, then 206, and the page inside the
+    gzipped WARC record at the range is written. The two retries sleep
+    5 s and 6.5 s (the reference backoff)."""
     from cmoncrawl_spark.cli import main
     from cmoncrawl_spark.datagen import register_crawl_views
     from cmoncrawl_spark.operators.ccindex import MatchType, index_query
@@ -202,8 +203,8 @@ def test_cli_download_html_http_dao_retries_503(spark, tmp_path, sf_dir):
     r = index_query(
         spark.table("ccindex"), ["blog.hot-domain.com"], MatchType.HOST, limit=1
     ).first()
-    end = r["warc_record_offset"] + r["warc_record_length"]
-    blob = (b"0123456789abcdef" * (end // 16 + 1))[:end]
+    record, page = warc_record(r["url"], r["warc_record_length"])
+    blob = bytes(r["warc_record_offset"]) + record
     srv, base = _serve(blob, fail_first=2)
     out = str(tmp_path / "html")
     try:
@@ -218,7 +219,23 @@ def test_cli_download_html_http_dao_retries_503(spark, tmp_path, sf_dir):
         srv.shutdown()
     (name,) = [e for e in os.listdir(out) if not e.startswith(".")]
     with open(os.path.join(out, name), encoding="utf-8") as f:
-        assert f.read() == blob[r["warc_record_offset"] :].decode()
+        assert f.read() == page.decode()
+
+
+def test_warc_payload_dao(tmp_path, warc_record):
+    """The DAO hands on the response record's page; a range with no
+    WARC record in it raises, naming the file and the offset."""
+    from cmoncrawl_spark.sources.dao import LocalFileDAO, WarcPayloadDAO
+
+    record, page = warc_record("https://a.example/", 600)
+    (tmp_path / "arc.warc.gz").write_bytes(b"junk" + record)
+    dao = WarcPayloadDAO(LocalFileDAO(str(tmp_path)))
+    assert dao.fetch("arc.warc.gz", 4, 600) == page
+    with pytest.raises(ValueError, match="arc.warc.gz at offset 0"):
+        dao.fetch("arc.warc.gz", 0, 600)
+    # a cut-off gzip member holds no record either
+    with pytest.raises(ValueError, match="arc.warc.gz at offset 4"):
+        dao.fetch("arc.warc.gz", 4, 100)
 
 
 def test_fetch_ranges_over_http(spark):
