@@ -4,15 +4,18 @@ Mirrors the reference's two commands (integrations/commands.py:44-58,
 download.py:81-128, extract.py:84-121) so a CmonCrawl user can switch:
 
   python -m cmoncrawl_spark download <output> <urls...> {record|html}
-      [--match_type ...] [--since ISO] [--to ISO] [--limit N]
-      [--max_crawls_per_file N] [--table_dir DIR] [--dao_base URL|DIR]
+      (--table_dir DIR | --cdx_server URL) [--match_type ...]
+      [--since ISO] [--to ISO] [--limit N] [--max_crawls_per_file N]
+      [--dao_base URL|DIR]
   python -m cmoncrawl_spark extract <config.json> <output> <files...>
       {record|html} [--date ISO] [--url URL] [--max_crawls_per_file N]
 
 Mappings (Spark-first, documented divergences):
-- the index "aggregator" is the cc-index TABLE (ccindex view over
-  --table_dir) queried by operators/ccindex.index_query — no gateway
-  HTTP, no Athena; the same match-type/date/limit semantics.
+- the index "aggregator" is the cc-index TABLE (the parquet directory
+  --table_dir, in the cc-index column layout) queried by
+  operators/ccindex.index_query — no Athena; the same
+  match-type/date/limit semantics. --cdx_server queries the live CDX
+  gateway instead, and one of the two is required.
 - record download emits the reference's JSONL shape
   ``{"domain_record": {...}}`` with sorted keys (streamer.py:205-212).
 - extract config JSON is the reference's ExtractConfig schema
@@ -22,8 +25,11 @@ Mappings (Spark-first, documented divergences):
   via maxRecordsPerFile — the distributed analog of the reference's
   0_file.jsonl rotation counters.
 - record extract reads html embedded in the jsonl ("html" key); with
-  --dao_base it range-fetches payloads via the HTTP/local DAO instead
-  (the reference's API/S3 download path).
+  --dao_base it range-fetches each WARC record via the HTTP/local DAO
+  instead (the reference's API/S3 download path) and extracts from
+  the response payload, decoded with its HTTP Content-Type charset.
+- a config names one route with one extractor; the reference's
+  multi-route router is not implemented, so more is refused.
 """
 
 from __future__ import annotations
@@ -54,26 +60,33 @@ def _write_jsonl(df: DataFrame, path: str, max_per_file: int) -> None:
     write_jsonl(df, path, max_file_size=max_per_file)
 
 
-def _dao_factory(base: str):
-    """Per-partition DAO constructor for ``--dao_base``: an http(s) base
-    gets range GETs retried on 5xx (reference downloader.py:104-119),
-    anything else is a local archive directory. Either way each range
-    is a WARC record, and the DAO hands on its response payload."""
+def _fetch_responses(recs: DataFrame, base: str) -> DataFrame:
+    """Range-fetch each (filename, offset, length) row from ``--dao_base``
+    and parse the WARC record there into ``html`` + ``content_type``.
+    An http(s) base gets range GETs retried on 5xx (reference
+    downloader.py:104-119); anything else is a local archive
+    directory."""
     from cmoncrawl_spark.sources.dao import (
         HTTPRangeDAO,
         LocalFileDAO,
         RetryingDAO,
-        WarcPayloadDAO,
+        fetch_ranges,
+        warc_responses,
     )
 
-    if "://" in base:
-        return lambda: WarcPayloadDAO(RetryingDAO(HTTPRangeDAO(base)))
-    return lambda: WarcPayloadDAO(LocalFileDAO(base))
+    factory = (
+        (lambda: RetryingDAO(HTTPRangeDAO(base)))
+        if "://" in base
+        else (lambda: LocalFileDAO(base))
+    )
+    return warc_responses(fetch_ranges(recs, factory))
 
 
 def load_config(path: str) -> dict:
     """Reference ExtractConfig loader (extract.py:176-184): validates
-    the minimal shape instead of pydantic."""
+    the minimal shape instead of pydantic. ``run_extract`` applies one
+    extractor to every row, so a second route or a second extractor is
+    refused rather than silently ignored."""
     with open(path) as f:
         cfg = json.load(f)
     if "routes" not in cfg or not isinstance(cfg["routes"], list):
@@ -81,6 +94,17 @@ def load_config(path: str) -> dict:
     for r in cfg["routes"]:
         if "regexes" not in r or "extractors" not in r:
             raise ValueError("each route needs regexes + extractors")
+    if len(cfg["routes"]) != 1:
+        raise ValueError(
+            f"{path}: one route is supported, got {len(cfg['routes'])}; "
+            f"extra: {cfg['routes'][1:]}"
+        )
+    extractors = cfg["routes"][0]["extractors"]
+    if len(extractors) != 1:
+        raise ValueError(
+            f"{path}: one extractor per route is supported, got "
+            f"{len(extractors)}; extra: {extractors[1:]}"
+        )
     return cfg
 
 
@@ -127,12 +151,10 @@ def run_download(args: argparse.Namespace) -> None:
         if args.limit:
             recs = recs.orderBy("url", "warc_record_offset").limit(args.limit)
     else:
-        from cmoncrawl_spark.datagen import register_crawl_views
         from cmoncrawl_spark.operators.ccindex import MatchType, index_query
 
-        register_crawl_views(spark, args.table_dir)
         recs = index_query(
-            spark.table("ccindex"),
+            spark.read.parquet(args.table_dir),
             args.urls,
             MatchType(args.match_type),
             since=since,
@@ -155,22 +177,19 @@ def run_download(args: argparse.Namespace) -> None:
         )
         out = recs.select(dr.alias("domain_record"))
         _write_jsonl(out, args.output, args.max_crawls_per_file)
-    else:  # html: range-fetch payloads through the DAO
+    else:  # html: range-fetch each WARC record, write its page
         from cmoncrawl_spark.sinks.jsonl import write_html_files
-        from cmoncrawl_spark.sources.dao import fetch_ranges
 
-        fetched = fetch_ranges(
+        fetched = _fetch_responses(
             recs.select(
                 "url",
                 F.col("warc_filename").alias("filename"),
                 F.col("warc_record_offset").alias("offset"),
                 F.col("warc_record_length").alias("length"),
             ),
-            _dao_factory(args.dao_base or "https://data.commoncrawl.org"),
+            args.dao_base or "https://data.commoncrawl.org",
         )
-        write_html_files(
-            fetched.select("url", F.col("content").alias("html")), args.output
-        )
+        write_html_files(fetched.select("url", "html"), args.output)
     print(f"wrote {args.output}")
 
 
@@ -210,10 +229,12 @@ def run_crawl(args: argparse.Namespace) -> None:
         .withColumn("depth", F.lit(0))
         .withColumn("priority", F.lit(1.0))
     )
-    if args.seen_dir:
-        seen = spark.read.parquet(args.seen_dir).select("url_id")
-    else:
-        seen = spark.createDataFrame([], "url_id string")
+    # no --seen_dir: a first crawl, with provably no history
+    seen = (
+        spark.read.parquet(args.seen_dir).select("url_id")
+        if args.seen_dir
+        else None
+    )
     hosts = frontier.select(
         host_of(F.col("url")).alias("host")
     ).distinct()
@@ -261,8 +282,7 @@ def run_extract(args: argparse.Namespace) -> None:
     spark = _spark("cmon-extract")
     extractors_path = cfg.get("extractors_path", ".")
 
-    # first route whose regex list matches wins (router semantics);
-    # CLI v1 applies the first configured extractor of that route.
+    # load_config admits exactly one route with one extractor
     route0 = cfg["routes"][0]
     name = route0["extractors"][0]["name"]
     extractor = import_extractor(extractors_path, name)
@@ -280,8 +300,6 @@ def run_extract(args: argparse.Namespace) -> None:
         )
         raw = spark.read.schema(schema).json(args.files)
         if args.dao_base:
-            from cmoncrawl_spark.sources.dao import fetch_ranges
-
             flat = raw.select(
                 F.col("domain_record.url").alias("url"),
                 F.col("domain_record.filename").alias("filename"),
@@ -289,9 +307,7 @@ def run_extract(args: argparse.Namespace) -> None:
                 F.col("domain_record.length").alias("length"),
                 F.col("domain_record.encoding").alias("record_encoding"),
             )
-            df = fetch_ranges(
-                flat, _dao_factory(args.dao_base)
-            ).withColumnRenamed("content", "html")
+            df = _fetch_responses(flat, args.dao_base)
         else:
             df = raw.where(
                 F.col("html").isNotNull() & (F.col("html") != "")
@@ -320,7 +336,9 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--verbosity", "-v", type=int, choices=[0, 1, 2], default=1)
     sub = p.add_subparsers(dest="command", required=True)
 
-    d = sub.add_parser("download", help="Query the cc-index table")
+    d = sub.add_parser(
+        "download", help="Query the cc-index table or the CDX gateway"
+    )
     d.add_argument("output")
     d.add_argument("urls", nargs="+")
     d.add_argument("mode", choices=["record", "html"])
@@ -335,7 +353,8 @@ def build_parser() -> argparse.ArgumentParser:
     d.add_argument("--max_crawls_per_file", type=int, default=500_000)
     d.add_argument(
         "--table_dir",
-        default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"),
+        help="parquet directory of the cc-index table; required "
+        "without --cdx_server",
     )
     d.add_argument("--dao_base", default=None)
     d.add_argument(
@@ -384,7 +403,10 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def main(argv: list[str] | None = None) -> None:
-    args = build_parser().parse_args(argv)
+    parser = build_parser()
+    args = parser.parse_args(argv)
+    if args.command == "download" and not (args.cdx_server or args.table_dir):
+        parser.error("download needs --table_dir or --cdx_server")
     args.func(args)
 
 

@@ -24,7 +24,7 @@ amortized over vectorized I/O.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Callable
 
 import pandas as pd
@@ -82,7 +82,6 @@ class PageMeta:
     record_encoding: str | None = None
     content_type: str | None = None
     encoding: str = "latin-1"
-    extra: dict[str, Any] = field(default_factory=dict)
 
 
 class SparkExtractor:
@@ -205,14 +204,6 @@ class ConfigExtractor(SparkExtractor):
         return domain_prefix_allowed(url_col, self.allowed_domain_prefixes)
 
     def filter_dom(self, dom: H.Node, meta: PageMeta) -> bool:
-        # F10 parity path for non-Spark callers (extract_one): same
-        # first-label check the reference runs (extractor.py:313-318).
-        if self.allowed_domain_prefixes is not None and meta.url:
-            from urllib.parse import urlsplit
-
-            netloc = urlsplit(meta.url).netloc
-            if netloc.split(".")[0] not in self.allowed_domain_prefixes:
-                return False
         for sel in self.must_exist:
             if not H.select(dom, sel):
                 return False
@@ -268,7 +259,10 @@ def apply_extractor(
 
     Output = passthrough columns + the extractor's declared schema.
     Rows the extractor drops (None) are filtered — the reference's
-    ``None => dropped`` contract (extractor.py:24).
+    ``None => dropped`` contract (extractor.py:24). A ``content_type``
+    input column (the HTTP header of a fetched WARC response) reaches
+    each row's ``PageMeta.content_type``, so its charset takes part in
+    the encoding cascade.
     """
     passthrough = passthrough or []
     if url_col and url_col in df.columns:
@@ -282,7 +276,7 @@ def apply_extractor(
     # without it every input column, including the full document text,
     # crosses JVM->Python per row).
     needed: list[str] = list(passthrough)
-    for c in (html_col, record_encoding_col, url_col):
+    for c in (html_col, record_encoding_col, url_col, "content_type"):
         if c and c in df.columns and c not in needed:
             needed.append(c)
     df = df.select(*needed)
@@ -314,13 +308,18 @@ def apply_extractor(
                 if record_encoding_col and record_encoding_col in pdf
                 else [None] * n
             )
+            ctypes = (
+                pdf["content_type"].tolist() if "content_type" in pdf else [None] * n
+            )
             pt_cols = [pdf[c].tolist() for c in passthrough]
             rows: list[list] = []
             for i in range(n):
                 raw = htmls[i]
                 if raw is None:
                     continue
-                meta = PageMeta(url=urls[i], record_encoding=encs[i])
+                meta = PageMeta(
+                    url=urls[i], record_encoding=encs[i], content_type=ctypes[i]
+                )
                 res = extractor.extract_one(bytes(raw), meta)
                 if res is None:
                     continue

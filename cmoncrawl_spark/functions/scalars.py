@@ -61,9 +61,9 @@ def portable_hash64(s: Column) -> Column:
 
     Equals DuckDB's ``md5_number_lower(s)`` bit-for-bit (as uint64),
     which makes hash-based operators (simhash bit votes, rolling
-    fingerprints) ORACLE-ABLE: both engines produce identical values.
-    xxhash64 stays the production default (one JVM intrinsic vs md5 +
-    string conv here); this is the differential-testing twin.
+    fingerprints) ORACLE-ABLE: both engines produce identical values,
+    so those operators hash with it (md5 + string conversion, where
+    xxhash64 would be one JVM intrinsic).
     """
     hexs = F.md5(s)
     # reverse the 8 byte-pairs of hex chars 17..32 (little-endian).

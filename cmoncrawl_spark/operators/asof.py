@@ -13,8 +13,9 @@ union + ordered carry-forward trick:
 
 Cost: ONE shuffle on the key (the window), no join at all — survives
 any key skew a range join would die on, and AQE-coalesces like any
-window. Ties among right rows at the same ts are broken by ``seq``
-(latest wins) so output is deterministic and oracle-able.
+window. Ties among right rows at the same ts are broken by the
+caller's ``right_seq`` column (max wins), so output is deterministic
+and oracle-able.
 """
 
 from __future__ import annotations
@@ -29,30 +30,22 @@ def asof_join(
     key: str,
     ts: str,
     value_cols: list[str],
-    right_seq: str | None = None,
+    right_seq: str,
 ) -> DataFrame:
     """left + {value_col}_asof columns from the as-of right row.
 
     left:  key, ts, ... (all columns preserved)
-    right: key, ts, value_cols (+ optional right_seq tie-breaker —
-           among right rows sharing (key, ts), the max seq wins)
-
-    Without ``right_seq`` the tie-break defaults to xxhash64 of the
-    value columns — a pure function of row CONTENT, so repeated runs
-    agree at any partition layout (the repo's total-order doctrine;
-    ``monotonically_increasing_id`` would be layout-dependent).
+    right: key, ts, value_cols, right_seq — among right rows sharing
+           (key, ts), the max ``right_seq`` wins. A unique column keeps
+           the result a function of row content at any partition
+           layout (the repo's total-order doctrine).
     """
     lcols = left.columns
-    seq = (
-        F.col(right_seq)
-        if right_seq is not None
-        else F.xxhash64(*[F.col(c) for c in value_cols])
-    )
     r = right.select(
         F.col(key),
         F.col(ts),
         F.lit(0).alias("_side"),  # right sorts first at equal ts (<=)
-        seq.cast("long").alias("_seq"),
+        F.col(right_seq).cast("long").alias("_seq"),
         *[F.col(c).alias(f"{c}_asof") for c in value_cols],
     )
     l = left.select(

@@ -62,6 +62,9 @@ _SEED2 = 0x9E3779B1  # second-hash seed (golden-ratio prime)
 #: the shard choice every blob row records: 1 = pmod(h1 >>> 32, n).
 SHARD_SCHEME = 1
 
+#: the false-positive rate every blob is designed for.
+FPP = 0.01
+
 BLOOM_SHARD_SCHEMA = StructType(
     [
         StructField("shard_id", IntegerType()),
@@ -142,17 +145,16 @@ def build_shards(
     seen_ids: DataFrame,
     expected_per_shard: int,
     num_shards: int = 32,
-    fpp: float = 0.01,
 ) -> DataFrame:
     """Build bloom shards from a DataFrame of seen canonical ids
     (``url_id``).
 
     One shuffle (groupBy shard) of (shard, h1, h2) only, then an Arrow
     UDF turns each shard's hash columns into one bloom blob row. Every
-    blob is sized for ``expected_per_shard`` ids at ``fpp``; the crawl
+    blob is sized for ``expected_per_shard`` ids at ``FPP``; the crawl
     passes its round's own count, so each round's blobs fit that round.
     """
-    m, k = optimal_params(expected_per_shard, fpp)
+    m, k = optimal_params(expected_per_shard, FPP)
 
     def _build(tbl: pa.Table) -> pa.Table:
         bits = np.zeros(m // 8, dtype=np.uint8)

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cmoncrawl_spark.functions.scalars import portable_hash64
+
 # Mersenne prime universe. 31-bit so (a * h') + b stays < 2^63 under
 # ANSI mode (Spark 4 default): a,b,h' < 2^31 => a*h' < 2^62.
 _P = (1 << 31) - 1
@@ -495,16 +497,15 @@ def connected_components(
     return labels
 
 
-def simhash(docs: DataFrame, token_hash_fn=None) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """64-bit SimHash of each (doc_id, text): JVM-side token hashing,
     numpy bit-vote UDF.
 
     The only Python is one vectorized Arrow batch op (unpack bits of
     the token-hash matrix, sign of the column sums).
 
-    ``token_hash_fn`` defaults to xxhash64 (production); pass
-    ``functions.scalars.portable_hash64`` for the oracle-able variant —
-    DuckDB then reproduces the exact bit votes from md5_number_lower.
+    Tokens hash with ``functions.scalars.portable_hash64``, so DuckDB
+    reproduces the exact bit votes from md5_number_lower.
     """
     import numpy as np
     import pandas as pd
@@ -530,12 +531,9 @@ def simhash(docs: DataFrame, token_hash_fn=None) -> DataFrame:
             out.append(int(val.astype(np.int64)))  # two's-complement to long
         return pd.Series(out)
 
-    if token_hash_fn is None:
-        token_hash_fn = F.xxhash64
     _simhash = pandas_udf(_simhash_fn, "long")
     tokens_hashed = F.transform(
-        F.array_distinct(F.split(F.col("text"), " ")),
-        lambda w: token_hash_fn(w),
+        F.array_distinct(F.split(F.col("text"), " ")), portable_hash64
     )
     return docs.select("doc_id", _simhash(tokens_hashed).alias("simhash64"))
 
@@ -544,7 +542,6 @@ def simhash_near_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
     blocks: int = 4,
-    token_hash_fn=None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming.
 
@@ -555,7 +552,7 @@ def simhash_near_pairs(
     (recall 1 by pigeonhole) — which makes it oracle-able.
     """
     width = 64 // blocks
-    sh = simhash(docs, token_hash_fn=token_hash_fn)
+    sh = simhash(docs)
     mask = (1 << width) - 1
     block_structs = [
         F.struct(

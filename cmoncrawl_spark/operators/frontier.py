@@ -77,12 +77,10 @@ def with_host(df: DataFrame, domain_politeness: bool = False) -> DataFrame:
     return out
 
 
-def canonicalize(frontier: DataFrame, domain_politeness: bool = False) -> DataFrame:
-    """Attach url_id (D1 canonical id) + host (see :func:`with_host`)."""
-    return with_host(
-        frontier.withColumn("url_id", unify_url_id_col(F.col("url"))),
-        domain_politeness,
-    )
+def canonicalize(frontier: DataFrame) -> DataFrame:
+    """Attach url_id (D1 canonical id) + the hostname politeness key
+    ``host`` (see :func:`with_host`)."""
+    return with_host(frontier.withColumn("url_id", unify_url_id_col(F.col("url"))))
 
 
 def dedupe_intra_batch(candidates: DataFrame) -> DataFrame:

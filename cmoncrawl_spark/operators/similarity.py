@@ -108,17 +108,17 @@ def cosine_topk(
     return _topk_ranked(e.select("vec_id", sim.alias("sim")), k)
 
 
-def cosine_dup_pairs(
-    vecs: DataFrame,
-    threshold: float = 0.99,
-    max_bucket_size: int = 200,
-) -> DataFrame:
+#: bucket size over which cosine_dup_pairs switches to star expansion.
+COSINE_MAX_BUCKET = 200
+
+
+def cosine_dup_pairs(vecs: DataFrame, threshold: float = 0.99) -> DataFrame:
     """Near-dup pairs (a < b) with exact cosine >= threshold, found via
     12-bit sign-LSH buckets. For thresholds near 1 the sign signature of the
     two vectors is (near-)identical, so bucket-equality recall is ~1;
     the exact verify inside buckets removes all false candidates.
 
-    Degenerate-bucket guard: buckets over ``max_bucket_size`` (mass-
+    Degenerate-bucket guard: buckets over ``COSINE_MAX_BUCKET`` (mass-
     duplicated embeddings — common for boilerplate pages) switch to
     star expansion via dedup._bounded_bucket_pairs, bounding candidates
     at O(m) per bucket while keeping duplicate-cluster connectivity;
@@ -133,7 +133,7 @@ def cosine_dup_pairs(
         F.col("embedding").cast("array<double>").alias("v"),
     ).withColumn("bucket", sign_bucket(F.col("v"), planes))
     cand = _bounded_bucket_pairs(
-        keyed.select("id", "bucket"), ["bucket"], max_bucket_size
+        keyed.select("id", "bucket"), ["bucket"], COSINE_MAX_BUCKET
     )
     va = keyed.select(F.col("id").alias("a"), F.col("v").alias("va"))
     vb = keyed.select(F.col("id").alias("b"), F.col("v").alias("vb"))
@@ -149,39 +149,20 @@ def cosine_dup_pairs(
 def ivf_build(
     vecs: DataFrame,
     n_lists: int = 16,
-    iters: int = 5,
     seed: int = 11,
 ) -> tuple[DataFrame, list[list[float]]]:
-    """IVF index: deterministic Lloyd's k-means over DataFrames.
-
-    Centroid init is seeded-deterministic (LCG), every iteration is one
-    broadcast-join + groupBy job (centroids stay driver-side — they're
-    n_lists x dim floats, trivially broadcastable at any corpus size).
-    Returns (assignments DataFrame [id, list_id], centroids).
-    """
+    """IVF index over seeded centroids: ``n_lists`` deterministic LCG
+    vectors (no training pass), and every vector assigned to its
+    nearest centroid by one native expression argmin. The only job is
+    the one-row read of the dimension; the assignments stay lazy. The
+    centroids are literals both engines share, so the search path is
+    oracle-checked bit-for-bit.
+    Returns (assignments DataFrame [id, list_id], centroids)."""
     dim = len(vecs.select("embedding").first()[0])
     cents = hyperplanes(dim, n_lists, seed)  # reuse the seeded generator
     e = vecs.select(
         F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v")
-    ).localCheckpoint(eager=True)
-    for _ in range(iters):
-        assigned = _assign(e, cents)
-        rows = (
-            assigned.groupBy("list_id")
-            .agg(
-                F.array(
-                    *[
-                        F.avg(F.element_at("v", i + 1)).alias(f"c{i}")
-                        for i in range(dim)
-                    ]
-                ).alias("centroid"),
-            )
-            .collect()
-        )
-        new = list(cents)
-        for r in rows:
-            new[r["list_id"]] = [float(x) for x in r["centroid"]]
-        cents = new
+    )
     return _assign(e, cents).select("id", "list_id"), cents
 
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cmoncrawl_spark.functions.scalars import portable_hash64
+
 #: tiny per-language stopword profiles (n-gram heuristic): enough to
 #: separate the languages the corpus declares; swap for fastText at
 #: production (binary models aren't in this container).
@@ -91,20 +93,17 @@ def quality_signals(df: DataFrame) -> DataFrame:
     )
 
 
-def rolling_fingerprint(text_col: Column, hash_fn=None) -> Column:
+def rolling_fingerprint(text_col: Column) -> Column:
     """Document fingerprint: min of the hashes of every 8-token window
     (winnowing lite) — robust to local edits, native exprs only.
 
-    ``hash_fn`` defaults to xxhash64 (JVM intrinsic — production);
-    pass ``functions.scalars.portable_hash64`` for the oracle-able
-    variant DuckDB reproduces bit-for-bit (md5_number_lower)."""
-    if hash_fn is None:
-        hash_fn = F.xxhash64
+    Windows hash with ``functions.scalars.portable_hash64``, which
+    DuckDB reproduces bit-for-bit (md5_number_lower)."""
     window = 8
     toks = tokens(text_col)
     n = F.size(toks)
     idx = F.sequence(F.lit(1), F.greatest(n - F.lit(window - 1), F.lit(1)))
     win_hashes = F.transform(
-        idx, lambda i: hash_fn(F.concat_ws(" ", F.slice(toks, i, window)))
+        idx, lambda i: portable_hash64(F.concat_ws(" ", F.slice(toks, i, window)))
     )
     return F.array_min(win_hashes)

@@ -221,29 +221,21 @@ def q_dedup_clusters(spark, sf_dir):
 
 
 def q_simhash(spark, sf_dir):
-    """64-bit SimHash per doc, computed with the engine-portable token
-    hash (md5_number_lower twin) so the DuckDB oracle reproduces the
-    exact bit votes. Production default stays xxhash64 (pytest pins
-    that the two hash choices detect the same near-dup pairs)."""
-    from cmoncrawl_spark.functions.scalars import portable_hash64
+    """64-bit SimHash per doc. Tokens hash with ``portable_hash64``
+    (the md5_number_lower twin), so the DuckDB oracle reproduces the
+    exact bit votes."""
     from cmoncrawl_spark.operators.dedup import simhash
 
-    return simhash(_docs2(spark, sf_dir), token_hash_fn=portable_hash64)
+    return simhash(_docs2(spark, sf_dir))
 
 
 def q_simhash_pairs(spark, sf_dir):
     """SimHash near-dup pairs (hamming <= 3 via 4-block pigeonhole —
     EXACT by pigeonhole, so the O(n^2) DuckDB hamming oracle must
     match bit-for-bit; portable token hash)."""
-    from cmoncrawl_spark.functions.scalars import portable_hash64
     from cmoncrawl_spark.operators.dedup import simhash_near_pairs
 
-    return simhash_near_pairs(
-        _docs2(spark, sf_dir),
-        max_hamming=3,
-        blocks=4,
-        token_hash_fn=portable_hash64,
-    )
+    return simhash_near_pairs(_docs2(spark, sf_dir), max_hamming=3, blocks=4)
 
 
 def q_ngram_jaccard(spark, sf_dir):
@@ -659,16 +651,10 @@ def q_lang_id(spark, sf_dir):
 def q_rolling_fingerprint(spark, sf_dir):
     """Winnowing-lite rolling-hash fingerprint with the portable hash
     (oracle-able: DuckDB reproduces every window hash bit-for-bit)."""
-    from cmoncrawl_spark.functions.scalars import portable_hash64
     from cmoncrawl_spark.operators.textstats import rolling_fingerprint
 
     docs = _documents_floor(spark, sf_dir)
-    return docs.select(
-        "doc_id",
-        rolling_fingerprint(F.col("text"), hash_fn=portable_hash64).alias(
-            "fp64"
-        ),
-    )
+    return docs.select("doc_id", rolling_fingerprint(F.col("text")).alias("fp64"))
 
 
 def q_image_features(spark, sf_dir):
@@ -1022,19 +1008,15 @@ IVF_SEED = 11
 
 
 def q_ivf_topk(spark, sf_dir):
-    """IVF ANN search path, fully oracle-checked: assignments from the
-    SEEDED centroids (iters=0 — deterministic literals both engines
-    share), n_probe=2 list pruning, exact cosine rerank. The Lloyd
-    TRAINING iterations stay pytest-pinned (tests/test_ivf.py):
-    cross-engine float averaging isn't portably reproducible, but the
-    search operator — the scale-critical part — is."""
+    """IVF ANN search path, fully oracle-checked: assignments to the
+    SEEDED centroids (deterministic literals both engines share; the
+    index has no training pass), n_probe=2 list pruning, exact cosine
+    rerank."""
     from cmoncrawl_spark.operators.similarity import ivf_build, ivf_topk
 
     load_tables(spark, sf_dir, ("embeddings",))
     emb = spark.table("embeddings")
-    assignments, cents = ivf_build(
-        emb, n_lists=IVF_LISTS, iters=0, seed=IVF_SEED
-    )
+    assignments, cents = ivf_build(emb, n_lists=IVF_LISTS, seed=IVF_SEED)
     qv = [float(x) for x in emb.where("vec_id = 0").first()["embedding"]]
     return ivf_topk(emb, qv, cents, assignments, k=10, n_probe=2).select(
         "vec_id", "rank"

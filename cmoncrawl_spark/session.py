@@ -131,14 +131,11 @@ def scan_parallel_floor(spark: SparkSession, df, src_path: str, key_col: str):
     return df.repartition(cores, key_col)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Register the driver's parquet tables as temp views; returns dict of DFs."""
-    all_names = (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split()
+def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...]):
+    """Register the named parquet tables of ``sf_dir`` as temp views;
+    returns dict of DFs."""
     dfs = {}
-    for name in names or all_names:
+    for name in names:
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
         df.createOrReplaceTempView(name)
         dfs[name] = df

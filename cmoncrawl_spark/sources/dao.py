@@ -15,24 +15,27 @@ batch of (filename, offset, length) resolves through a DAO instance
 created per-partition (connection reuse), never on the driver.
 
 ``LocalFileDAO`` reads local archives; ``HTTPRangeDAO`` issues range
-GETs through stdlib urllib. ``WarcPayloadDAO`` wraps either and hands
-on the page inside the fetched WARC record instead of the record.
+GETs through stdlib urllib. Either hands on the raw range;
+:func:`warc_responses` turns each fetched WARC record into its page
+and HTTP ``Content-Type``.
 """
 
 from __future__ import annotations
 
 import os
 import time
-import zlib
 from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import BinaryType, StructField, StructType
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
-from cmoncrawl_spark.sources.warc import parse_warc_bytes
+from cmoncrawl_spark.sources.warc import response_of
 
 RETRYABLE_HTTP = {500, 502, 503, 504}
+
+#: retries after the first attempt, for range GETs and CDX requests.
+MAX_RETRY = 3
 
 
 class LocalFileDAO:
@@ -50,19 +53,18 @@ class LocalFileDAO:
 def call_with_retry(
     call: Callable[[], bytes],
     retryable: Callable[[Exception], bool],
-    max_retry: int = 3,
     sleep: Callable[[float], object] = time.sleep,
 ) -> bytes:
-    """T2 — run ``call`` up to ``max_retry + 1`` times, sleeping after
+    """T2 — run ``call`` up to ``MAX_RETRY + 1`` times, sleeping after
     each retryable error as the reference's wait_random_exponential(
     multiplier=5, exp_base=1.3, max=120) does (helpers.py:109-184),
     without the jitter. The last error is re-raised."""
     sleep_base, max_sleep = 1.3, 120.0
-    for attempt in range(max_retry + 1):
+    for attempt in range(MAX_RETRY + 1):
         try:
             return call()
         except Exception as e:  # noqa: BLE001 - gate below
-            if attempt == max_retry or not retryable(e):
+            if attempt == MAX_RETRY or not retryable(e):
                 raise
             sleep(min(5 * sleep_base**attempt, max_sleep))
     raise AssertionError("unreachable")
@@ -73,9 +75,8 @@ class RetryingDAO:
     retrying every ``OSError`` (``HTTPRangeDAO`` raises one for HTTP
     500/502/503/504; connection errors are ``OSError`` too)."""
 
-    def __init__(self, inner, max_retry: int = 3, _sleep=time.sleep) -> None:
+    def __init__(self, inner, _sleep=time.sleep) -> None:
         self.inner = inner
-        self.max_retry = max_retry
         self._sleep = _sleep
         self.attempts = 0
 
@@ -85,10 +86,7 @@ class RetryingDAO:
             return self.inner.fetch(filename, offset, length)
 
         return call_with_retry(
-            attempt,
-            lambda e: isinstance(e, OSError),
-            self.max_retry,
-            self._sleep,
+            attempt, lambda e: isinstance(e, OSError), self._sleep
         )
 
 
@@ -141,30 +139,6 @@ class HTTPRangeDAO:
         return data
 
 
-class WarcPayloadDAO:
-    """A DAO that hands on the payload of the WARC ``response`` record
-    in each fetched range (plain or gzipped), not the raw record: an
-    index row's (filename, offset, length) points at one such record,
-    as the reference's downloader reads it with warcio
-    (downloader.py:124-240). A range that holds no response record
-    raises ``ValueError`` naming the file and the offset."""
-
-    def __init__(self, inner) -> None:
-        self.inner = inner
-
-    def fetch(self, filename: str, offset: int, length: int) -> bytes:
-        data = self.inner.fetch(filename, offset, length)
-        where = f"{filename} at offset {offset}"
-        try:
-            records = parse_warc_bytes(data)
-        except (OSError, EOFError, zlib.error) as e:  # a corrupt gzip member
-            raise ValueError(f"no WARC record in {where}: {e}") from e
-        for rec in records:
-            if rec["rec_type"] == "response":
-                return rec["content"]
-        raise ValueError(f"no WARC response record in {where}")
-
-
 def fetch_ranges(
     records: DataFrame, dao_factory: Callable[[], object]
 ) -> DataFrame:
@@ -189,3 +163,31 @@ def fetch_ranges(
             yield res
 
     return records.mapInPandas(run, out_schema)
+
+
+def warc_responses(fetched: DataFrame) -> DataFrame:
+    """:func:`fetch_ranges` output with each range's ``content``
+    replaced by the WARC ``response`` record inside it: ``html`` (the
+    payload) and ``content_type`` (its HTTP header, null when absent),
+    from one parse per row in one Arrow stage. A range with no response
+    record fails the job with a ``ValueError`` naming the file and the
+    offset."""
+    keep = [f for f in fetched.schema.fields if f.name != "content"]
+    out_schema = StructType(
+        keep
+        + [StructField("html", BinaryType()), StructField("content_type", StringType())]
+    )
+    names = [f.name for f in keep]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            parsed = [
+                response_of(bytes(c), f"{f} at offset {o}")
+                for c, f, o in zip(pdf["content"], pdf["filename"], pdf["offset"])
+            ]
+            res = pdf[names].copy()
+            res["html"] = [page for page, _ in parsed]
+            res["content_type"] = [ctype for _, ctype in parsed]
+            yield res
+
+    return fetched.mapInPandas(run, out_schema)

@@ -47,10 +47,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cmoncrawl_spark.sources.dao import (
+    MAX_RETRY,
     RETRYABLE_HTTP,
     call_with_retry,
     stdlib_http_client,
 )
+
+#: task counts of ``cdx_records``' probe stage (at most one task per
+#: seed URL) and page-fetch stage.
+PROBE_PARTITIONS = 32
+PAGE_PARTITIONS = 64
 
 CDX_RECORD_SCHEMA = (
     "url string, filename string, offset bigint, length bigint, "
@@ -88,7 +94,6 @@ class CDXGateway:
         cdx_server: str,
         client: Callable[[str, dict], tuple[int, bytes]] | None = None,
         max_requests_per_second: float = 20.0,
-        max_retry: int = 3,
         _sleep=time.sleep,
     ) -> None:
         self.cdx_server = cdx_server
@@ -102,7 +107,6 @@ class CDXGateway:
         self.min_interval = (
             1.0 / max_requests_per_second if max_requests_per_second else 0.0
         )
-        self.max_retry = max_retry
         self._sleep = _sleep
         self._last = 0.0
 
@@ -123,15 +127,13 @@ class CDXGateway:
             return body
 
         try:
-            return call_with_retry(
-                attempt, _retryable, self.max_retry, self._sleep
-            )
+            return call_with_retry(attempt, _retryable, self._sleep)
         except GatewayHTTPError as e:
             if not _retryable(e):
                 raise
             raise GatewayHTTPError(
                 e.status,
-                f"{e}: retries exhausted after {self.max_retry + 1} attempts",
+                f"{e}: retries exhausted after {MAX_RETRY + 1} attempts",
             ) from e
 
     def num_pages(self, url: str, match_type: str | None = None) -> int:
@@ -206,8 +208,6 @@ def cdx_records(
     to: str | None = None,
     client_factory: Callable[[], Callable] | None = None,
     max_requests_per_second: float = 20.0,
-    partitions: int | None = None,
-    probe_partitions: int | None = None,
 ) -> DataFrame:
     """Distributed CDX index fetch -> DataFrame of domain records.
 
@@ -216,16 +216,18 @@ def cdx_records(
     (gateway_query.py:315-332):
 
     1. probe stage: ``showNumPages`` per seed URL, fanned across
-       ``probe_partitions`` tasks (a driver-side loop at 20 rps would
-       serialize ~83 min of HTTP for a 10^5-URL seed list);
+       ``min(len(urls), PROBE_PARTITIONS)`` tasks (a driver-side loop
+       at 20 rps would serialize ~83 min of HTTP for a 10^5-URL seed
+       list);
     2. page expansion: ``explode(sequence(...))`` JVM-side;
-    3. fetch stage: ndjson page fetches across ``partitions`` tasks.
+    3. fetch stage: ndjson page fetches across ``PAGE_PARTITIONS``
+       tasks.
 
     Per-URL degrade matches the reference (gateway_query.py:297-312):
     404 probes count as 0 pages; any other probe failure logs a
     warning and skips that URL instead of aborting the whole fetch.
     ``max_requests_per_second`` is enforced PER TASK — size it to
-    global_target / min(partitions, executor slots).
+    global_target / min(PAGE_PARTITIONS, executor slots).
 
     The plan is lazy: re-running an action re-fetches. Persist the
     result (or write it to a table) before multi-action use.
@@ -239,7 +241,7 @@ def cdx_records(
         )
     seeds = spark.createDataFrame(
         [(u,) for u in urls], "query_url string"
-    ).repartition(probe_partitions or min(len(urls), 32))
+    ).repartition(min(len(urls), PROBE_PARTITIONS))
 
     def probe_stage(
         batches: Iterator[pd.DataFrame],
@@ -274,7 +276,7 @@ def cdx_records(
             F.sequence(F.lit(0), F.col("num_pages") - 1)
         ).alias("page"),
     )
-    pages = pages.repartition(partitions or 64, "query_url", "page")
+    pages = pages.repartition(PAGE_PARTITIONS, "query_url", "page")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         gw = CDXGateway(

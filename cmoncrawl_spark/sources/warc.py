@@ -14,13 +14,16 @@ deterministic WARC/1.0-1.1 reader supporting:
 ``BASELINE.json``'s input already carries html as a column, so this
 reader exists for reference parity: ``q_warc_roundtrip`` serializes
 pages with :func:`write_warc_bytes` and parses them back with
-:func:`parse_warc_bytes` inside one Arrow stage.
+:func:`parse_warc_bytes` inside one Arrow stage, and the CLI's
+``--dao_base`` paths read each fetched range's page and HTTP
+``Content-Type`` with :func:`response_of`.
 """
 
 from __future__ import annotations
 
 import gzip
 import io
+import zlib
 
 
 def _maybe_decompress(data: bytes) -> bytes:
@@ -31,7 +34,7 @@ def _maybe_decompress(data: bytes) -> bytes:
     return data
 
 
-def parse_warc_bytes(data: bytes, source: str = "") -> list[dict]:
+def parse_warc_bytes(data: bytes) -> list[dict]:
     """Parse one WARC archive's bytes into record dicts."""
     data = _maybe_decompress(data)
     records = []
@@ -79,7 +82,6 @@ def parse_warc_bytes(data: bytes, source: str = "") -> list[dict]:
                     ).strip()
         records.append(
             {
-                "source_file": source,
                 "record_idx": idx,
                 "rec_type": headers.get("WARC-Type", ""),
                 "url": headers.get("WARC-Target-URI"),
@@ -92,6 +94,27 @@ def parse_warc_bytes(data: bytes, source: str = "") -> list[dict]:
         idx += 1
         pos = head_end + 4 + length
     return records
+
+
+def response_of(data: bytes, where: str) -> tuple[bytes, str | None]:
+    """The payload of the WARC ``response`` record in ``data`` (one
+    index row's byte range, plain or gzipped, as the reference's
+    downloader reads it with warcio, downloader.py:124-240) and its
+    HTTP ``Content-Type``, matched case-insensitively (None when the
+    header is absent). A range that holds no response record raises
+    ``ValueError`` naming ``where``."""
+    try:
+        records = parse_warc_bytes(data)
+    except (OSError, EOFError, zlib.error) as e:  # a corrupt gzip member
+        raise ValueError(f"no WARC record in {where}: {e}") from e
+    for rec in records:
+        if rec["rec_type"] == "response":
+            ctype = next(
+                (v for k, v in rec["http_header"].items() if k.lower() == "content-type"),
+                None,
+            )
+            return rec["content"], ctype
+    raise ValueError(f"no WARC response record in {where}")
 
 
 def write_warc_bytes(records: list[dict]) -> bytes:

@@ -25,6 +25,19 @@ def sf_dir() -> str:
 
 
 @pytest.fixture(scope="session")
+def ccindex_dir(spark, sf_dir, tmp_path_factory) -> str:
+    """The synthetic ``ccindex`` view over ``sf_dir`` written as a
+    parquet directory: a cc-index table ``cmon download --table_dir``
+    reads."""
+    from cmoncrawl_spark.datagen import register_crawl_views
+
+    register_crawl_views(spark, sf_dir)
+    path = str(tmp_path_factory.mktemp("ccindex") / "table")
+    spark.table("ccindex").write.parquet(path)
+    return path
+
+
+@pytest.fixture(scope="session")
 def warc_record():
     """Factory ``(url, length) -> (record, page)``: one gzipped WARC
     ``response`` record of exactly ``length`` bytes, as an index row's

@@ -93,13 +93,16 @@ def test_cli_extract_record_mode(spark, plugin_cfg, tmp_path):
     assert GOLDEN_TITLE in titles
 
 
-def test_cli_download_record_mode(spark, tmp_path, sf_dir):
+def test_cli_download_record_mode(spark, tmp_path, ccindex_dir):
     out = str(tmp_path / "out_dl")
+    # the index is a table or the live gateway: one must be named
+    with pytest.raises(SystemExit):
+        main(["download", out, "hot-domain.com", "record"])
     main(
         [
             "download", out, "hot-domain.com", "record",
             "--match_type", "domain", "--limit", "7",
-            "--table_dir", sf_dir,
+            "--table_dir", ccindex_dir,
         ]
     )
     rows = _read_jsonl_dir(out)
@@ -132,16 +135,14 @@ def _stage_archives(base, rows, warc_record) -> dict[str, bytes]:
     return pages
 
 
-def test_cli_download_html_mode_local_dao(spark, tmp_path, sf_dir, warc_record):
+def test_cli_download_html_mode_local_dao(spark, tmp_path, ccindex_dir, warc_record):
     """html download through the LocalFileDAO: each index row's range
     holds a gzipped WARC record, and the page inside it is what gets
     written, not the record."""
-    from cmoncrawl_spark.datagen import register_crawl_views
     from cmoncrawl_spark.operators.ccindex import MatchType, index_query
 
-    register_crawl_views(spark, sf_dir)
     rows = index_query(
-        spark.table("ccindex"), ["blog.hot-domain.com"], MatchType.HOST
+        spark.read.parquet(ccindex_dir), ["blog.hot-domain.com"], MatchType.HOST
     ).collect()
     base = tmp_path / "archives"
     pages = _stage_archives(base, rows, warc_record)
@@ -150,7 +151,7 @@ def test_cli_download_html_mode_local_dao(spark, tmp_path, sf_dir, warc_record):
         [
             "download", out, "blog.hot-domain.com", "html",
             "--match_type", "host", "--limit", "3",
-            "--table_dir", sf_dir, "--dao_base", str(base),
+            "--table_dir", ccindex_dir, "--dao_base", str(base),
         ]
     )
     # one html FILE per record (url-mangled name.html), written
@@ -202,6 +203,68 @@ def test_cli_extract_record_mode_dao_base(spark, plugin_cfg, tmp_path, warc_reco
     rows = _read_jsonl_dir(out)
     assert [r["title"] for r in rows] == [f"<title>{url}</title>"]
     assert rows[0]["url"] == url
+
+
+def test_cli_extract_record_mode_dao_base_http_charset(spark, plugin_cfg, tmp_path):
+    """The charset of the WARC response's HTTP Content-Type (header
+    name in any case) decodes the page when the domain record names no
+    encoding, as the reference's cascade does (extractor.py:100-103):
+    title bytes c3 a9 served as iso-8859-1 are 'Ã©', not utf-8 'é'."""
+    import gzip
+
+    from cmoncrawl_spark.sources.warc import write_warc_bytes
+
+    url = "https://latin.example.com/a"
+    page = b"<html><head><title>\xc3\xa9</title></head><body>x</body></html>"
+    http = {"http_response_code": "200", "content-type": "text/html; charset=iso-8859-1"}
+    record = gzip.compress(
+        write_warc_bytes([{"url": url, "http_header": http, "content": page}]), mtime=0
+    )
+    base = tmp_path / "archives"
+    base.mkdir()
+    (base / "a.warc.gz").write_bytes(record)
+    records = tmp_path / "records.jsonl"
+    records.write_text(
+        json.dumps(
+            {
+                "domain_record": {
+                    "url": url,
+                    "filename": "a.warc.gz",
+                    "offset": 0,
+                    "length": len(record),
+                }
+            }
+        )
+        + "\n"
+    )
+    out = str(tmp_path / "out_charset")
+    main(["extract", plugin_cfg, out, str(records), "record", "--dao_base", str(base)])
+    assert [r["title"] for r in _read_jsonl_dir(out)] == ["<title>\u00c3\u00a9</title>"]
+
+
+def test_cli_extract_refuses_second_route_or_extractor(tmp_path):
+    """The CLI applies one extractor to every row, so a config with a
+    second route, or a route with a second extractor, is refused with
+    the extra entries named instead of being silently ignored."""
+    two_routes = {
+        "routes": [
+            {"regexes": [".*news.*"], "extractors": [{"name": "title_raw"}]},
+            {"regexes": [".*"], "extractors": [{"name": "catch_all"}]},
+        ]
+    }
+    two_extractors = {
+        "routes": [
+            {
+                "regexes": [".*"],
+                "extractors": [{"name": "title_raw"}, {"name": "second_one"}],
+            }
+        ]
+    }
+    for cfg, extra in ((two_routes, "catch_all"), (two_extractors, "second_one")):
+        path = tmp_path / "cfg.json"
+        path.write_text(json.dumps(cfg))
+        with pytest.raises(ValueError, match=extra):
+            main(["extract", str(path), str(tmp_path / "out"), "x.html", "html"])
 
 
 def test_cli_crawl_composed_pipeline_end_to_end(spark, tmp_path):

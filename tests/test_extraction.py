@@ -174,14 +174,14 @@ def test_check_required_semantics():
 
 
 def test_allowed_domain_prefixes_both_paths(spark):
-    """F10: native prefilter and the extract_one parity path agree
-    (reference extractor.py:313-318 splits the raw netloc)."""
+    """F10: the native Column predicate and apply_extractor's
+    prefilter keep the same rows (reference extractor.py:313-318
+    splits the raw netloc)."""
     from pyspark.sql import functions as F
 
     from cmoncrawl_spark.extraction.extractor import (
         ConfigExtractor,
         CssField,
-        PageMeta,
         apply_extractor,
         domain_prefix_allowed,
     )
@@ -212,12 +212,6 @@ def test_allowed_domain_prefixes_both_paths(spark):
     # Spark path: prefilter hoisted before the UDF
     out = apply_extractor(df, ex, passthrough=["url"])
     assert {r["url"] for r in out.collect()} == got
-    # non-Spark parity path: filter_dom via meta.url
-    for u in urls:
-        res = ex.extract_one(
-            b"<html><head><title>t</title></head></html>", PageMeta(url=u)
-        )
-        assert (res is not None) == (u in got)
 
 
 def test_css_attribute_selectors():

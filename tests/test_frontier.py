@@ -14,6 +14,7 @@ from cmoncrawl_spark.operators.frontier import (
     dedupe_intra_batch,
     per_host_topk,
     scheduling_round,
+    with_host,
 )
 
 
@@ -76,9 +77,9 @@ def test_slim_probe_positive_ids_supersets_seen(spark, sf_dir):
 
 def test_bloom_realized_fpr_within_twice_design(spark):
     """At 32 shards the realized false-positive rate stays within 2x
-    the designed fpp. Choosing the shard from the low bits of h1, which
+    the designed ``FPP``. Choosing the shard from the low bits of h1, which
     also drive the bit positions, read ~7% here against a 1% design."""
-    n_shards, per_shard, fpp = 32, 2000, 0.01
+    n_shards, per_shard, fpp = 32, 2000, bloom_ops.FPP
     n = n_shards * per_shard
     ids = spark.range(2 * n).select(
         "id",
@@ -88,7 +89,7 @@ def test_bloom_realized_fpr_within_twice_design(spark):
     seen = ids.where(F.col("id") % 2 == 0).select("url_id")
     unseen = ids.where(F.col("id") % 2 == 1).select("url_id")
     shards = bloom_ops.build_shards(
-        seen, num_shards=n_shards, expected_per_shard=per_shard, fpp=fpp
+        seen, num_shards=n_shards, expected_per_shard=per_shard
     ).localCheckpoint()
     assert bloom_ops.probe_positive_ids(seen, shards, num_shards=n_shards).count() == n
     false_pos = bloom_ops.probe_positive_ids(unseen, shards, num_shards=n_shards).count()
@@ -251,7 +252,7 @@ def test_round_without_budgets_schedules_nothing(spark, sf_dir):
 
 
 def test_domain_politeness_canonicalize_edge_hosts(spark, sf_dir):
-    """canonicalize(domain_politeness=True) keys every row by its
+    """with_host(domain_politeness=True) keys every row by its
     registered domain (eTLD+1) and keeps the edge rows: a host that
     IS a public suffix keeps its raw host key, and a malformed URL
     survives with a NULL host."""
@@ -265,7 +266,7 @@ def test_domain_politeness_canonicalize_edge_hosts(spark, sf_dir):
             "url string, depth int, priority double",
         )
     )
-    out = canonicalize(frontier, domain_politeness=True).collect()
+    out = with_host(frontier, domain_politeness=True).collect()
     assert len(out) == frontier.count()
     hosts = {r["url"]: r["host"] for r in out}
     assert hosts["https://co.uk/path"] == "co.uk"       # suffix keeps host

@@ -168,11 +168,8 @@ def test_cdx_gateway_retries_exhausted_message(spark):
 
     srv, base = _serve_status(503)
     try:
-        gw = CDXGateway(
-            base, max_requests_per_second=0, max_retry=2,
-            _sleep=lambda s: None,
-        )
-        with pytest.raises(OSError, match="retries exhausted"):
+        gw = CDXGateway(base, max_requests_per_second=0, _sleep=lambda s: None)
+        with pytest.raises(OSError, match="retries exhausted after 4 attempts"):
             gw.num_pages("example.com")
     finally:
         srv.shutdown()
@@ -292,8 +289,6 @@ def test_cdx_probes_run_on_executors(spark, tmp_path):
         urls,
         client_factory=factory,
         max_requests_per_second=0,
-        probe_partitions=8,
-        partitions=8,
     )
     got = {r["url"] for r in df.collect()}
     assert got == {f"https://site{i:03d}.example/x" for i in range(110)}

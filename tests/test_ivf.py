@@ -12,7 +12,7 @@ def test_ivf_build_and_search(spark, sf_dir):
 
     load_tables(spark, sf_dir, ("embeddings",))
     emb = spark.table("embeddings")
-    assignments, cents = ivf_build(emb, n_lists=8, iters=3)
+    assignments, cents = ivf_build(emb, n_lists=8)
     a = assignments.localCheckpoint(eager=True)
 
     # every vector assigned exactly one list; lists non-degenerate
@@ -32,8 +32,8 @@ def test_ivf_deterministic(spark, sf_dir):
 
     load_tables(spark, sf_dir, ("embeddings",))
     emb = spark.table("embeddings")
-    a1, c1 = ivf_build(emb, n_lists=4, iters=2)
-    a2, c2 = ivf_build(emb.repartition(5), n_lists=4, iters=2)
+    a1, c1 = ivf_build(emb, n_lists=4)
+    a2, c2 = ivf_build(emb.repartition(5), n_lists=4)
     assert c1 == c2
     s1 = sorted((r["id"], r["list_id"]) for r in a1.collect())
     s2 = sorted((r["id"], r["list_id"]) for r in a2.collect())

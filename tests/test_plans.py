@@ -166,7 +166,7 @@ def test_ivf_list_partitioned_storage_prunes(spark, sf_dir, tmp_path):
 
     load_tables(spark, sf_dir, ("embeddings",))
     emb = spark.table("embeddings")
-    assignments, cents = ivf_build(emb, n_lists=4, iters=1)
+    assignments, cents = ivf_build(emb, n_lists=4)
     path = str(tmp_path / "ivf_pq")
     emb.join(
         assignments.withColumnRenamed("id", "vec_id"), "vec_id"

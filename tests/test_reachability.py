@@ -1,19 +1,24 @@
-"""Every package module, and every top-level function and class in
-it, is reached from an engine entry point.
+"""Every package module, every top-level function and class in it,
+and every option of its functions is reached from the engine.
 
 The entry points are the ``cmon`` CLI (``cli.py``, ``__main__.py``),
 the query registry (``queries.py``, driven by ``__spark_entry__.py``)
 and the crawl driver (``streaming/rounds.py``, whose ``run_crawl`` the
-benchmarks call). Imports are followed statically with ``ast``,
-including imports inside functions, so a module only a test imports
-shows up as unreached. Per function, name references are followed
-from the entry modules' code (annotations do not count), so a helper
-only a test calls shows up too; ``EXEMPT`` lists the few kept anyway.
+benchmarks call). Tests are not callers: code only a test reaches is
+wired in or deleted, unless it is listed as a test seam with its
+reason.
+
+Imports are followed statically with ``ast``, including imports
+inside functions, so a module only a test imports shows up as
+unreached. Per function, name references are followed from the entry
+modules' code (annotations do not count), so a helper only a test
+calls shows up too; ``EXEMPT`` lists the few kept anyway.
 
 Per parameter, every defaulted parameter of a package function or
-method must be set by some call in the package, its tests, perfbench
-or the root-level scripts; one that no call sets is the constant it
-defaults to and should be written as one.
+method must be set by some call in the package, perfbench or the
+root-level scripts; one that only tests set, or no call at all, is
+the constant it defaults to and should be written as one.
+``OPTION_EXEMPT`` names the test seams kept anyway.
 """
 
 from __future__ import annotations
@@ -258,12 +263,36 @@ def test_every_exemption_is_needed():
 # ------------------------------------------------------ per parameter
 
 #: every file whose calls count as setting an option: the package,
-#: its tests, perfbench and the root-level scripts.
-CALLER_DIRS = (PKG, "tests", "perfbench")
+#: perfbench and the root-level scripts. Tests are not callers.
+CALLER_DIRS = (PKG, "perfbench")
 
-#: defaulted parameters kept although no call sets them, as
-#: (module, function or Class.method, parameter).
-OPTION_EXEMPT: set[tuple[str, str, str]] = set()
+#: test seams: defaulted parameters only tests set, as
+#: (module, function or Class.method, parameter) -> why they stay.
+OPTION_EXEMPT: dict[tuple[str, str, str], str] = {
+    (f"{PKG}.cli", "main", "argv"): "the CLI tests run in-process",
+    (f"{PKG}.operators.dedup", "connected_components", "driver_max_edges"): (
+        "the engine picks the distributed path by graph size; tests force "
+        "it on small graphs"
+    ),
+    (f"{PKG}.operators.dedup", "connected_components", "max_iters"): (
+        "tests reach the non-convergence error"
+    ),
+    (f"{PKG}.operators.dedup", "lsh_candidate_pairs", "max_bucket_size"): (
+        "a test compares capped and uncapped candidates"
+    ),
+    (f"{PKG}.sources.dao", "RetryingDAO.__init__", "_sleep"): "a fake clock",
+    (f"{PKG}.sources.gateway", "CDXGateway.__init__", "_sleep"): "a fake clock",
+    (f"{PKG}.sources.gateway", "cdx_records", "client_factory"): (
+        "a fake transport: there is no network"
+    ),
+    (f"{PKG}.functions.psl", "registered_domain_py", "rules"): (
+        "the Python oracle is checked against custom rule files"
+    ),
+    (f"{PKG}.extraction.extractor", "ConfigExtractor.__init__", "must_not_exist"): (
+        "the reference's F9 filter, part of the plugin API the CLI's "
+        "extractor modules use"
+    ),
+}
 
 
 def _caller_files() -> list[str]:
@@ -356,6 +385,7 @@ def test_every_option_is_set_by_a_caller():
 
 
 def test_every_option_exemption_is_needed():
+    assert all(OPTION_EXEMPT.values()), "every test seam states its reason"
     bare = set(unset_options(exempt=()))
     stale = sorted(
         f"{m}.{q}({a}=)" for m, q, a in OPTION_EXEMPT if f"{m}.{q}({a}=)" not in bare

@@ -181,7 +181,7 @@ def test_mini_warc_matches_reference_goldens():
     engine's WARC parser."""
     from cmoncrawl_spark.sources.warc import parse_warc_bytes
 
-    recs = parse_warc_bytes(open(MINI_WARC, "rb").read(), "mini")
+    recs = parse_warc_bytes(open(MINI_WARC, "rb").read())
     assert len(recs) == 3
     assert recs[0]["rec_type"] == "warcinfo"
     assert recs[2]["rec_type"] == "response"

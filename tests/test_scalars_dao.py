@@ -86,15 +86,15 @@ def test_retrying_dao_backoff():
             return b"ok"
 
     sleeps = []
-    dao = RetryingDAO(Flaky(2), max_retry=3, _sleep=sleeps.append)
+    dao = RetryingDAO(Flaky(2), _sleep=sleeps.append)
     assert dao.fetch("f", 0, 1) == b"ok"
     assert dao.attempts == 3
     assert sleeps == [5.0, 6.5]  # 5 * 1.3^0, 5 * 1.3^1
 
-    dao2 = RetryingDAO(Flaky(10), max_retry=2, _sleep=lambda s: None)
+    dao2 = RetryingDAO(Flaky(10), _sleep=lambda s: None)
     with pytest.raises(OSError):
         dao2.fetch("f", 0, 1)
-    assert dao2.attempts == 3
+    assert dao2.attempts == 4  # MAX_RETRY = 3 retries after the first
 
 
 def test_fetch_ranges_spark(spark, tmp_path):
@@ -180,28 +180,25 @@ def test_http_range_dao_retries_503_then_succeeds():
     blob = b"retry-me-" * 100
     srv, base = _serve(blob, fail_first=2)
     try:
-        dao = RetryingDAO(
-            HTTPRangeDAO(base), max_retry=3, _sleep=lambda s: None
-        )
+        dao = RetryingDAO(HTTPRangeDAO(base), _sleep=lambda s: None)
         assert dao.fetch("f", 9, 8) == blob[9:17]
         assert dao.attempts == 3  # 2 x 503 + 1 success
     finally:
         srv.shutdown()
 
 
-def test_cli_download_html_http_dao_retries_503(spark, tmp_path, sf_dir, warc_record):
+def test_cli_download_html_http_dao_retries_503(spark, tmp_path, ccindex_dir, warc_record):
     """`cmon download ... html --dao_base http://...` retries 5xx range
     GETs like the reference downloader (downloader.py:104-119): the
     server answers 503 twice, then 206, and the page inside the
     gzipped WARC record at the range is written. The two retries sleep
     5 s and 6.5 s (the reference backoff)."""
     from cmoncrawl_spark.cli import main
-    from cmoncrawl_spark.datagen import register_crawl_views
     from cmoncrawl_spark.operators.ccindex import MatchType, index_query
 
-    register_crawl_views(spark, sf_dir)
     r = index_query(
-        spark.table("ccindex"), ["blog.hot-domain.com"], MatchType.HOST, limit=1
+        spark.read.parquet(ccindex_dir), ["blog.hot-domain.com"], MatchType.HOST,
+        limit=1,
     ).first()
     record, page = warc_record(r["url"], r["warc_record_length"])
     blob = bytes(r["warc_record_offset"]) + record
@@ -212,7 +209,7 @@ def test_cli_download_html_http_dao_retries_503(spark, tmp_path, sf_dir, warc_re
             [
                 "download", out, "blog.hot-domain.com", "html",
                 "--match_type", "host", "--limit", "1",
-                "--table_dir", sf_dir, "--dao_base", base,
+                "--table_dir", ccindex_dir, "--dao_base", base,
             ]
         )
     finally:
@@ -222,20 +219,45 @@ def test_cli_download_html_http_dao_retries_503(spark, tmp_path, sf_dir, warc_re
         assert f.read() == page.decode()
 
 
-def test_warc_payload_dao(tmp_path, warc_record):
-    """The DAO hands on the response record's page; a range with no
-    WARC record in it raises, naming the file and the offset."""
-    from cmoncrawl_spark.sources.dao import LocalFileDAO, WarcPayloadDAO
+def test_warc_payload_dao(spark, tmp_path, warc_record):
+    """One parse of each fetched range gives the response record's page
+    and its HTTP Content-Type (null when absent); a range with no WARC
+    record in it raises, naming the file and the offset."""
+    import gzip
+
+    from cmoncrawl_spark.sources.dao import LocalFileDAO, fetch_ranges, warc_responses
+    from cmoncrawl_spark.sources.warc import response_of, write_warc_bytes
 
     record, page = warc_record("https://a.example/", 600)
-    (tmp_path / "arc.warc.gz").write_bytes(b"junk" + record)
-    dao = WarcPayloadDAO(LocalFileDAO(str(tmp_path)))
-    assert dao.fetch("arc.warc.gz", 4, 600) == page
-    with pytest.raises(ValueError, match="arc.warc.gz at offset 0"):
-        dao.fetch("arc.warc.gz", 0, 600)
+    bare = gzip.compress(
+        write_warc_bytes(
+            [{"url": "https://b.example/", "http_header": {}, "content": b"<p>b</p>"}]
+        ),
+        mtime=0,
+    )
+    (tmp_path / "arc.warc.gz").write_bytes(b"junk" + record + bare)
+    recs = spark.createDataFrame(
+        [("arc.warc.gz", 4, 600), ("arc.warc.gz", 604, len(bare))],
+        "filename string, offset long, length long",
+    )
+    base = str(tmp_path)
+    got = warc_responses(fetch_ranges(recs, lambda: LocalFileDAO(base))).collect()
+    assert sorted((r["offset"], bytes(r["html"]), r["content_type"]) for r in got) == [
+        (4, page, "text/html"),
+        (604, b"<p>b</p>", None),
+    ]
+    assert "content" not in got[0].asDict()
+
     # a cut-off gzip member holds no record either
+    data = (tmp_path / "arc.warc.gz").read_bytes()
     with pytest.raises(ValueError, match="arc.warc.gz at offset 4"):
-        dao.fetch("arc.warc.gz", 4, 100)
+        response_of(data[4:104], "arc.warc.gz at offset 4")
+    # in a Spark job the error names the range it came from
+    junk = spark.createDataFrame(
+        [("arc.warc.gz", 0, 600)], "filename string, offset long, length long"
+    )
+    with pytest.raises(Exception, match="arc.warc.gz at offset 0"):
+        warc_responses(fetch_ranges(junk, lambda: LocalFileDAO(base))).collect()
 
 
 def test_fetch_ranges_over_http(spark):

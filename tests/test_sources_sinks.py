@@ -43,7 +43,7 @@ def test_warc_roundtrip_plain(tmp_path):
 
     path = _fixture_warc(tmp_path, gz=False)
     with open(path, "rb") as f:
-        rows = parse_warc_bytes(f.read(), path)
+        rows = parse_warc_bytes(f.read())
     assert [r["record_idx"] for r in rows] == [0, 1, 2]
     assert [r["rec_type"] for r in rows] == ["warcinfo", "request", "response"]
     resp = rows[2]
@@ -57,7 +57,7 @@ def test_warc_roundtrip_gzip(tmp_path):
 
     path = _fixture_warc(tmp_path, gz=True)
     with open(path, "rb") as f:
-        rows = parse_warc_bytes(f.read(), path)
+        rows = parse_warc_bytes(f.read())
     assert [r["rec_type"] for r in rows] == ["warcinfo", "request", "response"]
     assert rows[2]["content"] == b"<html><title>W</title></html>"
 
