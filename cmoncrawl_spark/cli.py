@@ -8,7 +8,13 @@ download.py:81-128, extract.py:84-121) so a CmonCrawl user can switch:
       [--since ISO] [--to ISO] [--limit N] [--max_crawls_per_file N]
       [--dao_base URL|DIR]
   python -m cmoncrawl_spark extract <config.json> <output> <files...>
-      {record|html} [--date ISO] [--url URL] [--max_crawls_per_file N]
+      {record|html} [--url URL] [--max_crawls_per_file N] [--dao_base URL|DIR]
+  python -m cmoncrawl_spark crawl <output> <urls...> --cdx_server URL
+      [--budget N] [--crawl_delay S] [--domain_politeness] [--seen_dir DIR]
+      [--max_requests_per_second R] [--max_crawls_per_file N]
+
+  ``--verbosity/-v {0,1,2}`` before the command sets the
+  ``cmoncrawl_spark`` log level: WARNING, INFO (default) or DEBUG.
 
 Mappings (Spark-first, documented divergences):
 - the index "aggregator" is the cc-index TABLE (the parquet directory
@@ -29,7 +35,8 @@ Mappings (Spark-first, documented divergences):
   instead (the reference's API/S3 download path) and extracts from
   the response payload, decoded with its HTTP Content-Type charset.
 - a config names one route with one extractor; the reference's
-  multi-route router is not implemented, so more is refused.
+  multi-route router is not implemented, so more is refused. With one
+  route nothing routes by date, so extract has no ``--date``.
 """
 
 from __future__ import annotations
@@ -37,6 +44,7 @@ from __future__ import annotations
 import argparse
 import importlib.util
 import json
+import logging
 import os
 from datetime import datetime
 
@@ -394,7 +402,6 @@ def build_parser() -> argparse.ArgumentParser:
     e.add_argument("output")
     e.add_argument("files", nargs="+")
     e.add_argument("mode", choices=["record", "html"])
-    e.add_argument("--date", default=None)
     e.add_argument("--url", default=None)
     e.add_argument("--max_crawls_per_file", type=int, default=500_000)
     e.add_argument("--dao_base", default=None)
@@ -402,9 +409,15 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
+#: ``--verbosity`` -> level of the ``cmoncrawl_spark`` logger.
+_LOG_LEVELS = (logging.WARNING, logging.INFO, logging.DEBUG)
+
+
 def main(argv: list[str] | None = None) -> None:
     parser = build_parser()
     args = parser.parse_args(argv)
+    logging.basicConfig()
+    logging.getLogger("cmoncrawl_spark").setLevel(_LOG_LEVELS[args.verbosity])
     if args.command == "download" and not (args.cdx_server or args.table_dir):
         parser.error("download needs --table_dir or --cdx_server")
     args.func(args)

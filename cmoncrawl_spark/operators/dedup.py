@@ -239,8 +239,12 @@ def jaccard(a_hashes: Column, b_hashes: Column) -> Column:
     return inter / union
 
 
-def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
-    """LSH candidates verified with EXACT Jaccard >= threshold.
+#: exact Jaccard a MinHash candidate pair needs to count as a near-dup.
+MINHASH_THRESHOLD = 0.6
+
+
+def minhash_dedup_pairs(docs: DataFrame) -> DataFrame:
+    """LSH candidates verified with EXACT Jaccard >= ``MINHASH_THRESHOLD``.
 
     Output (a, b, jac) — with bands/rows generous for the threshold,
     recall is deterministic-complete on well-separated corpora, and
@@ -271,7 +275,7 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
         cand.join(hashed.withColumnRenamed("id", "a").withColumnRenamed("hashes", "ha"), "a")
         .join(hashed.withColumnRenamed("id", "b").withColumnRenamed("hashes", "hb"), "b")
         .withColumn("jac", jaccard(F.col("ha"), F.col("hb")))
-        .where(F.col("jac") >= threshold)
+        .where(F.col("jac") >= MINHASH_THRESHOLD)
         .select("a", "b", (F.round(F.col("jac") * 1000)).cast("long").alias("jac_milli"))
     )
 
@@ -538,20 +542,23 @@ def simhash(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", _simhash(tokens_hashed).alias("simhash64"))
 
 
-def simhash_near_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    blocks: int = 4,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance <= max_hamming.
+#: SimHash near-dup distance, and the chunks the 64-bit hash splits
+#: into for the pigeonhole self-join; SIMHASH_MAX_HAMMING < SIMHASH_BLOCKS.
+SIMHASH_MAX_HAMMING = 3
+SIMHASH_BLOCKS = 4
 
-    Pigeonhole blocking: split the 64-bit hash into ``blocks`` chunks;
-    any pair within distance < blocks shares at least one exact chunk,
-    so the self-join keys on (block_idx, chunk) — no O(n^2). For
-    max_hamming < blocks the result is EXACTLY the all-pairs answer
-    (recall 1 by pigeonhole) — which makes it oracle-able.
+
+def simhash_near_pairs(docs: DataFrame) -> DataFrame:
+    """Near-dup pairs by SimHash Hamming distance <= ``SIMHASH_MAX_HAMMING``.
+
+    Pigeonhole blocking: split the 64-bit hash into ``SIMHASH_BLOCKS``
+    chunks; any pair within distance < ``SIMHASH_BLOCKS`` shares at
+    least one exact chunk, so the self-join keys on (block_idx, chunk)
+    — no O(n^2). As ``SIMHASH_MAX_HAMMING`` < ``SIMHASH_BLOCKS``, the
+    result is EXACTLY the all-pairs answer (recall 1 by pigeonhole) —
+    which makes it oracle-able.
     """
-    width = 64 // blocks
+    width = 64 // SIMHASH_BLOCKS
     sh = simhash(docs)
     mask = (1 << width) - 1
     block_structs = [
@@ -561,7 +568,7 @@ def simhash_near_pairs(
             .bitwiseAND(F.lit(mask))
             .alias("chunk"),
         )
-        for i in range(blocks)
+        for i in range(SIMHASH_BLOCKS)
     ]
     chunks = sh.select(
         F.col("doc_id").alias("id"),
@@ -582,7 +589,7 @@ def simhash_near_pairs(
             & (F.col("l.chunk") == F.col("r.chunk"))
             & (F.col("l.id") < F.col("r.id")),
         )
-        .where(ham <= max_hamming)
+        .where(ham <= SIMHASH_MAX_HAMMING)
         .select(
             F.col("l.id").alias("a"),
             F.col("r.id").alias("b"),

@@ -188,9 +188,14 @@ def audio_features(media: DataFrame) -> DataFrame:
     ).mapInPandas(run, AUDIO_FEATURE_SCHEMA)
 
 
-def synth_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic synthetic media table for tests."""
-    return spark.range(n).select(
+#: rows of the synthetic media table.
+SYNTH_MEDIA_ROWS = 64
+
+
+def synth_media(spark) -> DataFrame:
+    """Deterministic synthetic media table: ``SYNTH_MEDIA_ROWS`` rows
+    cycling image, audio and video."""
+    return spark.range(SYNTH_MEDIA_ROWS).select(
         F.col("id").alias("media_id"),
         F.when(F.col("id") % 3 == 0, "image")
         .when(F.col("id") % 3 == 1, "audio")

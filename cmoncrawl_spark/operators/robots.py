@@ -8,7 +8,8 @@ this is a north_rule addition, implemented REP-style (RFC 9309):
   native expressions: split lines, strip comments, parse
   ``field: value`` pairs, track the active user-agent group (the line
   number of the nearest preceding ``User-agent:`` header chain), keep
-  the group matching ``agent`` (exact, else ``*``).
+  the groups whose chain names ``*``, the only agent the engine
+  crawls as.
 - :func:`host_policies_from_robots` — per-host policy row:
   crawl_delay (first in the winning group) + robots_disallow_all
   (a ``Disallow: /`` with no overriding ``Allow``).
@@ -33,16 +34,25 @@ from pyspark.sql import functions as F
 #: with no policy row in ``frontier.fetch_schedule``.
 DEFAULT_CRAWL_DELAY_S = 1.0
 
+#: a URL's raw path as ``java.net.URI`` (Spark's ``parse_url``) reads a
+#: hierarchical URL: after the scheme and the ``//`` authority, up to
+#: ``?`` or ``#``. A URL ``parse_url`` rejects (a space, say) keeps the
+#: text after its netloc instead of failing the job under ANSI mode.
+_PATH_RE = r"^(?:[A-Za-z][A-Za-z0-9+.\-]*:)?(?://[^/?#]*)?([^?#]*)"
+#: a scheme followed by no ``/``: an opaque URI, which has no path.
+_OPAQUE_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*:[^/]"
+
 
 def _lines(robots_col: Column) -> Column:
     # normalize CRLF, split; comments stripped per-line later.
     return F.split(F.regexp_replace(robots_col, "\r\n", "\n"), "\n")
 
 
-def parse_robots(df: DataFrame, agent: str = "*") -> DataFrame:
-    """(host, robots_txt) -> (host, rule, path, line_no), rules of the group
-    that applies to ``agent`` (exact-match group if present, else the
-    ``*`` group — RFC 9309 §2.2.1 'most specific user-agent').
+def parse_robots(df: DataFrame) -> DataFrame:
+    """(host, robots_txt) -> (host, rule, path, line_no), rules of the
+    group(s) whose ``User-agent`` chain names ``*``. The engine crawls
+    as ``*``, which no named agent's group matches (RFC 9309 §2.2.1),
+    so those groups are dropped.
 
     rule ∈ {'allow', 'disallow', 'crawl-delay'}; for crawl-delay,
     ``path`` holds the numeric value as a string.
@@ -79,17 +89,7 @@ def parse_robots(df: DataFrame, agent: str = "*") -> DataFrame:
         .agg(F.collect_set(F.lower(F.col("value"))).alias("agents"))
     )
     rules = grouped.where(~is_ua).join(agents, ["host", "group_id"])
-
-    mine = F.array_contains(F.col("agents"), agent.lower())
-    star = F.array_contains(F.col("agents"), "*")
-    scored = rules.where(mine | star).withColumn(
-        "_pref", F.when(mine, 2).otherwise(1)
-    )
-    # keep only the most specific agent's group(s) per host
-    best = scored.withColumn(
-        "_maxpref", F.max("_pref").over(Window.partitionBy("host"))
-    ).where(F.col("_pref") == F.col("_maxpref"))
-    return best.select(
+    return rules.where(F.array_contains(F.col("agents"), "*")).select(
         "host",
         F.col("field").alias("rule"),
         F.col("value").alias("path"),
@@ -148,8 +148,10 @@ def urls_allowed(urls: DataFrame, rules: DataFrame) -> DataFrame:
     — expand the join then groupBy every url column — shuffled the
     whole frontier on a wide key; this one is shuffle-free.)
     """
-    path = F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit("/"))
-    u = urls.withColumn("_path", F.when(path == "", "/").otherwise(path))
+    url = F.col("url")
+    path = F.regexp_extract(url, _PATH_RE, 1)
+    no_path = url.isNull() | url.rlike(_OPAQUE_RE) | (path == "")
+    u = urls.withColumn("_path", F.when(no_path, "/").otherwise(path))
     per_host = (
         rules.where(F.col("rule").isin("allow", "disallow"))
         .where(F.col("path") != "")  # 'Disallow:' empty = allow all

@@ -8,9 +8,9 @@
   hyperplanes, bucket = sign-bit string, exact cosine verify within
   buckets. The O(n^2) pair space collapses to one groupBy(bucket).
 - :func:`ann_topk` — LSH-bucketed approximate nearest neighbors: probe
-  only the query's bucket (+ optional multi-probe), exact rerank
-  inside. The 100 TB path: buckets are the partition key; a query
-  touches one partition instead of the corpus.
+  only the query's bucket, exact rerank inside. The 100 TB path:
+  buckets are the partition key; a query touches one partition
+  instead of the corpus.
 
 No Python in any hot path — hyperplane dots are native expressions
 generated from literal arrays (the hyperplanes are tiny: dim x bits).
@@ -21,12 +21,25 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: seed of every generated hyperplane and centroid.
+SEED = 11
+#: rows every top-k search returns.
+TOP_K = 10
+#: exact cosine a pair needs to count as a near-duplicate embedding.
+COSINE_DUP_THRESHOLD = 0.99
+#: IVF lists (seeded centroids) and how many of them a search scans.
+IVF_LISTS = 8
+IVF_PROBES = 2
+#: sign bits of the ANN bucket key.
+ANN_BITS = 8
 
-def _lcg_floats(n: int, seed: int = 11) -> list[float]:
-    """Deterministic pseudo-normal floats via a seeded LCG (sum of 4
-    uniforms, centered) — no RNG state, reproducible everywhere."""
+
+def _lcg_floats(n: int) -> list[float]:
+    """Deterministic pseudo-normal floats via an LCG seeded with
+    ``SEED`` (sum of 4 uniforms, centered) — no RNG state,
+    reproducible everywhere."""
     out = []
-    x = seed
+    x = SEED
     for _ in range(n):
         acc = 0.0
         for _ in range(4):
@@ -36,8 +49,8 @@ def _lcg_floats(n: int, seed: int = 11) -> list[float]:
     return out
 
 
-def hyperplanes(dim: int, bits: int, seed: int = 11) -> list[list[float]]:
-    flat = _lcg_floats(dim * bits, seed)
+def hyperplanes(dim: int, bits: int) -> list[list[float]]:
+    flat = _lcg_floats(dim * bits)
     return [flat[i * dim : (i + 1) * dim] for i in range(bits)]
 
 
@@ -79,44 +92,41 @@ def _sign_bucket_py(vec: list[float], planes: list[list[float]]) -> str:
     return "".join(out)
 
 
-def _topk_ranked(sims: DataFrame, k: int) -> DataFrame:
-    """Scale-safe top-k + rank over a (vec_id, sim) DataFrame.
+def _topk_ranked(sims: DataFrame) -> DataFrame:
+    """Scale-safe top-``TOP_K`` + rank over a (vec_id, sim) DataFrame.
 
-    ``orderBy(...).limit(k)`` compiles to TakeOrderedAndProject —
-    per-partition k-row heaps merged on the driver, NO single-reducer
+    ``orderBy(...).limit(TOP_K)`` compiles to TakeOrderedAndProject —
+    per-partition heaps merged on the driver, NO single-reducer
     global sort (the round-1 Window.orderBy plan shuffled the whole
-    corpus into one partition). The rank window then sees only the k
+    corpus into one partition). The rank window then sees only the
     survivors; the two-key (sim desc, id asc) order preserves the
     deterministic tie-break, so output rows and ranks are identical.
     """
-    top = sims.orderBy(F.col("sim").desc(), F.col("vec_id").asc()).limit(k)
+    top = sims.orderBy(F.col("sim").desc(), F.col("vec_id").asc()).limit(TOP_K)
     return top.withColumn(
         "rank",
         F.row_number().over(Window.orderBy(F.col("sim").desc(), F.col("vec_id"))),
     )
 
 
-def cosine_topk(
-    vecs: DataFrame,
-    query_vec: Column,
-    k: int = 10,
-) -> DataFrame:
+def cosine_topk(vecs: DataFrame, query_vec: Column) -> DataFrame:
     e = vecs.select(
         F.col("vec_id"), F.col("embedding").cast("array<double>").alias("_v")
     ).withColumn("_q", query_vec)
     sim = cosine(F.col("_v"), F.col("_q"))
-    return _topk_ranked(e.select("vec_id", sim.alias("sim")), k)
+    return _topk_ranked(e.select("vec_id", sim.alias("sim")))
 
 
 #: bucket size over which cosine_dup_pairs switches to star expansion.
 COSINE_MAX_BUCKET = 200
 
 
-def cosine_dup_pairs(vecs: DataFrame, threshold: float = 0.99) -> DataFrame:
-    """Near-dup pairs (a < b) with exact cosine >= threshold, found via
-    12-bit sign-LSH buckets. For thresholds near 1 the sign signature of the
-    two vectors is (near-)identical, so bucket-equality recall is ~1;
-    the exact verify inside buckets removes all false candidates.
+def cosine_dup_pairs(vecs: DataFrame) -> DataFrame:
+    """Near-dup pairs (a < b) with exact cosine >=
+    ``COSINE_DUP_THRESHOLD``, found via 12-bit sign-LSH buckets. At a
+    threshold this near 1 the sign signature of the two vectors is
+    (near-)identical, so bucket-equality recall is ~1; the exact verify
+    inside buckets removes all false candidates.
 
     Degenerate-bucket guard: buckets over ``COSINE_MAX_BUCKET`` (mass-
     duplicated embeddings — common for boilerplate pages) switch to
@@ -141,17 +151,13 @@ def cosine_dup_pairs(vecs: DataFrame, threshold: float = 0.99) -> DataFrame:
     return (
         cand.join(va, "a")
         .join(vb, "b")
-        .where(sim >= threshold)
+        .where(sim >= COSINE_DUP_THRESHOLD)
         .select("a", "b")
     )
 
 
-def ivf_build(
-    vecs: DataFrame,
-    n_lists: int = 16,
-    seed: int = 11,
-) -> tuple[DataFrame, list[list[float]]]:
-    """IVF index over seeded centroids: ``n_lists`` deterministic LCG
+def ivf_build(vecs: DataFrame) -> tuple[DataFrame, list[list[float]]]:
+    """IVF index over seeded centroids: ``IVF_LISTS`` deterministic LCG
     vectors (no training pass), and every vector assigned to its
     nearest centroid by one native expression argmin. The only job is
     the one-row read of the dimension; the assignments stay lazy. The
@@ -159,7 +165,7 @@ def ivf_build(
     oracle-checked bit-for-bit.
     Returns (assignments DataFrame [id, list_id], centroids)."""
     dim = len(vecs.select("embedding").first()[0])
-    cents = hyperplanes(dim, n_lists, seed)  # reuse the seeded generator
+    cents = hyperplanes(dim, IVF_LISTS)  # reuse the seeded generator
     e = vecs.select(
         F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v")
     )
@@ -192,17 +198,16 @@ def ivf_topk(
     query_vec_values: list[float],
     centroids: list[list[float]],
     assignments: DataFrame,
-    k: int = 10,
-    n_probe: int = 2,
 ) -> DataFrame:
-    """IVF search: rank centroids driver-side, scan only the n_probe
-    nearest lists, exact rerank inside. At scale the corpus is stored
-    partitioned by list_id, so this reads n_probe partitions."""
+    """IVF search: rank centroids driver-side, scan only the
+    ``IVF_PROBES`` nearest lists, exact rerank inside. At scale the
+    corpus is stored partitioned by list_id, so this reads
+    ``IVF_PROBES`` partitions."""
     q = query_vec_values
     order = sorted(
         range(len(centroids)),
         key=lambda i: sum((a - b) ** 2 for a, b in zip(centroids[i], q)),
-    )[:n_probe]
+    )[:IVF_PROBES]
     qcol = F.array(*[F.lit(float(v)) for v in q])
     e = vecs.select(
         F.col("vec_id"), F.col("embedding").cast("array<double>").alias("v")
@@ -211,21 +216,16 @@ def ivf_topk(
     )
     cand = e.where(F.col("list_id").isin(order))
     sim = cosine(F.col("v"), qcol)
-    return _topk_ranked(cand.select("vec_id", sim.alias("sim")), k)
+    return _topk_ranked(cand.select("vec_id", sim.alias("sim")))
 
 
-def ann_topk(
-    vecs: DataFrame,
-    query_vec_values: list[float],
-    k: int = 10,
-    bits: int = 8,
-    seed: int = 11,
-) -> DataFrame:
-    """Approximate top-k: scan only the query's LSH bucket, exact
-    rerank inside it. At scale the corpus is stored bucket-partitioned
-    so this is a single-partition read (partition pruning)."""
+def ann_topk(vecs: DataFrame, query_vec_values: list[float]) -> DataFrame:
+    """Approximate top-``TOP_K``: scan only the query's ``ANN_BITS``-bit
+    LSH bucket, exact rerank inside it. At scale the corpus is stored
+    bucket-partitioned so this is a single-partition read (partition
+    pruning)."""
     dim = len(query_vec_values)
-    planes = hyperplanes(dim, bits, seed)
+    planes = hyperplanes(dim, ANN_BITS)
     qcol = F.array(*[F.lit(float(v)) for v in query_vec_values])
     keyed = vecs.select(
         F.col("vec_id"), F.col("embedding").cast("array<double>").alias("v")
@@ -236,4 +236,4 @@ def ann_topk(
     qbucket = _sign_bucket_py([float(v) for v in query_vec_values], planes)
     cand = keyed.where(F.col("bucket") == qbucket)
     sim = cosine(F.col("v"), qcol)
-    return _topk_ranked(cand.select("vec_id", sim.alias("sim")), k)
+    return _topk_ranked(cand.select("vec_id", sim.alias("sim")))

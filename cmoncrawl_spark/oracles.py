@@ -786,10 +786,9 @@ def oracles() -> dict[str, str]:
     # ANN: identical seeded hyperplanes as SQL literals; bucket bits and
     # cosine reranks reproduce Spark's in-order double math (the same
     # list_dot_product compatibility q_cosine_topk relies on).
-    from cmoncrawl_spark.operators.similarity import hyperplanes
-    from cmoncrawl_spark.queries import ANN_BITS, ANN_SEED
+    from cmoncrawl_spark.operators.similarity import ANN_BITS, hyperplanes
 
-    _planes = hyperplanes(64, ANN_BITS, ANN_SEED)
+    _planes = hyperplanes(64, ANN_BITS)
 
     def _arr(p):
         return "[" + ", ".join(repr(x) for x in p) + "]"
@@ -826,9 +825,9 @@ def oracles() -> dict[str, str]:
     # argmin of the same in-order squared-distance fold (ties -> lowest
     # index, matching Spark's array_min(struct(d, i))); probe = 2
     # nearest lists to the query; exact cosine rerank.
-    from cmoncrawl_spark.queries import IVF_LISTS, IVF_SEED
+    from cmoncrawl_spark.operators.similarity import IVF_LISTS
 
-    _cents = hyperplanes(64, IVF_LISTS, IVF_SEED)
+    _cents = hyperplanes(64, IVF_LISTS)
 
     def _sqdist(vec_expr: str, c: list[float]) -> str:
         return (

@@ -200,7 +200,7 @@ def q_minhash_dedup(spark, sf_dir):
     """MinHash-LSH candidates + exact-Jaccard verify (>= 0.6)."""
     from cmoncrawl_spark.operators.dedup import minhash_dedup_pairs
 
-    return minhash_dedup_pairs(_docs2(spark, sf_dir), threshold=0.6)
+    return minhash_dedup_pairs(_docs2(spark, sf_dir))
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -212,9 +212,7 @@ def q_dedup_clusters(spark, sf_dir):
         minhash_dedup_pairs,
     )
 
-    pairs = minhash_dedup_pairs(_docs2(spark, sf_dir), threshold=0.6).select(
-        "a", "b"
-    )
+    pairs = minhash_dedup_pairs(_docs2(spark, sf_dir)).select("a", "b")
     return connected_components(pairs).select(
         F.col("id").alias("doc_id"), "component"
     )
@@ -235,7 +233,7 @@ def q_simhash_pairs(spark, sf_dir):
     match bit-for-bit; portable token hash)."""
     from cmoncrawl_spark.operators.dedup import simhash_near_pairs
 
-    return simhash_near_pairs(_docs2(spark, sf_dir), max_hamming=3, blocks=4)
+    return simhash_near_pairs(_docs2(spark, sf_dir))
 
 
 def q_ngram_jaccard(spark, sf_dir):
@@ -271,7 +269,7 @@ def q_embed_dup_pairs(spark, sf_dir):
         os.path.join(sf_dir, "embeddings.parquet"),
         "vec_id",
     )
-    return cosine_dup_pairs(vecs2, threshold=0.99)
+    return cosine_dup_pairs(vecs2)
 
 
 # ------------------------------------------------------------------- frontier
@@ -431,7 +429,7 @@ def q_frontier_round_exact(spark, sf_dir):
 
 def q_robots_policies(spark, sf_dir):
     """robots.txt parser end-to-end: synthesized per-host robots text
-    -> parse_robots (group tracking, agent selection) ->
+    -> parse_robots (group tracking, the ``*`` group) ->
     host_policies_from_robots. The oracle is the host_policies CTE the
     robots text was synthesized FROM — a real round-trip differential
     through the full REP parser."""
@@ -441,7 +439,7 @@ def q_robots_policies(spark, sf_dir):
     )
 
     register_crawl_views(spark, sf_dir)
-    rules = parse_robots(spark.table("robots"), agent="*")
+    rules = parse_robots(spark.table("robots"))
     return host_policies_from_robots(rules).select(
         "host", "crawl_delay_s", "robots_disallow_all"
     )
@@ -478,7 +476,7 @@ def q_robots_allowed(spark, sf_dir):
         os.path.join(sf_dir, "documents.parquet"),
         "doc_id",
     )
-    rules = parse_robots(spark.table("robots"), agent="*")
+    rules = parse_robots(spark.table("robots"))
     return urls_allowed(urls, rules).select("doc_id", "url", "allowed")
 
 
@@ -666,7 +664,7 @@ def q_image_features(spark, sf_dir):
     float32 feature column (<= 20 significant bits)."""
     from cmoncrawl_spark.operators.multimodal import image_features, synth_media
 
-    return image_features(synth_media(spark, 64)).select(
+    return image_features(synth_media(spark)).select(
         "media_id",
         F.round(F.element_at("feat_mean", 1).cast("double"), 3).alias(
             "mean_r"
@@ -713,7 +711,7 @@ def q_audio_features(spark, sf_dir):
     oracle replicates with CAST(... AS FLOAT))."""
     from cmoncrawl_spark.operators.multimodal import audio_features, synth_media
 
-    return audio_features(synth_media(spark, 64)).select(
+    return audio_features(synth_media(spark)).select(
         "media_id",
         F.round(F.col("rms").cast("double"), 3).alias("rms_r"),
         "n_samples",
@@ -1003,43 +1001,32 @@ def q_sessionize(spark, sf_dir):
 # ------------------------------------------------------------- similarity
 
 
-IVF_LISTS = 8
-IVF_SEED = 11
-
-
 def q_ivf_topk(spark, sf_dir):
     """IVF ANN search path, fully oracle-checked: assignments to the
-    SEEDED centroids (deterministic literals both engines share; the
-    index has no training pass), n_probe=2 list pruning, exact cosine
-    rerank."""
+    ``IVF_LISTS`` = 8 SEEDED centroids (deterministic literals both
+    engines share; the index has no training pass), ``IVF_PROBES`` = 2
+    list pruning, exact cosine rerank to the top 10."""
     from cmoncrawl_spark.operators.similarity import ivf_build, ivf_topk
 
     load_tables(spark, sf_dir, ("embeddings",))
     emb = spark.table("embeddings")
-    assignments, cents = ivf_build(emb, n_lists=IVF_LISTS, seed=IVF_SEED)
+    assignments, cents = ivf_build(emb)
     qv = [float(x) for x in emb.where("vec_id = 0").first()["embedding"]]
-    return ivf_topk(emb, qv, cents, assignments, k=10, n_probe=2).select(
-        "vec_id", "rank"
-    )
-
-
-ANN_BITS = 8
-ANN_SEED = 11
+    return ivf_topk(emb, qv, cents, assignments).select("vec_id", "rank")
 
 
 def q_ann_topk(spark, sf_dir):
     """LSH-bucketed ANN top-10 for the vec_id=0 query: scan only the
-    query's sign bucket, exact rerank inside. Oracle-checked — the
-    DuckDB twin gets the same seeded hyperplanes as SQL literals and
-    reproduces bucket bits and cosine ranks bit-for-bit."""
+    query's ``ANN_BITS`` = 8 bit sign bucket, exact rerank inside.
+    Oracle-checked — the DuckDB twin gets the same seeded hyperplanes
+    as SQL literals and reproduces bucket bits and cosine ranks
+    bit-for-bit."""
     from cmoncrawl_spark.operators.similarity import ann_topk
 
     load_tables(spark, sf_dir, ("embeddings",))
     emb = spark.table("embeddings")
     qv = [float(x) for x in emb.where("vec_id = 0").first()["embedding"]]
-    return ann_topk(emb, qv, k=10, bits=ANN_BITS, seed=ANN_SEED).select(
-        "vec_id", "rank"
-    )
+    return ann_topk(emb, qv).select("vec_id", "rank")
 
 
 def q_cosine_topk(spark, sf_dir):
@@ -1060,6 +1047,6 @@ def q_cosine_topk(spark, sf_dir):
     # No scan floor (r6): first-run timing lost the floored variant
     # 0.99 vs 0.87 s official — TakeOrderedAndProject already keeps the
     # reduce side trivial, so the floor only added a stage.
-    return cosine_topk(
-        emb, F.array(*[F.lit(float(v)) for v in qv]), k=10
-    ).select("vec_id", "rank")
+    return cosine_topk(emb, F.array(*[F.lit(float(v)) for v in qv])).select(
+        "vec_id", "rank"
+    )

@@ -13,7 +13,8 @@ north_rule requirements implemented here:
 Storage: crawl state is parquet behind the tiny :class:`StateStore`
 facade: every table is a directory of per-round parquet dirs under
 ``state_dir``. The commit protocol (write the new round dirs, then
-write the ``_round_N.json`` marker last) gives crash consistency.
+write the ``_round_N.json`` marker last, by an atomic rename) gives
+crash consistency.
 
 Bloom shards are APPEND-ONLY deltas, not merged-and-rewritten: a
 round builds blobs over ITS new ids only and the probe ORs every blob
@@ -72,10 +73,16 @@ class StateStore:
         return self.spark.read.parquet(self._path(name, round_id))
 
     def commit_round(self, round_id: int, info: dict) -> None:
-        """Marker write is the commit point (rename-free but single
-        small file — last)."""
-        with open(os.path.join(self.dir, f"_round_{round_id}.json"), "w") as f:
+        """Marker write is the commit point, written last and
+        atomically: the JSON goes to a temp name ``_round_*.json`` does
+        not match, is synced, then renamed onto the marker, so a kill
+        mid-write leaves no marker and the round reruns."""
+        tmp = os.path.join(self.dir, f"_round_{round_id}.json.tmp")
+        with open(tmp, "w") as f:
             json.dump(info, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, os.path.join(self.dir, f"_round_{round_id}.json"))
 
     def read_all(self, name: str, upto_round: int) -> DataFrame:
         """Union of a table's per-round deltas for rounds 0..upto."""

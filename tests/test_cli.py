@@ -9,6 +9,7 @@ emit sorted-keys {"domain_record": {...}} lines."""
 from __future__ import annotations
 
 import json
+import logging
 import os
 
 import pytest
@@ -265,6 +266,36 @@ def test_cli_extract_refuses_second_route_or_extractor(tmp_path):
         path.write_text(json.dumps(cfg))
         with pytest.raises(ValueError, match=extra):
             main(["extract", str(path), str(tmp_path / "out"), "x.html", "html"])
+
+
+@pytest.mark.parametrize(
+    "verbosity, level",
+    [("0", logging.WARNING), ("1", logging.INFO), ("2", logging.DEBUG)],
+)
+def test_cli_verbosity_sets_package_log_level(tmp_path, verbosity, level):
+    logger = logging.getLogger("cmoncrawl_spark")
+    old = logger.level
+    try:
+        # download without an index source exits after the level is set
+        with pytest.raises(SystemExit):
+            main(["-v", verbosity, "download", str(tmp_path), "x.com", "record"])
+        assert logger.level == level
+    finally:
+        logger.setLevel(old)
+
+
+def test_cli_extract_has_no_date_flag(tmp_path, capsys):
+    """One route never routes by date, so ``--date`` is a usage error,
+    not a flag that is parsed and ignored."""
+    with pytest.raises(SystemExit) as exit_:
+        main(
+            [
+                "extract", str(tmp_path / "cfg.json"), str(tmp_path / "out"),
+                "x.html", "html", "--date", "2020-01-01",
+            ]
+        )
+    assert exit_.value.code == 2
+    assert "--date" in capsys.readouterr().err
 
 
 def test_cli_crawl_composed_pipeline_end_to_end(spark, tmp_path):

@@ -12,7 +12,7 @@ def test_minhash_finds_planted_pairs(spark, sf_dir):
     from cmoncrawl_spark.operators.dedup import minhash_dedup_pairs
 
     docs2 = _docs2(spark, sf_dir)
-    pairs = minhash_dedup_pairs(docs2, threshold=0.6)
+    pairs = minhash_dedup_pairs(docs2)
     found = {(r["a"], r["b"]) for r in pairs.collect()}
     n_docs = docs2.count() // 2
     # every planted (d, d+1e6) pair with enough words must be found
@@ -30,7 +30,7 @@ def test_simhash_near_pairs_find_mutants(spark, sf_dir):
     from cmoncrawl_spark.operators.dedup import simhash_near_pairs
 
     docs2 = _docs2(spark, sf_dir)
-    pairs = simhash_near_pairs(docs2, max_hamming=6)
+    pairs = simhash_near_pairs(docs2)
     found = {(r["a"], r["b"]) for r in pairs.collect()}
     # long docs: dropping 2 words flips few simhash bits
     long_docs = {
@@ -58,7 +58,7 @@ def test_ann_topk_contains_self(spark, sf_dir):
     load_tables(spark, sf_dir, ("embeddings",))
     emb = spark.table("embeddings")
     qv = emb.where("vec_id = 3").first()["embedding"]
-    res = ann_topk(emb, [float(x) for x in qv], k=5)
+    res = ann_topk(emb, [float(x) for x in qv])
     rows = res.collect()
     assert rows, "query bucket empty"
     assert rows[0]["vec_id"] == 3 and rows[0]["rank"] == 1
@@ -73,7 +73,7 @@ def test_exact_topk_matches_ann_rerank(spark, sf_dir):
     qv = emb.where("vec_id = 0").select(
         F.col("embedding").cast("array<double>")
     ).first()[0]
-    res = cosine_topk(emb, F.array(*[F.lit(float(v)) for v in qv]), k=5).collect()
+    res = cosine_topk(emb, F.array(*[F.lit(float(v)) for v in qv])).collect()
     assert res[0]["vec_id"] == 0  # self is nearest
     sims = [r["sim"] for r in res]
     assert sims == sorted(sims, reverse=True)
@@ -97,7 +97,7 @@ def test_simhash_precision_dissimilar_docs_not_paired(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     hashes = {r["doc_id"]: r["simhash64"] for r in simhash(df).collect()}
     assert len(set(hashes.values())) > 1, "all simhashes identical"
-    pairs = {(r["a"], r["b"]) for r in simhash_near_pairs(df, max_hamming=3).collect()}
+    pairs = {(r["a"], r["b"]) for r in simhash_near_pairs(df).collect()}
     # cross-vocabulary pairs share no tokens; none should be near-dups
     cross = {(a, b) for (a, b) in pairs if a % 2 != b % 2}
     assert not cross, f"dissimilar docs paired: {sorted(cross)[:5]}"
@@ -143,7 +143,7 @@ def test_degenerate_bucket_cap_bounded_and_connected(spark):
     # chain (n-2, the hub->1 chain edge coincides with a star edge),
     # NOT ~n^2/2
     assert n_cand == 2 * n - 3, f"candidates {n_cand}, want {2 * n - 3}"
-    pairs = minhash_dedup_pairs(df, threshold=0.9)
+    pairs = minhash_dedup_pairs(df)
     rows = pairs.collect()
     assert len(rows) == 2 * n - 3
     # connectivity: keep-min over the pair graph dedups to ONE survivor

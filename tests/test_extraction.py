@@ -176,7 +176,10 @@ def test_check_required_semantics():
 def test_allowed_domain_prefixes_both_paths(spark):
     """F10: the native Column predicate and apply_extractor's
     prefilter keep the same rows (reference extractor.py:313-318
-    splits the raw netloc)."""
+    splits the raw netloc, userinfo and port included); a URL
+    ``parse_url`` rejects is judged, not a job failure."""
+    from urllib.parse import urlsplit
+
     from pyspark.sql import functions as F
 
     from cmoncrawl_spark.extraction.extractor import (
@@ -191,6 +194,10 @@ def test_allowed_domain_prefixes_both_paths(spark):
         "https://www.news.site.com/a",
         "https://blog.site.com/a",
         "https://ads.site.com/a",
+        "https://user@news.site.com/a",
+        "http://news.site.com/a b",
+        "https://news:8080/a",
+        "https://www.site.com:8080/a?b#c",
     ]
     df = spark.createDataFrame(
         [(u, b"<html><head><title>t</title></head></html>") for u in urls],
@@ -203,7 +210,9 @@ def test_allowed_domain_prefixes_both_paths(spark):
             domain_prefix_allowed(F.col("url"), sorted(keep))
         ).collect()
     }
-    assert got == {u for u in urls if u.split("//")[1].split(".")[0] in keep}
+    assert got == {u for u in urls if urlsplit(u).netloc.split(".")[0] in keep}
+    assert "http://news.site.com/a b" in got
+    assert "https://user@news.site.com/a" not in got
 
     ex = ConfigExtractor(
         fields={"t": CssField("title")},

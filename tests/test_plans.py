@@ -8,6 +8,8 @@ string the same way `.explain("formatted")` renders it.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -27,7 +29,7 @@ def test_topk_is_take_ordered_not_global_window(spark, sf_dir):
     qv = emb.where("vec_id = 0").select(
         F.col("embedding").cast("array<double>")
     ).first()[0]
-    plan = _plan(cosine_topk(emb, F.array(*[F.lit(float(v)) for v in qv]), k=10))
+    plan = _plan(cosine_topk(emb, F.array(*[F.lit(float(v)) for v in qv])))
     assert "TakeOrderedAndProject" in plan
     # the pre-limit section must not shuffle everything to one reducer
     pre = plan.split("TakeOrderedAndProject")[1]
@@ -166,7 +168,7 @@ def test_ivf_list_partitioned_storage_prunes(spark, sf_dir, tmp_path):
 
     load_tables(spark, sf_dir, ("embeddings",))
     emb = spark.table("embeddings")
-    assignments, cents = ivf_build(emb, n_lists=4)
+    assignments, cents = ivf_build(emb)
     path = str(tmp_path / "ivf_pq")
     emb.join(
         assignments.withColumnRenamed("id", "vec_id"), "vec_id"
@@ -191,3 +193,42 @@ def test_index_limit_is_take_ordered(spark, sf_dir):
         )
     )
     assert "TakeOrderedAndProject" in plan, plan
+
+
+#: Python evaluations (scalar Arrow UDFs, mapInPandas, grouped and
+#: cogrouped Arrow maps, ...) in each registered query's physical plan
+#: before execution; a query not listed has none. Each such node ships
+#: rows through a Python worker, so a change that adds or removes one
+#: updates this table.
+PYTHON_NODES = {
+    "q_frontier_round": 1,
+    "q_frontier_round_domain": 1,
+    "q_extract_page": 2,
+    "q_warc_roundtrip": 1,
+    "q_minhash_dedup": 1,
+    "q_image_features": 1,
+    "q_audio_features": 1,
+    "q_config_extract": 2,
+    "q_extract_valid": 2,
+    "q_simhash": 1,
+    "q_simhash_pairs": 6,
+}
+#: queries the census does not plan: q_fixture_title reads a fixture
+#: file of the reference checkout (its parity test fails without it).
+CENSUS_EXCLUDED = {"q_fixture_title"}
+_PYTHON_NODE = re.compile(
+    r"(?m)^[ :|+\-]*\*?(?:\(\d+\) )?(\w+(?:Python|InPandas|InArrow))\b"
+)
+
+
+def test_python_node_census(spark, sf_dir):
+    import __spark_entry__ as entrymod
+
+    got = {}
+    for name, query in entrymod.queries().items():
+        if name in CENSUS_EXCLUDED:
+            continue
+        nodes = _PYTHON_NODE.findall(_plan(query(spark, sf_dir)))
+        if nodes:
+            got[name] = len(nodes)
+    assert got == PYTHON_NODES

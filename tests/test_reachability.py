@@ -14,11 +14,12 @@ unreached. Per function, name references are followed from the entry
 modules' code (annotations do not count), so a helper only a test
 calls shows up too; ``EXEMPT`` lists the few kept anyway.
 
-Per parameter, every defaulted parameter of a package function or
-method must be set by some call in the package, perfbench or the
-root-level scripts; one that only tests set, or no call at all, is
-the constant it defaults to and should be written as one.
-``OPTION_EXEMPT`` names the test seams kept anyway.
+Per parameter, the calls in the package, perfbench and the
+root-level scripts must pass every defaulted parameter of a package
+function or method at least two values, an omitted argument counting
+as the default. One they always pass the same value, including one
+only tests set or nothing sets, is that constant and should be
+written as one. ``OPTION_EXEMPT`` names the test seams kept anyway.
 """
 
 from __future__ import annotations
@@ -266,8 +267,8 @@ def test_every_exemption_is_needed():
 #: perfbench and the root-level scripts. Tests are not callers.
 CALLER_DIRS = (PKG, "perfbench")
 
-#: test seams: defaulted parameters only tests set, as
-#: (module, function or Class.method, parameter) -> why they stay.
+#: test seams: defaulted parameters only tests give a second value,
+#: as (module, function or Class.method, parameter) -> why they stay.
 OPTION_EXEMPT: dict[tuple[str, str, str], str] = {
     (f"{PKG}.cli", "main", "argv"): "the CLI tests run in-process",
     (f"{PKG}.operators.dedup", "connected_components", "driver_max_edges"): (
@@ -308,12 +309,13 @@ def _caller_files() -> list[str]:
 
 
 def _defaulted_params():
-    """(module, qualname, callee, parameter, position) for every
-    defaulted parameter of a package function or method.
+    """(module, qualname, callee, parameter, position, default) for
+    every defaulted parameter of a package function or method.
 
     ``callee`` is the name a call uses (the class for ``__init__``);
     ``position`` counts positional arguments after ``self``/``cls`` and
-    is None for keyword-only parameters."""
+    is None for keyword-only parameters; ``default`` is the default's
+    source text."""
     out = []
     for mod, path in _package_modules().items():
         with open(path, encoding="utf-8") as fh:
@@ -334,60 +336,100 @@ def _defaulted_params():
             callee = cls if fn.name == "__init__" else fn.name
             a = fn.args
             pos = a.posonlyargs + a.args
-            for i in range(len(pos) - len(a.defaults), len(pos)):
-                out.append((mod, qual, callee, pos[i].arg, i - bound))
+            first = len(pos) - len(a.defaults)
+            for i, d in enumerate(a.defaults, first):
+                default = ast.unparse(d)
+                out.append((mod, qual, callee, pos[i].arg, i - bound, default))
             for arg, d in zip(a.kwonlyargs, a.kw_defaults):
                 if d is not None:
-                    out.append((mod, qual, callee, arg.arg, None))
+                    out.append((mod, qual, callee, arg.arg, None, ast.unparse(d)))
     return out
 
 
-def unset_options(exempt=OPTION_EXEMPT) -> list[str]:
-    """Defaulted parameters that no call in the caller files sets.
+def _bound_names(fn: ast.AST) -> set[str]:
+    """Names a function or lambda binds: its parameters and every name
+    it assigns, nested scopes included. Imports do not count; an
+    imported constant is one value."""
+    names = {n.arg for n in ast.walk(fn) if isinstance(n, ast.arg)}
+    return names | {
+        n.id
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+    }
 
-    Calls match by the callee's bare name, whatever its module or
-    receiver, so a same-named function elsewhere counts as a caller:
-    the check can miss an unset option but never flags a set one. A
-    call sets the parameters it names and its first positional slots;
-    ``*args`` or ``**kwargs`` count as setting everything."""
-    calls: dict[str, list[tuple[int, set[str], bool]]] = {}
+
+def _engine_calls() -> dict[str, list[tuple[ast.Call, frozenset[str]]]]:
+    """Bare callee name -> every call in the caller files, each with
+    the names bound by the functions around it."""
+    calls: dict[str, list[tuple[ast.Call, frozenset[str]]]] = {}
+
+    def visit(node: ast.AST, bound: frozenset[str]) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            bound = bound | _bound_names(node)
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            calls.setdefault(name, []).append((node, bound))
+        for child in ast.iter_child_nodes(node):
+            visit(child, bound)
+
     for path in _caller_files():
         with open(path, encoding="utf-8") as fh:
-            tree = ast.parse(fh.read(), filename=path)
-        for n in ast.walk(tree):
-            if not isinstance(n, ast.Call):
-                continue
-            f = n.func
-            name = getattr(f, "id", None) or getattr(f, "attr", None)
-            splat = any(isinstance(a, ast.Starred) for a in n.args) or any(
-                k.arg is None for k in n.keywords
-            )
-            calls.setdefault(name, []).append(
-                (len(n.args), {k.arg for k in n.keywords}, splat)
-            )
-    return sorted(
-        f"{mod}.{qual}({arg}=)"
-        for mod, qual, callee, arg, i in _defaulted_params()
-        if (mod, qual, arg) not in exempt
-        and not any(
-            splat or arg in kws or (i is not None and npos > i)
-            for npos, kws, splat in calls.get(callee, ())
-        )
-    )
+            visit(ast.parse(fh.read(), filename=path), frozenset())
+    return calls
 
 
-def test_every_option_is_set_by_a_caller():
-    unset = unset_options()
-    assert not unset, (
-        "defaulted parameters no call sets (make them the constant "
-        f"they default to): {unset}"
+def single_valued_options(exempt=OPTION_EXEMPT) -> dict[str, str]:
+    """Defaulted parameters that every call in the caller files passes
+    the same value, each with that value.
+
+    A value is the argument's source text; an omitted argument is the
+    default's, so ``f(x=0.6)`` and ``f()`` with ``x=0.6`` agree, and an
+    option no call sets shows one value, its default. An argument that
+    uses a name bound in the calling function (a parameter or a local)
+    varies, and so does any parameter of a call with ``*args`` or
+    ``**kwargs``. Calls match by the callee's bare name, whatever its
+    module or receiver, so a same-named function elsewhere adds its
+    values, which can only hide a single-valued option."""
+    calls = _engine_calls()
+    out = {}
+    for mod, qual, callee, arg, i, default in _defaulted_params():
+        if (mod, qual, arg) in exempt:
+            continue
+        values: set[str] = set()
+        for call, bound in calls.get(callee, ()):
+            kws = {k.arg: k.value for k in call.keywords}
+            if None in kws or any(isinstance(a, ast.Starred) for a in call.args):
+                break
+            expr = kws.get(arg)
+            if expr is None and i is not None and len(call.args) > i:
+                expr = call.args[i]
+            if expr is None:
+                values.add(default)
+            elif any(
+                isinstance(n, ast.Name) and n.id in bound for n in ast.walk(expr)
+            ):
+                break
+            else:
+                values.add(ast.unparse(expr))
+        else:
+            if len(values) <= 1:
+                out[f"{mod}.{qual}({arg}=)"] = values.pop() if values else default
+    return out
+
+
+def test_every_option_takes_two_values():
+    single = single_valued_options()
+    assert not single, (
+        "defaulted parameters every engine call passes one value (make "
+        f"them the constant they always are): {single}"
     )
 
 
 def test_every_option_exemption_is_needed():
     assert all(OPTION_EXEMPT.values()), "every test seam states its reason"
-    bare = set(unset_options(exempt=()))
+    bare = single_valued_options(exempt=())
     stale = sorted(
         f"{m}.{q}({a}=)" for m, q, a in OPTION_EXEMPT if f"{m}.{q}({a}=)" not in bare
     )
-    assert not stale, f"option exempt but set by a caller: {stale}"
+    assert not stale, f"option exempt but given two values by callers: {stale}"

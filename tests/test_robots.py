@@ -33,24 +33,26 @@ def _df(spark, txt=ROBOTS, host="h.com"):
 
 
 def test_group_selection_star_vs_specific(spark):
-    star = parse_robots(_df(spark), agent="*").collect()
+    # the * group only: the named agents' groups are not merged in
+    star = parse_robots(_df(spark)).collect()
     assert {(r["rule"], r["path"]) for r in star} == {
         ("crawl-delay", "2"),
         ("disallow", "/private"),
         ("allow", "/private/ok"),
         ("disallow", ""),
     }
-    goog = parse_robots(_df(spark), agent="googlebot").collect()
-    # most-specific group ONLY (RFC 9309 2.2.1), not merged with *
-    assert {(r["rule"], r["path"]) for r in goog} == {
-        ("disallow", "/goog"),
-        ("crawl-delay", "9"),
-    }
 
 
 def test_chained_user_agent_lines_share_group(spark):
-    for agent in ("abot", "bBot"):
-        rules = parse_robots(_df(spark), agent=agent).collect()
+    chain = ["User-agent: aBot", "User-agent: bBot"]
+    for at in range(len(chain) + 1):
+        agents = chain[:at] + ["User-agent: *"] + chain[at:]
+        txt = "\n".join(
+            ["User-agent: googlebot", "Disallow: /goog", ""]
+            + agents
+            + ["Disallow: /ab", "", "User-agent: cBot", "Disallow: /c"]
+        )
+        rules = parse_robots(_df(spark, txt)).collect()
         assert {(r["rule"], r["path"]) for r in rules} == {("disallow", "/ab")}
 
 
@@ -75,11 +77,19 @@ def test_longest_match_allow_wins_ties(spark):
             (3, "https://h.com/other", "h.com"),          # unmatched
             (4, "https://h.com/", "h.com"),               # unmatched
             (5, "https://other.com/private/x", "other.com"),  # no rules
+            # parse_url rejects a raw space: the path after the netloc
+            (6, "https://h.com/private/a b", "h.com"),
+            (7, "https://h.com/private/ok/a b", "h.com"),
+            (8, "https://u@h.com:8080/private/x?q=1#f", "h.com"),
+            (9, "https://h.com?next=/private/x", "h.com"),  # path ''
         ],
         "id long, url string, host string",
     )
     got = {r["id"]: r["allowed"] for r in urls_allowed(urls, rules).collect()}
-    assert got == {1: False, 2: True, 3: True, 4: True, 5: True}
+    assert got == {
+        1: False, 2: True, 3: True, 4: True, 5: True,
+        6: False, 7: True, 8: False, 9: True,
+    }
 
 
 def test_exact_tie_allow_wins(spark):
@@ -103,7 +113,7 @@ def test_round_from_parsed_robots_equals_policy_table(spark, sf_dir):
     seen = spark.table("seen")
 
     parsed = host_policies_from_robots(
-        parse_robots(spark.table("robots"), agent="*")
+        parse_robots(spark.table("robots"))
     ).select(
         "host",
         F.floor(60.0 / F.col("crawl_delay_s")).cast("int").alias("budget"),

@@ -71,6 +71,32 @@ def test_rounds_match_simulator(spark, setup):
     assert spark_seen == sim_seen
 
 
+def test_torn_round_marker_is_not_a_commit(spark, setup, monkeypatch):
+    """A kill while the marker is written leaves no ``_round_0.json``:
+    the round is not committed, and a rerun commits it."""
+    import json
+
+    seeds_df, pol_df, _seeds, _b, _d, state_dir = setup
+    store = StateStore(spark, state_dir)
+    dump = json.dump
+
+    def torn(obj, fp, **kw):
+        text = json.dumps(obj)
+        fp.write(text[: len(text) // 2])
+        raise OSError("killed mid-write")
+
+    monkeypatch.setattr(json, "dump", torn)
+    with pytest.raises(OSError, match="killed mid-write"):
+        run_crawl(store, seeds_df, pol_df, rounds=1, num_shards=8)
+    assert not os.path.exists(os.path.join(state_dir, "_round_0.json"))
+    assert store.last_committed_round() == -1
+
+    monkeypatch.setattr(json, "dump", dump)
+    run_crawl(store, seeds_df, pol_df, rounds=1, num_shards=8)
+    assert store.last_committed_round() == 0
+    assert store.round_info(0)["num_shards"] == 8
+
+
 def test_kill_and_resume(spark, setup):
     seeds_df, pol_df, _seeds, _b, _d, state_dir = setup
     # full run for reference

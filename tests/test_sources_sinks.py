@@ -204,7 +204,7 @@ def test_lang_id_and_quality(spark):
 def test_multimodal_features_deterministic(spark):
     from cmoncrawl_spark.operators.multimodal import image_features, synth_media
 
-    media = synth_media(spark, 30)
+    media = synth_media(spark).where("media_id < 30")
     f1 = {r["media_id"]: r["feat_mean"] for r in image_features(media).collect()}
     f2 = {
         r["media_id"]: r["feat_mean"]
@@ -216,7 +216,7 @@ def test_multimodal_features_deterministic(spark):
 def test_audio_features_deterministic_and_shaped(spark):
     from cmoncrawl_spark.operators.multimodal import audio_features, synth_media
 
-    media = synth_media(spark, 30)
+    media = synth_media(spark).where("media_id < 30")
     a = {r["media_id"]: (r["rms"], r["zero_cross_rate"], r["n_samples"], r["sample_rate"])
          for r in audio_features(media).collect()}
     b = {r["media_id"]: (r["rms"], r["zero_cross_rate"], r["n_samples"], r["sample_rate"])
@@ -233,7 +233,7 @@ def test_audio_decoder_pluggable(spark):
 
     mm.set_audio_decoder(lambda b: (np.ones(4, dtype=np.float32), 8000))
     try:
-        row = mm.audio_features(mm.synth_media(spark, 6)).first()
+        row = mm.audio_features(mm.synth_media(spark)).first()
         assert row["rms"] == 1.0 and row["zero_cross_rate"] == 0.0
         assert row["n_samples"] == 4 and row["sample_rate"] == 8000
     finally:
