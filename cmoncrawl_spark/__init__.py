@@ -22,3 +22,12 @@ physical plans; Python appears only inside Arrow-batched pandas UDFs.
 """
 
 __version__ = "0.1.0"
+
+import sys as _sys
+
+if "pyspark.worker" in _sys.modules:
+    # a PySpark worker: Spark's per-task invalidate_caches() re-reads
+    # only the zip archives that changed (worker_imports).
+    from cmoncrawl_spark import worker_imports as _worker_imports
+
+    _worker_imports.install()

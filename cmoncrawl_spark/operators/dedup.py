@@ -70,32 +70,34 @@ def shingle_hashes(text_col: Column) -> Column:
     return F.transform(shingles(text_col), lambda s: F.xxhash64(s))
 
 
+def _minhash_signatures(hash_arrays):
+    # module-level, so cloudpickle ships it by reference and a worker
+    # imports the package to unpickle it (see worker_imports).
+    import numpy as np
+    import pandas as pd
+
+    params = np.array(_perm_params(), dtype=np.int64)
+    a, b = params[:, :1], params[:, 1:]
+    out = []
+    empty = (b[:, 0] % _P).tolist()
+    for arr in hash_arrays:
+        if arr is None or len(arr) == 0:
+            out.append(empty)
+            continue
+        h = np.asarray(arr, dtype=np.int64) % _P  # pmod: h >= 0 after %? numpy % keeps sign of divisor -> non-negative for positive P
+        sig = ((a * h[None, :] + b) % _P).min(axis=1)
+        out.append(sig.tolist())
+    return pd.Series(out)
+
+
 def minhash_signature_udf():
     """array<bigint> signature: min((a * (h mod P) + b) mod P) per
     permutation, as one Arrow-batched numpy pass per row: the
     (perm x shingle) matrix min is one numpy op, ~50x faster than
     NUM_PERM Catalyst array traversals."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    params = _perm_params()
-    a = np.array([p[0] for p in params], dtype=np.int64)[:, None]
-    b = np.array([p[1] for p in params], dtype=np.int64)[:, None]
-
-    def _sig(hash_arrays):
-        out = []
-        empty = ((a[:, 0] * 0 + b[:, 0]) % _P).tolist()
-        for arr in hash_arrays:
-            if arr is None or len(arr) == 0:
-                out.append(empty)
-                continue
-            h = np.asarray(arr, dtype=np.int64) % _P  # pmod: h >= 0 after %? numpy % keeps sign of divisor -> non-negative for positive P
-            sig = ((a * h[None, :] + b) % _P).min(axis=1)
-            out.append(sig.tolist())
-        return pd.Series(out)
-
-    return pandas_udf(_sig, "array<bigint>")
+    return pandas_udf(_minhash_signatures, "array<bigint>")
 
 
 def _bounded_bucket_pairs(
@@ -501,6 +503,32 @@ def connected_components(
     return labels
 
 
+def _simhash_fn(hash_arrays):
+    # module-level, so cloudpickle ships it by reference and a worker
+    # imports the package to unpickle it (see worker_imports).
+    import numpy as np
+    import pandas as pd
+
+    out = []
+    for arr in hash_arrays:
+        if arr is None or len(arr) == 0:
+            out.append(0)
+            continue
+        # int64 view + uint64 reinterpret: arr arrives as signed
+        # two's-complement longs (astype on the int64 array wraps;
+        # np.asarray(list, uint64) on negatives is deprecated).
+        h = np.asarray(arr, dtype=np.int64).astype(np.uint64)
+        bits = np.unpackbits(h.view(np.uint8)).reshape(len(h), 64)
+        # SIGNED sums: uint8 sums promote unsigned, and `*2 - n`
+        # would underflow for any minority bit, setting every vote
+        # positive (this returned -1 for every doc until the DuckDB
+        # bit-vote oracle caught it).
+        votes = bits.sum(axis=0).astype(np.int64) * 2 - len(h)
+        val = np.packbits((votes > 0).astype(np.uint8)).view(np.uint64)[0]
+        out.append(int(val.astype(np.int64)))  # two's-complement to long
+    return pd.Series(out)
+
+
 def simhash(docs: DataFrame) -> DataFrame:
     """64-bit SimHash of each (doc_id, text): JVM-side token hashing,
     numpy bit-vote UDF.
@@ -511,29 +539,7 @@ def simhash(docs: DataFrame) -> DataFrame:
     Tokens hash with ``functions.scalars.portable_hash64``, so DuckDB
     reproduces the exact bit votes from md5_number_lower.
     """
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
-
-    def _simhash_fn(hash_arrays):
-        out = []
-        for arr in hash_arrays:
-            if arr is None or len(arr) == 0:
-                out.append(0)
-                continue
-            # int64 view + uint64 reinterpret: arr arrives as signed
-            # two's-complement longs (astype on the int64 array wraps;
-            # np.asarray(list, uint64) on negatives is deprecated).
-            h = np.asarray(arr, dtype=np.int64).astype(np.uint64)
-            bits = np.unpackbits(h.view(np.uint8)).reshape(len(h), 64)
-            # SIGNED sums: uint8 sums promote unsigned, and `*2 - n`
-            # would underflow for any minority bit, setting every vote
-            # positive (this returned -1 for every doc until the DuckDB
-            # bit-vote oracle caught it).
-            votes = bits.sum(axis=0).astype(np.int64) * 2 - len(h)
-            val = np.packbits((votes > 0).astype(np.uint8)).view(np.uint64)[0]
-            out.append(int(val.astype(np.int64)))  # two's-complement to long
-        return pd.Series(out)
 
     _simhash = pandas_udf(_simhash_fn, "long")
     tokens_hashed = F.transform(

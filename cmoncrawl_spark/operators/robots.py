@@ -30,16 +30,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cmoncrawl_spark.functions.urls import path_col
+
 #: crawl delay of a host whose robots.txt sets none, and of a host
 #: with no policy row in ``frontier.fetch_schedule``.
 DEFAULT_CRAWL_DELAY_S = 1.0
 
-#: a URL's raw path as ``java.net.URI`` (Spark's ``parse_url``) reads a
-#: hierarchical URL: after the scheme and the ``//`` authority, up to
-#: ``?`` or ``#``. A URL ``parse_url`` rejects (a space, say) keeps the
-#: text after its netloc instead of failing the job under ANSI mode.
-_PATH_RE = r"^(?:[A-Za-z][A-Za-z0-9+.\-]*:)?(?://[^/?#]*)?([^?#]*)"
-#: a scheme followed by no ``/``: an opaque URI, which has no path.
+#: a scheme followed by no ``/``: an opaque URI, which has no path
+#: for ``java.net.URI`` (Spark's ``parse_url``).
 _OPAQUE_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*:[^/]"
 
 
@@ -149,7 +147,7 @@ def urls_allowed(urls: DataFrame, rules: DataFrame) -> DataFrame:
     whole frontier on a wide key; this one is shuffle-free.)
     """
     url = F.col("url")
-    path = F.regexp_extract(url, _PATH_RE, 1)
+    path = path_col(url)
     no_path = url.isNull() | url.rlike(_OPAQUE_RE) | (path == "")
     u = urls.withColumn("_path", F.when(no_path, "/").otherwise(path))
     per_host = (

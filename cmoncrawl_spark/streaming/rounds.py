@@ -42,7 +42,7 @@ import json
 import logging
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from cmoncrawl_spark.operators import bloom as bloom_ops
@@ -157,14 +157,22 @@ def run_round(
         # grow by up to one per shard per round; nothing compacts them.
         shards = store.read_all("bloom_shards", round_id - 1)
 
-    fetch_list = scheduling_round(
-        frontier,
-        seen,
-        host_policies,
-        bloom_shards=shards,
-        num_shards=num_shards,
-        budget_cap=budget_cap,
-    ).localCheckpoint(eager=True)
+    # The round's row count is observed while the checkpoint is
+    # materialized: no separate count job.
+    scheduled = Observation(f"round_{round_id}")
+    fetch_list = (
+        scheduling_round(
+            frontier,
+            seen,
+            host_policies,
+            bloom_shards=shards,
+            num_shards=num_shards,
+            budget_cap=budget_cap,
+        )
+        .observe(scheduled, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    scheduled_count = scheduled.get["n"]
 
     new_ids = fetch_list.select("url_id")
     metrics = round_metrics(frontier, fetch_list).withColumn(
@@ -177,13 +185,11 @@ def run_round(
     # back-fills with the next job's tasks instead of leaving the
     # cluster idle (optimization guide §2.6 "overlap independent
     # jobs"; FIFO scheduling gives exactly the back-fill behavior).
-    # The metrics write needs no row count, so it goes first and runs
-    # concurrently with the count job; the three delta writes need
-    # the count (n_files, and the bloom's sizing) and follow. ALL
-    # writes must SUCCEED before the commit marker below — the commit
-    # point is unchanged, so crash consistency is too: any write
-    # failure leaves the round uncommitted, same as the sequential
-    # code. Measured (same-JVM
+    # The three delta writes size their files (and the bloom) from the
+    # observed row count. ALL writes must SUCCEED before the commit
+    # marker below — the commit point is unchanged, so crash
+    # consistency is too: any write failure leaves the round
+    # uncommitted, same as the sequential code. Measured (same-JVM
     # interleaved A/B, sf0.1, 4 reps): crawl_3_rounds 5.9-6.5 s
     # sequential -> 4.4-5.2 s. The pool threads run through
     # inheritable_thread_target so the writes' jobs keep the caller's
@@ -195,7 +201,6 @@ def run_round(
     write = inheritable_thread_target(spark)(store.write)
     with ThreadPoolExecutor(max_workers=4) as pool:
         futs = {"metrics": pool.submit(write, "metrics", round_id, metrics)}
-        scheduled_count = fetch_list.count()
         new_shard_df = bloom_ops.build_shards(
             new_ids,
             max(1024, scheduled_count // num_shards),

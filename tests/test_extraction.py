@@ -198,6 +198,7 @@ def test_allowed_domain_prefixes_both_paths(spark):
         "http://news.site.com/a b",
         "https://news:8080/a",
         "https://www.site.com:8080/a?b#c",
+        "//news.site.com/a",
     ]
     df = spark.createDataFrame(
         [(u, b"<html><head><title>t</title></head></html>") for u in urls],
@@ -213,6 +214,7 @@ def test_allowed_domain_prefixes_both_paths(spark):
     assert got == {u for u in urls if urlsplit(u).netloc.split(".")[0] in keep}
     assert "http://news.site.com/a b" in got
     assert "https://user@news.site.com/a" not in got
+    assert "//news.site.com/a" in got  # scheme-relative: netloc news.site.com
 
     ex = ConfigExtractor(
         fields={"t": CssField("title")},

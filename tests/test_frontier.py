@@ -273,3 +273,20 @@ def test_domain_politeness_canonicalize_edge_hosts(spark, sf_dir):
     assert hosts["https://a.b.x.co.za/p"] == "x.co.za"  # eTLD+1
     assert "not a url at all" in hosts
     assert hosts["not a url at all"] is None
+
+
+def test_round_keeps_root_page_beside_uri_rejected_url(spark):
+    """A URL ``java.net.URI`` rejects no longer shares the id of its
+    host's root page: it cannot win that id's dedupe and take the root
+    page out of the round. Its NULL host keeps it out of the fetch list
+    itself."""
+    frontier = spark.createDataFrame(
+        [("http://h.com/", 0, 0.5), ("http://h.com/a b", 0, 0.9)],
+        "url string, depth int, priority double",
+    )
+    pol = spark.createDataFrame(
+        [("h.com", 10, False)],
+        "host string, budget int, robots_disallow_all boolean",
+    )
+    out = scheduling_round(frontier, None, pol).collect()
+    assert [(r["url"], r["url_id"]) for r in out] == [("http://h.com/", "h.com")]

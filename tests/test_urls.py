@@ -156,3 +156,112 @@ def test_unify_col_matches_py_at_netloc_boundary(spark):
     }
     for u in urls:
         assert got[u] == unify_url_id_py(u), u
+
+
+def _col_ids(spark, urls):
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    return {
+        r["url"]: r["id"]
+        for r in df.select("url", unify_url_id_col(F.col("url")).alias("id")).collect()
+    }
+
+
+def test_unify_col_keeps_path_of_uri_rejected_url(spark):
+    """A URL ``java.net.URI`` rejects keeps its path: its id is not the
+    netloc, which is the id of the host's root page."""
+    urls = [
+        "http://h.com/a b",
+        "http://h.com/a%zz/story-x",
+        "https://h.com/a|b/c",
+        "http://h.com/",
+    ]
+    got = _col_ids(spark, urls)
+    assert got["http://h.com/a b"] == "h.com/a"
+    assert got["http://h.com/a b"] != got["http://h.com/"]
+    for u in urls:
+        assert got[u] == unify_url_id_py(u), u
+
+
+def test_unify_col_reads_netloc_of_scheme_relative_url(spark):
+    """``//host/path`` has a netloc, as in ``urlsplit``: twins on two
+    hosts get two ids."""
+    urls = ["//news.site.com/a", "//a.com/x", "//b.com/x", "http://a.com/x"]
+    got = _col_ids(spark, urls)
+    assert got["//news.site.com/a"] == "news.site.com/a"
+    assert got["//a.com/x"] == "a.com/x" == got["http://a.com/x"]
+    assert got["//b.com/x"] == "b.com/x"
+    for u in urls:
+        assert got[u] == unify_url_id_py(u), u
+
+
+def _splittable(url: str) -> bool:
+    from urllib.parse import urlsplit
+
+    try:
+        urlsplit(url)
+    except ValueError:  # unbalanced or invalid [IPv6] brackets
+        return False
+    return True
+
+
+_HOST = st.one_of(
+    st.from_regex(r"(www\.)?[a-z][a-z0-9\-]{0,6}(\.[a-z]{2,3}){0,2}", fullmatch=True),
+    st.sampled_from(["[::1]", "[2001:db8::7]", "127.0.0.1", "news"]),
+)
+_SEGMENT = st.from_regex(r"[a-zA-Z0-9_.~|\- %]{0,8}", fullmatch=True) | st.sampled_from(
+    ["a.html", "2024", "%zz", "%4", "x y", "@h", "p.png"]
+)
+_URL = st.builds(
+    lambda lead, scheme, user, host, port, segs, query, frag: (
+        f"{lead}{scheme}{user}{host}{port}{''.join('/' + s for s in segs)}"
+        f"{query}{frag}"
+    ),
+    st.sampled_from(["", " ", "\x01 "]),
+    st.sampled_from(
+        ["http://", "https://", "HTTP://", "//", "", "ftp://", "mailto:", "news:", "a+b.c-d:"]
+    ),
+    st.sampled_from(["", "user@", "u:pw@", "a%20b@", "news@"]),
+    _HOST,
+    st.sampled_from(["", ":80", ":8080", ":x"]),
+    st.lists(_SEGMENT, max_size=4),
+    st.sampled_from(["", "?a=1", "?q=a b", "?x=%zz/y", "?"]),
+    st.sampled_from(["", "#f", "#a/b?c", "#"]),
+)
+
+
+@st.composite
+def _url_batches(draw):
+    """A batch of generated URLs, some with a tab, CR or LF inside."""
+    urls = []
+    for url in draw(st.lists(_URL, min_size=1, max_size=40)):
+        at = draw(st.integers(0, len(url)))
+        ws = draw(st.sampled_from(["", "", "\t", "\n", "\r\n"]))
+        urls.append(url[:at] + ws + url[at:])
+    return [u for u in urls if _splittable(u)]
+
+
+@settings(max_examples=12, deadline=None)
+@given(_url_batches())
+def test_generated_urls_match_urlsplit(spark, urls):
+    """Generated differential, one Spark job per batch: the Catalyst id
+    equals the Python twin's, and F10 keeps a URL exactly when the
+    reference's ``urlsplit(url).netloc.split(".")[0]`` is allowed."""
+    from urllib.parse import urlsplit
+
+    from pyspark.sql import functions as F
+
+    from cmoncrawl_spark.extraction.extractor import domain_prefix_allowed
+
+    first = {u: urlsplit(u).netloc.split(".")[0] for u in urls}
+    allowed = sorted({first[u] for u in urls[::2]})
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    rows = df.select(
+        "url",
+        unify_url_id_col(F.col("url")).alias("id"),
+        domain_prefix_allowed(F.col("url"), allowed).alias("kept"),
+    ).collect()
+    for r in rows:
+        assert r["id"] == unify_url_id_py(r["url"]), repr(r["url"])
+        assert r["kept"] == (first[r["url"]] in allowed), repr(r["url"])
