@@ -217,7 +217,7 @@ def run_crawl(args: argparse.Namespace) -> None:
     an async fetch pool, and politeness is an explicit budget +
     fetch_offset_ms column rather than a runtime sleep."""
     spark = _spark("cmon-crawl")
-    from cmoncrawl_spark.functions.urls import host_of
+    from cmoncrawl_spark.functions.urls import host_col
     from cmoncrawl_spark.operators.frontier import (
         fetch_schedule,
         scheduling_round,
@@ -243,9 +243,7 @@ def run_crawl(args: argparse.Namespace) -> None:
         if args.seen_dir
         else None
     )
-    hosts = frontier.select(
-        host_of(F.col("url")).alias("host")
-    ).distinct()
+    hosts = frontier.select(host_col(F.col("url")).alias("host")).distinct()
     if args.domain_politeness:
         # scheduling_round rewrites each candidate's politeness key to
         # the PSL registered domain (eTLD+1) and then INNER-joins the

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from cmoncrawl_spark.extraction import html as H
 from cmoncrawl_spark.extraction.encoding import decode_cascade
-from cmoncrawl_spark.functions.urls import _netloc_col
+from cmoncrawl_spark.functions.urls import netloc_col
 
 
 def check_required(
@@ -70,9 +70,9 @@ def domain_prefix_allowed(url_col: Column, prefixes: list[str]) -> Column:
     """F10 — allowed_domain_prefixes (reference pipeline/extractor.py:
     313-318): the raw netloc's FIRST dot-label must be in the
     allow-list, userinfo and all (``urlsplit(url).netloc.split(".")[0]``).
-    Native expression so Catalyst applies it before any Arrow batch,
-    and one no URL can fail, unlike ``parse_url`` under ANSI mode."""
-    first = F.split(_netloc_col(url_col), r"\.").getItem(0)
+    Native expression so Catalyst applies it before any Arrow batch;
+    no URL can fail it."""
+    first = F.split(netloc_col(url_col), r"\.").getItem(0)
     return first.isin([p for p in prefixes])
 
 

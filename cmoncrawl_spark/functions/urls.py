@@ -1,12 +1,17 @@
-"""URL canonicalization — the engine's hottest scalar path.
+"""URL rules — the engine's hottest scalar path.
+
+Every URL rule reads the URL as ``urllib.parse.urlsplit`` does, the
+parser the reference keys its rules on (helpers.py:39-59), through one
+regexp family: the netloc (:func:`netloc_col`), the path
+(:func:`path_col`) and the politeness host (:func:`host_col`). No URL
+fails the job or loses its host or path because ``java.net.URI`` (Spark's
+``parse_url``) rejects it.
 
 The canonicalizer is ``unify_url_id``, the reference's URL-seen id
 (semantics from the reference's aggregator/utils/helpers.py:39-59,
 golden vectors tests/gateway_test.py:111-151). Implemented TWICE:
 - :func:`unify_url_id_col` — pure Catalyst column expressions
-  (``regexp_*`` only, netloc and path read as ``urlsplit`` reads
-  them, so a URL ``java.net.URI`` rejects neither fails the job nor
-  loses its path). JVM-side, whole-stage codegen,
+  (``regexp_*`` only). JVM-side, whole-stage codegen,
   zero Python in the hot path — this is what frontier rounds use at
   100 TB scale.
 - :func:`unify_url_id_py` — plain-Python twin used by tests (golden
@@ -40,35 +45,46 @@ _SCHEME_RE = r"[A-Za-z][A-Za-z0-9+.\-]*:"
 #: the netloc, as ``urlsplit`` reads it: after an optional scheme,
 #: whenever ``//`` follows, up to ``/``, ``?`` or ``#``.
 _NETLOC_RE = rf"^(?:{_SCHEME_RE})?//([^/?#]*)"
-#: a URL's raw path: after an optional scheme and the ``//`` authority,
-#: up to ``?`` or ``#``. It is ``urlsplit``'s path, and Spark's
-#: ``parse_url`` PATH on 21 hierarchical URL shapes checked in Spark 4.1
-#: (userinfo, port, IPv6, ``file:///``, scheme-relative, query without
-#: path, fragments, scheme-less); a URL ``parse_url`` rejects (a space,
-#: say) keeps the text after its netloc.
+#: a URL's raw path, as ``urlsplit`` reads it: after an optional scheme
+#: and the ``//`` authority, up to ``?`` or ``#``.
 _PATH_RE = rf"^(?:{_SCHEME_RE})?(?://[^/?#]*)?([^?#]*)"
-
-
-def _host_col(url: Column) -> Column:
-    return F.try_parse_url(url, F.lit("HOST"))
+#: the hostname, as ``urlsplit`` reads it from the netloc: after the
+#: last ``@``; inside the brackets when the rest holds a ``[``, else up
+#: to the first ``:``. The prefix is atomic and the host non-empty, so
+#: a URL with no hostname does not match.
+_HOST_RE = (
+    rf"^(?>(?:{_SCHEME_RE})?//(?:[^/?#]*@)?(?:[^\[/?#]*\[)?)"
+    r"((?<=\[)[^\]/?#]+|(?<!\[)[^:/?#]+)"
+)
 
 
 def _urlsplit_input(url: Column) -> Column:
     return F.regexp_replace(url, _URLSPLIT_DROP_RE, "")
 
 
-def _netloc_col(url: Column) -> Column:
-    # The reference id keys on urlparse(url).netloc — which KEEPS
-    # userinfo and port ('user@h:8080'), unlike parse_url HOST. One
-    # regexp reproduces netloc exactly, scheme-relative URLs included
-    # (and '' with no '//', same as urlsplit).
+def netloc_col(url: Column) -> Column:
+    """``urlsplit(url).netloc`` — which KEEPS userinfo and port
+    (``'user@h:8080'``), as the reference id does; ``''`` with no
+    ``//``."""
     return F.regexp_extract(_urlsplit_input(url), _NETLOC_RE, 1)
 
 
 def path_col(url: Column) -> Column:
-    """The raw path of ``url`` (see ``_PATH_RE``), from one regexp: no
-    URL fails the job, unlike ``parse_url`` under ANSI mode."""
-    return F.regexp_extract(url, _PATH_RE, 1)
+    """``urlsplit(url).path`` (see ``_PATH_RE``)."""
+    return F.regexp_extract(_urlsplit_input(url), _PATH_RE, 1)
+
+
+def host_col(url: Column) -> Column:
+    """``urlsplit(url).hostname``, the politeness host: userinfo, port
+    and IPv6 brackets dropped, lowercased, NULL when there is none. One
+    difference: ``urlsplit`` keeps the case after a ``%`` (an IPv6 zone
+    id), this lowercases it too.
+
+    The host is the one element of ``regexp_extract_all`` or NULL, so
+    the regexps appear once in the expression; a ``CASE`` turning
+    ``regexp_extract``'s ``''`` into NULL would hold them twice."""
+    hosts = F.regexp_extract_all(_urlsplit_input(url), F.lit(_HOST_RE), 1)
+    return F.lower(F.get(hosts, 0))
 
 
 def unify_url_id_col(url: Column) -> Column:
@@ -77,11 +93,11 @@ def unify_url_id_col(url: Column) -> Column:
     NOTE: the id keys on the full netloc (reference helpers.py:54-57),
     not the bare host.
     """
-    host = _netloc_col(url)
+    host = netloc_col(url)
     host = F.when(host.startswith("www."), F.substring(host, 5, 2048)).otherwise(
         host
     )
-    path = path_col(_urlsplit_input(url))
+    path = path_col(url)
     path = F.regexp_replace(path, _EXT_RE, "")
     path = F.regexp_extract(path, _PATH_CORE_RE, 0)
     path = F.regexp_replace(path, _TRAILING_RE, "")
@@ -101,8 +117,3 @@ def unify_url_id_py(url: str) -> str:
     if netloc.startswith("www."):
         netloc = netloc[4:]
     return f"{netloc}{path}"
-
-
-def host_of(url: Column) -> Column:
-    """url_host_name (netloc incl. any www.) as native expression."""
-    return _host_col(url)

@@ -36,9 +36,9 @@ from cmoncrawl_spark.functions.urls import path_col
 #: with no policy row in ``frontier.fetch_schedule``.
 DEFAULT_CRAWL_DELAY_S = 1.0
 
-#: a scheme followed by no ``/``: an opaque URI, which has no path
-#: for ``java.net.URI`` (Spark's ``parse_url``).
-_OPAQUE_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*:[^/]"
+#: a scheme followed by no ``/``, after what ``urlsplit`` drops in
+#: front: an opaque URI (``mailto:x``), matched as the path ``/``.
+_OPAQUE_RE = r"^[\x00-\x20]*[A-Za-z][A-Za-z0-9+.\-]*:[^/]"
 
 
 def _lines(robots_col: Column) -> Column:

@@ -454,7 +454,7 @@ def q_robots_allowed(spark, sf_dir):
     from cmoncrawl_spark.session import scan_parallel_floor
 
     register_crawl_views(spark, sf_dir)
-    # floor: the per-URL side (parse_url + longest-match fold over the
+    # floor: the per-URL side (path regexp + longest-match fold over the
     # broadcast rules) is map-side codegen over every URL — single-task
     # on the one-row-group source without it (r6).
     urls = scan_parallel_floor(

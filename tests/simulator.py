@@ -7,7 +7,8 @@ behavior at prefetch_size=1 — a sequential loop with:
 - unify_url_id canonical ids (helpers.py:39-59, golden-tested);
 - the seen-set gate with add-AFTER-success
   (middleware/synchronized.py:30-41);
-- per-host politeness budgets + priority order (north_rule).
+- per-host politeness budgets + priority order (north_rule), keyed
+  on ``urlsplit(url).hostname``; a URL with no hostname is skipped.
 
 This module is that loop, in plain Python over plain lists — no Spark.
 tests/test_rounds.py asserts the distributed rounds reproduce its
@@ -29,8 +30,8 @@ class Candidate:
     priority: float
 
 
-def _host(url: str) -> str:
-    return urlsplit(url).netloc
+def _host(url: str) -> str | None:
+    return urlsplit(url).hostname
 
 
 def simulate_round(

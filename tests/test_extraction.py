@@ -177,7 +177,7 @@ def test_allowed_domain_prefixes_both_paths(spark):
     """F10: the native Column predicate and apply_extractor's
     prefilter keep the same rows (reference extractor.py:313-318
     splits the raw netloc, userinfo and port included); a URL
-    ``parse_url`` rejects is judged, not a job failure."""
+    ``java.net.URI`` rejects is judged, not a job failure."""
     from urllib.parse import urlsplit
 
     from pyspark.sql import functions as F

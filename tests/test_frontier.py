@@ -278,10 +278,15 @@ def test_domain_politeness_canonicalize_edge_hosts(spark, sf_dir):
 def test_round_keeps_root_page_beside_uri_rejected_url(spark):
     """A URL ``java.net.URI`` rejects no longer shares the id of its
     host's root page: it cannot win that id's dedupe and take the root
-    page out of the round. Its NULL host keeps it out of the fetch list
-    itself."""
+    page out of the round. Its host is ``urlsplit``'s hostname, so it is
+    scheduled beside the root page; a mixed-case host meets the
+    lowercase policy row."""
     frontier = spark.createDataFrame(
-        [("http://h.com/", 0, 0.5), ("http://h.com/a b", 0, 0.9)],
+        [
+            ("http://h.com/", 0, 0.5),
+            ("http://h.com/a b", 0, 0.9),
+            ("http://H.com/x", 0, 0.1),
+        ],
         "url string, depth int, priority double",
     )
     pol = spark.createDataFrame(
@@ -289,4 +294,57 @@ def test_round_keeps_root_page_beside_uri_rejected_url(spark):
         "host string, budget int, robots_disallow_all boolean",
     )
     out = scheduling_round(frontier, None, pol).collect()
-    assert [(r["url"], r["url_id"]) for r in out] == [("http://h.com/", "h.com")]
+    assert sorted((r["url"], r["url_id"], r["host"]) for r in out) == [
+        ("http://H.com/x", "H.com/x", "h.com"),
+        ("http://h.com/", "h.com", "h.com"),
+        ("http://h.com/a b", "h.com/a", "h.com"),
+    ]
+
+
+def test_hostile_round_matches_simulator(spark):
+    """Ports, userinfo, mixed case, IPv6 literals, a URL
+    ``java.net.URI`` rejects and URLs with no host: the distributed
+    round schedules exactly what the simulator does, host for host."""
+    from urllib.parse import urlsplit
+
+    import simulator as sim
+
+    urls = [
+        "http://h.com/a",
+        "http://h.com:8080/b",
+        "https://user:pw@h.com/c",
+        "HTTP://H.COM/d",
+        "http://H.com/e",
+        "http://h.com/f g",
+        "http://h.com/%zz/h",
+        "https://h.com/i|j",
+        "http://[::1]:8080/x",
+        "http://[2001:DB8::7]/y",
+        "http://u@[2001:db8::7]:80/z",
+        "//Other.ORG/p",
+        "https://other.org:443/q",
+        "mailto:someone@h.com",
+        "http:///no-host",
+        "http://blocked.net/r",
+    ]
+    frontier = [
+        sim.Candidate(u, i % 3, 1.0 / (i + 1)) for i, u in enumerate(urls)
+    ]
+    hosts = {urlsplit(u).hostname for u in urls} - {None}
+    budgets = {h: 2 for h in hosts}
+    disallowed = {"blocked.net"}
+    seen = {"h.com/a"}
+    want = sim.simulate_round(frontier, seen, budgets, disallowed)
+
+    frontier_df = spark.createDataFrame(
+        [(c.url, c.depth, c.priority) for c in frontier],
+        "url string, depth int, priority double",
+    )
+    pol = spark.createDataFrame(
+        [(h, b, h in disallowed) for h, b in budgets.items()],
+        "host string, budget int, robots_disallow_all boolean",
+    )
+    seen_df = spark.createDataFrame([(i,) for i in seen], "url_id string")
+    got = scheduling_round(frontier_df, seen_df, pol).collect()
+    assert sorted(tuple(r) for r in got) == sorted(want)
+    assert {r["host"] for r in got} == {"h.com", "::1", "2001:db8::7", "other.org"}

@@ -5,12 +5,15 @@ matches url_host_registered_domain)."""
 
 from __future__ import annotations
 
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from cmoncrawl_spark.functions.psl import (
+    default_psl_rules,
     default_psl_source,
     parse_psl,
     registered_domain_py,
+    with_domain_key,
     with_registered_domain,
 )
 
@@ -121,6 +124,59 @@ def test_frontier_round_groups_cctld_subdomains_by_registered_domain(spark):
     # foo.co.uk: 10 candidates across 2 subdomains capped at budget 4;
     # bar.co.uk: 5 candidates capped at budget 2
     assert by_host == {"foo.co.uk": 4, "bar.co.uk": 2}
+
+
+def _rules_of(kind: str) -> list[str]:
+    return sorted(r for r, k in default_psl_rules() if k == kind)
+
+
+_LABEL = st.one_of(
+    st.from_regex(r"[a-zA-Z0-9][a-zA-Z0-9\-]{0,5}", fullmatch=True),
+    st.from_regex(r"xn--[a-z0-9]{2,8}", fullmatch=True),
+    st.from_regex(r"[a-zäöüßΣσрфРФ中国]{1,4}", fullmatch=True),
+    st.sampled_from(["www", "WWW", "city", "co", "com"]),
+)
+#: the right end of a host: a rule of each kind, a host under a
+#: wildcard, an IDN suffix in Unicode or punycode, an unlisted TLD.
+_SUFFIX = st.one_of(
+    st.sampled_from(["co.uk", "com", "github.io", "s3.amazonaws.com", "рф", "中国"]),
+    st.sampled_from(_rules_of("normal")),
+    st.sampled_from(_rules_of("wildcard")),
+    st.builds("{}.{}".format, _LABEL, st.sampled_from(_rules_of("wildcard"))),
+    st.sampled_from(_rules_of("exception")),
+    st.sampled_from(["xn--p1ai", "xn--fiqs8s", "unknowntld", "XN--P1AI"]),
+)
+
+
+@st.composite
+def _hosts(draw):
+    """Labels in front of a suffix (none: the host is the suffix itself),
+    then mixed case, empty labels and leading or trailing dots."""
+    labels = draw(st.lists(_LABEL, max_size=3)) + draw(_SUFFIX).split(".")
+    seps = [draw(st.sampled_from([".", ".", ".", ".."])) for _ in labels[1:]]
+    host = labels[0] + "".join(s + l for s, l in zip(seps, labels[1:]))
+    host = "".join(c.upper() if draw(st.booleans()) else c for c in host)
+    lead = draw(st.sampled_from(["", "", "."]))
+    trail = draw(st.sampled_from(["", "", ".", ".."]))
+    return lead + host + trail
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.lists(_hosts(), min_size=1, max_size=40))
+def test_generated_hosts_match_python_twin(spark, hosts):
+    """Generated differential, one Spark job per batch:
+    ``with_registered_domain`` and ``with_domain_key`` equal the Python
+    twin on IDN and punycode labels, mixed case, empty labels, trailing
+    dots, public suffixes themselves and hosts under wildcard and
+    exception rules."""
+    df = spark.createDataFrame([(h,) for h in hosts], "host string")
+    rows = with_domain_key(
+        with_registered_domain(df.withColumn("raw", F.col("host")))
+    ).collect()
+    for r in rows:
+        want = registered_domain_py(r["raw"])
+        assert r["registered_domain"] == want, repr(r["raw"])
+        assert r["host"] == (want if want is not None else r["raw"]), repr(r["raw"])
 
 
 def test_parse_psl_shapes():

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "cmoncrawl_spark"
@@ -433,3 +434,58 @@ def test_every_option_exemption_is_needed():
         f"{m}.{q}({a}=)" for m, q, a in OPTION_EXEMPT if f"{m}.{q}({a}=)" not in bare
     )
     assert not stale, f"option exempt but given two values by callers: {stale}"
+
+
+# ------------------------------------------------------ one URL parser
+
+#: Spark's ``java.net.URI`` URL functions. Every URL rule reads the URL
+#: as ``urlsplit`` does, through ``functions/urls.py``; a rule on these
+#: would be a second parser, which rejects and reads URLs differently.
+URI_FUNCTIONS = ("parse_url", "try_parse_url")
+
+
+def uri_function_uses() -> list[str]:
+    """``file:line`` of every call of a ``URI_FUNCTIONS`` function in
+    the package, and of every string other than a docstring that names
+    one by itself or calls one in SQL."""
+    sql_call = re.compile(r"parse_url\s*\(", re.IGNORECASE)
+    uses = []
+    for path in sorted(_package_modules().values()):
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        docstrings = {
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(
+                n, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+            )
+            and n.body
+            and isinstance(n.body[0], ast.Expr)
+            and isinstance(n.body[0].value, ast.Constant)
+        }
+        rel = os.path.relpath(path, REPO)
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in URI_FUNCTIONS:
+                    uses.append(f"{rel}:{n.lineno} {name}()")
+            elif (
+                isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and id(n) not in docstrings
+                and (
+                    n.value.strip().lower() in URI_FUNCTIONS
+                    or sql_call.search(n.value)
+                )
+            ):
+                uses.append(f"{rel}:{n.lineno} {n.value[:40]!r}")
+    return uses
+
+
+def test_no_uri_function_in_the_package():
+    uses = uri_function_uses()
+    assert not uses, (
+        "URL rules read the URL through functions/urls.py, as urlsplit "
+        f"does, not through java.net.URI: {uses}"
+    )

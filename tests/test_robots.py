@@ -77,7 +77,7 @@ def test_longest_match_allow_wins_ties(spark):
             (3, "https://h.com/other", "h.com"),          # unmatched
             (4, "https://h.com/", "h.com"),               # unmatched
             (5, "https://other.com/private/x", "other.com"),  # no rules
-            # parse_url rejects a raw space: the path after the netloc
+            # java.net.URI rejects a raw space; urlsplit's path keeps it
             (6, "https://h.com/private/a b", "h.com"),
             (7, "https://h.com/private/ok/a b", "h.com"),
             (8, "https://u@h.com:8080/private/x?q=1#f", "h.com"),
@@ -90,6 +90,43 @@ def test_longest_match_allow_wins_ties(spark):
         1: False, 2: True, 3: True, 4: True, 5: True,
         6: False, 7: True, 8: False, 9: True,
     }
+
+
+def test_path_read_as_urlsplit_and_url_id_read_it(spark):
+    """The robots path is ``urlsplit``'s, the one the URL id reads: a
+    tab, CR or LF anywhere and leading spaces are dropped first."""
+    from urllib.parse import urlsplit
+
+    from cmoncrawl_spark.functions.urls import unify_url_id_col, unify_url_id_py
+
+    rules = parse_robots(_df(spark))
+    raw = [
+        "https://h.com/pri\tvate/x",
+        " https://h.com/private/y",
+        "https://h.com/private/o\nk/z",
+    ]
+    urls = spark.createDataFrame(
+        [(i, u, "h.com") for i, u in enumerate(raw)],
+        "id long, url string, host string",
+    )
+    got = {
+        r["id"]: (r["allowed"], r["url_id"])
+        for r in urls_allowed(urls, rules)
+        .withColumn("url_id", unify_url_id_col(F.col("url")))
+        .collect()
+    }
+    assert [urlsplit(u).path for u in raw] == [
+        "/private/x", "/private/y", "/private/ok/z",
+    ]
+    assert {i: a for i, (a, _) in got.items()} == {0: False, 1: False, 2: True}
+    assert all(got[i][1] == unify_url_id_py(u) for i, u in enumerate(raw))
+    # an opaque URI is matched as '/', after the same leading drop
+    opaque = spark.createDataFrame(
+        [(0, "\x01 mailto:someone@h.com", "h.com")],
+        "id long, url string, host string",
+    )
+    block_all = parse_robots(_df(spark, "User-agent: *\nDisallow: /\n"))
+    assert urls_allowed(opaque, block_all).first()["allowed"] is False
 
 
 def test_exact_tie_allow_wins(spark):

@@ -10,7 +10,12 @@ from __future__ import annotations
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from cmoncrawl_spark.functions.urls import unify_url_id_col, unify_url_id_py
+from cmoncrawl_spark.functions.urls import (
+    host_col,
+    path_col,
+    unify_url_id_col,
+    unify_url_id_py,
+)
 
 GOLDEN = [
     (
@@ -207,8 +212,21 @@ def _splittable(url: str) -> bool:
 
 
 _HOST = st.one_of(
-    st.from_regex(r"(www\.)?[a-z][a-z0-9\-]{0,6}(\.[a-z]{2,3}){0,2}", fullmatch=True),
-    st.sampled_from(["[::1]", "[2001:db8::7]", "127.0.0.1", "news"]),
+    st.from_regex(
+        r"(www\.|WWW\.)?[a-zA-Z][a-zA-Z0-9\-]{0,6}(\.[a-zA-Z]{2,3}){0,2}",
+        fullmatch=True,
+    ),
+    # non-ASCII letters whose lowercase differs in length or context
+    st.from_regex(r"[a-zA-ZÉéÄßẞİΣσΌǅ]{1,6}(\.[a-zA-ZΣΩ]{2,3}){0,2}", fullmatch=True),
+    st.sampled_from(
+        [
+            "[::1]",
+            "[2001:DB8::7]",
+            "[v1.AbC]",
+            "127.0.0.1",
+            "news",
+        ]
+    ),
 )
 _SEGMENT = st.from_regex(r"[a-zA-Z0-9_.~|\- %]{0,8}", fullmatch=True) | st.sampled_from(
     ["a.html", "2024", "%zz", "%4", "x y", "@h", "p.png"]
@@ -246,22 +264,31 @@ def _url_batches(draw):
 @given(_url_batches())
 def test_generated_urls_match_urlsplit(spark, urls):
     """Generated differential, one Spark job per batch: the Catalyst id
-    equals the Python twin's, and F10 keeps a URL exactly when the
-    reference's ``urlsplit(url).netloc.split(".")[0]`` is allowed."""
+    equals the Python twin's, ``host_col`` is ``urlsplit(url).hostname``,
+    ``path_col`` is ``urlsplit(url).path``, and F10 keeps a URL exactly
+    when the reference's ``urlsplit(url).netloc.split(".")[0]`` is
+    allowed."""
     from urllib.parse import urlsplit
 
     from pyspark.sql import functions as F
 
     from cmoncrawl_spark.extraction.extractor import domain_prefix_allowed
 
-    first = {u: urlsplit(u).netloc.split(".")[0] for u in urls}
+    parts = {u: urlsplit(u) for u in urls}
+    first = {u: parts[u].netloc.split(".")[0] for u in urls}
     allowed = sorted({first[u] for u in urls[::2]})
     df = spark.createDataFrame([(u,) for u in urls], "url string")
+    url = F.col("url")
     rows = df.select(
         "url",
-        unify_url_id_col(F.col("url")).alias("id"),
-        domain_prefix_allowed(F.col("url"), allowed).alias("kept"),
+        unify_url_id_col(url).alias("id"),
+        host_col(url).alias("host"),
+        path_col(url).alias("path"),
+        domain_prefix_allowed(url, allowed).alias("kept"),
     ).collect()
     for r in rows:
-        assert r["id"] == unify_url_id_py(r["url"]), repr(r["url"])
-        assert r["kept"] == (first[r["url"]] in allowed), repr(r["url"])
+        u = r["url"]
+        assert r["id"] == unify_url_id_py(u), repr(u)
+        assert r["host"] == parts[u].hostname, repr(u)
+        assert r["path"] == parts[u].path, repr(u)
+        assert r["kept"] == (first[u] in allowed), repr(u)
