@@ -19,6 +19,10 @@ Data Makes Language Models Better").
 Determinism: hash seeds are fixed constants; the minhash permutations
 are (a_j * h + b_j) mod P with a/b derived from a seeded recurrence —
 same signature on every run and cluster size.
+
+No operator here persists or caches a DataFrame, so a call leaves the
+session's cache as it found it. Only the distributed loop of
+connected_components materializes, with localCheckpoint.
 """
 
 from __future__ import annotations
@@ -54,20 +58,34 @@ def _perm_params() -> list[tuple[int, int]]:
     return params
 
 
-def shingles(text_col: Column) -> Column:
+def _words(docs: DataFrame) -> DataFrame:
+    """(id, words): each document's text split on single spaces.
+
+    A column of its own, because higher-order functions run
+    interpreted: a per-shingle lambda over ``split(text)`` would split
+    the text again for every shingle. Binding the split as the variable
+    of an outer ``transform`` instead fails on Spark 4.1: from the
+    second call in a session on, the signature UDF over such shingles
+    is left unextracted and the query cannot run."""
+    return docs.select(
+        F.col("doc_id").alias("id"), F.split(F.col("text"), " ").alias("words")
+    )
+
+
+def shingles(words: Column) -> Column:
     """Distinct word SHINGLE_K-shingles as an array<string> — native
-    exprs."""
+    exprs. ``words`` is a column of :func:`_words`, not an expression,
+    which the lambda would evaluate once per shingle."""
     k = SHINGLE_K
-    words = F.split(text_col, " ")
     n = F.size(words)
     idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
     sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, k)))
     return F.array_distinct(sh)
 
 
-def shingle_hashes(text_col: Column) -> Column:
+def shingle_hashes(words: Column) -> Column:
     """xxhash64 of each distinct shingle (array<bigint>), JVM-side."""
-    return F.transform(shingles(text_col), lambda s: F.xxhash64(s))
+    return F.transform(shingles(words), lambda s: F.xxhash64(s))
 
 
 def _minhash_signatures(hash_arrays):
@@ -84,7 +102,8 @@ def _minhash_signatures(hash_arrays):
         if arr is None or len(arr) == 0:
             out.append(empty)
             continue
-        h = np.asarray(arr, dtype=np.int64) % _P  # pmod: h >= 0 after %? numpy % keeps sign of divisor -> non-negative for positive P
+        # numpy % takes the divisor's sign, so h is in [0, _P)
+        h = np.asarray(arr, dtype=np.int64) % _P
         sig = ((a * h[None, :] + b) % _P).min(axis=1)
         out.append(sig.tolist())
     return pd.Series(out)
@@ -184,27 +203,16 @@ def _bounded_bucket_pairs(
     )
 
 
-def lsh_candidate_pairs(
-    docs: DataFrame,
-    max_bucket_size: int = 100,
-    hashed: DataFrame | None = None,
-) -> DataFrame:
+def lsh_candidate_pairs(docs: DataFrame, max_bucket_size: int = 100) -> DataFrame:
     """Candidate near-dup pairs (a < b) via LSH banding.
 
     One wide projection (signature), one explode (bands), one
     bucket-grouped pair generation guarded by
     :func:`_bounded_bucket_pairs`. Returns distinct (a, b).
-
-    ``hashed`` (optional): a precomputed ``(id, hashes)`` frame from
-    :func:`shingle_hashes` — callers that also need the shingle hashes
-    downstream (the exact-Jaccard verify) pass it in, persisted, so the
-    shingling pass runs once instead of once per consumer.
     """
     rows = NUM_PERM // BANDS
     sig_udf = minhash_signature_udf()
-    if hashed is None:
-        hashed = _hashed(docs)
-    sig = hashed.select("id", sig_udf(F.col("hashes")).alias("sig"))
+    sig = _hashed(docs).select("id", sig_udf(F.col("hashes")).alias("sig"))
     banded = sig.select(
         "id",
         F.explode(
@@ -230,9 +238,7 @@ def lsh_candidate_pairs(
 
 def _hashed(docs: DataFrame) -> DataFrame:
     """(id, hashes): each document's shingle hashes."""
-    return docs.select(
-        F.col("doc_id").alias("id"), shingle_hashes(F.col("text")).alias("hashes")
-    )
+    return _words(docs).select("id", shingle_hashes(F.col("words")).alias("hashes"))
 
 
 def jaccard(a_hashes: Column, b_hashes: Column) -> Column:
@@ -260,19 +266,15 @@ def minhash_dedup_pairs(docs: DataFrame) -> DataFrame:
     mutually-similar members, but the full within-bucket pair LIST is
     not exhaustive, so the O(n^2)-equality claim no longer applies to
     those buckets (truncation is logged).
+
+    The signature stage and both verify joins each read
+    :func:`_hashed` as a plain plan. Shingling once per consumer costs
+    no more than writing the hashes to the block cache, and a cache
+    would outlive the lazy frame returned here, which cannot release
+    it.
     """
-    # Shingle ONCE (optimization guide §2.3 "don't compute things
-    # twice"): the (id, hashes) frame feeds the signature UDF and BOTH
-    # verify joins. Persisted because the three consumers are separate
-    # subtrees of one plan — without the persist Spark recomputes the
-    # shingling (split + k-gram concat + distinct + xxhash64 per
-    # shingle, the pipeline's hottest expression chain) three times.
-    # The cache is scoped to this query's DataFrame lineage and holds
-    # only (id, array<int64>) — a few hundred MB at 10^6 docs; at larger
-    # corpora MEMORY_AND_DISK (the default) degrades to disk-backed
-    # blocks, never OOM.
-    hashed = _hashed(docs).persist()
-    cand = lsh_candidate_pairs(docs, hashed=hashed)
+    hashed = _hashed(docs)
+    cand = lsh_candidate_pairs(docs)
     return (
         cand.join(hashed.withColumnRenamed("id", "a").withColumnRenamed("hashes", "ha"), "a")
         .join(hashed.withColumnRenamed("id", "b").withColumnRenamed("hashes", "hb"), "b")
@@ -285,7 +287,7 @@ def minhash_dedup_pairs(docs: DataFrame) -> DataFrame:
 def ngram_jaccard_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact n-gram Jaccard for given (a, b) pairs — the non-LSH
     primitive (useful for verification / small candidate sets)."""
-    sh = docs.select(F.col("doc_id").alias("id"), shingles(F.col("text")).alias("sh"))
+    sh = _words(docs).select("id", shingles(F.col("words")).alias("sh"))
     return (
         pairs.join(sh.withColumnRenamed("id", "a").withColumnRenamed("sh", "sa"), "a")
         .join(sh.withColumnRenamed("id", "b").withColumnRenamed("sh", "sb"), "b")
@@ -349,12 +351,10 @@ def connected_components(
     million edges). Graphs above the threshold — the 10^10-URL-
     frontier case — run the distributed loop; set
     ``driver_max_edges=0`` to force it (the iteration-count tests do).
-    The threshold probe runs on the UNPERSISTED frame; only the rare
-    over-threshold branch persists ``pairs`` (and unpersists after the
-    edge materialization), so small graphs — the typical case — never
-    pay a cache write they would not read back (the r5 persist-before-
-    probe taxed every small graph to save the rare big one; measured
-    +18% on q_dedup_clusters and reverted in r6).
+    Nothing is cached: the probe reads at most ``driver_max_edges + 1``
+    pairs, and the distributed loop's symmetric edge list comes from
+    one full read of ``pairs`` (each pair exploded into both
+    directions), localCheckpointed before the loop.
 
     Non-convergence is an ERROR, not a silent wrong answer: if labels
     are still changing after ``max_iters`` (diameter > max_iters), the
@@ -365,17 +365,7 @@ def connected_components(
     """
     spark = pairs.sparkSession
     id_type = dict(pairs.dtypes)["a"]
-    persisted_here = False
     if driver_max_edges > 0:
-        # Probe the UNPERSISTED frame (r6, closing the r5 verdict's only
-        # bench regression): the old unconditional persist-before-probe
-        # wrote every partition of the pair pipeline through the block
-        # cache so that a rare over-threshold graph would not recompute
-        # it — taxing EVERY under-threshold graph (the typical case,
-        # measured +18% on q_dedup_clusters) to save work in the rare
-        # one. Inverted: the probe runs on the plain plan; only the
-        # over-threshold branch below persists before its edge
-        # materialization, accepting ONE pipeline recompute there.
         # ONE pass decides AND fetches: collect at most limit+1 pairs
         # (a separate count probe would execute the whole upstream
         # pair pipeline — LSH + exact verify — twice).
@@ -420,23 +410,20 @@ def connected_components(
             )
     if stats is not None:
         stats["mode"] = "distributed"
-    # Over-threshold: persist before the edge materialization so the
-    # distributed loop does not run the upstream pair pipeline once per
-    # reference (edges is localCheckpointed right below, so the cache is
-    # only needed until then).
-    if not (pairs.storageLevel.useMemory or pairs.storageLevel.useDisk):
-        pairs = pairs.persist()
-        persisted_here = True
+    a, b = F.col("a"), F.col("b")
     edges = (
-        pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(pairs.select(F.col("b").alias("u"), F.col("a").alias("v")))
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(a.alias("u"), b.alias("v")),
+                    F.struct(b.alias("u"), a.alias("v")),
+                )
+            ).alias("e")
+        )
+        .select("e.u", "e.v")
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if persisted_here:
-        # edges is materialized; the cached pairs served both the
-        # probe and the edge build and are no longer needed.
-        pairs.unpersist()
     labels = (
         edges.select(F.col("u").alias("id"))
         .distinct()
@@ -497,8 +484,7 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} "
             "iterations (graph diameter exceeds max_iters); refusing to "
-            "return unconverged labels — raise max_iters or use the "
-            "large/small-star variant"
+            "return unconverged labels — raise max_iters"
         )
     return labels
 
@@ -536,6 +522,10 @@ def simhash(docs: DataFrame) -> DataFrame:
     The only Python is one vectorized Arrow batch op (unpack bits of
     the token-hash matrix, sign of the column sums).
 
+    ``simhash64`` is non-nullable (the UDF never returns null; the
+    ``coalesce`` says so), so a self-join infers no ``IS NOT NULL``
+    filter that would evaluate the UDF again below it.
+
     Tokens hash with ``functions.scalars.portable_hash64``, so DuckDB
     reproduces the exact bit votes from md5_number_lower.
     """
@@ -545,7 +535,9 @@ def simhash(docs: DataFrame) -> DataFrame:
     tokens_hashed = F.transform(
         F.array_distinct(F.split(F.col("text"), " ")), portable_hash64
     )
-    return docs.select("doc_id", _simhash(tokens_hashed).alias("simhash64"))
+    return docs.select(
+        "doc_id", F.coalesce(_simhash(tokens_hashed), F.lit(0)).alias("simhash64")
+    )
 
 
 #: SimHash near-dup distance, and the chunks the 64-bit hash splits

@@ -15,7 +15,7 @@ SF01_DIR = "/root/testdata/sf0.01"
 def spark():
     from cmoncrawl_spark.session import get_spark
 
-    spark = get_spark("cmoncrawl-tests", cores=8, shuffle_partitions=8)
+    spark = get_spark("cmoncrawl-tests", shuffle_partitions=8)
     yield spark
 
 

@@ -365,13 +365,11 @@ def test_connected_components_driver_fastpath_matches_distributed(spark):
 
 
 def test_connected_components_overthreshold_no_pair_recompute(spark):
-    """ADVICE r4: when the graph exceeds driver_max_edges, the
-    limit-probe used to execute the upstream pair pipeline once and
-    the distributed loop's edge build executed it AGAIN. pairs is now
-    persisted around the probe, so a full second pass never happens:
-    with N edges and threshold t << N, upstream evaluations stay well
-    under 2N (probe reads <= a few partial partitions from cache-
-    misses; the edge build's full pass populates/reads the cache)."""
+    """When the graph exceeds driver_max_edges, the limit-probe reads
+    part of the upstream pair pipeline and the distributed loop's edge
+    build reads all of it once, exploding each pair into both
+    directions. With N edges and threshold t << N, upstream evaluations
+    stay under 2N; a second full read of ``pairs`` would reach 2N."""
     from pyspark.sql import functions as F
 
     from cmoncrawl_spark.operators.dedup import connected_components
@@ -397,3 +395,53 @@ def test_connected_components_overthreshold_no_pair_recompute(spark):
     # full pipeline would push this to ~2n
     assert acc.value < 2 * n, acc.value
     assert acc.value >= n
+
+
+def test_dedup_operators_leave_no_cache(spark, sf_dir):
+    """MinHash pairs, both connected-components paths and SimHash pairs
+    return plain plans: running them leaves the session's cache empty."""
+    from cmoncrawl_spark.operators.dedup import (
+        connected_components,
+        minhash_dedup_pairs,
+        simhash_near_pairs,
+    )
+
+    spark.catalog.clearCache()
+    docs2 = _docs2(spark, sf_dir)
+    pairs = minhash_dedup_pairs(docs2).select("a", "b")
+    assert pairs.count() > 0
+    s_fast: dict = {}
+    s_dist: dict = {}
+    fast = set(connected_components(pairs, stats=s_fast).collect())
+    dist = set(
+        connected_components(pairs, stats=s_dist, driver_max_edges=0).collect()
+    )
+    assert (s_fast["mode"], s_dist["mode"]) == ("driver_union_find", "distributed")
+    assert fast == dist
+    assert simhash_near_pairs(docs2).count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_shingles_split_text_once(spark):
+    """Higher-order functions run interpreted, so the shingle hashes
+    read the split words as a column instead of splitting the text in
+    the per-shingle lambda. The shingles are the distinct word k-grams
+    in order, also on texts shorter than k words and with empty
+    words."""
+    from cmoncrawl_spark.operators.dedup import SHINGLE_K, _hashed, _words, shingles
+
+    def py_shingles(text):
+        words = text.split(" ")
+        last = max(len(words) - (SHINGLE_K - 1), 1)
+        grams = [" ".join(words[i : i + SHINGLE_K]) for i in range(last)]
+        return list(dict.fromkeys(grams))
+
+    texts = ["", "a", "a b", "a b c", "a  b c d", "x y x y x y", " lead trail "]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    plan = _hashed(docs)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 1, plan
+    got = {
+        r["id"]: r["sh"]
+        for r in _words(docs).select("id", shingles(F.col("words")).alias("sh")).collect()
+    }
+    assert got == {i: py_shingles(t) for i, t in enumerate(texts)}
