@@ -248,25 +248,3 @@ def opic_round(cash: DataFrame, links: DataFrame) -> DataFrame:
         F.count("*").cast("int").alias("in_links"),
     )
 
-
-def round_metrics(
-    frontier: DataFrame,
-    scheduled: DataFrame,
-) -> DataFrame:
-    """Per-host lineage metrics for the round (north_rule): candidates
-    in, scheduled out, dropped counts."""
-    cand = with_host(frontier).groupBy("host").agg(
-        F.count("*").alias("candidates")
-    )
-    sched = scheduled.groupBy("host").agg(
-        F.count("*").alias("scheduled"),
-        F.min("fetch_rank").alias("min_rank"),
-        F.max("fetch_rank").alias("max_rank"),
-    )
-    return (
-        cand.join(sched, on="host", how="left")
-        .withColumn("scheduled", F.coalesce(F.col("scheduled"), F.lit(0)))
-        .withColumn(
-            "dropped", F.col("candidates") - F.col("scheduled")
-        )
-    )

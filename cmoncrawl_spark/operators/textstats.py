@@ -93,14 +93,18 @@ def quality_signals(df: DataFrame) -> DataFrame:
     )
 
 
-def rolling_fingerprint(text_col: Column) -> Column:
-    """Document fingerprint: min of the hashes of every 8-token window
-    (winnowing lite) — robust to local edits, native exprs only.
+def rolling_fingerprint(toks: Column) -> Column:
+    """Document fingerprint of a :func:`tokens` column: min of the
+    hashes of every 8-token window (winnowing lite) — robust to local
+    edits, native exprs only.
+
+    The tokens come in as a column, not as ``tokens(text)``: the window
+    lambda runs interpreted, so a split named inside it would split
+    the whole text again for every window.
 
     Windows hash with ``functions.scalars.portable_hash64``, which
     DuckDB reproduces bit-for-bit (md5_number_lower)."""
     window = 8
-    toks = tokens(text_col)
     n = F.size(toks)
     idx = F.sequence(F.lit(1), F.greatest(n - F.lit(window - 1), F.lit(1)))
     win_hashes = F.transform(

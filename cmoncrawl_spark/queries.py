@@ -649,10 +649,12 @@ def q_lang_id(spark, sf_dir):
 def q_rolling_fingerprint(spark, sf_dir):
     """Winnowing-lite rolling-hash fingerprint with the portable hash
     (oracle-able: DuckDB reproduces every window hash bit-for-bit)."""
-    from cmoncrawl_spark.operators.textstats import rolling_fingerprint
+    from cmoncrawl_spark.operators.textstats import rolling_fingerprint, tokens
 
     docs = _documents_floor(spark, sf_dir)
-    return docs.select("doc_id", rolling_fingerprint(F.col("text")).alias("fp64"))
+    return docs.select("doc_id", tokens(F.col("text")).alias("toks")).select(
+        "doc_id", rolling_fingerprint(F.col("toks")).alias("fp64")
+    )
 
 
 def q_image_features(spark, sf_dir):

@@ -2,8 +2,9 @@
 
 north_rule requirements implemented here:
 - each round is ONE pure DataFrame job (operators/frontier.py);
-- per-partition bloom shards, frontier state and metrics are
-  checkpointed after every round with lineage columns (round_id);
+- per-partition bloom shards and frontier state are checkpointed
+  after every round under ``round=N`` dirs, and the round's counts
+  (candidates in, scheduled out) go into its ``_round_N.json`` marker;
 - a killed driver resumes from the last committed round (resume test
   in tests/test_rounds.py);
 - every scheduled url enters the URL-seen set: the engine simulates
@@ -46,11 +47,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from cmoncrawl_spark.operators import bloom as bloom_ops
-from cmoncrawl_spark.operators.frontier import (
-    policy_budget_cap,
-    round_metrics,
-    scheduling_round,
-)
+from cmoncrawl_spark.operators.frontier import policy_budget_cap, scheduling_round
 
 _log = logging.getLogger(__name__)
 
@@ -121,6 +118,9 @@ def run_round(
 
     frontier: candidates for THIS round (url, depth, priority).
     Every scheduled url's canonical id enters the seen set.
+    The marker records ``candidates`` (frontier rows in) and
+    ``scheduled`` (fetch-list rows out), both observed on the
+    checkpoint job; per-host counts and ranks are in ``fetch_list``.
     budget_cap: constant max-budget bound for the WindowGroupLimit
     pre-shuffle cut (see scheduling_round); multi-round drivers derive
     it ONCE from the round-invariant policies table instead of paying
@@ -157,12 +157,13 @@ def run_round(
         # grow by up to one per shard per round; nothing compacts them.
         shards = store.read_all("bloom_shards", round_id - 1)
 
-    # The round's row count is observed while the checkpoint is
+    # The round's rows in and out are observed while the checkpoint is
     # materialized: no separate count job.
+    candidates = Observation(f"round_{round_id}_in")
     scheduled = Observation(f"round_{round_id}")
     fetch_list = (
         scheduling_round(
-            frontier,
+            frontier.observe(candidates, F.count(F.lit(1)).alias("n")),
             seen,
             host_policies,
             bloom_shards=shards,
@@ -175,50 +176,44 @@ def run_round(
     scheduled_count = scheduled.get["n"]
 
     new_ids = fetch_list.select("url_id")
-    metrics = round_metrics(frontier, fetch_list).withColumn(
-        "round_id", F.lit(round_id)
+    new_shard_df = bloom_ops.build_shards(
+        new_ids,
+        max(1024, scheduled_count // num_shards),
+        num_shards=num_shards,
     )
+    # Size the delta files from the round's actual row count instead
+    # of inheriting the checkpoint's partition count (guide §6: small
+    # files hurt twice — here every later round re-lists every prior
+    # delta dir). ~100k rows per file locally; rounds big enough to
+    # exceed that keep proportional parallelism.
+    n_files = max(1, scheduled_count // 100_000)
 
-    # The state writes are INDEPENDENT jobs over the already-
-    # materialized checkpoint (metrics additionally re-aggregates the
-    # frontier): submit them concurrently so each job's straggler tail
-    # back-fills with the next job's tasks instead of leaving the
-    # cluster idle (optimization guide §2.6 "overlap independent
-    # jobs"; FIFO scheduling gives exactly the back-fill behavior).
-    # The three delta writes size their files (and the bloom) from the
-    # observed row count. ALL writes must SUCCEED before the commit
-    # marker below — the commit point is unchanged, so crash
-    # consistency is too: any write failure leaves the round
-    # uncommitted, same as the sequential code. Measured (same-JVM
-    # interleaved A/B, sf0.1, 4 reps): crawl_3_rounds 5.9-6.5 s
-    # sequential -> 4.4-5.2 s. The pool threads run through
-    # inheritable_thread_target so the writes' jobs keep the caller's
-    # job group, description and tags.
+    # The three state writes are INDEPENDENT jobs over the already-
+    # materialized checkpoint: submit them concurrently so each job's
+    # straggler tail back-fills with the next job's tasks instead of
+    # leaving the cluster idle (optimization guide §2.6 "overlap
+    # independent jobs"; FIFO scheduling gives exactly the back-fill
+    # behavior). ALL writes must SUCCEED before the commit marker
+    # below — the commit point is unchanged, so crash consistency is
+    # too: any write failure leaves the round uncommitted, same as the
+    # sequential code. Measured (same-JVM interleaved A/B, sf0.1,
+    # 4 reps): crawl_3_rounds 5.9-6.5 s sequential -> 4.4-5.2 s. The
+    # pool threads run through inheritable_thread_target so the
+    # writes' jobs keep the caller's job group, description and tags.
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
     write = inheritable_thread_target(spark)(store.write)
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = {"metrics": pool.submit(write, "metrics", round_id, metrics)}
-        new_shard_df = bloom_ops.build_shards(
-            new_ids,
-            max(1024, scheduled_count // num_shards),
-            num_shards=num_shards,
-        )
-        # Size the delta files from the round's actual row count
-        # instead of inheriting the checkpoint's partition count
-        # (guide §6: small files hurt twice — here every later round
-        # re-lists every prior delta dir). ~100k rows per file locally;
-        # rounds big enough to exceed that keep proportional
-        # parallelism.
-        n_files = max(1, scheduled_count // 100_000)
-        for name, df in (
-            ("fetch_list", fetch_list),
-            ("seen_delta", new_ids),
-            ("bloom_shards", new_shard_df),
-        ):
-            futs[name] = pool.submit(write, name, round_id, df.coalesce(n_files))
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futs = {
+            name: pool.submit(write, name, round_id, df.coalesce(n_files))
+            for name, df in (
+                ("fetch_list", fetch_list),
+                ("seen_delta", new_ids),
+                ("bloom_shards", new_shard_df),
+            )
+        }
     # every write has finished here: report each failure, raise the first
     failed = [(n, e) for n, f in futs.items() if (e := f.exception())]
     for name, exc in failed[1:]:
@@ -230,6 +225,7 @@ def run_round(
         round_id,
         {
             "round_id": round_id,
+            "candidates": candidates.get["n"],
             "scheduled": scheduled_count,
             "seen_total": prev_total + scheduled_count,
             "num_shards": num_shards,

@@ -232,7 +232,7 @@ def test_round_respects_budget_and_robots(spark, sf_dir):
     frontier = _frontier(spark, sf_dir)
     seen = _seen(spark)
     pol = spark.table("host_policies")
-    out = scheduling_round(frontier, seen, pol).cache()
+    out = scheduling_round(frontier, seen, pol)
     per_host = out.groupBy("host").agg(
         F.count("*").alias("n"), F.max("budget").alias("budget")
     )

@@ -236,3 +236,14 @@ def test_python_node_census(spark, sf_dir):
         if "InMemoryRelation" in plan:
             cached.append(name)
     assert (got, cached) == (PYTHON_NODES, [])
+
+
+def test_rolling_fingerprint_splits_text_once(spark, sf_dir):
+    """Higher-order functions run interpreted: the fingerprint's window
+    lambda reads the tokens as a column, so each document's text is
+    split once, not once per 8-token window."""
+    from cmoncrawl_spark.queries import q_rolling_fingerprint
+
+    df = q_rolling_fingerprint(spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 1, plan

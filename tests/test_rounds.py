@@ -49,6 +49,7 @@ def _collect_round(store, r):
 
 
 ROUNDS = 3
+FANOUT = 2  # run_crawl's and simulate_crawl's default
 
 
 def test_rounds_match_simulator(spark, setup):
@@ -63,6 +64,14 @@ def test_rounds_match_simulator(spark, setup):
         got = _collect_round(store, r)
         want = sorted(sim_rounds[r])
         assert got == want, f"round {r}: {len(got)} vs {len(want)} fetches"
+
+    # each marker counts the round's frontier in and its fetches out:
+    # the seeds, then FANOUT children per earlier fetch
+    frontier_sizes = [len(seeds)] + [FANOUT * len(f) for f in sim_rounds[:-1]]
+    for r in range(ROUNDS):
+        info = store.round_info(r)
+        counts = (info["candidates"], info["scheduled"])
+        assert counts == (frontier_sizes[r], len(sim_rounds[r])), f"round {r}"
 
     spark_seen = {
         row["url_id"]
@@ -141,16 +150,6 @@ def test_round_blobs_are_sized_from_the_round_count(spark, setup):
         assert m_bits == {want}, f"round {r}: {scheduled} scheduled"
 
 
-def test_metrics_lineage(spark, setup):
-    seeds_df, pol_df, _s, _b, _d, state_dir = setup
-    store = StateStore(spark, state_dir + "_m")
-    run_crawl(store, seeds_df, pol_df, rounds=2, num_shards=8)
-    m = store.read("metrics", 1)
-    rows = m.collect()
-    assert rows and all(r["round_id"] == 1 for r in rows)
-    assert all(r["scheduled"] <= r["candidates"] for r in rows)
-
-
 def test_failed_state_write_leaves_round_uncommitted(spark, setup):
     """The r6 concurrent state writes (guide §2.6) must keep the commit
     contract: if ANY of the overlapped per-round writes fails, the
@@ -223,5 +222,29 @@ def test_state_writes_keep_callers_job_properties(spark, setup):
         run_crawl(store, seeds_df, pol_df, rounds=1, num_shards=8)
     finally:
         spark.sparkContext.setJobDescription(None)
-    names = ("metrics", "fetch_list", "seen_delta", "bloom_shards")
+    names = ("fetch_list", "seen_delta", "bloom_shards")
     assert seen == {n: "crawl/round0" for n in names}
+
+
+#: Spark jobs of a 2-round crawl of the test fixture (300 seeds,
+#: ``num_shards=8``), with the writes in the pool threads. A change that
+#: adds or removes a job per round updates this number.
+CRAWL_JOBS = 28
+
+
+def test_crawl_job_census(spark, setup):
+    """Every Spark job of a crawl, the pool threads' state writes
+    included, runs in the caller's job group; pin how many there are."""
+    seeds_df, pol_df, _s, _b, _d, state_dir = setup
+    sc = spark.sparkContext
+    store = StateStore(spark, state_dir + "_census")
+    group = f"crawl-census-{os.getpid()}"
+    sc.setJobGroup(group, "2-round crawl census")
+    try:
+        run_crawl(store, seeds_df, pol_df, rounds=2, num_shards=8)
+    finally:
+        sc._jsc.clearJobGroup()
+    # job starts reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == CRAWL_JOBS, f"2-round crawl ran {jobs} Spark jobs, pinned {CRAWL_JOBS}"

@@ -178,6 +178,7 @@ def test_lang_id_and_quality(spark):
         lang_id,
         quality_signals,
         rolling_fingerprint,
+        tokens,
     )
 
     df = spark.createDataFrame(
@@ -197,7 +198,7 @@ def test_lang_id_and_quality(spark):
         assert 0 <= r["q_alpha_ratio"] <= 1
         assert r["q_n_tokens"] > 0
 
-    fp = df.select(rolling_fingerprint(F.col("text")).alias("fp")).collect()
+    fp = df.select(rolling_fingerprint(tokens(F.col("text"))).alias("fp")).collect()
     assert all(r["fp"] is not None for r in fp)
 
 
