@@ -35,8 +35,11 @@ Mappings (Spark-first, documented divergences):
   instead (the reference's API/S3 download path) and extracts from
   the response payload, decoded with its HTTP Content-Type charset.
 - a config names one route with one extractor; the reference's
-  multi-route router is not implemented, so more is refused. With one
-  route nothing routes by date, so extract has no ``--date``.
+  multi-route router is not implemented, so more is refused. Record
+  extract keeps only the records that route takes (url matched by its
+  regexes, crawl time inside the extractor's since/to) and drops the
+  rest before any fetch. Html mode has no crawl time and routes
+  nothing, so extract has no ``--date``.
 """
 
 from __future__ import annotations
@@ -93,8 +96,8 @@ def _fetch_responses(recs: DataFrame, base: str) -> DataFrame:
 def load_config(path: str) -> dict:
     """Reference ExtractConfig loader (extract.py:176-184): validates
     the minimal shape instead of pydantic. ``run_extract`` applies one
-    extractor to every row, so a second route or a second extractor is
-    refused rather than silently ignored."""
+    extractor to every row its one route takes, so a second route or a
+    second extractor is refused rather than silently ignored."""
     with open(path) as f:
         cfg = json.load(f)
     if "routes" not in cfg or not isinstance(cfg["routes"], list):
@@ -290,7 +293,8 @@ def run_extract(args: argparse.Namespace) -> None:
 
     # load_config admits exactly one route with one extractor
     route0 = cfg["routes"][0]
-    name = route0["extractors"][0]["name"]
+    ex0 = route0["extractors"][0]
+    name = ex0["name"]
     extractor = import_extractor(extractors_path, name)
 
     if args.mode == "html":
@@ -301,26 +305,46 @@ def run_extract(args: argparse.Namespace) -> None:
             df, extractor, passthrough=["source_path"], url_col="url"
         )
     else:  # record mode: jsonl with embedded html (or DAO fetch)
+        from cmoncrawl_spark.operators.routing import Route, route_records
+
         schema = StructType(
             JSONL_SCHEMA.fields + [StructField("html", StringType())]
         )
         raw = spark.read.schema(schema).json(args.files)
-        if args.dao_base:
-            flat = raw.select(
+        # route before the fetch: a record whose url the route's
+        # regexes miss, or whose crawl time falls outside the
+        # extractor's since/to window, is neither fetched nor extracted
+        # (a null time under a window matches no route)
+        since, to = (
+            datetime.fromisoformat(ex0[k]) if ex0.get(k) else None
+            for k in ("since", "to")
+        )
+        route = Route(name, route0["regexes"], since, to)
+        flat = route_records(
+            raw.select(
                 F.col("domain_record.url").alias("url"),
                 F.col("domain_record.filename").alias("filename"),
                 F.col("domain_record.offset").alias("offset"),
                 F.col("domain_record.length").alias("length"),
                 F.col("domain_record.encoding").alias("record_encoding"),
+                F.col("domain_record.timestamp").alias("timestamp"),
+                "html",
+            ),
+            [route],
+            ts_col="timestamp",
+        ).where(F.col("route").isNotNull())
+        if args.dao_base:
+            df = _fetch_responses(
+                flat.select("url", "filename", "offset", "length", "record_encoding"),
+                args.dao_base,
             )
-            df = _fetch_responses(flat, args.dao_base)
         else:
-            df = raw.where(
+            df = flat.where(
                 F.col("html").isNotNull() & (F.col("html") != "")
             ).select(
-                F.col("domain_record.url").alias("url"),
+                "url",
                 F.encode("html", "UTF-8").alias("html"),
-                F.col("domain_record.encoding").alias("record_encoding"),
+                "record_encoding",
             )
         out = apply_extractor(
             df,

@@ -2,9 +2,10 @@
 
 north_rule requirements implemented here:
 - each round is ONE pure DataFrame job (operators/frontier.py);
-- per-partition bloom shards and frontier state are checkpointed
-  after every round under ``round=N`` dirs, and the round's counts
-  (candidates in, scheduled out) go into its ``_round_N.json`` marker;
+- every round writes its fetch list, seen delta and per-partition
+  bloom shards under ``round=N`` dirs, and the round's counts
+  (candidates in, scheduled out) go into its ``_round_N.json`` marker.
+  The ``fetch_list`` table is the round's checkpoint (run_round);
 - a killed driver resumes from the last committed round (resume test
   in tests/test_rounds.py);
 - every scheduled url enters the URL-seen set: the engine simulates
@@ -111,26 +112,32 @@ def run_round(
     round_id: int,
     frontier: DataFrame,
     host_policies: DataFrame,
-    num_shards: int = 32,
-    budget_cap: int | None = None,
+    num_shards: int,
+    budget_cap: int | None,
 ) -> DataFrame:
-    """Run + commit one scheduling round; returns the fetch list.
+    """Run + commit one scheduling round; returns the fetch list, read
+    back from the round's ``fetch_list`` table.
 
     frontier: candidates for THIS round (url, depth, priority).
     Every scheduled url's canonical id enters the seen set.
     The marker records ``candidates`` (frontier rows in) and
     ``scheduled`` (fetch-list rows out), both observed on the
-    checkpoint job; per-host counts and ranks are in ``fetch_list``.
+    ``fetch_list`` write job; per-host counts and ranks are in
+    ``fetch_list``.
     budget_cap: constant max-budget bound for the WindowGroupLimit
     pre-shuffle cut (see scheduling_round); multi-round drivers derive
     it ONCE from the round-invariant policies table instead of paying
     one aggregation job per round.
 
+    The ``fetch_list`` table is the round's checkpoint: the seen delta,
+    the bloom shards, the next round's frontier and a resume all read
+    it, so the scheduling plan runs once and nothing of the round stays
+    in the block manager.
+
     Bloom sizing: the round's blobs hold only its own new ids, so they
     are sized from the round's scheduled count, ``max(1024, scheduled
-    // num_shards)`` ids per shard — the count the delta-file sizing
-    takes anyway. No crawl-wide estimate is needed, and the filter
-    bits written per round follow what the round adds.
+    // num_shards)`` ids per shard. No crawl-wide estimate is needed,
+    and the filter bits written per round follow what the round adds.
     """
     spark = store.spark
     if round_id == 0:
@@ -157,23 +164,24 @@ def run_round(
         # grow by up to one per shard per round; nothing compacts them.
         shards = store.read_all("bloom_shards", round_id - 1)
 
-    # The round's rows in and out are observed while the checkpoint is
-    # materialized: no separate count job.
+    # The round's rows in and out are observed while fetch_list is
+    # written: no separate count job.
     candidates = Observation(f"round_{round_id}_in")
     scheduled = Observation(f"round_{round_id}")
-    fetch_list = (
-        scheduling_round(
-            frontier.observe(candidates, F.count(F.lit(1)).alias("n")),
-            seen,
-            host_policies,
-            bloom_shards=shards,
-            num_shards=num_shards,
-            budget_cap=budget_cap,
-        )
-        .observe(scheduled, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
+    plan = scheduling_round(
+        frontier.observe(candidates, F.count(F.lit(1)).alias("n")),
+        seen,
+        host_policies,
+        bloom_shards=shards,
+        num_shards=num_shards,
+        budget_cap=budget_cap,
+    ).observe(scheduled, F.count(F.lit(1)).alias("n"))
+    store.write("fetch_list", round_id, plan)
     scheduled_count = scheduled.get["n"]
+    # read back with the plan's schema: no schema-inference job
+    fetch_list = spark.read.schema(plan.schema).parquet(
+        store._path("fetch_list", round_id)
+    )
 
     new_ids = fetch_list.select("url_id")
     new_shard_df = bloom_ops.build_shards(
@@ -181,35 +189,30 @@ def run_round(
         max(1024, scheduled_count // num_shards),
         num_shards=num_shards,
     )
-    # Size the delta files from the round's actual row count instead
-    # of inheriting the checkpoint's partition count (guide §6: small
-    # files hurt twice — here every later round re-lists every prior
-    # delta dir). ~100k rows per file locally; rounds big enough to
-    # exceed that keep proportional parallelism.
-    n_files = max(1, scheduled_count // 100_000)
 
-    # The three state writes are INDEPENDENT jobs over the already-
-    # materialized checkpoint: submit them concurrently so each job's
-    # straggler tail back-fills with the next job's tasks instead of
-    # leaving the cluster idle (optimization guide §2.6 "overlap
-    # independent jobs"; FIFO scheduling gives exactly the back-fill
-    # behavior). ALL writes must SUCCEED before the commit marker
-    # below — the commit point is unchanged, so crash consistency is
-    # too: any write failure leaves the round uncommitted, same as the
-    # sequential code. Measured (same-JVM interleaved A/B, sf0.1,
-    # 4 reps): crawl_3_rounds 5.9-6.5 s sequential -> 4.4-5.2 s. The
-    # pool threads run through inheritable_thread_target so the
+    # The two derived writes are INDEPENDENT jobs over the written
+    # fetch list: submit them concurrently so each job's straggler
+    # tail back-fills with the other job's tasks instead of leaving
+    # the cluster idle (optimization guide §2.6 "overlap independent
+    # jobs"; FIFO scheduling gives exactly the back-fill behavior).
+    # BOTH writes must SUCCEED before the commit marker below — the
+    # commit point is unchanged, so crash consistency is too: any
+    # write failure leaves the round uncommitted, same as sequential
+    # code. Measured (perfbench crawl_rounds, 6 interleaved pairs per
+    # A/B, 4-core host): writing the two one after the other lowered
+    # the median items_per_s by 11% (0 of 6 pairs won) in one A/B and
+    # by 4.7% (2 of 6), inside the spread between runs, in another.
+    # The pool threads run through inheritable_thread_target so the
     # writes' jobs keep the caller's job group, description and tags.
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
     write = inheritable_thread_target(spark)(store.write)
-    with ThreadPoolExecutor(max_workers=3) as pool:
+    with ThreadPoolExecutor(max_workers=2) as pool:
         futs = {
-            name: pool.submit(write, name, round_id, df.coalesce(n_files))
+            name: pool.submit(write, name, round_id, df)
             for name, df in (
-                ("fetch_list", fetch_list),
                 ("seen_delta", new_ids),
                 ("bloom_shards", new_shard_df),
             )
@@ -296,8 +299,7 @@ def run_crawl(
         budget_cap = policy_budget_cap(host_policies)
         for r in range(start, rounds):
             fetch = run_round(
-                store, r, frontier, host_policies, num_shards,
-                budget_cap=budget_cap,
+                store, r, frontier, host_policies, num_shards, budget_cap
             )
             frontier = expand_links(fetch, fanout=fanout)
     finally:

@@ -206,6 +206,55 @@ def test_cli_extract_record_mode_dao_base(spark, plugin_cfg, tmp_path, warc_reco
     assert rows[0]["url"] == url
 
 
+def test_cli_extract_record_mode_routes_before_fetch(spark, plugin_cfg, tmp_path, warc_record):
+    """record extract keeps only the records its one route takes: the
+    url must match the route's regexes and the crawl time must fall in
+    the extractor's since/to window (a null time falls outside it).
+    The other records are dropped before the fetch, so their archive
+    files, which do not exist, are never read."""
+    cfg = json.loads(open(plugin_cfg).read())
+    cfg["routes"][0]["regexes"] = [r"^https://news\.example\.com/"]
+    cfg["routes"][0]["extractors"][0].update(
+        since="2020-01-01T00:00:00", to="2024-01-01T00:00:00"
+    )
+    routed_cfg = tmp_path / "routed.json"
+    routed_cfg.write_text(json.dumps(cfg))
+
+    url = "https://news.example.com/a"
+    record, _page = warc_record(url, 900)
+    base = tmp_path / "archives"
+    base.mkdir()
+    (base / "a.warc.gz").write_bytes(record)
+    recs = [
+        (url, "a.warc.gz", "2023-01-01T00:00:00"),
+        ("https://shop.example.com/b", "missing-b.warc.gz", "2023-01-01T00:00:00"),
+        ("https://news.example.com/c", "missing-c.warc.gz", "2019-06-01T00:00:00"),
+        ("https://news.example.com/d", "missing-d.warc.gz", None),
+    ]
+    records = tmp_path / "records.jsonl"
+    records.write_text(
+        "".join(
+            json.dumps(
+                {
+                    "domain_record": {
+                        "url": u,
+                        "filename": f,
+                        "offset": 0,
+                        "length": len(record),
+                        "timestamp": ts,
+                    }
+                }
+            )
+            + "\n"
+            for u, f, ts in recs
+        )
+    )
+    out = str(tmp_path / "out_routed")
+    main(["extract", str(routed_cfg), out, str(records), "record", "--dao_base", str(base)])
+    rows = _read_jsonl_dir(out)
+    assert [(r["url"], r["title"]) for r in rows] == [(url, f"<title>{url}</title>")]
+
+
 def test_cli_extract_record_mode_dao_base_http_charset(spark, plugin_cfg, tmp_path):
     """The charset of the WARC response's HTTP Content-Type (header
     name in any case) decodes the page when the domain record names no
@@ -233,6 +282,7 @@ def test_cli_extract_record_mode_dao_base_http_charset(spark, plugin_cfg, tmp_pa
                     "filename": "a.warc.gz",
                     "offset": 0,
                     "length": len(record),
+                    "timestamp": "2023-01-01T00:00:00",
                 }
             }
         )
@@ -285,8 +335,9 @@ def test_cli_verbosity_sets_package_log_level(tmp_path, verbosity, level):
 
 
 def test_cli_extract_has_no_date_flag(tmp_path, capsys):
-    """One route never routes by date, so ``--date`` is a usage error,
-    not a flag that is parsed and ignored."""
+    """Html mode routes nothing and record mode routes on each record's
+    own crawl time, so ``--date`` is a usage error, not a flag that is
+    parsed and ignored."""
     with pytest.raises(SystemExit) as exit_:
         main(
             [

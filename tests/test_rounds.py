@@ -226,10 +226,26 @@ def test_state_writes_keep_callers_job_properties(spark, setup):
     assert seen == {n: "crawl/round0" for n in names}
 
 
+def test_crawl_leaves_no_persistent_rdd(spark, setup):
+    """A crawl releases everything it materializes: a round's
+    checkpoint is its ``fetch_list`` table, not a block-manager copy
+    that only JVM GC frees, and the view-derived policies that
+    ``run_crawl`` persists are unpersisted when it returns."""
+    seeds_df, pol_df, _s, _b, _d, state_dir = setup
+    assert not pol_df.is_cached  # so run_crawl takes its persist path
+    jsc = spark.sparkContext._jsc
+    before = len(jsc.getPersistentRDDs())
+    store = StateStore(spark, state_dir + "_rdds")
+    run_crawl(store, seeds_df, pol_df, rounds=ROUNDS, num_shards=8)
+    assert store.last_committed_round() == ROUNDS - 1
+    assert len(jsc.getPersistentRDDs()) == before
+
+
 #: Spark jobs of a 2-round crawl of the test fixture (300 seeds,
-#: ``num_shards=8``), with the writes in the pool threads. A change that
-#: adds or removes a job per round updates this number.
-CRAWL_JOBS = 28
+#: ``num_shards=8``), with the seen-delta and bloom writes in the pool
+#: threads. A change that adds or removes a job per round updates this
+#: number.
+CRAWL_JOBS = 25
 
 
 def test_crawl_job_census(spark, setup):
