@@ -6,23 +6,22 @@ this is a north_rule addition, implemented REP-style (RFC 9309):
 
 - :func:`parse_robots` — robots.txt text -> rules DataFrame, all
   native expressions: split lines, strip comments, parse
-  ``field: value`` pairs, track the active user-agent group (the line
-  number of the nearest preceding ``User-agent:`` header chain), keep
-  the groups whose chain names ``*``, the only agent the engine
-  crawls as.
-- :func:`host_policies_from_robots` — per-host policy row:
-  crawl_delay (first in the winning group) + robots_disallow_all
-  (a ``Disallow: /`` with no overriding ``Allow``).
+  ``field: value`` pairs, track the active user-agent group, keep the
+  groups whose ``User-agent`` chain names ``*``, the only agent the
+  engine crawls as.
+- :func:`host_policies_from_robots` — one aggregation per host:
+  crawl_delay (the first in the ``*`` group) + robots_disallow_all
+  (a ``Disallow: /`` with no overriding ``Allow: /``).
 - :func:`urls_allowed` — longest-match-wins allow/disallow per URL
   (RFC 9309 §2.2.2: most specific path prefix; Allow wins ties).
-  One broadcast join (rules tables are tiny next to a frontier) + one
-  max_by aggregation per URL; no UDF anywhere.
+  The rules collapse to one array row per host, broadcast to the
+  frontier, which is neither shuffled nor aggregated; no UDF anywhere.
 
-Group tracking trick (pure exprs, no iteration): explode lines WITH
-``posexplode``; a line's group id = max line-number of any
-``user-agent`` line at-or-before it that starts a group (computed with
-a running max window per host — user-agent lines directly following
-another user-agent line CHAIN into the same group per RFC 9309 §2.1).
+Group tracking (pure expressions, no iteration): explode lines WITH
+``posexplode``; a line's group id is the line number of the latest
+``user-agent`` line at-or-before it that starts a group (a running
+``last`` window per host; user-agent lines directly following another
+user-agent line CHAIN into the same group per RFC 9309 §2.1).
 """
 
 from __future__ import annotations
@@ -48,9 +47,10 @@ def _lines(robots_col: Column) -> Column:
 
 def parse_robots(df: DataFrame) -> DataFrame:
     """(host, robots_txt) -> (host, rule, path, line_no), rules of the
-    group(s) whose ``User-agent`` chain names ``*``. The engine crawls
-    as ``*``, which no named agent's group matches (RFC 9309 §2.2.1),
-    so those groups are dropped.
+    group(s) whose ``User-agent`` chain names ``*``: one host-partitioned
+    pass, no join and no aggregate. The engine crawls as ``*``, which
+    no named agent's group matches (RFC 9309 §2.2.1), so those groups
+    are dropped.
 
     rule ∈ {'allow', 'disallow', 'crawl-delay'}; for crawl-delay,
     ``path`` holds the numeric value as a string.
@@ -78,54 +78,42 @@ def parse_robots(df: DataFrame) -> DataFrame:
         F.last(chain_start, ignorenulls=True).over(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
-    ).where(F.col("group_id").isNotNull())
-
-    # which agents own each group
-    agents = (
-        grouped.where(is_ua)
-        .groupBy("host", "group_id")
-        .agg(F.collect_set(F.lower(F.col("value"))).alias("agents"))
     )
-    rules = grouped.where(~is_ua).join(agents, ["host", "group_id"])
-    return rules.where(F.array_contains(F.col("agents"), "*")).select(
-        "host",
-        F.col("field").alias("rule"),
-        F.col("value").alias("path"),
-        "line_no",
-    ).where(F.col("rule").isin("allow", "disallow", "crawl-delay"))
+    # a group is '*''s when one of its UA lines names it; this window
+    # reuses the host partitioning. A null group_id has no UA line.
+    star = F.bool_or(is_ua & (F.lower(F.col("value")) == "*")).over(
+        Window.partitionBy("host", "group_id")
+    )
+    is_rule = F.col("field").isin("allow", "disallow", "crawl-delay")
+    return (
+        grouped.withColumn("_star", star)
+        .where(F.col("_star") & is_rule)
+        .select(
+            "host",
+            F.col("field").alias("rule"),
+            F.col("value").alias("path"),
+            "line_no",
+        )
+    )
 
 
 def host_policies_from_robots(rules: DataFrame) -> DataFrame:
-    """(host, crawl_delay_s, robots_disallow_all) from parsed rules; a
-    host without a crawl-delay rule gets ``DEFAULT_CRAWL_DELAY_S``."""
-    delay = (
-        rules.where(F.col("rule") == "crawl-delay")
-        .groupBy("host")
-        .agg(F.min_by("path", "line_no").cast("double").alias("crawl_delay_s"))
-    )
-    # disallow-all: a 'Disallow: /' present and no 'Allow: /' override
-    flags = rules.groupBy("host").agg(
-        F.max(
-            ((F.col("rule") == "disallow") & (F.col("path") == "/")).cast("int")
-        ).alias("_dis_all"),
-        F.max(
-            ((F.col("rule") == "allow") & (F.col("path") == "/")).cast("int")
-        ).alias("_allow_all"),
-    )
-    hosts = rules.select("host").distinct()
-    return (
-        hosts.join(flags, "host", "left")
-        .join(delay, "host", "left")
-        .select(
-            "host",
-            F.coalesce(F.col("crawl_delay_s"), F.lit(DEFAULT_CRAWL_DELAY_S)).alias(
-                "crawl_delay_s"
-            ),
-            (
-                (F.coalesce(F.col("_dis_all"), F.lit(0)) == 1)
-                & (F.coalesce(F.col("_allow_all"), F.lit(0)) == 0)
-            ).alias("robots_disallow_all"),
-        )
+    """(host, crawl_delay_s, robots_disallow_all) from parsed rules, one
+    aggregation per host: crawl_delay_s is the first ``Crawl-delay``
+    line's value, or ``DEFAULT_CRAWL_DELAY_S`` when there is none or
+    it is not a number; robots_disallow_all is a ``Disallow: /`` with
+    no ``Allow: /`` beside it."""
+    rule, path = F.col("rule"), F.col("path")
+    # min_by skips rows whose ordering is null: the non-delay rules
+    first_delay = F.min_by(path, F.when(rule == "crawl-delay", F.col("line_no")))
+    return rules.groupBy("host").agg(
+        F.coalesce(
+            first_delay.try_cast("double"), F.lit(DEFAULT_CRAWL_DELAY_S)
+        ).alias("crawl_delay_s"),
+        (
+            F.bool_or((rule == "disallow") & (path == "/"))
+            & ~F.bool_or((rule == "allow") & (path == "/"))
+        ).alias("robots_disallow_all"),
     )
 
 
@@ -142,9 +130,7 @@ def urls_allowed(urls: DataFrame, rules: DataFrame) -> DataFrame:
     host, and the longest-match winner resolves with higher-order
     array expressions (filter + aggregate) inside codegen. The
     frontier is never shuffled and never row-expanded: one output row
-    per input row, no groupBy, no window, no UDF. (The previous shape
-    — expand the join then groupBy every url column — shuffled the
-    whole frontier on a wide key; this one is shuffle-free.)
+    per input row, no groupBy, no window, no UDF.
     """
     url = F.col("url")
     path = path_col(url)

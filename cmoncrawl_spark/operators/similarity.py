@@ -123,10 +123,13 @@ COSINE_MAX_BUCKET = 200
 
 def cosine_dup_pairs(vecs: DataFrame) -> DataFrame:
     """Near-dup pairs (a < b) with exact cosine >=
-    ``COSINE_DUP_THRESHOLD``, found via 12-bit sign-LSH buckets. At a
-    threshold this near 1 the sign signature of the two vectors is
-    (near-)identical, so bucket-equality recall is ~1; the exact verify
-    inside buckets removes all false candidates.
+    ``COSINE_DUP_THRESHOLD``, found via 12-bit sign-LSH buckets. Not
+    exact: a pair at cosine θ lands in one bucket only when all 12
+    hyperplanes agree, so the recall at θ is about
+    (1 − arccos(θ)/π)^12, ≈ 0.58 at θ = 0.99 (ROADMAP direction 11's
+    probe found 58% of the pairs at cosine 0.9905). Pairs near 1
+    (exact copies) are always found. The exact verify inside buckets
+    removes all false candidates.
 
     Degenerate-bucket guard: buckets over ``COSINE_MAX_BUCKET`` (mass-
     duplicated embeddings — common for boilerplate pages) switch to

@@ -214,18 +214,57 @@ PYTHON_NODES = {
     "q_simhash": 1,
     "q_simhash_pairs": 2,
 }
+#: (shuffle ``Exchange``, ``BroadcastExchange``) nodes in each
+#: registered query's physical plan before execution, taken the same
+#: way; a query not listed has none, and a ``ReusedExchange`` is not
+#: counted. A shuffle or a broadcast is most of an AQE stage, so a
+#: change that adds or removes one updates this table.
+EXCHANGES = {
+    "q_url_seen_dedup": (1, 0),
+    "q_exact_dedup_docs": (1, 0),
+    "q_dedup_keep_longest": (1, 0),
+    "q_frontier_round": (8, 2),
+    "q_frontier_round_exact": (4, 2),
+    "q_frontier_round_domain": (7, 7),
+    "q_politeness_budgets": (1, 0),
+    "q_fetch_schedule": (5, 3),
+    "q_robots_policies": (1, 0),
+    "q_opic_round": (5, 2),
+    "q_robots_allowed": (2, 1),
+    "q_token_count": (1, 0),
+    "q_quality_stats": (1, 0),
+    "q_lang_agg": (1, 0),
+    "q_doc_fingerprint": (1, 0),
+    "q_events_hourly": (1, 0),
+    "q_extract_page": (1, 0),
+    "q_minhash_dedup": (5, 2),
+    "q_bpe_token_count": (1, 0),
+    "q_registered_domain": (2, 5),
+    "q_lang_id": (1, 0),
+    "q_rolling_fingerprint": (1, 0),
+    "q_curation_pipeline": (1, 0),
+    "q_config_extract": (1, 0),
+    "q_extract_valid": (1, 0),
+    "q_sessionize": (1, 0),
+    "q_asof_join": (1, 0),
+    "q_ivf_topk": (0, 1),
+    "q_simhash": (1, 0),
+    "q_simhash_pairs": (3, 1),
+    "q_ngram_jaccard": (2, 2),
+    "q_embed_dup_pairs": (5, 2),
+}
 #: queries the census does not plan: q_fixture_title reads a fixture
 #: file of the reference checkout (its parity test fails without it).
 CENSUS_EXCLUDED = {"q_fixture_title"}
-_PYTHON_NODE = re.compile(
-    r"(?m)^[ :|+\-]*\*?(?:\(\d+\) )?(\w+(?:Python|InPandas|InArrow))\b"
-)
+_NODE = r"(?m)^[ :|+\-]*\*?(?:\(\d+\) )?"
+_PYTHON_NODE = re.compile(_NODE + r"(\w+(?:Python|InPandas|InArrow))\b")
+_EXCHANGE = re.compile(_NODE + r"(Exchange|BroadcastExchange)\b")
 
 
 def test_python_node_census(spark, sf_dir):
     import __spark_entry__ as entrymod
 
-    got, cached = {}, []
+    got, exchanges, cached = {}, {}, []
     for name, query in entrymod.queries().items():
         if name in CENSUS_EXCLUDED:
             continue
@@ -233,9 +272,12 @@ def test_python_node_census(spark, sf_dir):
         nodes = _PYTHON_NODE.findall(plan)
         if nodes:
             got[name] = len(nodes)
+        ex = _EXCHANGE.findall(plan)
+        if ex:
+            exchanges[name] = (ex.count("Exchange"), ex.count("BroadcastExchange"))
         if "InMemoryRelation" in plan:
             cached.append(name)
-    assert (got, cached) == (PYTHON_NODES, [])
+    assert (got, exchanges, cached) == (PYTHON_NODES, EXCHANGES, [])
 
 
 def test_rolling_fingerprint_splits_text_once(spark, sf_dir):

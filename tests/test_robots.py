@@ -66,6 +66,23 @@ def test_policies_delay_and_disallow_all(spark):
     pol2 = host_policies_from_robots(parse_robots(_df(spark, txt2))).first()
     assert pol2["robots_disallow_all"] is False
     assert pol2["crawl_delay_s"] == 1.0  # default
+    # the first Crawl-delay line wins, after a rule and over a smaller
+    # later one; a named agent's delay and a non-number give the default
+    delays = {
+        "first": "User-agent: *\nDisallow: /x\nCrawl-delay: 5\nCrawl-delay: 3\n",
+        "named": "User-agent: bot\nCrawl-delay: 9\n\nUser-agent: *\nDisallow: /x\n",
+        "nan": "User-agent: *\nCrawl-delay: soon\nDisallow: /x\n",
+    }
+    robots = spark.createDataFrame(
+        list(delays.items()), "host string, robots_txt string"
+    )
+    got = {
+        r["host"]: (r["crawl_delay_s"], r["robots_disallow_all"])
+        for r in host_policies_from_robots(parse_robots(robots)).collect()
+    }
+    assert got == {
+        "first": (5.0, False), "named": (1.0, False), "nan": (1.0, False),
+    }
 
 
 def test_longest_match_allow_wins_ties(spark):
