@@ -255,7 +255,7 @@ def pages_with_html(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.lit(x) for kv in LANG_CHARSET.items() for x in kv]
     )
     # scan_parallel_floor: the two Python stages downstream (html
-    # synthesis UDF + the extractor's mapInPandas parse) are the
+    # synthesis UDF + the extractor's mapInArrow parse) are the
     # heaviest per-row work in the engine, and the single-row-group
     # source otherwise runs BOTH on one task (r6; measured ~2x on
     # q_extract_page at sf1.0).

@@ -10,15 +10,19 @@ Spark-first redesign:
 - plugins DECLARE their output schema up front (SURVEY §7 R3 — Spark
   needs schemas before execution; the one deliberate narrowing of the
   reference's dynamism);
-- an extractor compiles to ONE ``mapInPandas`` stage: encoding cascade
-  + parse + soup-filters + field extraction fused so HTML parses
-  exactly once (the reference's cheap-before-expensive rule, §4);
+- an extractor compiles to ONE ``mapInArrow`` stage: encoding cascade
+  + HTML analysis + filters + field extraction fused, each page
+  tokenized once (the reference's cheap-before-expensive rule, §4). An
+  extractor that selects or serializes nodes gets the tree of
+  ``html.parse``; one that reads only text (``PageTextExtractor``)
+  gets ``html.page_text`` and no tree;
 - raw-level filters should be expressed as native Column predicates
   *before* this stage (F7) — Catalyst can't see inside the UDF.
 
 No per-row Spark dispatch: rows travel as Arrow batches; the Python
 loop is per-batch, exactly like the reference's per-record loop but
-amortized over vectorized I/O.
+amortized over vectorized I/O. Pass-through columns stay Arrow arrays;
+only the columns the loop reads become Python lists.
 """
 
 from __future__ import annotations
@@ -27,8 +31,9 @@ from collections.abc import Iterator
 from dataclasses import dataclass
 from typing import Any, Callable
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
 
 from pyspark.sql import Column
@@ -124,6 +129,11 @@ class SparkExtractor:
         meta.encoding = enc
         if self.filter_raw(text, meta) is False:
             return None
+        return self.extract_text(text, meta)
+
+    def extract_text(self, text: str, meta: PageMeta) -> dict | None:
+        """The decoded page -> tree -> ``filter_dom`` -> ``extract_dom``.
+        An extractor that reads no DOM overrides this."""
         dom = H.parse(text)
         if self.filter_dom(dom, meta) is False:
             return None
@@ -146,16 +156,15 @@ class TitleTagExtractor(SparkExtractor):
 
 class PageTextExtractor(SparkExtractor):
     """title + body text + winning encoding — the engine's canonical
-    html->text stage (input_hint's byte-identical text invariant)."""
+    html->text stage (input_hint's byte-identical text invariant). It
+    reads both from :func:`html.page_text`: no tree is built, so there
+    is no ``filter_dom`` step."""
 
     schema = "title string, body_text string, encoding string"
 
-    def extract_dom(self, dom: H.Node, meta: PageMeta) -> dict | None:
-        return {
-            "title": H.title_of(dom),
-            "body_text": H.body_text(dom),
-            "encoding": meta.encoding,
-        }
+    def extract_text(self, text: str, meta: PageMeta) -> dict | None:
+        title, body = H.page_text(text)
+        return {"title": title, "body_text": body, "encoding": meta.encoding}
 
 
 @dataclass
@@ -258,14 +267,16 @@ def apply_extractor(
     record_encoding_col: str | None = None,
     url_col: str | None = "url",
 ) -> DataFrame:
-    """Compile an extractor into one mapInPandas stage.
+    """Compile an extractor into one mapInArrow stage.
 
     Output = passthrough columns + the extractor's declared schema.
     Rows the extractor drops (None) are filtered — the reference's
-    ``None => dropped`` contract (extractor.py:24). A ``content_type``
-    input column (the HTTP header of a fetched WARC response) reaches
-    each row's ``PageMeta.content_type``, so its charset takes part in
-    the encoding cascade.
+    ``None => dropped`` contract (extractor.py:24): the passthrough
+    arrays keep the other rows by ``take``, and the extracted fields
+    become arrays of their declared types. A ``content_type`` input
+    column (the HTTP header of a fetched WARC response) reaches each
+    row's ``PageMeta.content_type``, so its charset takes part in the
+    encoding cascade.
     """
     passthrough = passthrough or []
     if url_col and url_col in df.columns:
@@ -274,7 +285,7 @@ def apply_extractor(
             df = df.where(pre)
     # Ship ONLY the columns the stage touches across the Python
     # boundary (optimization guide §4.1: Spark cannot see which columns
-    # a mapInPandas function reads, so an explicit select is what lets
+    # a mapInArrow function reads, so an explicit select is what lets
     # Catalyst prune the rest out of the scan and the Arrow transfer —
     # without it every input column, including the full document text,
     # crosses JVM->Python per row).
@@ -289,33 +300,23 @@ def apply_extractor(
         if isinstance(extractor.schema, StructType)
         else StructType.fromDDL(extractor.schema)
     )
-    out_fields = [in_schema[c] for c in passthrough] + list(extra.fields)
-    out_schema = StructType(out_fields)
-    out_names = [f.name for f in out_fields]
-    ex_names = [f.name for f in extra.fields]
+    out_schema = StructType([in_schema[c] for c in passthrough] + extra.fields)
+    out_names = out_schema.names
+    ex_fields = [(f.name, to_arrow_type(f.dataType)) for f in extra.fields]
+    meta_cols = [
+        c if c in needed else None
+        for c in (url_col, record_encoding_col, "content_type")
+    ]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # per-BATCH column pulls (python lists) instead of per-row
-            # pandas .iloc — the per-row path was ~3x slower in the
-            # row loop than the extraction itself on small documents.
-            htmls = pdf[html_col].tolist()
-            n = len(htmls)
-            urls = (
-                pdf[url_col].tolist()
-                if url_col and url_col in pdf
-                else [None] * n
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            n = batch.num_rows
+            htmls = batch.column(html_col).to_pylist()
+            urls, encs, ctypes = (
+                batch.column(c).to_pylist() if c else [None] * n for c in meta_cols
             )
-            encs = (
-                pdf[record_encoding_col].tolist()
-                if record_encoding_col and record_encoding_col in pdf
-                else [None] * n
-            )
-            ctypes = (
-                pdf["content_type"].tolist() if "content_type" in pdf else [None] * n
-            )
-            pt_cols = [pdf[c].tolist() for c in passthrough]
-            rows: list[list] = []
+            kept: list[int] = []
+            results: list[dict] = []
             for i in range(n):
                 raw = htmls[i]
                 if raw is None:
@@ -323,13 +324,15 @@ def apply_extractor(
                 meta = PageMeta(
                     url=urls[i], record_encoding=encs[i], content_type=ctypes[i]
                 )
-                res = extractor.extract_one(bytes(raw), meta)
+                res = extractor.extract_one(raw, meta)
                 if res is None:
                     continue
-                rows.append(
-                    [col[i] for col in pt_cols]
-                    + [res.get(k) for k in ex_names]
-                )
-            yield pd.DataFrame(rows, columns=out_names)
+                kept.append(i)
+                results.append(res)
+            idx = pa.array(kept, pa.int64())
+            arrays = [batch.column(c).take(idx) for c in passthrough] + [
+                pa.array([res.get(k) for res in results], type=t) for k, t in ex_fields
+            ]
+            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
-    return df.mapInPandas(run, out_schema)
+    return df.mapInArrow(run, out_schema)

@@ -3,14 +3,21 @@
 The container has no bs4/lxml/selectolax, so the engine ships a small,
 fully deterministic parser layer with the operations the reference's
 extractors actually use (title, body text, selector hit-tests for the
-must_exist / must_not_exist filters — SURVEY §2 F9, X10):
+must_exist / must_not_exist filters — SURVEY §2 F9, X10). One
+tokenizer (``html.parser.HTMLParser``) feeds two consumers:
 
-- :func:`parse` -> a tiny DOM (tag, attrs, children, text);
-- :func:`title_of`, :func:`body_text` — the golden-fixture operations
-  (reference fixture extractor returns soup.title,
+- :func:`parse` -> a tiny DOM (tag, attrs, children, text, source
+  spans), for the extractors that select or serialize nodes:
+  :func:`select`, :func:`outer_html`, :func:`title_of`,
+  :func:`body_text` (the golden-fixture operations — reference
+  fixture extractor returns soup.title,
   /root/reference/tests/test_extract/extractors/test_extract.py:10-17);
-- :func:`select` — simple CSS subset: ``tag``, ``#id``, ``.class``,
-  ``tag.class``, ``tag#id``, descendant combinator ``a b``.
+- :func:`page_text` -> ``(title_of(parse(t)), body_text(parse(t)))``
+  from a stack of open tag names alone, with no tree: the text
+  extractor reads nothing else of the DOM.
+
+:func:`select` is a simple CSS subset: ``tag``, ``#id``, ``.class``,
+``tag.class``, ``tag#id``, descendant combinator ``a b``.
 
 This is NOT a byte-for-bit bs4 clone (bs4 is unavailable here); the
 contract it honors is the engine's own golden fixtures, which datagen
@@ -158,6 +165,73 @@ def body_text(root: Node) -> str:
     """Text of <body> (whole document if no body), stripped."""
     b = _first(root, "body")
     return (b.text() if b is not None else root.text()).strip()
+
+
+#: the elements :func:`page_text` reads, first occurrence each
+_TRACKED = ("title", "body")
+
+
+class _TextScan(HTMLParser):
+    """:func:`page_text`'s consumer: the ``_Builder`` tree reduced to
+    what the first ``title`` and the first ``body`` need. Every data
+    chunk is kept in order; an element's text is the run of chunks
+    handled while it was open, so each tracked element keeps the chunk
+    index where it opened and where it closed (None while open)."""
+
+    def __init__(self) -> None:
+        super().__init__(convert_charrefs=True)
+        self.open = ["[document]"]
+        self.chunks: list[str] = []
+        #: tag -> [depth in ``open``, first chunk, end chunk or None]
+        self.spans: dict[str, list] = {}
+
+    def handle_starttag(self, tag, attrs):
+        if tag in _TRACKED and tag not in self.spans:
+            self.spans[tag] = [len(self.open), len(self.chunks), None]
+        if tag not in _VOID:
+            self.open.append(tag)
+
+    def handle_startendtag(self, tag, attrs):
+        if tag in _TRACKED and tag not in self.spans:
+            n = len(self.chunks)
+            self.spans[tag] = [-1, n, n]
+
+    def handle_endtag(self, tag):
+        open_ = self.open
+        for i in range(len(open_) - 1, 0, -1):
+            if open_[i] == tag:
+                del open_[i:]
+                for span in self.spans.values():
+                    if span[2] is None and span[0] >= i:
+                        span[2] = len(self.chunks)
+                break
+
+    def handle_data(self, data):
+        self.chunks.append(data)
+
+    def updatepos(self, i, j):
+        # the base class counts newlines here for getpos(), which
+        # nothing reads; the tokenizer uses only the returned index
+        return j
+
+
+def page_text(html: str) -> tuple[str | None, str]:
+    """``(title_of(parse(html)), body_text(parse(html)))`` without
+    building the tree: same tokenizer, same error swallowing."""
+    scan = _TextScan()
+    try:
+        scan.feed(html)
+        scan.close()
+    except Exception:
+        pass  # best-effort, as parse()
+    chunks = scan.chunks
+
+    def text(tag: str) -> str | None:
+        span = scan.spans.get(tag)
+        return None if span is None else "".join(chunks[span[1] : span[2]])
+
+    body = text("body")
+    return text("title"), (body if body is not None else "".join(chunks)).strip()
 
 
 import re as _re

@@ -23,8 +23,9 @@ from pyspark.sql import functions as F
 
 
 def crawl_to_year(crawl: Column) -> Column:
-    """X2 — year embedded in 'CC-MAIN-<year>-..' names."""
-    return F.regexp_extract(crawl, r"MAIN-(\d{4})", 1).cast("int")
+    """X2 — year embedded in 'CC-MAIN-<year>-..' names; NULL for any
+    other name (a bare cast of the empty match fails under ANSI)."""
+    return F.nullif(F.regexp_extract(crawl, r"MAIN-(\d{4})", 1), F.lit("")).cast("int")
 
 
 def from_compact_timestamp(s: Column) -> Column:

@@ -749,8 +749,9 @@ def q_events_hourly(spark, sf_dir):
 
 
 def q_extract_page(spark, sf_dir):
-    """Encoding cascade + HTML parse + title/body extraction, fused in
-    one mapInPandas stage over html:binary (input_hint invariant)."""
+    """Encoding cascade + title/body extraction (``html.page_text``,
+    no tree), fused in one mapInArrow stage over html:binary
+    (input_hint invariant)."""
     from cmoncrawl_spark.datagen import pages_with_html
     from cmoncrawl_spark.extraction.extractor import (
         PageTextExtractor,
@@ -905,7 +906,7 @@ def q_fixture_title(spark, sf_dir):
 
 def q_config_extract(spark, sf_dir):
     """U2 — declarative (PageExtractor-style) extraction: CSS field
-    specs + must_exist filter, compiled to one mapInPandas stage."""
+    specs + must_exist filter, compiled to one mapInArrow stage."""
     from cmoncrawl_spark.datagen import pages_with_html
     from cmoncrawl_spark.extraction.extractor import (
         ConfigExtractor,

@@ -28,10 +28,7 @@ from cmoncrawl_spark.functions.scalars import name_mangle
 
 def jsonl_lines(df: DataFrame) -> DataFrame:
     """One sorted-keys JSON string per row (column ``value``)."""
-    cols = sorted(df.columns)
-    return df.select(
-        F.to_json(F.struct(*[F.col(c) for c in cols])).alias("value")
-    )
+    return df.select(F.to_json(F.struct(*sorted(df.columns))).alias("value"))
 
 
 def write_jsonl(

@@ -10,14 +10,15 @@ DAO exists for ingest jobs; its semantics are preserved:
   500/502/503/504 — helpers.py:27) in :func:`call_with_retry`, which
   the CDX gateway shares (tenacity is not in this container).
 
-Spark-side: :func:`fetch_ranges` is a mapInPandas stage — each Arrow
+Spark-side: :func:`fetch_ranges` is a mapInArrow stage — each Arrow
 batch of (filename, offset, length) resolves through a DAO instance
-created per-partition (connection reuse), never on the driver.
+created per-partition (connection and file-handle reuse), never on the
+driver; the other columns pass through as Arrow arrays.
 
-``LocalFileDAO`` reads local archives; ``HTTPRangeDAO`` issues range
-GETs through stdlib urllib. Either hands on the raw range;
-:func:`warc_responses` turns each fetched WARC record into its page
-and HTTP ``Content-Type``.
+``LocalFileDAO`` reads local archives, opening each file once per
+partition; ``HTTPRangeDAO`` issues range GETs through stdlib urllib.
+Either hands on the raw range; :func:`warc_responses` turns each
+fetched WARC record into its page and HTTP ``Content-Type``.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ import os
 import time
 from collections.abc import Callable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
@@ -39,15 +40,35 @@ MAX_RETRY = 3
 
 
 class LocalFileDAO:
-    """Range reads from local archive files (the testable DAO)."""
+    """Range reads from local archive files (the testable DAO). Each
+    file is opened on its first fetch and read with ``os.pread`` from
+    then on; :meth:`close` closes them."""
 
     def __init__(self, base_dir: str = "") -> None:
         self.base_dir = base_dir
+        self._fds: dict[str, int] = {}
 
     def fetch(self, filename: str, offset: int, length: int) -> bytes:
-        with open(os.path.join(self.base_dir, filename), "rb") as f:
-            f.seek(offset)
-            return f.read(length)
+        fd = self._fds.get(filename)
+        if fd is None:
+            fd = os.open(os.path.join(self.base_dir, filename), os.O_RDONLY)
+            self._fds[filename] = fd
+        # pread may return fewer bytes than asked before EOF; loop as
+        # f.read does, so a range past EOF reads short
+        parts = []
+        while length > 0:
+            part = os.pread(fd, length, offset)
+            if not part:
+                break
+            parts.append(part)
+            offset += len(part)
+            length -= len(part)
+        return b"".join(parts)
+
+    def close(self) -> None:
+        for fd in self._fds.values():
+            os.close(fd)
+        self._fds.clear()
 
 
 def call_with_retry(
@@ -142,52 +163,67 @@ class HTTPRangeDAO:
 def fetch_ranges(
     records: DataFrame, dao_factory: Callable[[], object]
 ) -> DataFrame:
-    """mapInPandas range-fetch of each (filename, offset, length) row:
-    one DAO per partition, bytes column ``content`` appended. The
-    reference's per-record async fetch loop becomes executor-side
-    batched I/O."""
+    """mapInArrow range-fetch of each (filename, offset, length) row:
+    one DAO per partition, bytes column ``content`` appended to the
+    batch's own arrays. The reference's per-record async fetch loop
+    becomes executor-side batched I/O. A DAO with a ``close`` method is
+    closed when the partition's iterator ends."""
     out_schema = StructType(
         records.schema.fields + [StructField("content", BinaryType())]
     )
-    names = [f.name for f in records.schema.fields]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         dao = dao_factory()
-        for pdf in batches:
-            content = [
-                dao.fetch(f, int(o), int(n))
-                for f, o, n in zip(pdf["filename"], pdf["offset"], pdf["length"])
-            ]
-            res = pdf[names].copy()
-            res["content"] = content
-            yield res
+        try:
+            for batch in batches:
+                content = [
+                    dao.fetch(f, o, n)
+                    for f, o, n in zip(
+                        batch.column("filename").to_pylist(),
+                        batch.column("offset").to_pylist(),
+                        batch.column("length").to_pylist(),
+                    )
+                ]
+                yield batch.append_column("content", pa.array(content, pa.binary()))
+        finally:
+            close = getattr(dao, "close", None)
+            if close is not None:
+                close()
 
-    return records.mapInPandas(run, out_schema)
+    return records.mapInArrow(run, out_schema)
 
 
 def warc_responses(fetched: DataFrame) -> DataFrame:
     """:func:`fetch_ranges` output with each range's ``content``
     replaced by the WARC ``response`` record inside it: ``html`` (the
     payload) and ``content_type`` (its HTTP header, null when absent),
-    from one parse per row in one Arrow stage. A range with no response
-    record fails the job with a ``ValueError`` naming the file and the
+    from one parse per row in one mapInArrow stage; the other columns
+    pass through as Arrow arrays. A range with no response record
+    fails the job with a ``ValueError`` naming the file and the
     offset."""
     keep = [f for f in fetched.schema.fields if f.name != "content"]
     out_schema = StructType(
         keep
         + [StructField("html", BinaryType()), StructField("content_type", StringType())]
     )
-    names = [f.name for f in keep]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             parsed = [
-                response_of(bytes(c), f"{f} at offset {o}")
-                for c, f, o in zip(pdf["content"], pdf["filename"], pdf["offset"])
+                response_of(c, f"{f} at offset {o}")
+                for c, f, o in zip(
+                    batch.column("content").to_pylist(),
+                    batch.column("filename").to_pylist(),
+                    batch.column("offset").to_pylist(),
+                )
             ]
-            res = pdf[names].copy()
-            res["html"] = [page for page, _ in parsed]
-            res["content_type"] = [ctype for _, ctype in parsed]
-            yield res
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(f.name) for f in keep]
+                + [
+                    pa.array([page for page, _ in parsed], pa.binary()),
+                    pa.array([ctype for _, ctype in parsed], pa.string()),
+                ],
+                names=out_schema.names,
+            )
 
-    return fetched.mapInPandas(run, out_schema)
+    return fetched.mapInArrow(run, out_schema)

@@ -50,16 +50,7 @@ JSONL_SCHEMA = StructType(
 def read_domain_records(spark: SparkSession, path: str) -> DataFrame:
     """S8 — one row per record, domain_record flattened to columns."""
     raw = spark.read.schema(JSONL_SCHEMA).json(path)
-    return raw.select(
-        F.col("domain_record.filename").alias("filename"),
-        F.col("domain_record.url").alias("url"),
-        F.col("domain_record.offset").alias("offset"),
-        F.col("domain_record.length").alias("length"),
-        F.col("domain_record.digest").alias("digest"),
-        F.col("domain_record.encoding").alias("encoding"),
-        F.col("domain_record.timestamp").alias("timestamp"),
-        F.col("additional_info"),
-    )
+    return raw.select("domain_record.*", "additional_info")
 
 
 #: url-inference tag patterns, in the reference's priority order

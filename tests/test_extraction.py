@@ -8,6 +8,7 @@ expected winning encodings.
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from cmoncrawl_spark.extraction import html as H
 from cmoncrawl_spark.extraction.encoding import decode_cascade, http_charset
@@ -72,6 +73,62 @@ def test_html_no_title():
     assert H.body_text(dom) == "garbage no tags"
 
 
+#: the tracked tags weigh more, so most documents open and close them
+_TAGS = [
+    "title", "body", "title", "body", "TITLE", "Body", "html", "head",
+    "p", "b", "div", "script", "style", "textarea", "br", "img", "meta",
+]
+_TEXT = [
+    "a", " b ", "\n", "x y", "&amp;", "&lt;p&gt;", "&#65;", "&#x42;",
+    "&nbsp;", "&bogus;", "&", "<", ">", "T1", "  ",
+]
+_MARKUP = st.one_of(
+    st.sampled_from(_TAGS).map(lambda t: f"<{t}>"),
+    st.sampled_from(_TAGS).map(lambda t: f'<{t} class="c" id=i>'),
+    st.sampled_from(_TAGS).map(lambda t: f"</{t}>"),
+    st.sampled_from(_TAGS).map(lambda t: f"<{t}/>"),
+    st.sampled_from(_TEXT),
+    st.sampled_from(
+        ["<!-- c -->", "<!-- <title>x</title> -->", "<!DOCTYPE html>",
+         "<?pi x?>", "<![CDATA[z]]>", "</html>", "</ body>", "<p", "</"]
+    ),
+)
+
+
+@settings(max_examples=1000, deadline=None)
+@given(
+    st.one_of(
+        st.lists(_MARKUP, max_size=30).map("".join),
+        st.text(alphabet="<>/!-&;# abtilebodyp=\"'\n", max_size=60),
+    )
+)
+def test_page_text_equals_tree(markup):
+    """page_text reads the first title and the first body exactly as
+    the tree does: nested and unbalanced tags, void and self-closing
+    tags, upper-case names, entities, comments, script and style,
+    several title or body elements, no body, text after </html>."""
+    dom = H.parse(markup)
+    assert H.page_text(markup) == (H.title_of(dom), H.body_text(dom))
+
+
+@pytest.mark.parametrize(
+    "markup, want",
+    [
+        ("<title/>x<body>b</body>", ("", "b")),
+        ("<title>a<b>c</title>d</b>e", ("ac", "acde")),
+        ("<body><title>t<p>u</body>v<body>w", ("tu", "tu")),
+        ("<html><body>a</html>b", (None, "a")),
+        ("<TITLE>A &amp; B</TITLE><script>x<title>y</title></script>", ("A & B", "A & Bx<title>y</title>")),
+        ("<title>1</title><title>2</title>", ("1", "12")),
+        ("<br><title>x</br>y</title>z", ("xy", "xyz")),
+        ("<body><p>a<title>t</p>u</title>b</body>c", ("t", "atub")),
+    ],
+)
+def test_page_text_cases(markup, want):
+    dom = H.parse(markup)
+    assert H.page_text(markup) == want == (H.title_of(dom), H.body_text(dom))
+
+
 def test_html_select():
     dom = H.parse(
         '<div class="x"><span id="s">hi</span></div><p class="x y">t</p>'
@@ -127,6 +184,42 @@ def test_apply_extractor_spark(spark, sf_dir):
             assert r["title"] is None
         else:
             assert r["title"] == f"Doc {r['doc_id']}"
+
+
+def test_apply_extractor_typed_fields(spark):
+    """Declared non-string fields leave the stage as their Spark
+    types; dropped rows take their passthrough values with them."""
+    from cmoncrawl_spark.extraction.extractor import (
+        SparkExtractor,
+        apply_extractor,
+    )
+
+    class Counts(SparkExtractor):
+        schema = "n int, tags array<string>"
+
+        def extract_dom(self, dom, meta):
+            tags = [n.tag for n in dom.iter() if n.tag != "[document]"]
+            if not tags:
+                return None
+            return {"n": len(tags), "tags": tags if tags[0] != "br" else None}
+
+    df = spark.createDataFrame(
+        [
+            (1, {"k": "v"}, b"<p><b>x</b></p>"),
+            (2, None, b"no markup"),
+            (3, {}, b"<br><i>y</i>"),
+            (4, {"a": None}, None),
+        ],
+        "id long, info map<string,string>, html binary",
+    )
+    out = apply_extractor(df, Counts(), passthrough=["id", "info"], url_col=None)
+    assert out.schema.simpleString() == (
+        "struct<id:bigint,info:map<string,string>,n:int,tags:array<string>>"
+    )
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, {"k": "v"}, 2, ["p", "b"]),
+        (3, {}, 2, None),
+    ]
 
 
 def test_routing_first_match_wins(spark):

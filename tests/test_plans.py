@@ -154,9 +154,34 @@ def test_extraction_prefilter_applied_before_udf(spark):
     )
     plan = _plan(apply_extractor(df, ex, passthrough=["url"]))
     # the prefix filter must appear BELOW (execute before) the Python stage
-    assert "MapInPandas" in plan
-    before_udf = plan.split("MapInPandas", 1)[1]
+    assert "MapInArrow" in plan
+    before_udf = plan.split("MapInArrow", 1)[1]
     assert "Filter" in before_udf and "news" in before_udf, plan
+
+
+def test_record_path_crosses_as_arrow(spark):
+    """The range fetch, the WARC parse and the extractor hand Python
+    Arrow batches, not pandas frames."""
+    from cmoncrawl_spark.extraction.extractor import (
+        PageTextExtractor,
+        apply_extractor,
+    )
+    from cmoncrawl_spark.sources.dao import (
+        LocalFileDAO,
+        fetch_ranges,
+        warc_responses,
+    )
+
+    recs = spark.createDataFrame(
+        [("https://a.example/", "a.warc", 0, 10)],
+        "url string, filename string, offset long, length long",
+    )
+    fetched = fetch_ranges(recs, LocalFileDAO)
+    responses = warc_responses(fetched)
+    extracted = apply_extractor(responses, PageTextExtractor(), passthrough=["url"])
+    for df in (fetched, responses, extracted):
+        plan = _plan(df)
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
 
 def test_ivf_list_partitioned_storage_prunes(spark, sf_dir, tmp_path):

@@ -113,6 +113,9 @@ EXEMPT = {
     # pure-Python oracles the Column versions are tested against
     (f"{PKG}.functions.urls", "unify_url_id_py"),
     (f"{PKG}.functions.psl", "registered_domain_py"),
+    # the tree reading html.page_text is tested against
+    (f"{PKG}.extraction.html", "title_of"),
+    (f"{PKG}.extraction.html", "body_text"),
     # the seam real image and audio codecs are tested through
     (f"{PKG}.operators.multimodal", "set_image_decoder"),
     (f"{PKG}.operators.multimodal", "set_audio_decoder"),

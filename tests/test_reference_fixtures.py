@@ -90,7 +90,7 @@ def test_record_mode_golden_title_membership():
 @needs_fixtures
 def test_spark_pipeline_and_jsonl_sink_golden(spark, tmp_path):
     """Full engine path: fixture files -> DataFrame -> fused
-    mapInPandas extraction -> JSONL sink; the SERIALIZED line carries
+    mapInArrow extraction -> JSONL sink; the SERIALIZED line carries
     the golden title (the reference asserts on the written jsonl)."""
     from cmoncrawl_spark.sinks.jsonl import write_jsonl
 

@@ -29,6 +29,32 @@ def test_scalar_functions(spark):
 
     assert r["ck"] == hashlib.sha256(b"f.warc.gz|100|200").hexdigest() + ".bin"
     assert r["mangled"] == "https:__a.cz_x_y"
+    other = spark.createDataFrame(
+        [("CC-NEWS-2023-01",), ("",), (None,)], "crawl string"
+    ).select(S.crawl_to_year(F.col("crawl")).alias("year"))
+    assert [r["year"] for r in other.collect()] == [None, None, None]
+
+
+def test_index_query_window_skips_crawl_without_year(spark):
+    """A crawl not named CC-MAIN-<year>-.. falls outside a since/to
+    window instead of failing the query."""
+    from datetime import datetime
+
+    from cmoncrawl_spark.operators.ccindex import index_query
+
+    t = datetime(2023, 1, 15)
+    ccindex = spark.createDataFrame(
+        [
+            ("https://a.cz/", t, "CC-MAIN-2023-06", "a.warc.gz", 0, 10),
+            ("https://b.cz/", t, "CC-NEWS-2023-01", "b.warc.gz", 5, 20),
+        ],
+        "url string, fetch_time timestamp, crawl string, warc_filename string, "
+        "warc_record_offset long, warc_record_length long",
+    ).selectExpr("*", "200 AS fetch_status", "'warc' AS subset")
+    for since, to in ((datetime(2023, 1, 1), None), (None, datetime(2023, 12, 31))):
+        got = index_query(ccindex, [], since=since, to=to).collect()
+        assert [r["url"] for r in got] == ["https://a.cz/"]
+    assert index_query(ccindex, []).count() == 2
 
 
 def test_parse_timestamp_col_iso_union(spark):
@@ -110,6 +136,58 @@ def test_fetch_ranges_spark(spark, tmp_path):
     out = fetch_ranges(records, lambda: LocalFileDAO(base)).collect()
     got = {(r["offset"]): bytes(r["content"]) for r in out}
     assert got == {0: b"0123", 10: b"abc"}
+
+
+def test_fetch_ranges_passes_columns_through(spark, tmp_path):
+    """Map and timestamp columns leave the stage equal to what went
+    in; a range past EOF reads short and one at EOF reads empty."""
+    from datetime import datetime
+
+    from cmoncrawl_spark.sources.dao import LocalFileDAO, fetch_ranges
+
+    (tmp_path / "a.bin").write_bytes(b"0123456789")
+    (tmp_path / "b.bin").write_bytes(b"abc")
+    records = spark.createDataFrame(
+        [
+            ("a.bin", 2, 3, {"k": "v", "n": None}, datetime(2023, 5, 1, 12, 30, 1, 5)),
+            ("a.bin", 8, 100, None, None),
+            ("b.bin", 1, 1, {}, datetime(1999, 12, 31)),
+            ("b.bin", 3, 4, {"x": "y"}, datetime(2024, 2, 29, 23, 59, 59)),
+        ],
+        "filename string, offset long, length long, "
+        "info map<string,string>, timestamp timestamp",
+    )
+    base = str(tmp_path)
+    out = fetch_ranges(records, lambda: LocalFileDAO(base))
+    assert out.schema.names == records.schema.names + ["content"]
+    assert out.drop("content").collect() == records.collect()
+    got = {(r["filename"], r["offset"]): bytes(r["content"]) for r in out.collect()}
+    assert got == {
+        ("a.bin", 2): b"234",
+        ("a.bin", 8): b"89",
+        ("b.bin", 1): b"b",
+        ("b.bin", 3): b"",
+    }
+
+
+def test_local_dao_reads_like_a_file(tmp_path):
+    """One descriptor per file, reused until close(); short reads past
+    EOF as ``f.read`` gives them."""
+    import os
+
+    from cmoncrawl_spark.sources.dao import LocalFileDAO
+
+    (tmp_path / "f").write_bytes(b"0123456789")
+    dao = LocalFileDAO(str(tmp_path))
+    assert dao.fetch("f", 0, 4) == b"0123"
+    fd = dao._fds["f"]
+    assert dao.fetch("f", 7, 10) == b"789"
+    assert dao.fetch("f", 20, 1) == b""
+    assert dao._fds == {"f": fd}
+    dao.close()
+    assert dao._fds == {}
+    with pytest.raises(OSError):
+        os.fstat(fd)
 
 
 class _RangeHandler:
