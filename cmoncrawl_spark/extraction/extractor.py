@@ -95,7 +95,13 @@ class PageMeta:
 class SparkExtractor:
     """Base extractor: subclass and override ``extract_dom`` (the
     ``extract_soup`` analog) and optionally ``filter_raw`` /
-    ``filter_dom``; declare ``schema`` (DDL string or StructType)."""
+    ``filter_dom``; declare ``schema`` (DDL string or StructType).
+
+    ``extract_text`` is the hook between the decoded page and the tree:
+    by default it parses and calls ``filter_dom`` then ``extract_dom``.
+    An extractor that reads no DOM overrides it instead. So
+    ``PageTextExtractor``, which does, never calls ``filter_dom`` or
+    ``extract_dom``: its subclasses override ``extract_text``."""
 
     #: output schema, e.g. "title string, body_text string"
     schema: str | StructType = "title string"

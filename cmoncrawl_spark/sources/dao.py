@@ -12,13 +12,13 @@ DAO exists for ingest jobs; its semantics are preserved:
 
 Spark-side: :func:`fetch_ranges` is a mapInArrow stage — each Arrow
 batch of (filename, offset, length) resolves through a DAO instance
-created per-partition (connection and file-handle reuse), never on the
-driver; the other columns pass through as Arrow arrays.
+created per-partition (connection reuse), never on the driver; the
+other columns pass through as Arrow arrays.
 
-``LocalFileDAO`` reads local archives, opening each file once per
-partition; ``HTTPRangeDAO`` issues range GETs through stdlib urllib.
-Either hands on the raw range; :func:`warc_responses` turns each
-fetched WARC record into its page and HTTP ``Content-Type``.
+``LocalFileDAO`` reads local archives; ``HTTPRangeDAO`` issues range
+GETs through stdlib urllib. Either hands on the raw range;
+:func:`warc_responses` turns each fetched WARC record into its page
+and HTTP ``Content-Type``.
 """
 
 from __future__ import annotations
@@ -40,35 +40,15 @@ MAX_RETRY = 3
 
 
 class LocalFileDAO:
-    """Range reads from local archive files (the testable DAO). Each
-    file is opened on its first fetch and read with ``os.pread`` from
-    then on; :meth:`close` closes them."""
+    """Range reads from local archive files (the testable DAO)."""
 
     def __init__(self, base_dir: str = "") -> None:
         self.base_dir = base_dir
-        self._fds: dict[str, int] = {}
 
     def fetch(self, filename: str, offset: int, length: int) -> bytes:
-        fd = self._fds.get(filename)
-        if fd is None:
-            fd = os.open(os.path.join(self.base_dir, filename), os.O_RDONLY)
-            self._fds[filename] = fd
-        # pread may return fewer bytes than asked before EOF; loop as
-        # f.read does, so a range past EOF reads short
-        parts = []
-        while length > 0:
-            part = os.pread(fd, length, offset)
-            if not part:
-                break
-            parts.append(part)
-            offset += len(part)
-            length -= len(part)
-        return b"".join(parts)
-
-    def close(self) -> None:
-        for fd in self._fds.values():
-            os.close(fd)
-        self._fds.clear()
+        with open(os.path.join(self.base_dir, filename), "rb") as f:
+            f.seek(offset)
+            return f.read(length)
 
 
 def call_with_retry(
@@ -166,29 +146,23 @@ def fetch_ranges(
     """mapInArrow range-fetch of each (filename, offset, length) row:
     one DAO per partition, bytes column ``content`` appended to the
     batch's own arrays. The reference's per-record async fetch loop
-    becomes executor-side batched I/O. A DAO with a ``close`` method is
-    closed when the partition's iterator ends."""
+    becomes executor-side batched I/O."""
     out_schema = StructType(
         records.schema.fields + [StructField("content", BinaryType())]
     )
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         dao = dao_factory()
-        try:
-            for batch in batches:
-                content = [
-                    dao.fetch(f, o, n)
-                    for f, o, n in zip(
-                        batch.column("filename").to_pylist(),
-                        batch.column("offset").to_pylist(),
-                        batch.column("length").to_pylist(),
-                    )
-                ]
-                yield batch.append_column("content", pa.array(content, pa.binary()))
-        finally:
-            close = getattr(dao, "close", None)
-            if close is not None:
-                close()
+        for batch in batches:
+            content = [
+                dao.fetch(f, o, n)
+                for f, o, n in zip(
+                    batch.column("filename").to_pylist(),
+                    batch.column("offset").to_pylist(),
+                    batch.column("length").to_pylist(),
+                )
+            ]
+            yield batch.append_column("content", pa.array(content, pa.binary()))
 
     return records.mapInArrow(run, out_schema)
 

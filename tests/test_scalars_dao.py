@@ -124,34 +124,20 @@ def test_retrying_dao_backoff():
 
 
 def test_fetch_ranges_spark(spark, tmp_path):
-    from cmoncrawl_spark.sources.dao import LocalFileDAO, fetch_ranges
-
-    f = tmp_path / "arc.bin"
-    f.write_bytes(b"0123456789abcdef")
-    records = spark.createDataFrame(
-        [("arc.bin", 0, 4), ("arc.bin", 10, 3)],
-        "filename string, offset long, length long",
-    )
-    base = str(tmp_path)
-    out = fetch_ranges(records, lambda: LocalFileDAO(base)).collect()
-    got = {(r["offset"]): bytes(r["content"]) for r in out}
-    assert got == {0: b"0123", 10: b"abc"}
-
-
-def test_fetch_ranges_passes_columns_through(spark, tmp_path):
-    """Map and timestamp columns leave the stage equal to what went
-    in; a range past EOF reads short and one at EOF reads empty."""
+    """Each range's bytes appended as ``content``; map and timestamp
+    columns leave the stage equal to what went in; a range past EOF
+    reads short and one at EOF reads empty."""
     from datetime import datetime
 
     from cmoncrawl_spark.sources.dao import LocalFileDAO, fetch_ranges
 
-    (tmp_path / "a.bin").write_bytes(b"0123456789")
+    (tmp_path / "arc.bin").write_bytes(b"0123456789abcdef")
     (tmp_path / "b.bin").write_bytes(b"abc")
     records = spark.createDataFrame(
         [
-            ("a.bin", 2, 3, {"k": "v", "n": None}, datetime(2023, 5, 1, 12, 30, 1, 5)),
-            ("a.bin", 8, 100, None, None),
-            ("b.bin", 1, 1, {}, datetime(1999, 12, 31)),
+            ("arc.bin", 0, 4, {"k": "v", "n": None}, datetime(2023, 5, 1, 12, 30, 1, 5)),
+            ("arc.bin", 10, 3, None, None),
+            ("arc.bin", 14, 100, {}, datetime(1999, 12, 31)),
             ("b.bin", 3, 4, {"x": "y"}, datetime(2024, 2, 29, 23, 59, 59)),
         ],
         "filename string, offset long, length long, "
@@ -163,31 +149,11 @@ def test_fetch_ranges_passes_columns_through(spark, tmp_path):
     assert out.drop("content").collect() == records.collect()
     got = {(r["filename"], r["offset"]): bytes(r["content"]) for r in out.collect()}
     assert got == {
-        ("a.bin", 2): b"234",
-        ("a.bin", 8): b"89",
-        ("b.bin", 1): b"b",
+        ("arc.bin", 0): b"0123",
+        ("arc.bin", 10): b"abc",
+        ("arc.bin", 14): b"ef",
         ("b.bin", 3): b"",
     }
-
-
-def test_local_dao_reads_like_a_file(tmp_path):
-    """One descriptor per file, reused until close(); short reads past
-    EOF as ``f.read`` gives them."""
-    import os
-
-    from cmoncrawl_spark.sources.dao import LocalFileDAO
-
-    (tmp_path / "f").write_bytes(b"0123456789")
-    dao = LocalFileDAO(str(tmp_path))
-    assert dao.fetch("f", 0, 4) == b"0123"
-    fd = dao._fds["f"]
-    assert dao.fetch("f", 7, 10) == b"789"
-    assert dao.fetch("f", 20, 1) == b""
-    assert dao._fds == {"f": fd}
-    dao.close()
-    assert dao._fds == {}
-    with pytest.raises(OSError):
-        os.fstat(fd)
 
 
 class _RangeHandler:
